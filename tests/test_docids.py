@@ -118,14 +118,14 @@ def test_long_conv_duplicate_with_gap_routes_to_fallback(spark):
 
 
 def test_worker_attach_matches_broadcast_join(spark, tmp_path):
-    """The fused worker-side conv-base attach (each Python worker loads
-    conv_bases once and computes doc_id = base + turn_idx itself) must
-    produce byte-identical postings and identical query results to the
-    broadcast-join docmap path it replaces."""
+    """Virtual builds attach doc ids worker-side at every conv count: with
+    the driver-side cap forced to 0 (distributed conv bases, each of the 3
+    segments loading only its conv_id slice) the blocks and query rows must
+    be identical to the <=cap build, and both builds' decoded postings must
+    match the materialized-map reference."""
     import shutil
 
     import trinity_spark.operators.docids as D
-    import trinity_spark.operators.indexer as I
     from pyspark.sql import functions as F
     from trinity_spark.fixtures import gen_transcripts
     from trinity_spark.operators.indexer import SegmentIndex, build_index
@@ -136,25 +136,72 @@ def test_worker_attach_matches_broadcast_join(spark, tmp_path):
     saved = D.BROADCAST_MAX_CONVS
     outs = {}
     try:
-        for label, thresh in [("worker", 8_000_000), ("join", 0)]:
+        for label, mode, thresh in [
+            ("cap", "virtual", 8_000_000),
+            ("sliced", "virtual", 0),
+            ("materialized", "materialized", 8_000_000),
+        ]:
             D.BROADCAST_MAX_CONVS = thresh
-            I.BROADCAST_MAX_CONVS = thresh
             base = str(tmp_path / f"attach_{label}")
             shutil.rmtree(base, ignore_errors=True)
             st = SegmentStore(base)
             build_index(spark, df, st, rows_per_segment=5_000,
-                        input_desc="eq", docid_map_mode="virtual")
+                        input_desc="eq", docid_map_mode=mode)
+            assert st.docid_map_mode() == mode
             idx = SegmentIndex(spark, st)
             p = QueryPlanner(idx)
             rows = {
                 q: [(r["doc_id"], r["score"]) for r in p.plan(q, k=10).collect()]
                 for q in ("error AND timeout", '"connection reset by peer"')
             }
-            dig = idx.postings.select(
-                F.expr("bit_xor(xxhash64(term, doc_id, tf))")
+            blocks = idx.blocks.select(F.expr(
+                "bit_xor(xxhash64(term, chunk, block_id, min_doc_id, "
+                "max_doc_id, doc_deltas, tf_bytes, pos_bytes))"
+            )).collect()[0][0]
+            postings = idx.postings.select(
+                F.expr("bit_xor(xxhash64(term, doc_id, tf, positions))")
             ).collect()[0][0]
-            outs[label] = (rows, int(dig), len(st.segments()))
+            outs[label] = (rows, blocks, postings, len(st.segments()))
     finally:
         D.BROADCAST_MAX_CONVS = saved
-        I.BROADCAST_MAX_CONVS = saved
-    assert outs["worker"] == outs["join"]
+    assert outs["cap"][3] == 3
+    assert outs["sliced"] == outs["cap"]
+    ref_rows, _, ref_postings, ref_segs = outs["materialized"]
+    assert (outs["cap"][0], outs["cap"][2], outs["cap"][3]) == (
+        ref_rows, ref_postings, ref_segs
+    )
+
+
+def test_worker_attach_conv_missing_from_slice_raises(spark, tmp_path):
+    """A turn whose conv_id is absent from the conv_bases slice its worker
+    loaded is a corrupt virtual docid map: the fused pass must fail loudly
+    rather than mint a wrong doc_id or drop the turn."""
+    import pyarrow as pa
+    import pytest
+    from pyspark.sql import functions as F
+
+    from trinity_spark.operators.fastbuild import blocks_from_turns
+    from trinity_spark.sources.store import SegmentStore
+
+    st = SegmentStore(str(tmp_path / "idx"))
+    st.write_conv_bases(
+        pa.table({
+            "conv_id": ["c0", "c1", "c2"],
+            "n_turns": pa.array([2, 2, 2], pa.int64()),
+            "base": pa.array([0, 2, 4], pa.int64()),
+        }),
+        n_docs=6, n_convs=3, input_desc="slice",
+    )
+    turns = spark.createDataFrame(
+        [(c, t, f"hello {c} {t}") for c in ("c0", "c1", "c2") for t in (0, 1)],
+        "conv_id string, turn_idx int, text string",
+    ).coalesce(1)
+    path = st.conv_bases_dir()
+    # whole table: every conv resolves, doc ids cover [0, 6)
+    whole = blocks_from_turns(turns, conv_attach=(path, 0, 6, None))
+    lo_hi = whole.agg(F.min("min_doc_id"), F.max("max_doc_id")).first()
+    assert tuple(lo_hi) == (0, 5)
+    # c2 is in the table but outside the ("c0", "c1") slice
+    sliced = blocks_from_turns(turns, conv_attach=(path, 0, 6, ("c0", "c1")))
+    with pytest.raises(Exception, match="ValueError: conv_id .* missing from conv_bases"):
+        sliced.count()

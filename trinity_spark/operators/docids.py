@@ -23,11 +23,15 @@ Conversation-decomposed assignment instead (doc_id = conv_base + rank-in-conv):
    collected per-partition counts inside the enumerate task and fails loudly
    on mismatch, so a lost-block recompute with different sampling can never
    silently skip/duplicate ids;
-3. the corpus joins conv bases back on conv_id (broadcast when the conv table
-   is small, shuffle-join otherwise) and computes
-   ``doc_id = base + turn_idx`` when turn_idx is dense 0..n-1 per conv
-   (validated exactly, from the same aggregation — zero extra cost), else
-   ``base + row_number() over (partitionBy conv_id orderBy turn_idx) - 1``.
+3. ``assign_doc_ids`` joins conv bases back onto the corpus on conv_id
+   (broadcast when the conv table is small, shuffle-join otherwise) and
+   computes ``doc_id = base + turn_idx`` when turn_idx is dense 0..n-1 per
+   conv (validated exactly, from the same aggregation — zero extra cost),
+   else ``base + row_number() over (partitionBy conv_id orderBy turn_idx) -
+   1``.  That join feeds the MATERIALIZED docid map (non-dense input, or a
+   store that must be self-contained).  A dense VIRTUAL build never joins:
+   its fused encode pass attaches ``base + turn_idx`` worker-side from the
+   persisted bases, one segment's conv slice per worker, at any conv count.
 
 Total corpus passes: ONE scan + (broadcast case) zero shuffles — versus the
 old sample-scan + full shuffle-sort + persist.  n_docs falls out of the conv
@@ -47,16 +51,14 @@ from pyspark.sql import functions as F
 
 ORDER_COLS = ("conv_id", "turn_idx")
 
-# conv tables up to this many rows ride a broadcast join (no corpus shuffle);
-# bigger corpora fall back to a conv_id shuffle join (AQE-planned).
+# conv tables up to this many rows are enumerated driver-side (_conv_bases)
+# and ride a broadcast join in assign_doc_ids / SegmentStore.attach_doc_ids;
+# bigger ones take the distributed enumerate and a conv_id shuffle join.
 # Sized by memory, not superstition: a bases row is ~40 bytes (conv_id
 # string + two longs), so 8M convs is a ~320 MB broadcast hash relation —
 # comfortable under an 8g+ driver/executor and far below Spark's 8 GB
-# broadcast ceiling.  The threshold matters doubly: past it the attach join
-# hash-shuffles the WHOLE corpus and the encoder needs a doc-range
-# repartition to restore block geometry (two corpus-wide shuffles plus
-# giant per-partition encode buffers, measured 2.5x slower per turn at the
-# 8M-turn scaling unit than the shuffle-free broadcast plan).
+# broadcast ceiling.  Virtual builds do not depend on it past phase 0: they
+# attach doc ids worker-side at every conv count.
 BROADCAST_MAX_CONVS = int(os.environ.get("TRINITY_BROADCAST_MAX_CONVS", "8000000"))
 
 _BASES_SCHEMA = "conv_id string, n_turns long, base long"

@@ -308,28 +308,40 @@ def _encode_partition(
 _CONV_BASES_CACHE: dict = {}
 
 
-def _conv_base_lookup(path: str):
+def _conv_base_lookup(path: str, conv_range: tuple[str, str] | None = None):
     """(sorted conv_id bytes array, base array) loaded from the store's
     conv_bases parquet once per worker process and cached by (path, latest
-    file mtime).  Lookups are numpy searchsorted over the sorted fixed-width
-    byte keys — no per-entry Python objects are ever built."""
+    file mtime, conv_range).  ``conv_range=(c_lo, c_hi)`` reads only the
+    convs in that inclusive conv_id range (a pyarrow ``filters=`` range,
+    row-group pruned on the sorted bases), so a worker holds one segment's
+    slice of the table, not all of it; None loads the whole table.
+    Lookups are numpy searchsorted over the sorted fixed-width byte keys —
+    no per-entry Python objects are ever built."""
     import glob as _glob
     import os as _os
 
     files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-    key = (path, max((_os.path.getmtime(f) for f in files), default=0.0))
+    key = (
+        path, max((_os.path.getmtime(f) for f in files), default=0.0),
+        conv_range,
+    )
     hit = _CONV_BASES_CACHE.get(path)
     if hit is not None and hit[0] == key:
         return hit[1]
     import pyarrow.parquet as _pq
 
-    t = _pq.read_table(path, columns=["conv_id", "base"])
+    filters = None
+    if conv_range is not None:
+        filters = [
+            ("conv_id", ">=", conv_range[0]), ("conv_id", "<=", conv_range[1]),
+        ]
+    t = _pq.read_table(path, columns=["conv_id", "base"], filters=filters)
     conv = t.column("conv_id").cast(pa.binary()).combine_chunks()
     conv_np = conv.to_numpy(zero_copy_only=False).astype("S")
     base_np = t.column("base").to_numpy(zero_copy_only=False).astype(np.int64)
     order = np.argsort(conv_np, kind="stable")
     table = (conv_np[order], base_np[order])
-    _CONV_BASES_CACHE.clear()  # one store's bases at a time per worker
+    _CONV_BASES_CACHE.clear()  # one store's slice at a time per worker
     _CONV_BASES_CACHE[path] = (key, table)
     return table
 
@@ -339,7 +351,7 @@ def blocks_from_turns(
     text_col: str = "text",
     chunk_bits: int | None = None,
     codec: str = "varbyte",
-    conv_attach: tuple[str, int, int] | None = None,
+    conv_attach: tuple[str, int, int, tuple[str, str] | None] | None = None,
 ) -> DataFrame:
     """turns(doc_id, text) -> encoded posting blocks in ONE mapInArrow pass —
     zero shuffles end to end (tokenize -> postings -> delta+varbyte blocks).
@@ -350,15 +362,16 @@ def blocks_from_turns(
     term postings are split the same way).  ``operators.merge`` re-encodes
     globally for optimal block packing.
 
-    ``conv_attach=(bases_parquet_dir, doc_lo, doc_hi)`` fuses the virtual
-    docid-map resolution INTO this pass: each worker loads the conv->base
-    table once (cached for its lifetime) and computes ``doc_id = base +
-    turn_idx`` per batch — identical arithmetic to the broadcast join, with
-    the JVM-side broadcast build (a serial cost per build job) removed.
-    Rows outside [doc_lo, doc_hi) are dropped worker-side (the segment
-    slice).  Input then needs (conv_id, turn_idx, text) instead of
-    (doc_id, text); a conv_id absent from the bases table is corruption
-    and raises.
+    ``conv_attach=(bases_parquet_dir, doc_lo, doc_hi, conv_range)`` fuses
+    the virtual docid-map resolution INTO this pass: each worker loads the
+    conv->base table once (cached for its lifetime) and computes ``doc_id =
+    base + turn_idx`` per batch — no join, no shuffle, at any conv count.
+    ``conv_range=(c_lo, c_hi)`` limits the load to the segment's conv_id
+    slice (the caller filters the input by the same range); None loads the
+    whole table.  Rows outside [doc_lo, doc_hi) are dropped worker-side
+    (the segment slice).  Input then needs (conv_id, turn_idx, text)
+    instead of (doc_id, text); a conv_id absent from the loaded bases is
+    corruption and raises.
     """
     from ..operators.segments import CHUNK_BITS, SEGMENT_SCHEMA, _check_codec
 
@@ -371,8 +384,8 @@ def blocks_from_turns(
                 batch.column("doc_id").to_numpy(zero_copy_only=False),
                 dtype=np.int64,
             )
-        path, lo, hi = conv_attach
-        conv_sorted, base_sorted = _conv_base_lookup(path)
+        path, _, _, conv_range = conv_attach
+        conv_sorted, base_sorted = _conv_base_lookup(path, conv_range)
         conv = batch.column("conv_id")
         enc = (
             conv.combine_chunks() if isinstance(conv, pa.ChunkedArray) else conv
@@ -414,7 +427,7 @@ def blocks_from_turns(
         for batch in batches:
             batch_doc_ids = _batch_doc_ids(batch)
             if conv_attach is not None:
-                _, lo, hi = conv_attach
+                _, lo, hi, _ = conv_attach
                 mask = (batch_doc_ids >= lo) & (batch_doc_ids < hi)
                 if not mask.all():
                     keep = pa.array(mask)

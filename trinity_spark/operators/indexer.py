@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from .. import __version__
 from ..sources.store import SegmentMeta, SegmentStore
 from .build import field_stats_from_blocks, term_dict_from_blocks
-from .docids import BROADCAST_MAX_CONVS, assign_doc_ids_counted
+from .docids import assign_doc_ids_counted
 from .fastbuild import blocks_from_turns
 from .segments import CHUNK_BITS, decode_segments
 
@@ -48,6 +48,15 @@ from .segments import CHUNK_BITS, decode_segments
 # at the write_docid_map call).  Below it, corpora are broadcast-joined and
 # already doc-contiguous per partition, so the shuffle is pure cost.
 _LAYOUT_MIN_DOCS = 1 << 20
+
+# Build-scoped runtime confs, saved and restored by build_index (see the
+# comments there for each value)
+_BUILD_CONF_KEYS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.codegen.wholeStage",
+    "spark.sql.adaptive.enabled",
+)
+_BUILD_SPLIT_BYTES = str(4 << 20)
 
 
 def build_index(
@@ -76,16 +85,15 @@ def build_index(
     - ``"virtual"``: phase 0 persists only the per-conversation base table
       (conv_id, n_turns, base) and the manifest rule ``doc_id = base +
       turn_idx`` — no corpus copy at all (at 100 TB the materialized map
-      doubles storage).  Segment reads re-derive doc_ids by broadcast-joining
-      the bases onto the ORIGINAL input, with a per-segment conv_id range
-      predicate that pushes down to the input's parquet/Iceberg scan (conv
-      ranges per segment come from one pass over the small conv table).
+      doubles storage).  Segments read the ORIGINAL input and the fused
+      encode pass attaches ``doc_id = base + turn_idx`` worker-side at any
+      conv count: each Python worker loads only its segment's conv_id slice
+      of the bases, and the same conv_id range predicate pushes down to the
+      input's parquet/Iceberg scan (conv ranges per segment come from one
+      pass over the small conv table).  No join, no corpus shuffle.
       Requires dense 0-based per-conv turn_idx (validated; falls back to
       materialized otherwise).
     """
-    import os
-    import sys
-
     # Build-scoped fine scan splits: the fused tokenize/encode pass is
     # CPU-bound, so 4 MiB splits keep the last wave short at every core
     # count (a 330 MB corpus = 84 tasks instead of 21; ragged-tail waste at
@@ -100,48 +108,36 @@ def build_index(
     if codec is None:
         codec = store.default_codec()
     store.record_default_codec(codec)
-    _mpb_key = "spark.sql.files.maxPartitionBytes"
-    _mpb_old = spark.conf.get(_mpb_key, None)
     # the fine split is applied INSIDE _build_index_inner just before the
     # segment loop: phase 0 (conv aggregation / docid map) is scan+agg
     # bound and runs ~15% faster on default-size splits — only the fused
     # encode pass wants the 4 MiB granularity
-    # Build-scoped JVM overhead trims (both restored in the finally):
+    # Build-scoped JVM overhead trims (restored in the finally):
     # - whole-stage codegen OFF: the build's CPU is all Python-side
     #   (mapInArrow); Janino compilation of its handful of scan/agg stages
     #   is ~2-3 s of pure serial driver time per fresh JVM, which dominates
     #   the short 4N-core leg of the scaling pair.
-    # - AQE OFF: the build plan is shuffle-free except the tiny conv-table
-    #   repartition and the commit's fixed-width range write; AQE's
-    #   per-stage driver re-optimization only adds serial latency here.
-    _cg_key = "spark.sql.codegen.wholeStage"
-    _cg_old = spark.conf.get(_cg_key, None)
-    spark.conf.set(
-        _cg_key, os.environ.get("TRINITY_BUILD_CODEGEN", "false")
-    )
-    _aqe_key = "spark.sql.adaptive.enabled"
-    _aqe_old = spark.conf.get(_aqe_key, None)
-    spark.conf.set(
-        _aqe_key, os.environ.get("TRINITY_BUILD_AQE", "false")
-    )
+    # - AQE OFF: a virtual build attaches doc ids worker-side at every conv
+    #   count, so its only shuffles are the conv-table range partition
+    #   (phase 0, past the driver-side cap) and the commit's term-hash
+    #   write — no corpus-wide docid shuffle exists for AQE's skew/coalesce
+    #   rules to help, and its per-stage driver re-optimization only adds
+    #   serial latency.  (A materialized build past the cap still
+    #   hash-joins the corpus in assign_doc_ids, with AQE off.)
+    saved = {k: spark.conf.get(k, None) for k in _BUILD_CONF_KEYS}
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return _build_index_inner(
             spark, turns, store, rows_per_segment, input_desc, chunk_bits,
             docid_map_mode, codec,
         )
     finally:
-        if _mpb_old is None:
-            spark.conf.unset(_mpb_key)
-        else:
-            spark.conf.set(_mpb_key, _mpb_old)
-        if _cg_old is None:
-            spark.conf.unset(_cg_key)
-        else:
-            spark.conf.set(_cg_key, _cg_old)
-        if _aqe_old is None:
-            spark.conf.unset(_aqe_key)
-        else:
-            spark.conf.set(_aqe_key, _aqe_old)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _build_index_inner(
@@ -155,13 +151,6 @@ def _build_index_inner(
     codec: str,
 ) -> list[SegmentMeta]:
     import os
-    import sys
-
-    prof = os.environ.get("TRINITY_PROFILE") == "1"
-
-    def _p(msg: str, t_from: float) -> None:
-        if prof:
-            print(f"PROFILE {msg}: {time.monotonic() - t_from:.1f}s", file=sys.stderr, flush=True)
 
     explicit_rps = rows_per_segment is not None
 
@@ -234,7 +223,6 @@ def _build_index_inner(
 
     # phase 0: docid assignment (skipped on resume); n_docs falls out of the
     # conv aggregation driver-side, so no separate count job runs
-    tp = time.monotonic()
     seg_conv_bounds: dict[int, tuple[str, str]] = {}
     if docid_map_mode == "virtual":
         from .docids import _conv_bases
@@ -259,14 +247,14 @@ def _build_index_inner(
                 )
         n_docs = store.docid_map_count(spark)
         rows_per_segment = _rps(n_docs)
-        docmap = store.attach_doc_ids(turns)
+        docmap = None  # the fused pass attaches doc ids itself
         # per-segment conv_id ranges (one job over the small conv table):
         # segment s covers convs whose [base, base+n) intersects its range.
         # A SINGLE-segment build needs neither the job nor the predicate —
         # the one segment covers every conv, so the conv_id filter would
         # scan-prune nothing and the spans job is a pure fixed cost (it
         # capped measured build-scaling efficiency at the one-segment
-        # scaling unit).
+        # scaling unit); its workers load the whole bases table.
         r = rows_per_segment
         if r < n_docs:
             spans = store.read_conv_bases(spark).select(
@@ -309,7 +297,6 @@ def _build_index_inner(
     else:
         n_docs = store.docid_map_count(spark)
         docmap = store.read_docid_map(spark)
-    _p("docid_map", tp)
     rows_per_segment = _rps(n_docs)
 
     # Coverage-based resume skip (not just exact segment-id match): after a
@@ -342,30 +329,7 @@ def _build_index_inner(
     built: list[SegmentMeta] = []
     # fine scan splits for the CPU-bound fused encode pass only (see the
     # build_index comment; restored by build_index's finally)
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        os.environ.get("TRINITY_BUILD_SPLIT_BYTES", "4194304"),
-    )
-    # loop-invariants for the virtual docid map:
-    # - worker-side attach: conv table fits the broadcast budget, so each
-    #   Python worker loads conv_bases ONCE (cached for its lifetime) and
-    #   the fused pass computes doc_id = base + turn_idx itself — no JVM
-    #   broadcast build (a serial cost per build job), no join in the plan
-    # - attach_shuffled: conv table too big, the docmap join hash-shuffles
-    #   and the encoder needs a doc-range repartition (see below)
-    _manifest_docid = (
-        store.read_manifest().get("docid_map", {})
-        if store.docid_map_mode() == "virtual"
-        else {}
-    )
-    virtual_attach = (
-        bool(_manifest_docid)
-        and _manifest_docid.get("n_convs", 0) <= BROADCAST_MAX_CONVS
-    )
-    attach_shuffled = (
-        bool(seg_conv_bounds)
-        and _manifest_docid.get("n_convs", 0) > BROADCAST_MAX_CONVS
-    )
+    spark.conf.set("spark.sql.files.maxPartitionBytes", _BUILD_SPLIT_BYTES)
     for lo in range(0, n_docs, rows_per_segment):
         hi = min(lo + rows_per_segment, n_docs)
         sid = f"seg-{lo:014d}-{hi:014d}"
@@ -382,41 +346,35 @@ def _build_index_inner(
             )
         t0 = time.monotonic()
         conv_attach = None
-        if virtual_attach:
-            # worker-side attach: feed the ORIGINAL input (conv-range
-            # predicate still pushes down); the fused pass derives doc_id
-            # and applies the [lo, hi) slice itself
-            conv_attach = (store.conv_bases_dir(), lo, hi)
+        if docmap is None:
+            # worker-side attach: feed the ORIGINAL input; the fused pass
+            # derives doc_id and applies the [lo, hi) slice itself.  No join
+            # reshuffles the input, so encoder partitions keep its
+            # conv-clustered order and blocks stay doc-narrow (the
+            # reference's postings are doc-ordered by construction,
+            # indexer.cpp:395-420).
             seg_turns = turns
+            conv_range = None
+            if seg_conv_bounds:
+                # the conv_id range predicate pushes down to the INPUT scan,
+                # and the SAME range bounds the bases slice a worker loads:
+                # it holds one segment's convs, never the whole table
+                conv_range = seg_conv_bounds[lo // rows_per_segment]
+                seg_turns = seg_turns.where(
+                    F.col("conv_id").between(*conv_range)
+                )
+            conv_attach = (store.conv_bases_dir(), lo, hi, conv_range)
         else:
             seg_turns = docmap.where(
                 (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
             )
-        if seg_conv_bounds:
-            # virtual mode: conv_id range predicate pushes down to the INPUT
-            # scan (the computed doc_id filter above cannot)
-            c_lo, c_hi = seg_conv_bounds[lo // rows_per_segment]
-            seg_turns = seg_turns.where(F.col("conv_id").between(c_lo, c_hi))
-            if attach_shuffled:
-                # attach_doc_ids fell back to a conv_id HASH join: without a
-                # range repartition every encoder partition holds docs from
-                # the whole segment and blocks come out thousands of docs
-                # wide (skip-proof, wide deltas — see the materialized-path
-                # comment above).  One extra shuffle restores the doc-order
-                # invariant the reference gets by construction.
-                seg_turns = seg_turns.repartitionByRange(
-                    max(spark.sparkContext.defaultParallelism, 4), "doc_id"
-                )
-        _p(f"segment {sid} start", t0)
         # fused tokenize->postings->encode: ONE pass, zero data shuffles;
         # dictionary + stats come off block metadata (also shuffle-light)
         blocks = blocks_from_turns(
             seg_turns, chunk_bits=chunk_bits, codec=codec,
             conv_attach=conv_attach,
         ).persist()
-        tb = time.monotonic()
         blocks.count()  # materialize the fused pass once, before any reuse
-        _p(f"blocks {sid}", tb)
         term_dict = term_dict_from_blocks(blocks)
         stats = field_stats_from_blocks(blocks, docs_cnt=hi - lo)
         meta = SegmentMeta(
@@ -439,9 +397,7 @@ def _build_index_inner(
             },
             metrics={},
         )
-        tc = time.monotonic()
         store.commit_segment(blocks, term_dict, stats, meta)
-        _p(f"commit {sid}", tc)
         blocks.unpersist()
         wall = time.monotonic() - t0
         meta.metrics.update(

@@ -382,16 +382,18 @@ class SegmentStore:
         return self.read_manifest().get("docid_map", {}).get("mode", "materialized")
 
     def attach_doc_ids(self, turns: DataFrame) -> DataFrame:
-        """Virtual-map resolution: join the input to the persisted conv bases
-        and compute doc_id arithmetically (broadcast when the conv table is
-        small).  The result is identical to the materialized map, rebuilt
-        deterministically from the frozen bases."""
+        """Virtual-map resolution for readers of the translation table
+        (``read_docid_map``, e.g. NRT ``replace_documents``): join the input
+        to the persisted conv bases and compute doc_id arithmetically.  The
+        result is identical to the materialized map, rebuilt
+        deterministically from the frozen bases.  Builds never call this —
+        their fused encode pass attaches doc ids worker-side."""
         spark = turns.sparkSession
         m = self.read_manifest()["docid_map"]
         bases = self.read_conv_bases(spark).select("conv_id", "base")
-        # the SAME constant indexer.py uses to predict this join's strategy
-        # (hash-join fallback => it must add a doc-order-restoring range
-        # repartition); a hardcoded copy here could silently diverge
+        # broadcast up to the cap under which phase 0 enumerates the conv
+        # table driver-side (a table that fits the driver fits a broadcast);
+        # past it a plain shuffle join — row order does not matter here
         from ..operators.docids import BROADCAST_MAX_CONVS
 
         if m.get("n_convs", 0) <= BROADCAST_MAX_CONVS:
@@ -459,14 +461,14 @@ class SegmentStore:
         term_dict: DataFrame,
         field_stats: DataFrame,
         segment_id: str,
-        docs_hint: int | None = None,
+        docs_hint: int,
     ) -> int:
         # sorted by term: parquet row-group min/max on `term` = dictionary seek.
         # Partition count is derived from estimated postings BYTES (see
         # POSTINGS_TARGET_FILE_BYTES), capped at core count: tiny segments
-        # write 1 file instead of one-per-core (repartitionByRange with a
-        # single partition skips the range-sampling pass entirely), big
-        # segments keep up to one writer per core.
+        # (including 0-doc ones, e.g. a merge of fully tombstoned inputs)
+        # write 1 file instead of one-per-core, big segments keep up to one
+        # writer per core.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import Observation
@@ -474,13 +476,8 @@ class SegmentStore:
         import math
 
         par = max(blocks.sparkSession.sparkContext.defaultParallelism, 2)
-        if docs_hint and docs_hint > 0:
-            est = docs_hint * POSTINGS_EST_BYTES_PER_DOC
-            n_parts = min(
-                max(math.ceil(est / POSTINGS_TARGET_FILE_BYTES), 1), par
-            )
-        else:
-            n_parts = par
+        est = docs_hint * POSTINGS_EST_BYTES_PER_DOC
+        n_parts = min(max(math.ceil(est / POSTINGS_TARGET_FILE_BYTES), 1), par)
 
         obs = Observation()
 
@@ -490,19 +487,12 @@ class SegmentStore:
         # pass over the whole blocks frame to pick bounds — a fixed extra
         # job per segment commit that capped commit-phase scaling.  No
         # consumer needs a global cross-file term order (no term-range
-        # scans; the dictionary is its own table).  TRINITY_POSTINGS_
-        # PARTITIONER=range restores the old layout.
-        use_range = (
-            os.environ.get("TRINITY_POSTINGS_PARTITIONER", "hash") == "range"
-        )
+        # scans; the dictionary is its own table).
 
         def _write_postings() -> None:
-            src = (
-                blocks.repartitionByRange(n_parts, "term")
-                if use_range
-                else blocks.repartition(n_parts, "term")
-            )
-            src.sortWithinPartitions("term", "block_id").observe(
+            blocks.repartition(n_parts, "term").sortWithinPartitions(
+                "term", "block_id"
+            ).observe(
                 obs, F.count(F.lit(1)).alias("n")
             ).write.mode("overwrite").option(
                 "parquet.block.size", str(POSTINGS_ROWGROUP_BYTES)
