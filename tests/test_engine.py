@@ -117,8 +117,9 @@ def test_queries_have_hits(oracle):
 ])
 def test_rank_identity_edge_shapes(qs, engine, oracle):
     """Regression shapes from the round-4 core review: all-optional AND used
-    to crash _compile_nary (reduce over empty required), and duplicate-term
-    ORs must never route through the pruned path's single-count bound."""
+    to crash the n-ary compiler (reduce over empty required), and
+    duplicate-term ORs must never route through the pruned path's
+    single-count bound."""
     eng, _ = engine
     node = parse_query(qs)
     want = oracle.topk(node, k=10)
@@ -130,7 +131,7 @@ def test_rank_identity_edge_shapes(qs, engine, oracle):
 
 def test_custom_similarity_may_return_null(engine, oracle):
     """A custom scorer returning NULL for some matched rows must not drop
-    the doc on the CASE-map nary path (presence is aggregated separately)."""
+    the doc on a token n-ary (presence is aggregated separately)."""
     from pyspark.sql import functions as F
 
     eng, _ = engine

@@ -1,11 +1,15 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Beyond the reference's IR surface (SURVEY.md §2), a 100 TB corpus pipeline
-needs dedup as a first-class operator family.  Everything here is pure
-DataFrame algebra over JVM built-ins (md5 / sort_array / explode /
-aggregations) — no Python in the hot path — and every hash is derived from
-``md5`` so a DuckDB oracle can reproduce results bit-for-bit
-(``__spark_entry__.oracle_sql``).
+needs dedup as a first-class operator family.  With the default
+``kernel="sql"``, everything here is pure DataFrame algebra over JVM
+built-ins (md5 / sort_array / explode / aggregations) — no Python in the hot
+path — and every hash is derived from ``md5`` so a DuckDB oracle can
+reproduce results bit-for-bit (``__spark_entry__.oracle_sql``).  The opt-in
+``kernel="arrow"`` MinHash runs a numpy kernel in the Python workers; its
+signatures depend on pandas' ``hash_array`` (not md5), so no oracle
+reproduces them and nothing here persists them: they live only inside one
+run, feeding banding and verification.
 
 Scale notes (1000 executors, 10^10 docs):
 - exact dedup: one shuffle on the content hash; map-side combine makes the
@@ -242,11 +246,13 @@ def minhash_signatures_arrow(
                 # begin in the last n-1 flat positions), so the mask
                 # truncates losslessly to the window array's length
                 grams[long_doc[gram_doc]] = win[valid[:n_win]]
-            for d in np.nonzero(~long_doc)[0]:
-                h = np.uint64(0)
-                for j in range(starts[d], ends[d]):
-                    h = h * POLY + tok_h[j]
-                grams[gram_starts[d]] = h
+            # scalar uint64 math warns on the (intended) mod-2^64 wrap
+            with np.errstate(over="ignore"):
+                for d in np.nonzero(~long_doc)[0]:
+                    h = np.uint64(0)
+                    for j in range(starts[d], ends[d]):
+                        h = h * POLY + tok_h[j]
+                    grams[gram_starts[d]] = h
             arrays = [b.column(id_col)]
             for i in range(num_hashes):
                 perm = (grams * mults[i]) ^ xors[i]

@@ -288,24 +288,15 @@ class PruningReport:
 
 
 class _PrunedView:
-    """SegmentIndex facade with the block scan restricted — to kept chunks
-    (``kept_chunks``, the OR block-max path) or to an already-filtered block
-    DataFrame (``blocks``, the AND span path).  Stats (df, N) intentionally
-    come from the FULL index — scores must not change under pruning."""
+    """SegmentIndex facade with the block scan restricted to an
+    already-filtered block DataFrame (``blocks``: the kept spans' blocks, on
+    both the OR block-max and the AND span paths).  Stats (df, N)
+    intentionally come from the FULL index — scores must not change under
+    pruning."""
 
-    def __init__(
-        self,
-        inner,
-        kept_chunks: DataFrame | None = None,
-        blocks: DataFrame | None = None,
-    ):
+    def __init__(self, inner, blocks: DataFrame):
         self._inner = inner
-        if blocks is not None:
-            self.blocks = blocks
-        else:
-            self.blocks = inner.blocks.join(
-                F.broadcast(kept_chunks), "chunk", "left_semi"
-            )
+        self.blocks = blocks
         self.term_dict = inner.term_dict
         self.field_stats = inner.field_stats
         self.deleted = inner.deleted

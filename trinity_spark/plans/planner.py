@@ -6,18 +6,21 @@ Reference analogs, re-expressed declaratively (SURVEY.md §3-4):
   tree is re-normalized (``compilation_ctx.cpp:199-220,1251-1350``) — here
   ``fold_unknown`` + ``Node.normalize()`` run before any Spark op, using df
   looked up from the term dictionary (a tiny plan-time collect, O(query terms)).
-- Conjunction/disjunction/min-match (``docset_iterators.cpp``): ONE union +
-  ONE hash aggregation per n-ary node (the flattened terms-run analog,
-  ``exec.cpp:328-423``) instead of a join chain — a single shuffle on doc_id,
-  map-side combined, AQE-skew-safe.  Branch scores land in per-branch columns
-  (``max(when(bid=i, score))``) and are added in FIXED left-to-right order so
-  float64 sums are bit-identical to the oracle's.
-- NOT -> LEFT ANTI join (``docset_iterators.cpp:652-677``); ConstTrueExpr ->
-  optional branch contributing ``coalesce(score, 0)`` (``docset_iterators.h:
-  174-206``).
-- Phrase (``docset_iterators.cpp:66-224``): evaluated inside the whole-tree
-  map aggregation (``_compile_map``) — member postings aggregate into a
-  term->positions map per doc, then JVM-side adjacency: phrase freq =
+- One compiler for every boolean tree (``_compile_map``; Trinity likewise
+  runs every query through one docset-iterator engine, ``exec.cpp:328-423``):
+  ONE postings scan + ONE hash aggregation on doc_id for the whole tree —
+  AND/OR/min-match (``docset_iterators.cpp``), NOT, nesting and phrases
+  alike — instead of a join chain: a single shuffle, map-side combined,
+  AQE-skew-safe.  Token leaves land in per-term columns
+  (``max(when(term=t, score))``); the tree's match predicate and score are
+  column expressions over them, with branch scores added in FIXED
+  left-to-right order so float64 sums are bit-identical to the oracle's.
+  A lone token needs no aggregation (``_compile_token``).
+- NOT -> a ``req AND NOT excl`` predicate over the same aggregated row
+  (``docset_iterators.cpp:652-677``); ConstTrueExpr -> optional branch
+  contributing ``coalesce(score, 0)`` (``docset_iterators.h:174-206``).
+- Phrase (``docset_iterators.cpp:66-224``): phrase-member postings aggregate
+  into a term->positions map per doc, then JVM-side adjacency: phrase freq =
   size(filter(pos_0, p -> all_i array_contains(pos_i, p+i))), with
   position-0 (word:tail operator) hits excluded.  No Python in the hot path.
 - Scoring: functions.bm25 (exact similarity.h:165-235 contract); df and N are
@@ -36,7 +39,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.bm25 import K1, idf_py, term_score_col
+from ..functions.bm25 import idf_py, term_score_col
 from .ast import (
     And,
     ConstTrue,
@@ -214,20 +217,6 @@ def _phrase_member_terms(node: Node) -> set[str]:
     return set()
 
 
-def _map_compilable(node: Node) -> bool:
-    """True when every leaf is a Token/Phrase — i.e. the whole tree can be
-    evaluated from one per-doc term map (the single-aggregation path)."""
-    if isinstance(node, (Token, Phrase)):
-        return True
-    if isinstance(node, (And, Or, Some)):
-        return all(_map_compilable(c) for c in node.children)
-    if isinstance(node, Not):
-        return _map_compilable(node.req) and _map_compilable(node.excl)
-    if isinstance(node, ConstTrue):
-        return _map_compilable(node.child)
-    return False
-
-
 def routing_decision(
     index,
     node: Node | None,
@@ -328,7 +317,6 @@ class QueryPlanner:
         # {...}} — so benchmarks/operators can PROVE "gate closed, identical
         # single-pass plan" instead of readers inferring it from walls
         self.last_route: dict = {"path": None, "gate": None}
-        self._docs_only = False  # ExecFlags::DocumentsOnly compile mode
 
     def _scan_postings(self, node: Node, qts: list[str]) -> DataFrame:
         """The query's one logical postings frame, with the position stream
@@ -341,20 +329,6 @@ class QueryPlanner:
         members = _phrase_member_terms(node)
         with_pos = sorted(t for t in qts if t in members)
         plain = sorted(t for t in qts if t not in members)
-        # duck-typed custom index views may not take the kwarg: check the
-        # SIGNATURE instead of catching TypeError around the calls, which
-        # would swallow a genuine TypeError raised inside postings_for and
-        # silently rerun the query with positions decoded for every term
-        try:
-            import inspect
-
-            supports_kwarg = "with_positions" in inspect.signature(
-                self.index.postings_for
-            ).parameters
-        except (TypeError, ValueError):  # builtins/partials w/o signature
-            supports_kwarg = False
-        if not supports_kwarg:
-            return self.index.postings_for(qts)
         if not with_pos:
             return self.index.postings_for(qts, with_positions=False)
         if not plain:
@@ -645,21 +619,11 @@ class QueryPlanner:
         self._stats = stats
         qts = query_terms(node)
         self._postings = self._scan_postings(node, qts)
-        deleted_applied = False
         if isinstance(node, Token):
             out = self._postings.where(F.col("term") == node.term).select("doc_id")
-        elif _map_compilable(node):
-            self._docs_only = True
-            try:
-                out = self._compile_map(node)
-            finally:
-                self._docs_only = False
         else:
-            # score_all already anti-joins index.deleted — don't add a
-            # second anti-join (a redundant shuffle + deleted-frame scan)
-            out = self.score_all(node).select("doc_id")
-            deleted_applied = True
-        if self.index.deleted is not None and not deleted_applied:
+            out = self._compile_map(node, docs_only=True)
+        if self.index.deleted is not None:
             out = out.join(self.index.deleted, "doc_id", "left_anti")
         if doc_filter is not None:
             out = out.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
@@ -685,54 +649,39 @@ class QueryPlanner:
         # even when a phrase appears elsewhere in the same tree
         qts = query_terms(node)
         self._postings = self._scan_postings(node, qts)
-        if (
-            not isinstance(node, Token)
-            and not self._is_distinct_token_nary(node)
-            and _map_compilable(node)
-        ):
-            # whole-tree single-aggregation path: ONE scan + ONE doc_id agg
-            # evaluates the entire boolean tree (phrases, NOT, nesting)
-            scored = self._compile_map(node)
+        if isinstance(node, Token):
+            # a single term needs no aggregation: postings rows are already
+            # unique per (term, doc_id)
+            scored = self._compile_token(node)
         else:
-            scored = self._compile(node)
+            # every boolean tree: ONE scan + ONE doc_id agg evaluates the
+            # whole tree (n-ary, phrases, NOT, nesting)
+            scored = self._compile_map(node)
         if self.index.deleted is not None:
             scored = scored.join(self.index.deleted, "doc_id", "left_anti")
         return scored
 
-    @staticmethod
-    def _is_distinct_token_nary(node: Node) -> bool:
-        """Single n-ary over distinct plain tokens — stays on the CASE-mapped
-        (bid, score) path, whose shuffle rows are narrower than the
-        term->struct map the general path aggregates."""
-        if not isinstance(node, (And, Or, Some)):
-            return False
-        leaves = [
-            c.child if isinstance(c, ConstTrue) else c for c in node.children
-        ]
-        return all(isinstance(t, Token) for t in leaves) and len(
-            {t.term for t in leaves}
-        ) == len(leaves)
-
-    # --- whole-tree single-aggregation compiler -----------------------------
+    # --- the boolean-tree compiler -----------------------------------------
     #
-    # The generalization of the single-scan n-ary frame (VERDICT r2 #5): for
-    # ANY tree whose leaves are Token/Phrase, aggregate each doc's matched
+    # Every tree that is not a lone token compiles here (after fold_unknown
+    # every leaf is a Token or a Phrase): aggregate each doc's matched
     # postings ONCE, then evaluate the whole boolean tree (match predicate +
     # left-to-right float64 score sum, the docset_iterators_scorers.cpp:8-243
-    # contract) as pure JVM column expressions.  A `("rate limit" OR
-    # throttle) AND api NOT sandbox` query becomes one MapInArrow decode +
-    # one hash aggregation + a projection — no per-branch aggregations, no
-    # anti-join exchange.
+    # contract) as pure JVM column expressions.  `error OR timeout` is one
+    # MapInArrow decode + one hash aggregation over (doc_id, s{i}, p{i});
+    # `("rate limit" OR throttle) AND api NOT sandbox` is the same plus a
+    # positioned decode for the phrase members — no per-branch aggregations,
+    # no anti-join exchange.
     #
     # HYBRID aggregation (measured: a pure collect_list map agg was ~2x
-    # slower than the CASE path on stopword-heavy trees — ObjectHashAggregate
-    # builds per-row structs for every posting): token leaves aggregate as
-    # narrow ``max(when(term=t, score))`` columns exactly like the n-ary fast
-    # path, and ONLY phrase-member terms enter the term->positions map
-    # (collect_list skips the nulls of non-member rows), so the object-agg
-    # payload is bounded by the phrase members' (usually rare) postings.
+    # slower on stopword-heavy trees — ObjectHashAggregate builds per-row
+    # structs for every posting): token leaves aggregate as narrow
+    # ``max(when(term=t, score))`` columns, and ONLY phrase-member terms enter
+    # the term->positions map (collect_list skips the nulls of non-member
+    # rows), so the object-agg payload is bounded by the phrase members'
+    # (usually rare) postings, and a tree with no phrase builds no map.
 
-    def _compile_map(self, node: Node) -> DataFrame:
+    def _compile_map(self, node: Node, docs_only: bool = False) -> DataFrame:
         phrase_members: set[str] = set()
         token_leaves: list[Token] = []  # distinct by (term, rep, rewrite)
 
@@ -767,7 +716,7 @@ class QueryPlanner:
                 tok,
             )
             cond = F.col("term") == tok.term
-            if not self._docs_only:
+            if not docs_only:
                 aggs.append(
                     F.max(F.when(cond, sim(ctx, F.col("tf")))).alias(f"s{i}")
                 )
@@ -788,21 +737,24 @@ class QueryPlanner:
             aggs.append(F.map_from_entries(F.collect_list(entry)).alias("m"))
         g = self._postings.groupBy("doc_id").agg(*aggs)
         self._tokcols = tokcols
-        present, score = self._map_expr(node, F.col("m") if phrase_members else None)
-        if self._docs_only:  # ExecFlags::DocumentsOnly: ids, nothing else
+        present, score = self._map_expr(
+            node, F.col("m") if phrase_members else None, docs_only
+        )
+        if docs_only:  # ExecFlags::DocumentsOnly: ids, nothing else
             return g.where(present).select("doc_id")
         return g.where(present).select("doc_id", score.alias("score"))
 
-    def _map_expr(self, node: Node, m):
+    def _map_expr(self, node: Node, m, docs_only: bool):
         """(present bool Column, score double Column) for ``node`` evaluated
         against the hybrid aggregation frame: token leaves read their
         (s{i}, p{i}) columns, phrases read the member-term map ``m``.
         ``present`` is never NULL; score columns are only consumed under a
-        matching ``present`` guard."""
+        matching ``present`` guard.  Under ``docs_only`` (DocumentsOnly) the
+        frame has no s{i} columns and every score is a constant 0.0."""
         sim = self.similarity or default_similarity
         if isinstance(node, Token):
             i = self._tokcols[node]
-            if self._docs_only:
+            if docs_only:
                 return F.col(f"p{i}").isNotNull(), F.lit(0.0)
             return F.col(f"p{i}").isNotNull(), F.col(f"s{i}")
         if isinstance(node, Phrase):
@@ -826,7 +778,7 @@ class QueryPlanner:
                 lambda a, b: a & b,
                 [F.element_at(m, t).isNotNull() for t in sorted(set(node.terms))],
             )
-            if self._docs_only:
+            if docs_only:
                 return have_all & (pf > 0), F.lit(0.0)
             ctx = _rw(
                 TermContext(
@@ -845,21 +797,21 @@ class QueryPlanner:
             req_present = []
             for c in node.children:
                 if isinstance(c, ConstTrue):
-                    p, s = self._map_expr(c.child, m)
+                    p, s = self._map_expr(c.child, m, docs_only)
                     parts.append(F.coalesce(F.when(p, s), F.lit(0.0)))
                 else:
-                    p, s = self._map_expr(c, m)
+                    p, s = self._map_expr(c, m, docs_only)
                     req_present.append(p)
-                    # coalesce like _compile_nary's score_cols: a custom
-                    # similarity may legally return NULL for a matched row,
-                    # which must contribute 0.0, not nullify the total
+                    # coalesce: a custom similarity may legally return NULL
+                    # for a matched row, which must contribute 0.0, not
+                    # nullify the total
                     parts.append(F.coalesce(F.when(p, s), F.lit(0.0)))
             if not req_present:  # all-optional AND matches nothing (oracle)
                 return F.lit(False), F.lit(0.0)
             present = reduce(lambda a, b: a & b, req_present)
             return present, reduce(lambda a, b: a + b, parts)
         if isinstance(node, (Or, Some)):
-            ps = [self._map_expr(c, m) for c in node.children]
+            ps = [self._map_expr(c, m, docs_only) for c in node.children]
             score = reduce(
                 lambda a, b: a + b,
                 [F.coalesce(F.when(p, s), F.lit(0.0)) for p, s in ps],
@@ -874,33 +826,13 @@ class QueryPlanner:
                 return matched >= max(node.k, 1), score
             return reduce(lambda a, b: a | b, [p for p, _ in ps]), score
         if isinstance(node, Not):
-            p_req, s_req = self._map_expr(node.req, m)
-            p_excl, _ = self._map_expr(node.excl, m)
+            p_req, s_req = self._map_expr(node.req, m, docs_only)
+            p_excl, _ = self._map_expr(node.excl, m, docs_only)
             return p_req & ~p_excl, s_req
         if isinstance(node, ConstTrue):
             # outside an AND an optional matches nothing by itself (oracle)
             return F.lit(False), F.lit(0.0)
         raise TypeError(type(node))
-
-    # --- node compilers: every result is (doc_id long, score double) ---
-
-    def _compile(self, node: Node) -> DataFrame:
-        # Only two shapes reach here (score_all's dispatch sends everything
-        # else — phrases, Not, nesting, ConstTrue — through _compile_map's
-        # single-aggregation path): a lone Token, or a distinct-token n-ary
-        # (_is_distinct_token_nary), which stays on the narrower CASE-mapped
-        # (bid, score) shuffle.  The former general compiler (per-node
-        # Phrase/Not/ConstTrue branches + a union-of-branches n-ary) was
-        # unreachable dead code and had already rotted — its single-term
-        # phrase path counted position-0 hits the oracle excludes — so it
-        # was removed rather than left to drift further.
-        if isinstance(node, Token):
-            return self._compile_token(node)
-        if isinstance(node, (And, Or, Some)):
-            return self._compile_nary(node)
-        raise TypeError(
-            f"_compile: {type(node).__name__} routes through _compile_map"
-        )
 
     def _compile_token(self, node: Token) -> DataFrame:
         ctx = _rw(
@@ -918,102 +850,3 @@ class QueryPlanner:
         return self._postings.where(F.col("term") == node.term).select(
             "doc_id", score.alias("score")
         )
-
-    def _compile_nary(self, node: And | Or | Some) -> DataFrame:
-        children = list(node.children)
-        if not isinstance(node, And):
-            # oracle semantics (oracle.py eval(ConstTrue) = {}): an optional
-            # branch under Or/Some never matches and never contributes —
-            # only an AND gives <...> meaning.  Drop them here so the
-            # all-token fast path below cannot unwrap one into a full
-            # scoring branch (it previously did: 'a OR <b>' matched docs
-            # containing only b).  _map_expr and _compile already agree.
-            children = [c for c in children if not isinstance(c, ConstTrue)]
-            if not children:
-                spark = self.index.postings.sparkSession
-                return spark.createDataFrame([], "doc_id long, score double")
-        required = [
-            i
-            for i, c in enumerate(children)
-            if isinstance(node, And) and not isinstance(c, ConstTrue)
-        ] if isinstance(node, And) else []
-        n = len(children)
-
-        # all-token fast path: ONE decode of all branches' postings with a
-        # CASE-mapped branch id/score, instead of N unioned scans of the same
-        # blocks (the flattened terms-run of exec.cpp:328-423 literally — one
-        # pass over the merged posting stream)
-        leaves = [c.child if isinstance(c, ConstTrue) else c for c in children]
-        if all(isinstance(t, Token) for t in leaves) and len(
-            {t.term for t in leaves}
-        ) == n:
-            sim = self.similarity or default_similarity
-            bid = F
-            score = F
-            for i, tok in enumerate(leaves):
-                ctx = _rw(
-                    TermContext(
-                        tok.term, self._stats.idf(tok.term),
-                        self._stats.df(tok.term), tok.rep,
-                        n_docs=self._stats.n_docs,
-                        member_dfs=(self._stats.df(tok.term),),
-                    ),
-                    tok,
-                )
-                cond = F.col("term") == tok.term
-                bid = bid.when(cond, F.lit(i))
-                score = score.when(cond, sim(ctx, F.col("tf")))
-            u = self._postings.where(
-                F.col("term").isin([t.term for t in leaves])
-            ).select("doc_id", bid.alias("bid"), score.alias("score"))
-        else:
-            # unreachable: score_all dispatches here only for
-            # _is_distinct_token_nary trees, which always satisfy the fast
-            # path above (the former union-of-_compile-branches fallback was
-            # dead code and was removed)
-            raise TypeError(
-                "_compile_nary: non-distinct-token n-ary routes through "
-                "_compile_map"
-            )
-        # presence is aggregated SEPARATELY from the score: a custom
-        # similarity may legally return null for a matched row (the map
-        # compiler documents the same contract), so score-NULLness must not
-        # double as the match flag
-        agg = u.groupBy("doc_id").agg(
-            *[
-                F.max(F.when(F.col("bid") == i, F.col("score"))).alias(f"s{i}")
-                for i in range(n)
-            ],
-            *[
-                F.max(F.when(F.col("bid") == i, F.lit(1))).alias(f"p{i}")
-                for i in range(n)
-            ],
-        )
-        score_cols = [F.coalesce(F.col(f"s{i}"), F.lit(0.0)) for i in range(n)]
-        if isinstance(node, And):
-            # all-optional AND matches nothing (oracle semantics; the map
-            # compiler has the same explicit case) — reduce() over an empty
-            # required list would otherwise crash
-            keep = (
-                reduce(
-                    lambda a, b: a & b,
-                    [F.col(f"p{i}").isNotNull() for i in required],
-                )
-                if required
-                else F.lit(False)
-            )
-        elif isinstance(node, Some):
-            matched = reduce(
-                lambda a, b: a + b,
-                [F.col(f"p{i}").isNotNull().cast("int") for i in range(n)],
-            )
-            # k < 1 degenerates to Or (oracle: docs = union of child
-            # matches, so every candidate has matched >= 1); without the
-            # clamp a doc reaching the frame via a non-matching branch's
-            # member term would pass 'matched >= 0'
-            keep = matched >= max(node.k, 1)
-        else:  # Or
-            keep = F.lit(True)
-        # fixed left-to-right float64 summation (matches the oracle exactly)
-        score = reduce(lambda a, b: a + b, score_cols)
-        return agg.where(keep).select("doc_id", score.alias("score"))

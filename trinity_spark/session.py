@@ -56,6 +56,7 @@ def get_spark(
     par = _local_threads(master, os.cpu_count() or 8)
     if shuffle_partitions is None:
         shuffle_partitions = max(par, 4)
+    local_dir = os.environ.get("TRINITY_LOCAL_DIR", "/dev/shm/spark-local")
 
     b = (
         SparkSession.builder.master(master)
@@ -75,9 +76,8 @@ def get_spark(
         # call, ~45% of this engine's per-query plan-construction time).
         # The engine builds hundreds of Column expressions per query plan,
         # so the call-site context (a nicety in error messages) costs more
-        # than the queries themselves; off by default, opt back in via env.
-        .config("spark.python.sql.dataFrameDebugging.enabled",
-                os.environ.get("TRINITY_DF_DEBUGGING", "false"))
+        # than the queries themselves; off (opt back in through extra_conf).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # NOTE: no global spark.sql.files.maxPartitionBytes override here —
         # the build-tuned 4 MiB fine-split (critical for scaling efficiency
         # of the CPU-bound fused build) is scoped INSIDE build_index via a
@@ -94,9 +94,7 @@ def get_spark(
                 os.environ["MALLOC_MMAP_THRESHOLD_"])
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_",
                 os.environ["MALLOC_TRIM_THRESHOLD_"])
-        .config("spark.local.dir", os.environ.get("TRINITY_LOCAL_DIR", "/dev/shm/spark-local")
-                if os.path.isdir(os.environ.get("TRINITY_LOCAL_DIR", "/dev/shm/spark-local"))
-                else "/tmp")
+        .config("spark.local.dir", local_dir if os.path.isdir(local_dir) else "/tmp")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
