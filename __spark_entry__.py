@@ -512,11 +512,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         store = SegmentStore(_entry_tmpdir("trinity_pfor_entry_"))
         build_index(spark, turns, store, rows_per_segment=250, codec="pfor")
-        if store.default_codec() != "pfor":
+        if store.layout().codec != "pfor":
             # codec identity is the point of this entry; a bare assert
             # would be compiled out under python -O
             raise RuntimeError(
-                f"pfor store committed codec {store.default_codec()!r}"
+                f"pfor store committed codec {store.layout().codec!r}"
             )
         planner = QueryPlanner(SegmentIndex(spark, store))
         scored = planner.score_all("hash AND scan")

@@ -1,8 +1,11 @@
 """Selectable wire codec (PFOR) as a first-class segment format:
 codec identity in lineage (codecs.h:93-95 / indexer.cpp:268-270 analog),
-rank identity off a PFOR-wired store, mixed-codec reads, and the merge
-same-codec rule (merge.cpp:256-287: raw copy only between same-codec
-segments — mixed inputs re-encode)."""
+rank identity off a PFOR-wired store, and one wire layout per store — a
+second codec or chunk width is refused at commit and at build, so every
+merge is a same-codec merge (merge.cpp:256-287) that keeps byte reuse."""
+
+import json
+import os
 
 import numpy as np
 import pytest
@@ -83,7 +86,7 @@ def pfor_store(spark, tmp_path_factory):
 
 def test_pfor_store_codec_identity_recorded(pfor_store):
     store, _ = pfor_store
-    assert store.default_codec() == "pfor"
+    assert store.layout().codec == "pfor"
     for m in store.segments():
         assert m.lineage["codec"] == "pfor"
 
@@ -127,10 +130,13 @@ def test_nrt_append_inherits_store_codec(spark, tmp_path):
 
 
 def test_mixed_codec_store_reads_and_merge_reencodes(spark, tmp_path):
-    """A store holding segments from BOTH codecs must still answer queries
-    rank-identically (codec-tagged read path), and merging it must disable
-    byte reuse and re-encode everything at the store default codec — the
-    merge.cpp:256-287 same-codec precondition."""
+    """A store holds ONE codec: hand-committing a PFOR segment into a
+    varbyte store raises at the commit and leaves the manifest's segments
+    and generation counter untouched — no mixed-codec store can arise, so
+    reads and merges need no per-codec split (merge.cpp:256-287 same-codec
+    raw copy holds by construction)."""
+    from pyspark.sql import functions as F
+
     from trinity_spark.operators.build import (
         field_stats_from_blocks,
         term_dict_from_blocks,
@@ -145,60 +151,90 @@ def test_mixed_codec_store_reads_and_merge_reencodes(spark, tmp_path):
     build_index(
         spark, spark.createDataFrame(corpus_a), store, rows_per_segment=400
     )  # varbyte (default)
-    # hand-commit a PFOR segment for the next doc range
-    from pyspark.sql import functions as F
-
+    before = store.read_manifest()
     turns_b = assign_doc_ids(spark.createDataFrame(corpus_b)).withColumn(
         "doc_id", (F.col("doc_id") + F.lit(400)).cast("long")
     )
     blocks = blocks_from_turns(turns_b, codec="pfor").persist()
-    store.commit_segment(
-        blocks,
-        term_dict_from_blocks(blocks),
-        field_stats_from_blocks(blocks, docs_cnt=300),
-        SegmentMeta(
-            "seg-pfor-b", 0, 400, 700, 300,
-            {"chunk_bits": 16, "codec": "pfor"}, {},
-        ),
-    )
+    with pytest.raises(ValueError, match="codec='pfor'"):
+        store.commit_segment(
+            blocks,
+            term_dict_from_blocks(blocks),
+            field_stats_from_blocks(blocks, docs_cnt=300),
+            SegmentMeta(
+                "seg-pfor-b", 0, 400, 700, 300,
+                {"chunk_bits": 16, "codec": "pfor"}, {},
+            ),
+        )
     blocks.unpersist()
-
-    docs = docs_in_stable_order(corpus_a)
-    docs += [(d + 400, t) for d, t in docs_in_stable_order(corpus_b)]
-    idx = SegmentIndex(spark, store)
-    assert idx.codec == "mixed"
-    _assert_rank_identity(spark, store, docs, queries=["error", "error AND timeout", '"rate limit"'])
-
-    meta = merge_segments(spark, store)
-    assert meta.metrics["blocks_reused"] == 0  # mixed codecs: no raw copy
-    assert meta.lineage["codec"] == store.default_codec() == "varbyte"
+    after = store.read_manifest()
+    assert after["segments"] == before["segments"]
+    assert after["next_generation"] == before["next_generation"]
+    assert after["snapshot_id"] == before["snapshot_id"]
     assert SegmentIndex(spark, store).codec == "varbyte"
-    _assert_rank_identity(spark, store, docs, queries=["error", '"rate limit"'])
+    assert store.fsck(spark, deep=True)["ok"]
+    _assert_rank_identity(
+        spark, store, docs_in_stable_order(corpus_a),
+        queries=["error", '"rate limit"'],
+    )
 
 
 def test_unknown_codec_tag_raises_not_drops(spark, tmp_path):
-    """A block row whose codec tag matches no known wire must raise at
-    decode — the old per-codec filter union silently VANISHED its postings
-    from every query (against the loud-corruption policy)."""
-    import pytest
-
-    from trinity_spark.fixtures import gen_transcripts
-    from trinity_spark.operators.indexer import build_index
-    from trinity_spark.operators.segments import decode_segments
-    from trinity_spark.sources.store import SegmentStore
-
+    """A manifest or segment lineage naming a codec this engine does not
+    know must fail LOUD — at SegmentIndex open, at merge, and as an fsck
+    error — never decode the blocks with another codec or drop them."""
     store = SegmentStore(str(tmp_path / "idx"))
     build_index(
         spark, spark.createDataFrame(gen_transcripts(100)), store,
         rows_per_segment=100,
     )
-    from pyspark.sql import functions as F
+    good = store.read_manifest()
+    path = os.path.join(store.base, "manifest.json")
 
-    blocks = store.read_blocks(spark, with_codec=True).withColumn(
-        "codec", F.lit("codec-from-the-future")
+    def _write(m):
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+    for where in ("manifest", "lineage"):
+        bad = json.loads(json.dumps(good))
+        target = bad if where == "manifest" else bad["segments"][0]["lineage"]
+        target["codec"] = "codec-from-the-future"
+        _write(bad)
+        with pytest.raises(ValueError, match="codec-from-the-future"):
+            SegmentIndex(spark, store)
+        with pytest.raises(ValueError, match="codec-from-the-future"):
+            merge_segments(spark, store)
+        rep = store.fsck(spark, deep=True)
+        assert not rep["ok"], where
+        assert any("codec-from-the-future" in e for e in rep["errors"]), where
+    _write(good)
+    assert store.fsck(spark, deep=True)["ok"]
+
+
+def test_build_with_conflicting_layout_raises_before_any_job(spark, tmp_path):
+    """The store fixes its chunk width (and codec) at the first commit: a
+    later build asking for another value raises before phase 0 runs a
+    single Spark job, and the manifest is untouched."""
+    store = SegmentStore(str(tmp_path / "idx"))
+    build_index(
+        spark, spark.createDataFrame(gen_transcripts(200)), store,
+        rows_per_segment=200, chunk_bits=8,
     )
-    with pytest.raises(Exception, match="unknown wire codec"):
-        decode_segments(blocks).count()
+    assert store.layout() == ("varbyte", 8)
+    before = store.read_manifest()
+    turns = spark.createDataFrame(gen_transcripts(300))
+    sc = spark.sparkContext
+    group = "layout-conflict-probe"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="chunk_bits=12"):
+            build_index(spark, turns, store, chunk_bits=12)
+        with pytest.raises(ValueError, match="codec='pfor'"):
+            build_index(spark, turns, store, codec="pfor")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert store.read_manifest() == before
 
 
 def test_payloads_without_positions_honored(spark, tmp_path):

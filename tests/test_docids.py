@@ -2,9 +2,20 @@
 driver-known count — including the non-dense turn_idx fallback path."""
 
 import pandas as pd
+import pytest
 
+import trinity_spark.operators.docids as D
 from trinity_spark.fixtures import gen_transcripts
 from trinity_spark.operators.docids import assign_doc_ids_counted
+
+
+def _each_enumerate_path(monkeypatch):
+    """Run the caller's body once per conv-bases enumerate path: the
+    driver-side path (default cap) and the distributed path the
+    >8M-conversation regime takes (cap forced to 0)."""
+    for cap in (D.BROADCAST_MAX_CONVS, 0):
+        monkeypatch.setattr(D, "BROADCAST_MAX_CONVS", cap)
+        yield cap
 
 
 def _check(spark, pdf, num_partitions):
@@ -24,20 +35,21 @@ def test_dense_turn_idx_path(spark):
     _check(spark, gen_transcripts(700), num_partitions=5)
 
 
-def test_sparse_turn_idx_fallback(spark):
+def test_sparse_turn_idx_fallback(spark, monkeypatch):
     """Gappy / non-zero-based turn_idx must still enumerate in (conv_id,
-    turn_idx) order via the row_number fallback."""
+    turn_idx) order via the row_number fallback, on both enumerate paths."""
     pdf = gen_transcripts(400)
     pdf = pdf.copy()
     pdf["turn_idx"] = pdf["turn_idx"] * 3 + 7  # gaps + nonzero start
-    _check(spark, pdf, num_partitions=4)
+    for _ in _each_enumerate_path(monkeypatch):
+        _check(spark, pdf, num_partitions=4)
 
 
-def test_duplicate_turn_idx_with_gap_routes_to_fallback(spark):
+def test_duplicate_turn_idx_with_gap_routes_to_fallback(spark, monkeypatch):
     """turn_idx [0, 0, 2, 3] passes the min/max/count screen (min=0, max=n-1,
     count=n) but is NOT a permutation; the exact distinct-count test must
     route such convs to the row_number path so doc_ids stay unique — the
-    arithmetic path would mint base+0 twice."""
+    arithmetic path would mint base+0 twice.  Both enumerate paths."""
     rows = []
     for c in range(6):
         idxs = [0, 1, 2, 3] if c % 2 == 0 else [0, 0, 2, 3]
@@ -53,17 +65,21 @@ def test_duplicate_turn_idx_with_gap_routes_to_fallback(spark):
                 }
             )
     pdf = pd.DataFrame(rows)
-    sdf, n = assign_doc_ids_counted(spark.createDataFrame(pdf), 3)
-    got = sdf.toPandas()
-    assert n == len(pdf)
-    assert sorted(got["doc_id"]) == list(range(len(pdf)))  # unique AND dense
-    # each conversation still owns a contiguous doc_id range in conv order
-    by_conv = got.groupby("conv_id")["doc_id"].agg(["min", "max", "count"])
-    base = 0
-    for conv_id in sorted(by_conv.index):
-        r = by_conv.loc[conv_id]
-        assert (r["min"], r["max"], r["count"]) == (base, base + 3, 4), conv_id
-        base += 4
+    for cap in _each_enumerate_path(monkeypatch):
+        sdf, n = assign_doc_ids_counted(spark.createDataFrame(pdf), 3)
+        got = sdf.toPandas()
+        assert n == len(pdf)
+        # unique AND dense
+        assert sorted(got["doc_id"]) == list(range(len(pdf))), cap
+        # each conversation still owns a contiguous doc_id range in conv order
+        by_conv = got.groupby("conv_id")["doc_id"].agg(["min", "max", "count"])
+        base = 0
+        for conv_id in sorted(by_conv.index):
+            r = by_conv.loc[conv_id]
+            assert (r["min"], r["max"], r["count"]) == (base, base + 3, 4), (
+                cap, conv_id,
+            )
+            base += 4
 
 
 def test_single_conversation_many_partitions(spark):
@@ -74,28 +90,26 @@ def test_single_conversation_many_partitions(spark):
     _check(spark, pdf, num_partitions=6)
 
 
-def test_null_conv_id_raises(spark):
+def test_null_conv_id_raises(spark, monkeypatch):
     """NULL conv_id would be counted in n_docs but dropped by the equi-join
     back to the corpus — silent index corruption.  Must fail loudly, at the
-    same collect the drift check already pays (zero extra actions)."""
-    import pytest
-
-    from trinity_spark.operators.docids import assign_doc_ids_counted
-
+    same collect the drift check already pays (zero extra actions), on both
+    enumerate paths."""
     df = spark.createDataFrame(
         [("c1", 0, "a"), ("c1", 1, "b"), (None, 0, "ghost")],
         "conv_id string, turn_idx int, text string",
     )
-    with pytest.raises(ValueError, match="NULL conv_id"):
-        assign_doc_ids_counted(df)
+    for _ in _each_enumerate_path(monkeypatch):
+        with pytest.raises(ValueError, match="NULL conv_id"):
+            assign_doc_ids_counted(df)
 
 
-def test_long_conv_duplicate_with_gap_routes_to_fallback(spark):
+def test_long_conv_duplicate_with_gap_routes_to_fallback(spark, monkeypatch):
     """A conversation longer than the 62-slot dense-test bitmap whose
     turn_idx stream passes the min/max/count screen (min=0, max=n-1,
     count=n) but contains a duplicate+gap: the exact filtered
     countDistinct pass must catch it and route the corpus to the
-    row_number fallback so doc_ids stay unique."""
+    row_number fallback so doc_ids stay unique, on both enumerate paths."""
     rows = []
     # 70 turns: 0, 1, ..., 67, 67, 69  -> count=70, min=0, max=69, dup at 67
     idxs = list(range(68)) + [67, 69]
@@ -111,10 +125,12 @@ def test_long_conv_duplicate_with_gap_routes_to_fallback(spark):
             }
         )
     pdf = pd.DataFrame(rows)
-    sdf, n = assign_doc_ids_counted(spark.createDataFrame(pdf), 3)
-    got = sdf.toPandas()
-    assert n == len(pdf)
-    assert sorted(got["doc_id"]) == list(range(len(pdf)))  # unique AND dense
+    for cap in _each_enumerate_path(monkeypatch):
+        sdf, n = assign_doc_ids_counted(spark.createDataFrame(pdf), 3)
+        got = sdf.toPandas()
+        assert n == len(pdf)
+        # unique AND dense
+        assert sorted(got["doc_id"]) == list(range(len(pdf))), cap
 
 
 def test_worker_attach_matches_broadcast_join(spark, tmp_path):
@@ -125,7 +141,6 @@ def test_worker_attach_matches_broadcast_join(spark, tmp_path):
     match the materialized-map reference."""
     import shutil
 
-    import trinity_spark.operators.docids as D
     from pyspark.sql import functions as F
     from trinity_spark.fixtures import gen_transcripts
     from trinity_spark.operators.indexer import SegmentIndex, build_index

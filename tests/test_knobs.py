@@ -23,3 +23,28 @@ def test_env_knobs_match_readme():
         for name in KNOB.findall(path.read_text())
     }
     assert in_code == _readme_knobs()
+
+
+# a READ of a segment's lineage codec / chunk width: ``m.lineage.get("codec"``,
+# ``meta.lineage["chunk_bits"]``, ``s["lineage"]["codec"]``
+LINEAGE_LAYOUT_READ = re.compile(
+    r"""lineage["']?\]?\s*(?:\.get\(|\[)\s*["'](?:codec|chunk_bits)["']"""
+)
+
+
+def test_wire_layout_has_one_owner():
+    """One wire layout per store: no codec-tagged block read and no
+    ``"mixed"`` codec sentinel anywhere in the engine, and segment lineage
+    codec / chunk_bits are read only by ``sources/store.py`` (the store owns
+    the layout decision, so a new codec plugs in there and nowhere else)."""
+    store = "trinity_spark/sources/store.py"
+    for path in sorted((ROOT / "trinity_spark").rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        text = path.read_text()
+        assert "with_codec" not in text, rel
+        assert '"mixed"' not in text and "'mixed'" not in text, rel
+        if rel != store:
+            assert not LINEAGE_LAYOUT_READ.search(text), rel
+    # the pattern is not vacuous: it catches the read forms it is meant for
+    for read in ('m.lineage.get("chunk_bits", 16)', 's["lineage"]["codec"]'):
+        assert LINEAGE_LAYOUT_READ.search(read), read

@@ -783,28 +783,30 @@ def test_merge_preserves_nondefault_chunk_bits(spark, tmp_path_factory):
             assert abs(gs - ws) <= 1e-9
 
 
-def test_merge_mixed_chunk_bits_reencodes_everything(spark, tmp_path_factory):
-    """Inputs with DIFFERENT chunk_bits cannot byte-splice into one segment;
-    the merge must disable the byte-reuse fast path and re-encode all blocks
-    at one width, recording that width in lineage."""
-    from trinity_spark.operators.segments import CHUNK_BITS
+def test_nrt_append_inherits_store_chunk_bits(spark, tmp_path_factory):
+    """A default NRT append onto a chunk_bits=8 store must write 8-bit
+    chunks: the store fixes its chunk width at the first commit.  Were the
+    append to write the 16-bit default, the merge would see two widths and
+    re-encode every block (0 reused) instead of splicing bytes."""
     from trinity_spark.streaming.nrt import append_micro_segment
 
-    base = str(tmp_path_factory.mktemp("mixed"))
+    base = str(tmp_path_factory.mktemp("nrtwidth"))
     corpus = gen_transcripts(600)
     store = SegmentStore(base)
     build_index(
         spark, spark.createDataFrame(corpus), store, rows_per_segment=600,
-        input_desc="mixed", chunk_bits=8,
+        input_desc="nrtwidth", chunk_bits=8,
     )
     extra = gen_transcripts(200, seed=77)
-    append_micro_segment(
-        spark, store, spark.createDataFrame(extra), chunk_bits=12
-    )
+    appended = append_micro_segment(spark, store, spark.createDataFrame(extra))
+    assert appended.lineage["chunk_bits"] == 8
+    assert SegmentIndex(spark, store).chunk_bits == 8
     meta = merge_segments(spark, store)
-    assert meta.lineage["chunk_bits"] == CHUNK_BITS
+    assert meta.lineage["chunk_bits"] == 8
+    assert meta.metrics["blocks_reused"] > 0
     for r in store.read_blocks(spark).select("chunk", "min_doc_id").collect():
-        assert r["chunk"] == r["min_doc_id"] >> CHUNK_BITS
+        assert r["chunk"] == r["min_doc_id"] >> 8
+    assert store.fsck(spark, deep=True)["ok"]
     docs = docs_in_stable_order(corpus)
     docs += [(d + 600, t) for d, t in docs_in_stable_order(extra)]
     oracle = OracleIndex.build(docs)

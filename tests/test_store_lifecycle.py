@@ -177,7 +177,8 @@ def test_store_lifecycle_random_sequence(spark, tmp_path_factory, seed, codec):
 
     # wire identity survived the whole sequence: every surviving segment —
     # built, NRT-appended, or merged — still carries the chosen codec
-    assert {store.segment_codec(m) for m in store.segments()} == {codec}
+    assert {m.lineage["codec"] for m in store.segments()} == {codec}
+    assert store.layout().codec == codec
 
     # the pinned snapshot still answers with the frozen model's match sets
     if pinned is not None:

@@ -714,7 +714,6 @@ def test_concurrent_nrt_writers_loser_rejected(spark, seeded_store):
     from pyspark.sql import functions as F
 
     from trinity_spark.operators.docids import assign_doc_ids
-    from trinity_spark.operators.segments import CHUNK_BITS
     from trinity_spark.streaming.nrt import _append_assigned, next_doc_id
 
     store, corpus0 = seeded_store
@@ -730,13 +729,13 @@ def test_concurrent_nrt_writers_loser_rejected(spark, seeded_store):
     c_b = gen_transcripts(40, seed=72)
     meta_a = _append_assigned(
         spark, store, assigned(c_a), 40, base, time.monotonic(),
-        "stream-a-epoch-0", CHUNK_BITS,
+        "stream-a-epoch-0",
     )
     # writer B allocated against the SAME stale high-water mark
     with pytest.raises(ValueError, match="overlaps committed segment"):
         _append_assigned(
             spark, store, assigned(c_b), 40, base, time.monotonic(),
-            "stream-b-epoch-0", CHUNK_BITS,
+            "stream-b-epoch-0",
         )
     # the winner's batch survives end-to-end: its segment is live, and the
     # loser's orphan slice was discarded on rejection — the doc-id space

@@ -64,6 +64,34 @@ BROADCAST_MAX_CONVS = int(os.environ.get("TRINITY_BROADCAST_MAX_CONVS", "8000000
 _BASES_SCHEMA = "conv_id string, n_turns long, base long"
 
 
+def _raise_null_conv_id() -> None:
+    raise ValueError(
+        "NULL conv_id in input turns: doc-id assignment joins on "
+        "conv_id, so NULL-keyed turns would be silently dropped from "
+        "the index while still counted in n_docs — clean the input "
+        "(assign a sentinel conv id) first"
+    )
+
+
+def _long_convs_dense(df: DataFrame, long_ids: DataFrame) -> bool:
+    """Exact permutation test for convs too long for the 62-bit bitmap:
+    one FILTERED pass over just those convs' turns (broadcast semi-join on
+    the small ``long_ids`` conv_id set) comparing distinct turn_idx count
+    to turn count; rare on transcript corpora."""
+    clash = (
+        df.join(F.broadcast(long_ids), "conv_id", "left_semi")
+        .groupBy("conv_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.countDistinct("turn_idx").alias("n_distinct"),
+        )
+        .where(F.col("n_distinct") != F.col("n_turns"))
+        .limit(1)
+        .collect()
+    )
+    return not clash
+
+
 def _conv_bases_driver(
     spark, df: DataFrame, t, writer=None
 ) -> tuple[DataFrame | None, int, int, bool]:
@@ -78,12 +106,7 @@ def _conv_bases_driver(
     if isinstance(conv_col, pa.ChunkedArray):
         conv_col = conv_col.combine_chunks()
     if conv_col.null_count:
-        raise ValueError(
-            "NULL conv_id in input turns: doc-id assignment joins on "
-            "conv_id, so NULL-keyed turns would be silently dropped from "
-            "the index while still counted in n_docs — clean the input "
-            "(assign a sentinel conv id) first"
-        )
+        _raise_null_conv_id()
     conv_bytes = (
         conv_col.cast(pa.binary()).to_numpy(zero_copy_only=False).astype("S")
     )
@@ -107,47 +130,23 @@ def _conv_bases_driver(
     )
     dense = not bool(sparse.any())
     if dense and bool((~small).any()):
-        # convs too long for the 62-bit bitmap: exact distinct count over
-        # just those convs' turns (one filtered pass; rare)
         long_ids = conv_col.take(pa.array(order[np.flatnonzero(~small)]))
-        long_df = spark.createDataFrame(
-            pa.table({"conv_id": long_ids}).to_pandas()
+        dense = _long_convs_dense(
+            df, spark.createDataFrame(pa.table({"conv_id": long_ids}).to_pandas())
         )
-        exact = (
-            df.join(F.broadcast(long_df), "conv_id", "left_semi")
-            .groupBy("conv_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.countDistinct("turn_idx").alias("n_distinct"),
-            )
-            .where(F.col("n_distinct") != F.col("n_turns"))
-            .limit(1)
-            .collect()
-        )
-        dense = not exact
+    base = np.concatenate(([0], np.cumsum(n_turns)[:-1]))
+    bases = pa.table(
+        {
+            "conv_id": conv_col.take(pa.array(order)),
+            "n_turns": pa.array(n_turns, type=pa.int64()),
+            "base": pa.array(base, type=pa.int64()),
+        }
+    )
     if writer is not None:
         if dense:
-            base = np.concatenate(([0], np.cumsum(n_turns)[:-1]))
-            out = pa.table(
-                {
-                    "conv_id": conv_col.take(pa.array(order)),
-                    "n_turns": pa.array(n_turns, type=pa.int64()),
-                    "base": pa.array(base, type=pa.int64()),
-                }
-            )
-            writer(out, n_docs, n_convs)
+            writer(bases, n_docs, n_convs)
         return None, n_docs, n_convs, dense
-    base = np.concatenate(([0], np.cumsum(n_turns)[:-1]))
-    bases = spark.createDataFrame(
-        pa.table(
-            {
-                "conv_id": conv_col.take(pa.array(order)),
-                "n_turns": pa.array(n_turns, type=pa.int64()),
-                "base": pa.array(base, type=pa.int64()),
-            }
-        ).to_pandas()
-    )
-    return bases, n_docs, n_convs, dense
+    return spark.createDataFrame(bases.to_pandas()), n_docs, n_convs, dense
 
 
 def _conv_bases(
@@ -235,32 +234,14 @@ def _conv_bases(
     # served its purpose (the range sampling + the one shuffle read)
     convs.unpersist()
     if any(r["has_null"] for r in parts):
-        raise ValueError(
-            "NULL conv_id in input turns: doc-id assignment joins on "
-            "conv_id, so NULL-keyed turns would be silently dropped from "
-            "the index while still counted in n_docs — clean the input "
-            "(assign a sentinel conv id) first"
-        )
+        _raise_null_conv_id()
     n_docs = int(sum(r["n_turns"] for r in parts))
     n_convs = int(sum(r["n_convs"] for r in parts))
     dense = all(r["sparse"] == 0 for r in parts)
     if dense and any(r["long_conv"] for r in parts):
-        # some convs exceed the 62-bit bitmap: their permutation test needs
-        # the exact distinct count — one FILTERED pass over just those
-        # convs' turns (broadcast semi-join on the small long-conv id set)
-        long_ids = ordered.where(F.col("max_idx") > 61).select("conv_id")
-        exact = (
-            df.join(F.broadcast(long_ids), "conv_id", "left_semi")
-            .groupBy("conv_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.countDistinct("turn_idx").alias("n_distinct"),
-            )
-            .where(F.col("n_distinct") != F.col("n_turns"))
-            .limit(1)
-            .collect()
+        dense = _long_convs_dense(
+            df, ordered.where(F.col("max_idx") > 61).select("conv_id")
         )
-        dense = not exact
     offsets: dict[int, int] = {}
     expect: dict[int, int] = {}
     acc = 0

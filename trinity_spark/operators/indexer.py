@@ -39,7 +39,7 @@ from ..sources.store import SegmentMeta, SegmentStore
 from .build import field_stats_from_blocks, term_dict_from_blocks
 from .docids import assign_doc_ids_counted
 from .fastbuild import blocks_from_turns
-from .segments import CHUNK_BITS, decode_segments
+from .segments import decode_segments
 
 # Above this corpus size the docid map always gets the doc-range layout
 # shuffle, segment count notwithstanding: the assignment join may have hash-
@@ -65,18 +65,19 @@ def build_index(
     store: SegmentStore,
     rows_per_segment: int | None = None,
     input_desc: str = "unknown",
-    chunk_bits: int = CHUNK_BITS,
+    chunk_bits: int | None = None,
     docid_map_mode: str = "materialized",
     codec: str | None = None,
 ) -> list[SegmentMeta]:
     """Build (or resume) the full index; returns committed segment metas.
 
     ``codec`` selects the posting-stream wire format ("varbyte" default,
-    "pfor" for the Lucene-style 128-block FOR packing).  ``None`` resolves
-    to the store's recorded codec (manifest ``codec``, fixed by the first
-    build) so resumes and NRT appends stay homogeneous; each segment's
-    lineage records the codec that wrote it — the codecs.h:93-95 segment
-    codec identity — and merge refuses byte reuse across mixed codecs.
+    "pfor" for the Lucene-style 128-block FOR packing) and ``chunk_bits``
+    the encode-group width (``chunk = doc_id >> chunk_bits``, default 16).
+    Both belong to the store: its first commit fixes them in the manifest,
+    and NRT appends and merges inherit them.  ``None`` resolves to the
+    store's values (the defaults for a fresh store); an explicit value that
+    conflicts with the store raises before phase 0 reads any input.
 
     ``docid_map_mode``:
     - ``"materialized"`` (default): phase 0 writes the full (turns + doc_id)
@@ -94,6 +95,7 @@ def build_index(
       Requires dense 0-based per-conv turn_idx (validated; falls back to
       materialized otherwise).
     """
+    codec, chunk_bits = store.resolve_layout(codec, chunk_bits)
     # Build-scoped fine scan splits: the fused tokenize/encode pass is
     # CPU-bound, so 4 MiB splits keep the last wave short at every core
     # count (a 330 MB corpus = 84 tasks instead of 21; ragged-tail waste at
@@ -105,9 +107,6 @@ def build_index(
     # the per-task overhead saved.  Scoped here (runtime conf, restored in
     # the finally below) because the same setting shreds QUERY scans into
     # hundreds of tiny tasks of pure scheduling overhead.
-    if codec is None:
-        codec = store.default_codec()
-    store.record_default_codec(codec)
     # the fine split is applied INSIDE _build_index_inner just before the
     # segment loop: phase 0 (conv aggregation / docid map) is scan+agg
     # bound and runs ~15% faster on default-size splits — only the fused
@@ -423,36 +422,17 @@ class SegmentIndex:
     def __init__(self, spark: SparkSession, store: SegmentStore):
         self.spark = spark
         self.store = store
-        codecs = sorted({store.segment_codec(m) for m in store.segments()})
-        # unknown codec tags must fail LOUD at open: the mixed-codec decode
-        # splits blocks by known-codec branches, so an unrecognized tag
-        # (corrupt manifest, store from a newer engine) would otherwise
-        # silently drop those segments' postings from every query
-        from .segments import CODECS
-
-        unknown = [c for c in codecs if c not in CODECS]
-        if unknown:
-            raise ValueError(
-                f"store has segments with unknown codec(s) {unknown}; "
-                f"this engine knows {list(CODECS)}"
-            )
-        # single-codec stores (the normal case) read untagged blocks and
-        # decode with that codec; a store holding segments written by
-        # DIFFERENT codecs (pre-compaction mixing) reads codec-tagged blocks
-        # and decode_segments splits per codec — queries stay correct either
-        # way, and a merge re-homogenizes the store
-        self.codec = codecs[0] if len(codecs) == 1 else ("mixed" if codecs else "varbyte")
-        self.blocks = store.read_blocks(spark, with_codec=self.codec == "mixed")
+        # one wire layout per store; layout() raises on an unknown codec or
+        # a segment whose lineage disagrees, so a corrupt store fails at
+        # open instead of decoding garbage or dropping postings.  The chunk
+        # width feeds the pruning cost gate's driver-side chunk counts.
+        self.codec, self.chunk_bits = store.layout()
+        self.blocks = store.read_blocks(spark)
         self.term_dict = store.read_term_dict(spark)
         self.field_stats = store.read_field_stats(spark)
         self.deleted = store.read_deletes(spark)
         # full logical view (lazy; only touched if a caller scans everything)
-        self.postings = self._decode(self.blocks)
-
-    def _decode(self, blocks: DataFrame, **kw) -> DataFrame:
-        if self.codec == "mixed":
-            return decode_segments(blocks, **kw)  # codec column drives split
-        return decode_segments(blocks, codec=self.codec, **kw)
+        self.postings = decode_segments(self.blocks, codec=self.codec)
 
     def postings_for(
         self, terms: list[str], with_positions: bool = True
@@ -461,26 +441,16 @@ class SegmentIndex:
         (the largest stream) is pruned from the parquet scan — token-only
         BM25 queries never touch it."""
         pruned = self.blocks.where(F.col("term").isin(terms))
-        return self._decode(pruned, with_positions=with_positions)
+        return decode_segments(
+            pruned, with_positions=with_positions, codec=self.codec
+        )
 
     def postings_with_payloads_for(self, terms: list[str]) -> DataFrame:
         """Like postings_for but with the per-hit payload stream decoded
         (runtime.h:8-20 term_hit.payload) — used by the winners-only hits
         surface, never by the scoring scan."""
         pruned = self.blocks.where(F.col("term").isin(terms))
-        return self._decode(pruned, with_payloads=True)
-
-    @property
-    def chunk_bits(self) -> int:
-        """Encode-group chunk width (from build lineage) — the pruning cost
-        gate needs it to estimate chunk counts driver-side."""
-        if not hasattr(self, "_chunk_bits"):
-            bits = {
-                m.lineage.get("chunk_bits", CHUNK_BITS)
-                for m in self.store.segments()
-            } or {CHUNK_BITS}
-            self._chunk_bits = bits.pop() if len(bits) == 1 else CHUNK_BITS
-        return self._chunk_bits
+        return decode_segments(pruned, with_payloads=True, codec=self.codec)
 
     # dictionaries up to this size are cached driver-side after first use —
     # one collect replaces a per-query Spark job (terms.idx-in-memory analog);
@@ -492,7 +462,7 @@ class SegmentIndex:
         replaces) — a SegmentIndex snapshot is otherwise frozen at open time
         (stale df/N caches would skew idf after appends).  Returns self."""
         self.__init__(self.spark, self.store)
-        for attr in ("_n_docs", "_df_cache", "_chunk_bits"):
+        for attr in ("_n_docs", "_df_cache"):
             if hasattr(self, attr):
                 delattr(self, attr)
         return self

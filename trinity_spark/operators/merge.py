@@ -87,32 +87,7 @@ from pyspark.sql import functions as F
 from .. import __version__
 from ..sources.store import SegmentMeta, SegmentStore
 from .build import field_stats_from_blocks, term_dict_from_blocks
-from .segments import BLOCK_SIZE, CHUNK_BITS, decode_segments, encode_postings
-
-
-def _merge_chunk_bits(metas) -> int | None:
-    """Common chunk_bits across the merged segments (from build lineage), or
-    None when mixed/unrecorded — the tombstone probe then skips the chunk
-    equi-join and falls back to a pure range condition."""
-    bits = {m.lineage.get("chunk_bits", CHUNK_BITS) for m in metas}
-    return bits.pop() if len(bits) == 1 else None
-
-
-def _merge_codec(metas) -> str | None:
-    """Common wire codec across the merged segments (lineage ``codec``), or
-    None when mixed — the merge.cpp:256-287 same-codec precondition for the
-    raw-copy fast path: mixed-codec inputs disable byte reuse entirely and
-    everything is decoded (per codec) and re-encoded at one codec."""
-    from .segments import CODECS
-
-    codecs = {m.lineage.get("codec", "varbyte") for m in metas}
-    unknown = codecs - set(CODECS)
-    if unknown:
-        raise ValueError(
-            f"cannot merge segments with unknown codec(s) {sorted(unknown)}; "
-            f"this engine knows {list(CODECS)}"
-        )
-    return codecs.pop() if len(codecs) == 1 else None
+from .segments import BLOCK_SIZE, decode_segments, encode_postings
 
 
 # Tombstone-set ceiling for the membership refine: the sorted id array rides
@@ -191,7 +166,7 @@ def _membership_refine(
 
 
 def _present_tombstones(
-    blocks: DataFrame, cand: DataFrame, legacy_metas, cdc: str | None
+    blocks: DataFrame, cand: DataFrame, legacy_metas, codec: str
 ) -> DataFrame:
     """Candidate tombstone ids that still physically exist in the legacy
     segments' blocks (pre-``deletes_gens`` lineage: the applied set is
@@ -217,10 +192,7 @@ def _present_tombstones(
         & (F.col("_cand_id") <= F.col("max_doc_id")),
         "left_semi",
     )
-    if cdc is None:
-        present = decode_segments(hit, with_positions=False)
-    else:
-        present = decode_segments(hit, with_positions=False, codec=cdc)
+    present = decode_segments(hit, with_positions=False, codec=codec)
     return cand.join(
         present.select("doc_id").distinct(), "doc_id", "left_semi"
     )
@@ -259,8 +231,12 @@ def merge_segments(
     hi = max(m.doc_hi for m in metas)
 
     t0 = time.monotonic()
-    cdc = _merge_codec(metas)  # None = mixed codecs -> re-encode everything
-    blocks = store.read_blocks(spark, ids, with_codec=cdc is None)
+    # one wire layout per store (raises on an unknown codec or a segment
+    # whose lineage disagrees): every input shares the output's codec and
+    # chunk width, so the raw-copy fast path always applies — the
+    # merge.cpp:256-287 same-codec precondition holds by construction
+    codec, cb = store.layout(manifest0)
+    blocks = store.read_blocks(spark, ids)
     read_gens: list[int] = []
     in_range = None
     n_deleted = 0
@@ -344,91 +320,68 @@ def merge_segments(
                 )
                 lcond = reduce(lambda a, b: a | b, [_rng(m) for m in legacy])
                 cand = deletes.where(lcond).select("doc_id").distinct()
-                parts.append(_present_tombstones(blocks, cand, legacy, cdc))
+                parts.append(_present_tombstones(blocks, cand, legacy, codec))
             merged_cnt = parts[0]
             for p in parts[1:]:
                 merged_cnt = merged_cnt.unionByName(p)
             n_deleted = merged_cnt.distinct().count()
 
-    # One chunk width AND one codec per output segment: re-encoded blocks
-    # use the inputs' common chunk_bits/codec so reused + re-encoded blocks
-    # share one geometry and one wire, and the recorded lineage stays exact
-    # (later merges' tombstone chunk probe, chunk-restricted pruning, and
-    # the decode path depend on both).  Mixed-width OR mixed-codec inputs
-    # disable the byte-reuse fast path entirely — everything is decoded
-    # (per its own codec) and re-encoded at the default width / the store's
-    # default codec (the merge.cpp:256-287 same-codec raw-copy rule).
-    cb = _merge_chunk_bits(metas)
-    out_bits = cb if cb is not None else CHUNK_BITS
-    out_codec = cdc if cdc is not None else store.default_codec()
+    # (term, chunk) groups with 2+ partial blocks need repacking; all other
+    # blocks (fulls + lone partials) are already optimally packed.
+    # Metadata-only aggregation — byte columns pruned from this job.
     full = F.col("doc_count") == BLOCK_SIZE
-    if cb is None or cdc is None:
-        reused = (
-            blocks.drop("codec") if cdc is None else blocks
-        ).where(F.lit(False))
-        rest = blocks
-    else:
-        # (term, chunk) groups with 2+ partial blocks need repacking; all
-        # other blocks (fulls + lone partials) are already optimally packed.
-        # Metadata-only aggregation — byte columns pruned from this job.
-        multi = (
-            blocks.where(~full)
-            .groupBy("term", "chunk")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > 1)
-            .select("term", "chunk")
-        )
-        # no forced broadcast on `multi` (ADVICE r3): its size is unbounded —
-        # a first compaction of a fragmented build has ~one row per distinct
-        # (term, chunk) — so AQE decides (broadcast when small, shuffle hash
-        # join otherwise; the join is metadata-only either way)
-        packed = blocks.where(full).unionByName(
-            blocks.where(~full).join(multi, ["term", "chunk"], "left_anti")
-        )
-        needs_repack = blocks.where(~full).join(
-            multi, ["term", "chunk"], "left_semi"
-        )
-        if in_range is not None:
-            tomb = in_range.select(
-                F.col("doc_id").alias("_t_doc"),
-                F.shiftright(F.col("doc_id"), cb).alias("_t_chunk"),
-            )
-            probe = (
-                (F.col("chunk") == F.col("_t_chunk"))
-                & (F.col("_t_doc") >= F.col("min_doc_id"))
-                & (F.col("_t_doc") <= F.col("max_doc_id"))
-            )
-            safe = packed.join(F.broadcast(tomb), probe, "left_anti")
-            # range-cover is only a CANDIDATE test: a block whose
-            # [min_doc_id, max_doc_id] covers a tombstoned id need not
-            # CONTAIN it — a rare term's lone partial spans most of its
-            # chunk, so with tombstones scattered across every chunk the
-            # range probe alone re-encoded the majority of all blocks
-            # (measured: 10M-turn merge with 1000 tombstones fell to 36.7%
-            # byte reuse).  Refine candidates by actual doc membership
-            # (doc_deltas-only decode, the reference's skiplist-then-seek
-            # discipline: google_codec.cpp:146-176 confirms a docID is in
-            # a block before touching it) and reuse the true misses.
-            cand = packed.join(F.broadcast(tomb), probe, "left_semi")
-            clean, tombhit = _membership_refine(cand, in_range, cdc)
-            reused = safe.unionByName(clean)
-            rest = needs_repack.unionByName(tombhit)
-        else:
-            reused = packed
-            rest = needs_repack
-
-    # mixed-codec `rest` carries the codec tag column -> decode splits per
-    # codec; single-codec inputs decode with that codec directly.  Decode
-    # WITH payloads: re-encoded blocks must carry their per-hit payload
-    # stream through the merge (reused blocks keep theirs byte-for-byte, so
-    # dropping them here would silently strip payloads from exactly the
-    # repacked/tombstone-hit blocks); payload-free stores round-trip an
-    # empty stream
-    rest_postings = (
-        decode_segments(rest, with_payloads=True)
-        if cdc is None
-        else decode_segments(rest, with_payloads=True, codec=cdc)
+    multi = (
+        blocks.where(~full)
+        .groupBy("term", "chunk")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > 1)
+        .select("term", "chunk")
     )
+    # no forced broadcast on `multi` (ADVICE r3): its size is unbounded — a
+    # first compaction of a fragmented build has ~one row per distinct
+    # (term, chunk) — so AQE decides (broadcast when small, shuffle hash
+    # join otherwise; the join is metadata-only either way)
+    packed = blocks.where(full).unionByName(
+        blocks.where(~full).join(multi, ["term", "chunk"], "left_anti")
+    )
+    needs_repack = blocks.where(~full).join(multi, ["term", "chunk"], "left_semi")
+    if in_range is not None:
+        tomb = in_range.select(
+            F.col("doc_id").alias("_t_doc"),
+            F.shiftright(F.col("doc_id"), cb).alias("_t_chunk"),
+        )
+        probe = (
+            (F.col("chunk") == F.col("_t_chunk"))
+            & (F.col("_t_doc") >= F.col("min_doc_id"))
+            & (F.col("_t_doc") <= F.col("max_doc_id"))
+        )
+        safe = packed.join(F.broadcast(tomb), probe, "left_anti")
+        # range-cover is only a CANDIDATE test: a block whose [min_doc_id,
+        # max_doc_id] covers a tombstoned id need not CONTAIN it — a rare
+        # term's lone partial spans most of its chunk, so with tombstones
+        # scattered across every chunk the range probe alone re-encoded the
+        # majority of all blocks (measured: 10M-turn merge with 1000
+        # tombstones fell to 36.7% byte reuse).  Refine candidates by actual
+        # doc membership (doc_deltas-only decode, the reference's
+        # skiplist-then-seek discipline: google_codec.cpp:146-176 confirms a
+        # docID is in a block before touching it) and reuse the true misses.
+        cand = packed.join(F.broadcast(tomb), probe, "left_semi")
+        clean, tombhit = _membership_refine(cand, in_range, codec)
+        reused = safe.unionByName(clean)
+        rest = needs_repack.unionByName(tombhit)
+    else:
+        reused = packed
+        rest = needs_repack
+
+    # Decode WITH payloads: re-encoded blocks must carry their per-hit
+    # payload stream through the merge (reused blocks keep theirs
+    # byte-for-byte, so dropping them here would silently strip payloads
+    # from exactly the repacked/tombstone-hit blocks); payload-free stores
+    # round-trip an empty stream.  Re-encoded blocks use the store's codec
+    # and chunk width, so reused and re-encoded blocks share one geometry
+    # (later merges' tombstone chunk probe and chunk-restricted pruning
+    # depend on it).
+    rest_postings = decode_segments(rest, with_payloads=True, codec=codec)
     if in_range is not None:
         # physical removal anti-joins ALL in-range tombstone ids (removing
         # already-absent ids is a no-op); the docs_cnt arithmetic used the
@@ -446,7 +399,7 @@ def merge_segments(
         reused.withColumn("_reused", F.lit(True))
         .unionByName(
             encode_postings(
-                rest_postings, chunk_bits=out_bits, codec=out_codec
+                rest_postings, chunk_bits=cb, codec=codec
             ).withColumn("_reused", F.lit(False))
         )
         .persist()
@@ -480,8 +433,8 @@ def merge_segments(
                     for g in m.lineage.get("deletes_gens", [])
                 }
             ),
-            "chunk_bits": out_bits,
-            "codec": out_codec,
+            "chunk_bits": cb,
+            "codec": codec,
             "engine_version": __version__,
             # audit trail: ranges whose tombstones were counted by the
             # lossy presence mode (inputs predating deletes_gens lineage)

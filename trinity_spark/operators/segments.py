@@ -49,11 +49,13 @@ BLOCK_SIZE = 128  # docs per block (lucene_codec.h:49 BLOCK_SIZE=128)
 BLOCKS_PER_CHUNK = (1 << CHUNK_BITS) // BLOCK_SIZE
 
 # Selectable wire codecs for the three posting streams (doc deltas / tfs /
-# position deltas).  The codec identity is recorded per segment in lineage —
-# the reference's segment `id` codec marker (codecs.h:93-95, the indexer
-# writes which codec produced a segment, indexer.cpp:268-270) — and merge
-# treats mixed-codec inputs like mixed chunk widths: re-encode, no byte
-# reuse (the merge.cpp:256-287 same-codec raw-copy precondition).
+# position deltas).  A store holds ONE codec and one chunk width: its first
+# commit fixes both in the manifest and every later commit (build, NRT
+# append, merge) must match — ``SegmentStore.layout`` is the single owner
+# of that decision.  Each segment's lineage still records the codec that
+# wrote it — the reference's segment `id` codec marker (codecs.h:93-95,
+# indexer.cpp:268-270) — so every merge is a same-codec merge and keeps
+# the raw-copy fast path (merge.cpp:256-287).
 # pay_bytes (optional per-hit payloads) stays varbyte under BOTH codecs: the
 # stream is empty on transcript corpora and varbyte's self-delimiting
 # property is what lets all-or-nothing payload blocks coexist.
@@ -319,54 +321,8 @@ def decode_segments(
     pos_bytes is the largest stream, so this roughly halves the bytes a
     positional-free query touches.
 
-    ``codec`` names the wire format the blocks were written with.  If the
-    frame carries a ``codec`` COLUMN (``SegmentStore.read_blocks(...,
-    with_codec=True)`` tags each segment's rows from its lineage), the frame
-    is split per codec and decoded branch-by-branch instead — the
-    mixed-codec read path a store acquires when segments were written by
-    different codecs and not yet re-encoded by a merge."""
-    if "codec" in blocks.columns:
-        # literal-tagged rows: the filter constant-folds per parquet subtree,
-        # so a single-codec store pays nothing for the dead branch
-        parts = [
-            decode_segments(
-                blocks.where(F.col("codec") == c).drop("codec"),
-                with_payloads=with_payloads,
-                with_positions=with_positions,
-                codec=c,
-            )
-            for c in CODECS
-        ]
-        # rows whose codec tag matches NO known wire must raise, not vanish:
-        # a segment written by a newer engine (or a corrupted manifest)
-        # would otherwise silently drop its postings from every query —
-        # against the module's loud-corruption policy.  Literal tags
-        # constant-fold, so a healthy store pays nothing for this branch.
-        unknown = blocks.where(
-            ~F.col("codec").isin(list(CODECS)) | F.col("codec").isNull()
-        )
-
-        def _raise_unknown(it):
-            for b in it:
-                if b.num_rows:
-                    tag = b.column("codec")[0].as_py()
-                    raise ValueError(
-                        f"unknown wire codec tag {tag!r} in block rows; "
-                        f"known: {sorted(CODECS)}"
-                    )
-            return
-            yield  # generator marker: yields nothing, raises on any row
-
-        out_schema = (
-            (POSTINGS_PAYLOAD_SCHEMA if with_positions else POSTINGS_PAYLOAD_NOPOS_SCHEMA)
-            if with_payloads
-            else (POSTINGS_SCHEMA if with_positions else POSTINGS_NOPOS_SCHEMA)
-        )
-        parts.append(unknown.mapInArrow(_raise_unknown, out_schema))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    ``codec`` names the wire format the blocks were written with — one
+    per store (``SegmentStore.layout``)."""
     _check_codec(codec)
     if with_payloads:
         cols = ["term", "doc_count", "doc_deltas", "tf_bytes"]

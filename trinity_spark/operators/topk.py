@@ -301,16 +301,13 @@ class _PrunedView:
         self.field_stats = inner.field_stats
         self.deleted = inner.deleted
         self.postings = inner.postings
-        self.chunk_bits = getattr(inner, "chunk_bits", 16)
-        self.codec = getattr(inner, "codec", "varbyte")
+        self.chunk_bits = inner.chunk_bits
+        self.codec = inner.codec
 
     def postings_for(self, terms, with_positions: bool = True):
         from .segments import decode_segments
 
         pruned = self.blocks.where(F.col("term").isin(terms))
-        if self.codec == "mixed":
-            # codec-tagged blocks: decode_segments splits per codec column
-            return decode_segments(pruned, with_positions=with_positions)
         return decode_segments(
             pruned, with_positions=with_positions, codec=self.codec
         )

@@ -37,10 +37,19 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.segments import (
+    CHUNK_BITS,
+    CODECS,
+    DEFAULT_CODEC,
+    SEGMENT_SCHEMA,
+    _check_codec,
+    decode_segments,
+)
 
 MANIFEST = "manifest.json"
 
@@ -73,6 +82,56 @@ POSTINGS_EST_BYTES_PER_DOC = float(
 POSTINGS_ROWGROUP_BYTES = int(
     os.environ.get("TRINITY_POSTINGS_ROWGROUP_BYTES", str(8 << 20))
 )
+
+
+class Layout(NamedTuple):
+    """A store's wire layout: the posting-stream codec and the chunk width
+    (``chunk = doc_id >> chunk_bits``).  One per store — Trinity records the
+    codec that wrote each segment (codecs.h:93-95) and raw-copies bytes
+    only between same-codec inputs (merge.cpp:256-287); fixing the layout
+    at the first commit makes every merge a same-layout merge.  A manifest
+    or lineage without the keys means the defaults."""
+
+    codec: str
+    chunk_bits: int
+
+
+DEFAULT_LAYOUT = Layout(DEFAULT_CODEC, CHUNK_BITS)
+
+
+def _layout(d: dict[str, Any], default: Layout = DEFAULT_LAYOUT) -> Layout:
+    """The layout a manifest or a segment lineage names (same keys)."""
+    return Layout(
+        d.get("codec", default.codec),
+        int(d.get("chunk_bits", default.chunk_bits)),
+    )
+
+
+def _layout_fixed(m: dict[str, Any]) -> bool:
+    """Whether a first commit has fixed the manifest's layout.  A manifest
+    with segments but no layout keys predates them: the defaults."""
+    return "codec" in m or "chunk_bits" in m or bool(m["segments"])
+
+
+def _layout_errors(m: dict[str, Any]) -> list[str]:
+    """Layout findings: an unknown store codec, and every live segment
+    whose lineage layout differs from the store's (fsck reports these;
+    ``SegmentStore.layout`` raises on them)."""
+    lay = _layout(m)
+    errors = []
+    if lay.codec not in CODECS:
+        errors.append(
+            f"store codec {lay.codec!r} is unknown; this engine knows "
+            f"{list(CODECS)}"
+        )
+    for s in m["segments"]:
+        got = _layout(s["lineage"])
+        if got != lay:
+            errors.append(
+                f"{s['segment_id']}: lineage {got} differs from the "
+                f"store's {lay}"
+            )
+    return errors
 
 
 @dataclass
@@ -244,36 +303,59 @@ class SegmentStore:
                 pass  # a concurrent expire already took it
         return [sid for sid, _ in drop]
 
-    # --- codec identity (codecs.h:93-95: the segment records which codec
-    # wrote it; indexer.cpp:268-270) ---
+    # --- wire layout ---
 
-    def default_codec(self) -> str:
-        """The store's wire codec: fixed by the FIRST build (manifest
-        ``codec`` key) so later builds / NRT appends stay homogeneous unless
-        a caller explicitly overrides per build."""
-        return self.read_manifest().get("codec", "varbyte")
+    def layout(self, manifest: dict[str, Any] | None = None) -> Layout:
+        """The store's wire layout.  Raises when the manifest names an
+        unknown codec or a live segment's lineage disagrees with it: such a
+        store cannot be decoded with one codec and width, and reading it
+        anyway would serve garbage or drop postings.  ``manifest``: an
+        already-read manifest, so a caller's segment list and layout come
+        from the same snapshot."""
+        m = manifest if manifest is not None else self.read_manifest()
+        errors = _layout_errors(m)
+        if errors:
+            raise ValueError("store wire layout: " + "; ".join(errors))
+        return _layout(m)
 
-    def record_default_codec(self, codec: str) -> None:
-        """Record the store codec on first build.  A later build asking for
-        a DIFFERENT codec is an error — silently keeping the old default
-        would revert the caller's explicit choice and leave the store
-        permanently mixed (new segments one codec, NRT appends/merges the
-        other, byte reuse disabled).  Changing wires means a new store."""
-        with self._manifest_lock():
-            m = self.read_manifest()
-            if "codec" not in m:
-                m["codec"] = codec
-                self._write_manifest(m)
-        if "codec" in m and m["codec"] != codec:
+    def resolve_layout(
+        self, codec: str | None = None, chunk_bits: int | None = None
+    ) -> Layout:
+        """The layout a new build writes: the store's once its first commit
+        fixed it, else the caller's values (``None`` = default).  An
+        explicit value that conflicts with the store raises here, before
+        the build reads any input.  Changing the layout means a new store."""
+        m = self.read_manifest()
+        have = self.layout(m)
+        want = Layout(
+            have.codec if codec is None else codec,
+            have.chunk_bits if chunk_bits is None else int(chunk_bits),
+        )
+        if _layout_fixed(m) and want != have:
             raise ValueError(
-                f"store codec is fixed to {m['codec']!r} by its first build; "
-                f"got codec={codec!r} — build into a fresh store to switch "
-                "wires"
+                f"store layout is fixed to {have} by its first commit; got "
+                f"{want} — build into a fresh store to change it"
             )
+        _check_codec(want.codec)
+        return want
 
-    @staticmethod
-    def segment_codec(meta: SegmentMeta) -> str:
-        return meta.lineage.get("codec", "varbyte")
+    def _stamp_layout(self, m: dict[str, Any], meta: SegmentMeta) -> None:
+        """Called under the manifest lock by every commit path.  The first
+        commit fixes the store layout from ``meta``'s lineage (defaults
+        where absent); every commit stamps the layout into ``meta``'s
+        lineage and rejects a meta that names a different one, so the
+        manifest is left untouched."""
+        lin = meta.lineage
+        lay = _layout(m) if _layout_fixed(m) else _layout(lin)
+        _check_codec(lay.codec)
+        got = _layout(lin, default=lay)
+        if got != lay:
+            raise ValueError(
+                f"segment {meta.segment_id!r} was written as {got} but the "
+                f"store's layout is {lay}, fixed by its first commit"
+            )
+        lin.update(lay._asdict())
+        m.update(lay._asdict())
 
     def has_segment(self, segment_id: str) -> bool:
         return any(s["segment_id"] == segment_id for s in self.read_manifest()["segments"])
@@ -547,6 +629,7 @@ class SegmentStore:
         with self._manifest_lock():
             m = self.read_manifest()
             self._check_nrt_allocation(m, meta)
+            self._stamp_layout(m, meta)
             m["segments"] = [
                 s for s in m["segments"] if s["segment_id"] != meta.segment_id
             ]
@@ -607,6 +690,7 @@ class SegmentStore:
         with self._manifest_lock():
             m = self.read_manifest()
             self._check_nrt_allocation(m, meta)
+            self._stamp_layout(m, meta)
             seg_gen = m["next_generation"]
             del_gen = seg_gen + 1  # tombstones are NEWER: they veto
             path = os.path.join(self.base, "deletes", f"{del_gen}.parquet")
@@ -648,6 +732,7 @@ class SegmentStore:
         gens = set(retire_delete_gens or [])
         with self._manifest_lock():
             m = self.read_manifest()
+            self._stamp_layout(m, meta)
             meta.generation = m["next_generation"]
             m["next_generation"] += 1
             m["segments"] = [
@@ -738,43 +823,21 @@ class SegmentStore:
         self,
         spark: SparkSession,
         segment_ids: list[str] | None = None,
-        with_codec: bool = False,
     ) -> DataFrame:
-        """Union of the selected segments' block rows.  ``with_codec=True``
-        tags each segment's rows with its lineage codec as a literal column
-        (decode_segments then splits per codec — the mixed-codec read path);
-        the tag is a per-file constant, so codec filters fold at plan time.
+        """Union of the selected segments' block rows.
 
         All store reads pin the KNOWN write-time schema instead of letting
         Spark infer it — schema inference runs a footer-reading job per
         ``read.parquet`` call, which made every SegmentIndex open cost ~3
         driver jobs; a 100-store collection open was ~300 tiny serial jobs
         before the first real query job.  Pinned, opens are job-free."""
-        from ..operators.segments import SEGMENT_SCHEMA
-
         metas = self.segments()
         if segment_ids is not None:
             metas = [s for s in metas if s.segment_id in segment_ids]
         if not metas:
-            schema = SEGMENT_SCHEMA + (", codec string" if with_codec else "")
-            return spark.createDataFrame([], schema)
-        if not with_codec:
-            paths = [self.segment_dir(s.segment_id, "postings") for s in metas]
-            return spark.read.schema(SEGMENT_SCHEMA).parquet(*paths)
-        by_codec: dict[str, list[str]] = {}
-        for s in metas:
-            by_codec.setdefault(self.segment_codec(s), []).append(
-                self.segment_dir(s.segment_id, "postings")
-            )
-        frames = [
-            spark.read.schema(SEGMENT_SCHEMA).parquet(*paths)
-            .withColumn("codec", F.lit(c))
-            for c, paths in sorted(by_codec.items())
-        ]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+            return spark.createDataFrame([], SEGMENT_SCHEMA)
+        paths = [self.segment_dir(s.segment_id, "postings") for s in metas]
+        return spark.read.schema(SEGMENT_SCHEMA).parquet(*paths)
 
     TERM_DICT_SCHEMA = "term string, df long, cf long"
     FIELD_STATS_SCHEMA = (
@@ -951,7 +1014,9 @@ class SegmentStore:
         checker).  Metadata pass (no Spark): every live segment's three data
         dirs exist and are non-empty, live doc ranges are pairwise disjoint,
         ``docs_cnt <= doc_hi - doc_lo``, generations are unique and below
-        ``next_generation``, every tombstone file exists.  Deep pass
+        ``next_generation``, every tombstone file exists, and the store
+        has one known wire layout (every live segment's lineage codec and
+        chunk width equal the manifest's).  Deep pass
         (``deep=True``, needs ``spark``): per segment, the physical distinct
         doc count must not EXCEED the manifest ``docs_cnt`` and all block
         doc_ids fall inside ``[doc_lo, doc_hi)``.  One-sided because
@@ -1018,19 +1083,27 @@ class SegmentStore:
         for d in m["deletes"]:
             if not os.path.exists(d["path"]):
                 errors.append(f"tombstone gen {d['gen']}: missing {d['path']}")
+        layout_errors = _layout_errors(m)
+        errors.extend(layout_errors)
         if deep:
             if spark is None:
                 raise ValueError("deep fsck needs a SparkSession")
-            from ..operators.segments import decode_segments
-
-            if metas:
+            # a store without one known layout cannot be decoded: its
+            # finding is already an error, so the decoding checks are
+            # skipped rather than raising or counting garbage
+            codec = None if layout_errors else self.layout(m).codec
+            if codec is None:
+                warnings.append(
+                    "deep doc-count checks skipped: inconsistent wire layout"
+                )
+            if metas and codec is not None:
                 # one positions-free decode of every live block: physical
                 # distinct docs across the whole store vs Σ docs_cnt
-                # (codec-tagged read so mixed-codec stores decode correctly)
                 total = (
                     decode_segments(
-                        self.read_blocks(spark, with_codec=True),
+                        self.read_blocks(spark),
                         with_positions=False,
+                        codec=codec,
                     )
                     .select(F.countDistinct("doc_id"))
                     .first()[0]
@@ -1098,26 +1171,23 @@ class SegmentStore:
                         "(written pre-upgrade) — file-loss check skipped; "
                         "re-encode via merge/compaction to enable it"
                     )
-                docs = (
-                    decode_segments(
-                        blocks,
-                        with_positions=False,
-                        codec=self.segment_codec(meta),
+                if codec is not None:
+                    docs = (
+                        decode_segments(blocks, with_positions=False, codec=codec)
+                        .select(F.countDistinct("doc_id"))
+                        .first()[0]
                     )
-                    .select(F.countDistinct("doc_id"))
-                    .first()[0]
-                )
-                if docs > meta.docs_cnt:
-                    errors.append(
-                        f"{meta.segment_id}: physical docs {docs} > "
-                        f"manifest docs_cnt {meta.docs_cnt} (duplicates)"
-                    )
-                elif docs < meta.docs_cnt:
-                    warnings.append(
-                        f"{meta.segment_id}: physical docs {docs} < "
-                        f"manifest docs_cnt {meta.docs_cnt} "
-                        f"({meta.docs_cnt - docs} zero-posting docs)"
-                    )
+                    if docs > meta.docs_cnt:
+                        errors.append(
+                            f"{meta.segment_id}: physical docs {docs} > "
+                            f"manifest docs_cnt {meta.docs_cnt} (duplicates)"
+                        )
+                    elif docs < meta.docs_cnt:
+                        warnings.append(
+                            f"{meta.segment_id}: physical docs {docs} < "
+                            f"manifest docs_cnt {meta.docs_cnt} "
+                            f"({meta.docs_cnt - docs} zero-posting docs)"
+                        )
                 rng = blocks.select(
                     F.min("min_doc_id").alias("lo"), F.max("max_doc_id").alias("hi")
                 ).first()

@@ -31,7 +31,6 @@ from .. import __version__
 from ..operators.build import field_stats_from_blocks, term_dict_from_blocks
 from ..operators.fastbuild import blocks_from_turns
 from ..operators.docids import assign_doc_ids_counted
-from ..operators.segments import CHUNK_BITS
 from ..sources.store import SegmentMeta, SegmentStore
 
 
@@ -68,9 +67,10 @@ def append_micro_segment(
     store: SegmentStore,
     turns: DataFrame,
     input_desc: str = "stream-batch",
-    chunk_bits: int = CHUNK_BITS,
 ) -> SegmentMeta | None:
-    """Index one batch of new turns as a new segment; returns its meta."""
+    """Index one batch of new turns as a new segment; returns its meta.
+    The segment is written in the store's wire layout (codec and chunk
+    width fixed by its first commit), so merges keep byte reuse."""
     # persist the micro-batch: the id assignment scans it twice (conv-bases
     # aggregation + bases join), and the count comes free from the former —
     # the previous separate turns.count() was a third full pass per epoch
@@ -85,7 +85,7 @@ def append_micro_segment(
             "doc_id", (F.col("doc_id") + F.lit(base)).cast("long")
         )
         return _append_assigned(
-            spark, store, with_ids, n, base, t0, input_desc, chunk_bits,
+            spark, store, with_ids, n, base, t0, input_desc,
         )
     finally:
         turns.unpersist()
@@ -99,7 +99,6 @@ def _append_assigned(
     base: int,
     t0: float,
     input_desc: str,
-    chunk_bits: int,
     deletes_df: DataFrame | None = None,
 ) -> SegmentMeta:
     """Shared micro-segment commit sequence (append and replace differ only
@@ -110,7 +109,7 @@ def _append_assigned(
     # append mode would re-append the doc range and double every tf
     store.write_docid_map_slice(with_ids, segment_id)
     seg_turns = store.read_docid_map_slice(spark, segment_id)
-    codec = store.default_codec()  # appends stay wire-homogeneous
+    codec, chunk_bits = store.layout()  # appends inherit the store's layout
     blocks = blocks_from_turns(
         seg_turns, chunk_bits=chunk_bits, codec=codec
     ).persist()
@@ -140,9 +139,10 @@ def _append_assigned(
                 blocks, term_dict, stats, meta, deletes_df
             )
     except ValueError:
-        # rejected allocation (a concurrent writer committed the range
-        # first): drop this attempt's orphan data now, or its docid-map
-        # slice serves duplicate translations until the next gc()
+        # rejected commit (a concurrent writer committed the range first,
+        # or fixed a different layout): drop this attempt's orphan data
+        # now, or its docid-map slice serves duplicate translations until
+        # the next gc()
         blocks.unpersist()
         store.discard_uncommitted(segment_id)
         raise
@@ -162,7 +162,6 @@ def replace_documents(
     store: SegmentStore,
     turns: DataFrame,
     input_desc: str = "replace-batch",
-    chunk_bits: int = CHUNK_BITS,
 ) -> SegmentMeta | None:
     """One-call document update/replace (``/root/reference/indexer.h:181-206``
     insert/update/erase): for each input turn keyed by (conv_id, turn_idx),
@@ -216,7 +215,7 @@ def replace_documents(
             "doc_id", (F.col("doc_id") + F.lit(base)).cast("long")
         )
         return _append_assigned(
-            spark, store, with_ids, n, base, t0, input_desc, chunk_bits,
+            spark, store, with_ids, n, base, t0, input_desc,
             deletes_df=old,
         )
     finally:
