@@ -48,3 +48,24 @@ def test_wire_layout_has_one_owner():
     # the pattern is not vacuous: it catches the read forms it is meant for
     for read in ('m.lineage.get("chunk_bits", 16)', 's["lineage"]["codec"]'):
         assert LINEAGE_LAYOUT_READ.search(read), read
+
+
+# a CALL of a block-stream encoder (the module-level kernels in functions/)
+STREAM_ENCODE_CALL = re.compile(
+    r"\b(?:encode_varbyte_offsets|pfor_encode_rows|encode_varbyte|pfor_encode)\("
+)
+
+
+def test_block_encoder_has_one_owner():
+    """One block encoder: no per-group pandas encoder under operators/, and
+    only ``operators/segments.py`` calls the stream encoders, so build and
+    merge write blocks through the same kernel (``_encode_partition``)."""
+    owner = "trinity_spark/operators/segments.py"
+    for path in sorted((ROOT / "trinity_spark" / "operators").rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        text = path.read_text()
+        for name in ("applyInPandas", "_encode_group", "_encode_stream"):
+            assert name not in text, (rel, name)
+        if rel != owner:
+            assert not STREAM_ENCODE_CALL.search(text), rel
+    assert STREAM_ENCODE_CALL.search((ROOT / owner).read_text())

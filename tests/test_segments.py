@@ -1,6 +1,7 @@
 """Physical segment layer: codec roundtrip, store, resume, deletes, merge —
 and rank-identity straight off the encoded segments."""
 
+import hashlib
 import json
 import os
 
@@ -64,6 +65,102 @@ def test_block_invariants(spark):
     for term, posts in by_term.items():
         total = sum(r["doc_count"] for (t, _), r in blocks.items() if t == term)
         assert total == len(posts)
+
+
+def _payload_postings():
+    """Payload lists of every shape: one per hit, empty, null on some docs,
+    and lists whose lengths disagree with tf.  A block keeps its stream only
+    when no doc in it has a null list and its payload count equals its
+    sum_tf; ``skew`` and ``nullskew`` tell those two rules apart."""
+    rows = []
+    for d in range(700):
+        tf = 1 + (d % 3)
+        pos = [p + 1 for p in range(tf)]
+        rows.append(("perhit", d * 3, tf, pos, [(d << 8) | p for p in range(tf)]))
+        if d % 2 == 0:
+            rows.append(("empty", d, tf, pos, []))
+        rows.append(("nulls", d, tf, pos, None if d % 50 == 7 else [d] * tf))
+        if d % 5 == 0:
+            rows.append(
+                ("skew", d, 2, [0, 0], [d, d + 1, d + 2] if d % 10 == 0 else [d])
+            )
+        # a null list hidden by a neighbour's extra payload: counts match
+        rows.append(
+            ("nullskew", d, 1, [1], [None, [d, d], [d], [d]][d % 4])
+        )
+    return rows
+
+
+def _block_digest(blocks) -> str:
+    rows = sorted(
+        (
+            r["term"], r["chunk"], r["block_id"], r["doc_count"],
+            r["min_doc_id"], r["max_doc_id"], r["max_tf"], r["sum_tf"],
+            bytes(r["doc_deltas"]), bytes(r["tf_bytes"]), bytes(r["pos_bytes"]),
+            None if r["pay_bytes"] is None else bytes(r["pay_bytes"]),
+        )
+        for r in blocks.collect()
+    )
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+# sha256 of the sorted block rows encode_postings wrote before the
+# vectorized encoder replaced the per-group one: the wire format is frozen
+PINNED_BLOCK_DIGESTS = {
+    ("varbyte", 16, "random"): "3b0490132d67a9051a312b34a19c67fe42210a344c984bba82c53335dfb4dbca",
+    ("varbyte", 16, "payload"): "280b9ceea1f9bfdd6b808ad59871f264af228ac423ef03cd5a67307db49ecb04",
+    ("varbyte", 8, "random"): "c922180f4c48b938e782dce8a7e4bec7f19f89e7fb848c767bb41d8595fb2901",
+    ("varbyte", 8, "payload"): "15d26531ae874e499cba7eab8faafa3ae7db1cf863d059bd878c434f99998c42",
+    ("pfor", 16, "random"): "36fa4ed0fc9b0e22bd018322439fa3f63ed10414ac66dfa6ea3ed9019336cfcd",
+    ("pfor", 16, "payload"): "a9055098006614e0ec9c03bd057be812a2ed92f1800a61fb0d6ac041ab451de3",
+    ("pfor", 8, "random"): "cb284b9ac446ca70caa1f71ccbf37a25b4c4f871d455aa9316c9576ef38292a5",
+    ("pfor", 8, "payload"): "f0b429b9fc1e5856707db23f08f9dabc4192acff5cfe97ee15be1eb8d493a5a5",
+}
+
+
+def test_encode_postings_wire_format_is_pinned(spark):
+    inputs = {
+        "random": spark.createDataFrame(
+            _random_postings(spark),
+            "term string, doc_id long, tf int, positions array<int>",
+        ),
+        "payload": spark.createDataFrame(
+            _payload_postings(),
+            "term string, doc_id long, tf int, positions array<int>, "
+            "payloads array<long>",
+        ),
+    }
+    got = {
+        (codec, cb, name): _block_digest(
+            encode_postings(df, chunk_bits=cb, codec=codec)
+        )
+        for codec in ("varbyte", "pfor")
+        for cb in (16, 8)
+        for name, df in inputs.items()
+    }
+    assert got == PINNED_BLOCK_DIGESTS
+
+
+def test_group_split_across_arrow_batches_packs_as_one_group(spark):
+    """One (term, chunk) group arriving in many small Arrow batches from
+    several input partitions still packs as ONE group: full blocks first,
+    one partial tail."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        df = spark.createDataFrame(
+            [("solo", d, 1, [1]) for d in range(1000)],
+            "term string, doc_id long, tf int, positions array<int>",
+        ).repartition(3)
+        assert df.rdd.getNumPartitions() == 3
+        got = sorted(
+            (r["block_id"], r["doc_count"])
+            for r in encode_postings(df).select("block_id", "doc_count").collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert got == [(i, BLOCK_SIZE) for i in range(7)] + [(7, 104)]
 
 
 @pytest.fixture(scope="module")
@@ -323,8 +420,9 @@ def test_partial_merge_docs_cnt_presence_based(spark, tmp_path_factory):
     # ...but must NOT retire the tombstone (other segments may still need it)
     assert store.read_manifest()["deletes"], "partial merge retired tombstones"
 
-    # the full merge re-reads the same tombstone; presence-based accounting
-    # must not subtract the already-removed doc a second time
+    # the full merge re-reads the same tombstone; the partial merge's
+    # lineage records its generation as applied (deletes_gens), so gen-aware
+    # accounting must not subtract the already-removed doc a second time
     meta_b = merge_segments(spark, store)
     assert meta_b.docs_cnt == n - 1
     assert store.read_manifest()["deletes"] == []  # full merge retires it
@@ -892,55 +990,57 @@ def test_merge_delete_accounting_counts_zero_token_docs(spark, tmp_path_factory)
         assert abs(gs - ws) <= 1e-9
 
 
-def _strip_deletes_gens(store):
-    """Simulate pre-gen-aware segments: remove the deletes_gens lineage key
-    (ABSENT = applied-set unknown; merge must fall back to presence-based
-    tombstone counting for those ranges)."""
-    m = store.read_manifest()
-    for s in m["segments"]:
-        s["lineage"].pop("deletes_gens", None)
-    store._write_manifest(m)
-
-
-def test_legacy_segments_fall_back_to_presence_counting(
+def test_merge_without_deletes_gens_counts_zero_token_tombstone(
     spark, tmp_path_factory
 ):
-    """ADVICE r4 (merge.py gen-aware accounting): a segment whose lineage
-    predates deletes_gens must not have an already-applied tombstone
-    subtracted a second time — presence-based counting for such ranges keeps
-    docs_cnt exact across partial + full merges even when the intermediate
-    merged segment's lineage is ALSO legacy."""
-    store, corpus = _fresh_index(spark, tmp_path_factory, "legacy")
-    n = len(corpus)
-    seg_ids = [m.segment_id for m in store.segments()]
-    assert len(seg_ids) == 2
-    _strip_deletes_gens(store)
-    kill = 5  # in the first segment's [0, 400) range
-    store.add_deletes(spark, [kill])
+    """A segment whose lineage has no ``deletes_gens`` key has applied no
+    tombstone generation.  Deleting its zero-token doc (an assigned id with
+    no postings, so nothing to find by decoding) must still drop docs_cnt
+    by one at merge, and N must match the oracle's."""
+    from trinity_spark.operators.build import (
+        field_stats_from_blocks,
+        term_dict_from_blocks,
+    )
+    from trinity_spark.operators.fastbuild import postings_from_turns
+    from trinity_spark.sources.store import SegmentMeta
 
-    meta_a = merge_segments(spark, store, segment_ids=[seg_ids[0]])
-    assert meta_a.docs_cnt == 400 - 1
-    assert store.read_manifest()["deletes"], "partial merge retired tombstones"
-    # strip the merged output's lineage too: the old-engine worst case where
-    # NOTHING records which generations were applied
-    _strip_deletes_gens(store)
+    corpus = gen_transcripts(200)
+    corpus.loc[5, "text"] = "   "  # tokenizes to zero terms
+    docs = docs_in_stable_order(corpus)
+    n = len(docs)
+    zero = next(d for d, t in docs if not t.strip())
+    turns = spark.createDataFrame(docs, "doc_id long, text string")
+    blocks = encode_postings(postings_from_turns(turns))
+    store = SegmentStore(str(tmp_path_factory.mktemp("nogens") / "idx"))
+    store.commit_segment(
+        blocks,
+        term_dict_from_blocks(blocks),
+        field_stats_from_blocks(blocks, docs_cnt=n),
+        SegmentMeta(
+            segment_id=f"seg-{0:014d}-{n:014d}", generation=0,
+            doc_lo=0, doc_hi=n, docs_cnt=n,
+        ),
+    )
+    assert "deletes_gens" not in store.segments()[0].lineage
+    store.add_deletes(spark, [zero])
 
-    meta_b = merge_segments(spark, store)
-    # presence check: doc 5 no longer physically exists -> not re-counted
-    assert meta_b.docs_cnt == n - 1
+    merged = merge_segments(spark, store)
+    assert merged.lineage["deletes_applied"] == 1
+    assert merged.docs_cnt == n - 1
     assert store.read_manifest()["deletes"] == []
 
     oracle = OracleIndex.build(
-        [(d, t) for d, t in docs_in_stable_order(corpus) if d != kill]
+        [(d, ("" if d == zero else t)) for d, t in docs]
     )
     oracle.n_docs = n - 1
     planner = QueryPlanner(SegmentIndex(spark, store))
-    node = parse_query("error")
-    want = oracle.topk(node, k=10)
-    got = [(r["doc_id"], r["score"]) for r in planner.plan(node, k=10).collect()]
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (_, gs), (_, ws) in zip(got, want):
-        assert abs(gs - ws) <= 1e-9
+    for q in ["error", "error AND timeout"]:
+        node = parse_query(q)
+        want = oracle.topk(node, k=10)
+        got = [(r["doc_id"], r["score"]) for r in planner.plan(node, k=10).collect()]
+        assert [d for d, _ in got] == [d for d, _ in want], q
+        for (_, gs), (_, ws) in zip(got, want):
+            assert abs(gs - ws) <= 1e-9
 
 
 def test_pinned_snapshot_view_blocks_gc_and_expiry(spark, tmp_path_factory):

@@ -17,9 +17,10 @@ matrix and unpacked in one ``np.unpackbits`` call, so the loop runs over
 DISTINCT WIDTHS (<= 64 iterations regardless of data size).
 
 This codec is wired in as a SELECTABLE wire format
-(``build_index(codec="pfor")`` / ``encode_postings(codec="pfor")``; the
-segment lineage records which codec wrote it — the codecs.h:93-95 segment
-codec-identity analog).  On transcript-shaped postings the varbyte stream is
+(``build_index(codec="pfor")``; one codec per store, fixed at its first
+commit, and the segment encoder ``segments._encode_partition`` calls
+``pfor_encode_rows`` for build and merge alike; the segment lineage records
+which codec wrote it — the codecs.h:93-95 segment codec-identity analog).  On transcript-shaped postings the varbyte stream is
 smaller (tf/position deltas are mostly 1-byte) and parquet's ZSTD absorbs
 the rest, so varbyte stays the DEFAULT — the choice is documented in
 SURVEY §2.1 and COVERAGE.md; rank parity is score-level and unaffected.

@@ -35,9 +35,14 @@ from ..tokenizer import (
     tokenize_arrow,
 )
 
-# ONE schema definition: the decode side (segments.py) owns it; a drifted
-# copy here would silently emit the old shape from postings_from_turns
-from .segments import POSTINGS_SCHEMA  # noqa: E402
+# segments.py owns the block wire format: its schemas and its one encoder
+from .segments import (
+    CHUNK_BITS,
+    POSTINGS_SCHEMA,
+    SEGMENT_SCHEMA,
+    _check_codec,
+    _encode_partition,
+)
 
 _OUT_SCHEMA = pa.schema(
     [
@@ -150,159 +155,6 @@ def _batch_postings(doc_ids: np.ndarray, token_lists) -> pa.RecordBatch | None:
     )
 
 
-def _encode_partition(
-    doc: np.ndarray,
-    tf: np.ndarray,
-    codes: np.ndarray,
-    uniques,
-    pos_flat: np.ndarray,
-    chunk_bits: int,
-    codec: str = "varbyte",
-) -> pa.RecordBatch:
-    """Vectorized block encoder: one numpy pass over a partition's postings.
-
-    Input rows are (doc, tf, term-code) with per-doc position lists flattened
-    in row order; output is one RecordBatch of posting blocks.  No python
-    loop touches rows or blocks — binary columns are built zero-copy from one
-    encoded buffer + block byte-offsets (pa.BinaryArray.from_buffers): under
-    varbyte one ``encode_varbyte_offsets`` pass per stream; under pfor one
-    ``pfor_encode_rows`` pass per stream (blocks grouped by bit width —
-    lucene_codec.cpp:163-208 shape, batched across every block at once).
-
-    ``uniques`` may be a pa.StringArray (term strings by code) or a numpy
-    object array — term columns are built by Arrow take either way.
-    """
-    from ..operators.segments import BLOCK_SIZE
-    from ..functions.varbyte import encode_varbyte_offsets
-
-    if not isinstance(uniques, pa.Array):
-        uniques = pa.array(np.asarray(uniques, dtype=object), type=pa.string())
-
-    n = len(doc)
-    chunk = doc >> np.int64(chunk_bits)
-    # order postings by (chunk, term, doc) — the physical layout.  The input
-    # is doc-ascending in the normal build (postings arrive in corpus doc
-    # order), so a STABLE sort by (chunk, code) alone preserves doc order
-    # within each group and the key needs no doc bits — it usually fits
-    # int32, where numpy's radix sort runs ~2x the int64 width.  Unsorted
-    # inputs (NRT slices, ad-hoc frames) fall back to a (chunk, code, low
-    # doc bits) packed key, or the general 3-key lexsort if even that
-    # overflows 63 bits.
-    bits_code = max((int(codes.max()) if n else 0).bit_length(), 1)
-    group_key = None
-    doc_sorted = bool(np.all(doc[1:] >= doc[:-1])) if n > 1 else True
-    chunk_top = int(chunk.max()).bit_length()
-    if doc_sorted and chunk_top + bits_code <= 63:
-        key = (chunk << np.int64(bits_code)) | codes
-        if chunk_top + bits_code <= 31:
-            key = key.astype(np.int32)
-        order = np.argsort(key, kind="stable")
-        group_key = key[order]
-    elif chunk_top + bits_code + chunk_bits <= 63:
-        key = (
-            (chunk << np.int64(bits_code + chunk_bits))
-            | (codes << np.int64(chunk_bits))
-            | (doc & np.int64((1 << chunk_bits) - 1))
-        )
-        order = np.argsort(key, kind="stable")
-        group_key = (key >> np.int64(chunk_bits))[order]
-    else:
-        order = np.lexsort((doc, codes, chunk))
-    # gather variable-length position rows into the new order (source row
-    # offsets MUST come from the pre-reorder tf layout)
-    src_offsets = np.concatenate(([0], np.cumsum(tf)))[:-1][order]
-    doc, tf, codes, chunk = doc[order], tf[order], codes[order], chunk[order]
-    new_offsets = np.concatenate(([0], np.cumsum(tf)))
-    gather = np.repeat(src_offsets - new_offsets[:-1], tf) + np.arange(
-        new_offsets[-1]
-    )
-    pos_flat = pos_flat[gather]
-
-    # group = (term, chunk) run; blocks of <= BLOCK_SIZE docs within a group
-    new_group = np.empty(n, dtype=bool)
-    new_group[0] = True
-    if group_key is not None:
-        np.not_equal(group_key[1:], group_key[:-1], out=new_group[1:])
-    else:
-        new_group[1:] = (codes[1:] != codes[:-1]) | (chunk[1:] != chunk[:-1])
-    group_ids = np.cumsum(new_group) - 1
-    group_first = np.flatnonzero(new_group)
-    rank = np.arange(n) - group_first[group_ids]
-    new_block = new_group | (rank % BLOCK_SIZE == 0)
-    bs = np.flatnonzero(new_block)          # block start row indices
-    be = np.append(bs[1:], n)               # block end row indices
-    blocks_per_chunk = max((1 << chunk_bits) // BLOCK_SIZE, 1)
-
-    # docID deltas reset at block starts (blocks decode independently)
-    d_delta = doc.copy()
-    d_delta[1:] -= doc[:-1]
-    d_delta[bs] = doc[bs]
-    # position deltas reset at each doc's first position
-    p_delta = pos_flat.copy()
-    p_delta[1:] -= pos_flat[:-1]
-    p_delta[new_offsets[:-1]] = pos_flat[new_offsets[:-1]]
-
-    def binary_col(buf: np.ndarray, byte_off: np.ndarray) -> pa.Array:
-        # pa.binary() carries int32 offsets: a partition whose encoded stream
-        # exceeds 2^31 bytes would silently wrap into garbage blocks — fail
-        # loudly instead (split the input into more partitions to proceed)
-        if int(byte_off[-1]) >= 2**31:
-            raise ValueError(
-                f"encoded stream is {int(byte_off[-1])} bytes — over the "
-                "int32 Arrow binary-offset limit; repartition the input so "
-                "each partition encodes < 2 GiB per stream"
-            )
-        vo = byte_off.astype(np.int32)
-        return pa.Array.from_buffers(
-            pa.binary(), len(vo) - 1,
-            [None, pa.py_buffer(vo.tobytes()), pa.py_buffer(buf.tobytes())],
-        )
-
-    def stream_col(values: np.ndarray, value_bounds: np.ndarray) -> pa.Array:
-        """One stream -> per-block wire bytes as an Arrow binary column.
-        value_bounds are the per-block value-index bounds (len n_blocks+1)."""
-        if codec == "pfor":
-            from ..functions.pfor import pfor_encode_rows
-
-            buf, byte_off = pfor_encode_rows(values, np.diff(value_bounds))
-            return binary_col(buf, byte_off)
-        buf, value_off = encode_varbyte_offsets(values)
-        return binary_col(buf, value_off[value_bounds])
-
-    row_bounds = np.append(bs, n)
-    pos_bounds = new_offsets[row_bounds]  # value-index bounds in the pos stream
-    n_blocks = len(bs)
-    # tokenizer hits carry no payloads: an all-empty pay_bytes stream
-    empty_pay = pa.Array.from_buffers(
-        pa.binary(), n_blocks,
-        [None, pa.py_buffer(np.zeros(n_blocks + 1, dtype=np.int32).tobytes()),
-         pa.py_buffer(b"")],
-    )
-    term_col = uniques.take(pa.array(codes[bs]))
-    if isinstance(term_col, pa.ChunkedArray):
-        term_col = term_col.combine_chunks()
-    return pa.RecordBatch.from_arrays(
-        [
-            term_col.cast(pa.string()),
-            pa.array(chunk[bs], type=pa.int64()),
-            pa.array(chunk[bs] * blocks_per_chunk + (rank[bs] // BLOCK_SIZE), type=pa.int64()),
-            pa.array((be - bs).astype(np.int32), type=pa.int32()),
-            pa.array(doc[bs], type=pa.int64()),
-            pa.array(doc[be - 1], type=pa.int64()),
-            pa.array(np.maximum.reduceat(tf, bs).astype(np.int32), type=pa.int32()),
-            pa.array(np.add.reduceat(tf, bs).astype(np.int64), type=pa.int64()),
-            stream_col(d_delta.astype(np.uint64), row_bounds),
-            stream_col(tf.astype(np.uint64), row_bounds),
-            stream_col(p_delta.astype(np.uint64), pos_bounds),
-            empty_pay,
-        ],
-        names=[
-            "term", "chunk", "block_id", "doc_count", "min_doc_id", "max_doc_id",
-            "max_tf", "sum_tf", "doc_deltas", "tf_bytes", "pos_bytes", "pay_bytes",
-        ],
-    )
-
-
 # per-worker conv->base table cache for the fused attach (loaded once per
 # worker lifetime, shared across tasks — guide "heavyweight init once")
 _CONV_BASES_CACHE: dict = {}
@@ -373,8 +225,6 @@ def blocks_from_turns(
     instead of (doc_id, text); a conv_id absent from the loaded bases is
     corruption and raises.
     """
-    from ..operators.segments import CHUNK_BITS, SEGMENT_SCHEMA, _check_codec
-
     _check_codec(codec)
     cb = chunk_bits if chunk_bits is not None else CHUNK_BITS
 

@@ -387,10 +387,8 @@ def _build_index_inner(
                 "doc_range": [lo, hi],
                 "chunk_bits": chunk_bits,
                 "codec": codec,
-                # explicit empty list = "gen-aware, no tombstone generation
-                # applied yet"; ABSENT means a pre-gen-aware segment whose
-                # applied set is unknown (merge falls back to presence-based
-                # tombstone counting for such ranges)
+                # no tombstone generation applied yet (merge's gen-aware
+                # docs_cnt accounting reads this; absent means the same)
                 "deletes_gens": [],
                 "engine_version": __version__,
             },

@@ -65,12 +65,8 @@ Accounting correctness (partial merges):
 - ``docs_cnt`` subtracts a tombstone only if its generation has NOT already
   been applied to the covering segment (lineage ``deletes_gens``, id-based —
   this is what keeps zero-token docs, which have no postings to be "present"
-  in, correctly subtracted).  Segments whose lineage predates ``deletes_gens``
-  (key absent) fall back to presence-based counting: decode only the blocks
-  whose [min_doc_id, max_doc_id] cover a candidate tombstone and count the
-  tombstones whose doc still physically exists — re-counting a doc already
-  removed by an earlier merge would corrupt N and hence every idf after the
-  merge.
+  in, correctly subtracted).  An absent ``deletes_gens`` key means no
+  generation applied, as absent layout keys mean the defaults.
 - Tombstone retention: only the tombstone generations READ by this merge are
   retired, and only when the merge covered every segment that existed at read
   time; a partial merge leaves all tombstones in place (they may still mask
@@ -165,39 +161,6 @@ def _membership_refine(
     )
 
 
-def _present_tombstones(
-    blocks: DataFrame, cand: DataFrame, legacy_metas, codec: str
-) -> DataFrame:
-    """Candidate tombstone ids that still physically exist in the legacy
-    segments' blocks (pre-``deletes_gens`` lineage: the applied set is
-    unknown, so presence is the only safe evidence a tombstone has not been
-    counted before).  Decodes ONLY blocks whose [min_doc_id, max_doc_id]
-    cover a candidate — the candidate set is a broadcast (tombstone sets are
-    RAM-resident by design, docidupdates.h:90-191), so the range probe is a
-    broadcast join, never a full decode."""
-    from functools import reduce
-
-    rng = reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("min_doc_id") < m.doc_hi) & (F.col("max_doc_id") >= m.doc_lo)
-            for m in legacy_metas
-        ],
-    )
-    lb = blocks.where(rng)
-    c = F.broadcast(cand.withColumnRenamed("doc_id", "_cand_id"))
-    hit = lb.join(
-        c,
-        (F.col("_cand_id") >= F.col("min_doc_id"))
-        & (F.col("_cand_id") <= F.col("max_doc_id")),
-        "left_semi",
-    )
-    present = decode_segments(hit, with_positions=False, codec=codec)
-    return cand.join(
-        present.select("doc_id").distinct(), "doc_id", "left_semi"
-    )
-
-
 def merge_segments(
     spark: SparkSession,
     store: SegmentStore,
@@ -240,7 +203,6 @@ def merge_segments(
     read_gens: list[int] = []
     in_range = None
     n_deleted = 0
-    legacy_ids: list[str] = []
     if apply_deletes:
         read_gens = [d["gen"] for d in manifest0["deletes"]]
         deletes = store.read_deletes_with_gen(spark, manifest=manifest0)
@@ -270,61 +232,19 @@ def merge_segments(
                 gens = m.lineage.get("deletes_gens", [])
                 return F.col("gen").isin([int(g) for g in gens]) if gens else F.lit(False)
 
-            # A meta WITHOUT the deletes_gens key predates gen-aware
-            # lineage: which tombstone generations it already applied is
-            # UNKNOWN, so id-based counting could subtract an
-            # already-applied (already-subtracted) tombstone a second time
-            # and drift docs_cnt low.  For those ranges, fall back to
-            # presence-based counting: a tombstone only counts if its doc
-            # still physically exists in the segment's blocks.  (Fresh
-            # segments write deletes_gens=[] explicitly, so the id-based
-            # path — which alone subtracts zero-token docs correctly —
-            # stays the norm.)
-            aware = [m for m in metas if "deletes_gens" in m.lineage]
-            legacy = [m for m in metas if "deletes_gens" not in m.lineage]
-            parts = []
-            if aware:
-                countable = deletes.where(
-                    reduce(
-                        lambda a, b: a | b,
-                        [_rng(m) & ~_applied(m) for m in aware],
-                    )
-                ).select("doc_id").distinct()
-                already = deletes.where(
-                    reduce(
-                        lambda a, b: a | b,
-                        [_rng(m) & _applied(m) for m in aware],
-                    )
-                ).select("doc_id").distinct()
-                parts.append(countable.join(already, "doc_id", "left_anti"))
-            if legacy:
-                import logging
-
-                legacy_ids = [m.segment_id for m in legacy]
-                # presence counting is the only SAFE mode for unknown
-                # applied sets, but it is LOSSY for zero-token docs: a
-                # never-applied tombstone on an assigned id with no
-                # postings leaves no presence evidence, so docs_cnt (and
-                # every idf after this merge) stays one high per such doc.
-                # Surface the mode — silent lossy accounting is against
-                # this codebase's no-silent-drops convention — and record
-                # it in the merged lineage for later audits/fsck.
-                logging.getLogger(__name__).warning(
-                    "merge: %d segment(s) predate gen-aware delete lineage "
-                    "(%s); their tombstones are counted by posting "
-                    "PRESENCE, which cannot see zero-token docs — docs_cnt "
-                    "may over-count tombstoned docs that had no postings "
-                    "in those ranges",
-                    len(legacy),
-                    legacy_ids,
+            countable = deletes.where(
+                reduce(
+                    lambda a, b: a | b,
+                    [_rng(m) & ~_applied(m) for m in metas],
                 )
-                lcond = reduce(lambda a, b: a | b, [_rng(m) for m in legacy])
-                cand = deletes.where(lcond).select("doc_id").distinct()
-                parts.append(_present_tombstones(blocks, cand, legacy, codec))
-            merged_cnt = parts[0]
-            for p in parts[1:]:
-                merged_cnt = merged_cnt.unionByName(p)
-            n_deleted = merged_cnt.distinct().count()
+            ).select("doc_id").distinct()
+            already = deletes.where(
+                reduce(
+                    lambda a, b: a | b,
+                    [_rng(m) & _applied(m) for m in metas],
+                )
+            ).select("doc_id").distinct()
+            n_deleted = countable.join(already, "doc_id", "left_anti").count()
 
     # (term, chunk) groups with 2+ partial blocks need repacking; all other
     # blocks (fulls + lone partials) are already optimally packed.
@@ -436,11 +356,6 @@ def merge_segments(
             "chunk_bits": cb,
             "codec": codec,
             "engine_version": __version__,
-            # audit trail: ranges whose tombstones were counted by the
-            # lossy presence mode (inputs predating deletes_gens lineage)
-            **(
-                {"legacy_presence_counted": legacy_ids} if legacy_ids else {}
-            ),
         },
         metrics={},
     )

@@ -13,9 +13,10 @@ Scale design: a block group is ``(term, chunk)`` where ``chunk = doc_id >>
 CHUNK_BITS`` — a stopword's 10^11-row posting list lands in ~10^6 independent
 chunk groups instead of one executor-crushing (term) group.  This IS the
 explicit skew salting the north rule demands, with a deterministic salt that
-doubles as the docid-range seek key.  Encoding is ``applyInPandas`` over
-those groups (Arrow-batched; numpy loops run over byte positions / blocks,
-never rows).
+doubles as the docid-range seek key.  Encoding is ONE vectorized kernel,
+``_encode_partition``: a whole partition of postings is sorted into
+(chunk, term, doc) groups and every stream is encoded in one numpy pass
+(loops run over byte positions or bit widths, never rows or blocks).
 
 Schema: postings_segments(term string, chunk long, block_id long,
 doc_count int, min_doc_id long, max_doc_id long, max_tf int, sum_tf long,
@@ -27,9 +28,11 @@ dictionary metadata.  ``pay_bytes`` is the OPTIONAL per-hit payload stream
 position stream, empty when the app supplied none (transcripts supply none —
 the column exists so the physical format never needs a migration).
 
-This module keeps the shuffle-based encode path (logical postings ->
-blocks), used by merge/compaction for globally optimal block packing; the
-build hot path is the fused zero-shuffle encoder in ``fastbuild``.
+This module owns the block wire format: its schemas, its one encoder and
+its decoder.  The build calls ``_encode_partition`` from the fused
+zero-shuffle pass in ``fastbuild``; merge/compaction call
+``encode_postings``, which shuffles logical postings on (term, chunk) first
+so every group packs whole.
 """
 
 from __future__ import annotations
@@ -37,12 +40,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.varbyte import decode_varbyte, encode_varbyte
+from ..functions.varbyte import decode_varbyte, encode_varbyte_offsets
 
 CHUNK_BITS = 16  # 65536-doc docid ranges per encode group
 BLOCK_SIZE = 128  # docs per block (lucene_codec.h:49 BLOCK_SIZE=128)
@@ -80,76 +83,217 @@ def _check_codec(codec: str) -> None:
         raise ValueError(f"unknown codec {codec!r}; known: {CODECS}")
 
 
-def _encode_stream(values: np.ndarray, codec: str) -> bytes:
-    """One block's uint64 values -> wire bytes under the chosen codec."""
-    if codec == CODEC_PFOR:
-        from ..functions.pfor import pfor_encode
+def _gather_rows(
+    flat: np.ndarray, lens: np.ndarray, order: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Reorder variable-length rows (row i owns ``lens[i]`` consecutive
+    values of ``flat``) by ``order``: (reordered values, new row offsets)."""
+    src = np.concatenate(([0], np.cumsum(lens)))[:-1][order]
+    lens = lens[order]
+    offsets = np.concatenate(([0], np.cumsum(lens)))
+    gather = np.repeat(src - offsets[:-1], lens) + np.arange(offsets[-1])
+    return flat[gather], offsets
 
-        return pfor_encode(values)
-    return encode_varbyte(values)
 
+def _encode_partition(
+    doc: np.ndarray,
+    tf: np.ndarray,
+    codes: np.ndarray,
+    uniques,
+    pos_flat: np.ndarray,
+    chunk_bits: int,
+    codec: str = DEFAULT_CODEC,
+    pay_len: np.ndarray | None = None,
+    pay_flat: np.ndarray | None = None,
+) -> pa.RecordBatch:
+    """The block encoder: one numpy pass over a partition's postings.
 
-def _encode_group(
-    pdf: pd.DataFrame, chunk_bits: int, codec: str = DEFAULT_CODEC
-) -> pd.DataFrame:
-    """Encode one (term, chunk) group of logical postings into block rows."""
-    cols = [
-        "term", "chunk", "block_id", "doc_count", "min_doc_id", "max_doc_id",
-        "max_tf", "sum_tf", "doc_deltas", "tf_bytes", "pos_bytes", "pay_bytes",
-    ]
-    if len(pdf) == 0:
-        return pd.DataFrame(columns=cols)
-    pdf = pdf.sort_values("doc_id", kind="mergesort")
-    term = pdf["term"].iloc[0]
-    chunk = int(pdf["doc_id"].iloc[0]) >> chunk_bits
-    blocks_per_chunk = max((1 << chunk_bits) // BLOCK_SIZE, 1)
-    doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    positions = pdf["positions"].tolist()
-    payloads = pdf["payloads"].tolist() if "payloads" in pdf.columns else None
+    Input rows are (doc, tf, term-code) with per-doc position lists flattened
+    in row order; output is one RecordBatch of posting blocks.  No python
+    loop touches rows or blocks — binary columns are built zero-copy from one
+    encoded buffer + block byte-offsets (pa.BinaryArray.from_buffers): under
+    varbyte one ``encode_varbyte_offsets`` pass per stream; under pfor one
+    ``pfor_encode_rows`` pass per stream (blocks grouped by bit width —
+    lucene_codec.cpp:163-208 shape, batched across every block at once).
 
-    rows = []
-    for bi, lo in enumerate(range(0, len(pdf), BLOCK_SIZE)):
-        hi = min(lo + BLOCK_SIZE, len(pdf))
-        b_docs = doc_ids[lo:hi].astype(np.uint64)
-        b_tfs = tfs[lo:hi].astype(np.uint64)
-        # positions: per-doc delta streams, concatenated; tf gives the split
-        flat = np.concatenate([np.asarray(p, dtype=np.int64) for p in positions[lo:hi]])
-        starts = np.concatenate(([0], np.cumsum(b_tfs.astype(np.int64))[:-1]))
-        d = flat.copy()
-        d[1:] -= flat[:-1]
-        d[starts] = flat[starts]  # first position of each doc is absolute
-        dd = np.empty_like(b_docs)
-        dd[0] = b_docs[0]
-        np.subtract(b_docs[1:], b_docs[:-1], out=dd[1:])
-        pay = b""
-        if payloads is not None:
-            # payloads are opaque uint64s, varbyte'd raw (no delta), parallel
-            # to the position stream; all-or-nothing per block
-            blk = [p for p in payloads[lo:hi] if p is not None]
-            if len(blk) == hi - lo:
-                flat_pay = np.concatenate(
-                    [np.asarray(p, dtype=np.uint64) for p in blk]
-                ) if blk else np.empty(0, dtype=np.uint64)
-                if len(flat_pay) == int(b_tfs.sum()):
-                    pay = encode_varbyte(flat_pay)
-        rows.append(
-            {
-                "term": term,
-                "chunk": chunk,
-                "block_id": chunk * blocks_per_chunk + bi,
-                "doc_count": hi - lo,
-                "min_doc_id": int(b_docs[0]),
-                "max_doc_id": int(b_docs[-1]),
-                "max_tf": int(b_tfs.max()),
-                "sum_tf": int(b_tfs.sum()),
-                "doc_deltas": _encode_stream(dd, codec),
-                "tf_bytes": _encode_stream(b_tfs, codec),
-                "pos_bytes": _encode_stream(d.astype(np.uint64), codec),
-                "pay_bytes": pay,
-            }
+    ``uniques`` may be a pa.StringArray (term strings by code) or a numpy
+    object array — term columns are built by Arrow take either way.
+
+    ``pay_len``/``pay_flat`` carry optional per-hit payloads: each doc's
+    payload count (-1 for a null list) and the lists flattened in row order.
+    A block gets a varbyte ``pay_bytes`` stream only when every doc in it
+    has a non-null list and the block's payload count equals its ``sum_tf``;
+    otherwise (and always without payloads) its stream is empty.
+    """
+    if not isinstance(uniques, pa.Array):
+        uniques = pa.array(np.asarray(uniques, dtype=object), type=pa.string())
+
+    n = len(doc)
+    chunk = doc >> np.int64(chunk_bits)
+    # order postings by (chunk, term, doc) — the physical layout.  The input
+    # is doc-ascending in the normal build (postings arrive in corpus doc
+    # order), so a STABLE sort by (chunk, code) alone preserves doc order
+    # within each group and the key needs no doc bits — it usually fits
+    # int32, where numpy's radix sort runs ~2x the int64 width.  Unsorted
+    # inputs (merge re-encodes, NRT slices, ad-hoc frames) fall back to a
+    # (chunk, code, low doc bits) packed key, or the general 3-key lexsort
+    # if even that overflows 63 bits.
+    bits_code = max((int(codes.max()) if n else 0).bit_length(), 1)
+    group_key = None
+    doc_sorted = bool(np.all(doc[1:] >= doc[:-1])) if n > 1 else True
+    chunk_top = int(chunk.max()).bit_length()
+    if doc_sorted and chunk_top + bits_code <= 63:
+        key = (chunk << np.int64(bits_code)) | codes
+        if chunk_top + bits_code <= 31:
+            key = key.astype(np.int32)
+        order = np.argsort(key, kind="stable")
+        group_key = key[order]
+    elif chunk_top + bits_code + chunk_bits <= 63:
+        key = (
+            (chunk << np.int64(bits_code + chunk_bits))
+            | (codes << np.int64(chunk_bits))
+            | (doc & np.int64((1 << chunk_bits) - 1))
         )
-    return pd.DataFrame(rows)
+        order = np.argsort(key, kind="stable")
+        group_key = (key >> np.int64(chunk_bits))[order]
+    else:
+        order = np.lexsort((doc, codes, chunk))
+    # variable-length rows follow the same gather (source row offsets MUST
+    # come from the pre-reorder layout)
+    pos_flat, new_offsets = _gather_rows(pos_flat, tf, order)
+    if pay_len is not None:
+        pay_flat, _ = _gather_rows(pay_flat, np.maximum(pay_len, 0), order)
+        pay_len = pay_len[order]
+    doc, tf, codes, chunk = doc[order], tf[order], codes[order], chunk[order]
+
+    # group = (term, chunk) run; blocks of <= BLOCK_SIZE docs within a group
+    new_group = np.empty(n, dtype=bool)
+    new_group[0] = True
+    if group_key is not None:
+        np.not_equal(group_key[1:], group_key[:-1], out=new_group[1:])
+    else:
+        new_group[1:] = (codes[1:] != codes[:-1]) | (chunk[1:] != chunk[:-1])
+    group_ids = np.cumsum(new_group) - 1
+    group_first = np.flatnonzero(new_group)
+    rank = np.arange(n) - group_first[group_ids]
+    new_block = new_group | (rank % BLOCK_SIZE == 0)
+    bs = np.flatnonzero(new_block)          # block start row indices
+    be = np.append(bs[1:], n)               # block end row indices
+    blocks_per_chunk = max((1 << chunk_bits) // BLOCK_SIZE, 1)
+    sum_tf = np.add.reduceat(tf, bs)
+
+    # docID deltas reset at block starts (blocks decode independently)
+    d_delta = doc.copy()
+    d_delta[1:] -= doc[:-1]
+    d_delta[bs] = doc[bs]
+    # position deltas reset at each doc's first position
+    p_delta = pos_flat.copy()
+    p_delta[1:] -= pos_flat[:-1]
+    p_delta[new_offsets[:-1]] = pos_flat[new_offsets[:-1]]
+
+    def binary_col(buf: np.ndarray, byte_off: np.ndarray) -> pa.Array:
+        # pa.binary() carries int32 offsets: a partition whose encoded stream
+        # exceeds 2^31 bytes would silently wrap into garbage blocks — fail
+        # loudly instead (split the input into more partitions to proceed)
+        if int(byte_off[-1]) >= 2**31:
+            raise ValueError(
+                f"encoded stream is {int(byte_off[-1])} bytes — over the "
+                "int32 Arrow binary-offset limit; repartition the input so "
+                "each partition encodes < 2 GiB per stream"
+            )
+        vo = byte_off.astype(np.int32)
+        return pa.Array.from_buffers(
+            pa.binary(), len(vo) - 1,
+            [None, pa.py_buffer(vo.tobytes()), pa.py_buffer(buf.tobytes())],
+        )
+
+    def varbyte_col(values: np.ndarray, value_bounds: np.ndarray) -> pa.Array:
+        buf, value_off = encode_varbyte_offsets(values)
+        return binary_col(buf, value_off[value_bounds])
+
+    def stream_col(values: np.ndarray, value_bounds: np.ndarray) -> pa.Array:
+        """One stream -> per-block wire bytes as an Arrow binary column.
+        value_bounds are the per-block value-index bounds (len n_blocks+1)."""
+        if codec == CODEC_PFOR:
+            from ..functions.pfor import pfor_encode_rows
+
+            buf, byte_off = pfor_encode_rows(values, np.diff(value_bounds))
+            return binary_col(buf, byte_off)
+        return varbyte_col(values, value_bounds)
+
+    row_bounds = np.append(bs, n)
+    pos_bounds = new_offsets[row_bounds]  # value-index bounds in the pos stream
+    # payloads stay varbyte under every codec, raw (no delta), parallel to
+    # the position stream, all-or-nothing per block
+    pay_counts = np.zeros(len(bs), dtype=np.int64)
+    pay_vals = np.empty(0, dtype=np.uint64)
+    if pay_len is not None:
+        blk_pay = np.add.reduceat(np.maximum(pay_len, 0), bs)
+        ok = (np.minimum.reduceat(pay_len, bs) >= 0) & (blk_pay == sum_tf)
+        pay_counts = np.where(ok, blk_pay, 0)
+        keep = np.repeat(np.repeat(ok, be - bs), np.maximum(pay_len, 0))
+        pay_vals = pay_flat[keep].astype(np.uint64)
+    pay_bounds = np.concatenate(([0], np.cumsum(pay_counts)))
+    term_col = uniques.take(pa.array(codes[bs]))
+    if isinstance(term_col, pa.ChunkedArray):
+        term_col = term_col.combine_chunks()
+    return pa.RecordBatch.from_arrays(
+        [
+            term_col.cast(pa.string()),
+            pa.array(chunk[bs], type=pa.int64()),
+            pa.array(chunk[bs] * blocks_per_chunk + (rank[bs] // BLOCK_SIZE), type=pa.int64()),
+            pa.array((be - bs).astype(np.int32), type=pa.int32()),
+            pa.array(doc[bs], type=pa.int64()),
+            pa.array(doc[be - 1], type=pa.int64()),
+            pa.array(np.maximum.reduceat(tf, bs).astype(np.int32), type=pa.int32()),
+            pa.array(sum_tf.astype(np.int64), type=pa.int64()),
+            stream_col(d_delta.astype(np.uint64), row_bounds),
+            stream_col(tf.astype(np.uint64), row_bounds),
+            stream_col(p_delta.astype(np.uint64), pos_bounds),
+            varbyte_col(pay_vals, pay_bounds),
+        ],
+        names=[
+            "term", "chunk", "block_id", "doc_count", "min_doc_id", "max_doc_id",
+            "max_tf", "sum_tf", "doc_deltas", "tf_bytes", "pos_bytes", "pay_bytes",
+        ],
+    )
+
+
+def _encode_table(
+    batches: Iterator[pa.RecordBatch], chunk_bits: int, codec: str
+) -> Iterator[pa.RecordBatch]:
+    """A whole partition of logical postings -> its block rows in ONE
+    ``_encode_partition`` call.  The partition is accumulated first, so a
+    (term, chunk) group split across Arrow batches still packs as one group."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    t = pa.Table.from_batches(batches)
+    terms = t.column("term").combine_chunks().dictionary_encode()
+    tf = t.column("tf").to_numpy().astype(np.int64)
+    positions = t.column("positions").combine_chunks()
+    lens = pc.list_value_length(positions).to_numpy(zero_copy_only=False)
+    if not np.array_equal(lens, tf):
+        raise ValueError("encode_postings: a positions list length differs from its tf")
+    pay_len = pay_flat = None
+    if "payloads" in t.column_names:
+        payloads = t.column("payloads").combine_chunks()
+        pay_len = (
+            pc.list_value_length(payloads).fill_null(-1)
+            .to_numpy(zero_copy_only=False).astype(np.int64)
+        )
+        pay_flat = payloads.flatten().to_numpy(zero_copy_only=False)
+    yield _encode_partition(
+        t.column("doc_id").to_numpy().astype(np.int64),
+        tf,
+        terms.indices.to_numpy(zero_copy_only=False).astype(np.int64),
+        terms.dictionary,
+        positions.flatten().to_numpy(zero_copy_only=False).astype(np.int64),
+        chunk_bits,
+        codec,
+        pay_len,
+        pay_flat,
+    )
 
 
 def encode_postings(
@@ -157,17 +301,21 @@ def encode_postings(
     chunk_bits: int = CHUNK_BITS,
     codec: str = DEFAULT_CODEC,
 ) -> DataFrame:
-    """Logical postings -> block rows. One shuffle on (term, chunk).
+    """Logical postings -> block rows. One shuffle on (term, chunk), then
+    one ``_encode_partition`` pass per partition (``_encode_table``).
     An optional ``payloads array<long>`` input column (per-hit, parallel to
     positions) is encoded into the ``pay_bytes`` stream.  ``codec`` selects
     the wire format of the three posting streams (see module constants)."""
     _check_codec(codec)
-    with_chunk = postings.withColumn(
-        "chunk", F.shiftright(F.col("doc_id"), chunk_bits)
-    )
-    return with_chunk.groupBy("term", "chunk").applyInPandas(
-        lambda pdf: _encode_group(pdf.drop(columns=["chunk"]), chunk_bits, codec),
-        SEGMENT_SCHEMA,
+    cols = ["term", "doc_id", "tf", "positions"]
+    if "payloads" in postings.columns:
+        cols.append("payloads")
+    return (
+        postings.select(*cols)
+        .repartition("term", F.shiftright(F.col("doc_id"), chunk_bits))
+        .mapInArrow(
+            lambda it: _encode_table(it, chunk_bits, codec), SEGMENT_SCHEMA
+        )
     )
 
 
@@ -227,7 +375,7 @@ def _decode_batches(
 ) -> Iterator[pa.RecordBatch]:
     """Block rows -> posting rows, one vectorized pass per Arrow batch.
 
-    Mirrors the fused encoder (fastbuild._encode_partition): every varbyte
+    Mirrors the encoder (``_encode_partition``): every varbyte
     stream in the batch is decoded in ONE decode_varbyte call over the
     concatenated binary buffers; per-block structure is recovered from
     doc_count / tf prefix sums (reduceat-style), never a per-row loop.  This
