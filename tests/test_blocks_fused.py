@@ -2,7 +2,7 @@
 the reference paths produce, and its block-metadata stats must match."""
 
 from trinity_spark.fixtures import gen_transcripts
-from trinity_spark.operators.build import field_stats_from_blocks, term_dict_from_blocks
+from trinity_spark.operators.build import term_dict_from_blocks
 from trinity_spark.operators.docids import assign_doc_ids
 from trinity_spark.operators.fastbuild import blocks_from_turns, postings_from_turns
 from trinity_spark.operators.segments import BLOCK_SIZE, decode_segments
@@ -35,9 +35,3 @@ def test_fused_blocks_roundtrip(spark):
         df_, cf_ = byterm.get(t, (0, 0))
         byterm[t] = (df_ + 1, cf_ + tf)
     assert td == byterm
-
-    fs = field_stats_from_blocks(blocks, docs_cnt=800).collect()[0]
-    assert fs["sum_term_hits"] == sum(cf for _, cf in byterm.values())
-    assert fs["total_terms"] == len(byterm)
-    assert fs["sum_terms_docs"] == sum(df_ for df_, _ in byterm.values())
-    assert fs["docs_cnt"] == 800

@@ -137,10 +137,6 @@ def test_mixed_codec_store_reads_and_merge_reencodes(spark, tmp_path):
     raw copy holds by construction)."""
     from pyspark.sql import functions as F
 
-    from trinity_spark.operators.build import (
-        field_stats_from_blocks,
-        term_dict_from_blocks,
-    )
     from trinity_spark.operators.docids import assign_doc_ids
     from trinity_spark.operators.fastbuild import blocks_from_turns
     from trinity_spark.sources.store import SegmentMeta
@@ -159,8 +155,6 @@ def test_mixed_codec_store_reads_and_merge_reencodes(spark, tmp_path):
     with pytest.raises(ValueError, match="codec='pfor'"):
         store.commit_segment(
             blocks,
-            term_dict_from_blocks(blocks),
-            field_stats_from_blocks(blocks, docs_cnt=300),
             SegmentMeta(
                 "seg-pfor-b", 0, 400, 700, 300,
                 {"chunk_bits": 16, "codec": "pfor"}, {},

@@ -151,7 +151,6 @@ def test_merge_defragments_and_reuses_lone_partials(spark, tmp_path):
        modulo the append's groups)."""
     import pyspark.sql.functions as F
 
-    from trinity_spark.operators.build import field_stats_from_blocks, term_dict_from_blocks
     from trinity_spark.operators.fastbuild import blocks_from_turns
     from trinity_spark.operators.segments import BLOCK_SIZE
     from trinity_spark.sources.store import SegmentMeta
@@ -165,10 +164,7 @@ def test_merge_defragments_and_reuses_lone_partials(spark, tmp_path):
     with_ids = assign_doc_ids(turns).repartition(8)
     blocks = blocks_from_turns(with_ids).persist()
     meta = SegmentMeta("seg-frag", 0, 0, 2000, 2000, {"chunk_bits": 16}, {})
-    store.commit_segment(
-        blocks, term_dict_from_blocks(blocks),
-        field_stats_from_blocks(blocks, docs_cnt=2000), meta,
-    )
+    store.commit_segment(blocks, meta)
     blocks.unpersist()
 
     def multi_groups(df):

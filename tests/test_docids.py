@@ -220,3 +220,24 @@ def test_worker_attach_conv_missing_from_slice_raises(spark, tmp_path):
     sliced = blocks_from_turns(turns, conv_attach=(path, 0, 6, ("c0", "c1")))
     with pytest.raises(Exception, match="ValueError: conv_id .* missing from conv_bases"):
         sliced.count()
+
+
+def test_conv_bases_past_the_cap_aggregates_the_corpus_once(spark, monkeypatch):
+    """Past the broadcast cap the capped driver collect and the distributed
+    enumerate share ONE corpus aggregation: the conv table is persisted
+    before the collect, so the input is scanned exactly once."""
+    monkeypatch.setattr(D, "BROADCAST_MAX_CONVS", 0)
+    scanned = spark.sparkContext.accumulator(0)
+
+    def passthrough(batches):
+        for b in batches:
+            scanned.add(b.num_rows)
+            yield b
+
+    src = spark.createDataFrame(gen_transcripts(500))
+    bases, n_docs, _, dense = D._conv_bases(
+        src.mapInArrow(passthrough, src.schema), 2
+    )
+    assert (n_docs, dense) == (500, True)
+    assert bases.count() > 0
+    assert scanned.value == 500

@@ -472,7 +472,9 @@ def test_attach_snippets(spark):
 
 def test_segment_index_refresh_after_append(spark, tmp_path_factory):
     """A SegmentIndex snapshot is frozen at open; refresh() picks up NRT
-    appends (stats AND postings)."""
+    appends (stats AND postings).  A view whose first stats_for runs after
+    a commit still answers from its open-time snapshot: N, df and postings
+    all equal the view pinned to that snapshot through ``store.at``."""
     from trinity_spark.fixtures import gen_transcripts
     from trinity_spark.operators.indexer import SegmentIndex, build_index
     from trinity_spark.sources.store import SegmentStore
@@ -485,9 +487,22 @@ def test_segment_index_refresh_after_append(spark, tmp_path_factory):
         rows_per_segment=300, input_desc="refresh",
     )
     index = SegmentIndex(spark, store)
+    unasked = SegmentIndex(spark, store)  # no stats_for before the append
+    open_snapshot = store.read_manifest()["snapshot_id"]
     n0 = index.stats_for([]).n_docs
     append_micro_segment(spark, store, spark.createDataFrame(gen_transcripts(100, seed=3)))
     assert index.stats_for([]).n_docs == n0  # frozen snapshot (documented)
+
+    pinned = SegmentIndex(spark, store.at(open_snapshot))
+    got, want = unasked.stats_for(["error"]), pinned.stats_for(["error"])
+    assert got.n_docs == want.n_docs == n0
+    assert got.df("error") == want.df("error")
+
+    def top(ix):
+        rows = QueryPlanner(ix).plan("error", k=5).collect()
+        return [(r["doc_id"], r["score"]) for r in rows]
+
+    assert top(unasked) == top(pinned)
     assert index.refresh().stats_for([]).n_docs == n0 + 100
 
 

@@ -69,3 +69,31 @@ def test_block_encoder_has_one_owner():
         if rel != owner:
             assert not STREAM_ENCODE_CALL.search(text), rel
     assert STREAM_ENCODE_CALL.search((ROOT / owner).read_text())
+
+
+# a CALL of the block-metadata dictionary function (its ``def`` is not one)
+TERM_DICT_CALL = re.compile(r"(?<!def )\bterm_dict_from_blocks\(")
+
+
+def test_segment_stats_have_one_owner():
+    """The store owns what a segment records: only ``sources/store.py``
+    derives a segment's term dictionary, no per-segment field-stats table
+    or the function that built it survives, and the commit calls take
+    blocks and meta — no caller-built dictionary or stats frame."""
+    import inspect
+
+    from trinity_spark.sources.store import SegmentStore
+
+    store = "trinity_spark/sources/store.py"
+    for path in sorted((ROOT / "trinity_spark").rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        text = path.read_text()
+        for name in ("field_stats_from_blocks", "read_field_stats", "FIELD_STATS_SCHEMA"):
+            assert name not in text, (rel, name)
+        if rel != store:
+            assert not TERM_DICT_CALL.search(text), rel
+    assert TERM_DICT_CALL.search((ROOT / store).read_text())
+    for method in ("commit_segment", "commit_segment_with_deletes", "commit_merge"):
+        params = set(inspect.signature(getattr(SegmentStore, method)).parameters)
+        assert not params & {"term_dict", "field_stats", "stats"}, (method, params)
+        assert {"blocks", "meta"} <= params, (method, params)

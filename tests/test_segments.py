@@ -625,11 +625,6 @@ def test_payloads_in_hits_surface(spark, tmp_path_factory):
     """Indexed per-hit payloads round-trip to plan(with_hits=True,
     with_payloads=True) for top-k winners (runtime.h:8-20 term_hit.payload,
     materialized per match in queryexec_ctx.cpp:317-352) — no hand join."""
-    from trinity_spark.operators.build import (
-        field_stats_from_blocks,
-        term_dict_from_blocks,
-    )
-
     base = str(tmp_path_factory.mktemp("payhits"))
     store = SegmentStore(base)
     rows = []
@@ -653,10 +648,7 @@ def test_payloads_in_hits_surface(spark, tmp_path_factory):
         segment_id=f"seg-{0:014d}-{n_docs:014d}", generation=0,
         doc_lo=0, doc_hi=n_docs, docs_cnt=n_docs,
     )
-    store.commit_segment(
-        blocks, term_dict_from_blocks(blocks),
-        field_stats_from_blocks(blocks, docs_cnt=n_docs), meta,
-    )
+    store.commit_segment(blocks, meta)
     planner = QueryPlanner(SegmentIndex(spark, store))
     out = planner.plan("alpha AND beta", k=5, with_hits=True, with_payloads=True)
     got = out.collect()
@@ -922,10 +914,6 @@ def test_merge_preserves_payloads_in_reencoded_blocks(spark, tmp_path_factory):
     """Round-4 review regression: blocks routed to the re-encode path
     (tombstone-hit or repacked) must carry their per-hit payloads through
     the merge — only reused blocks kept them before."""
-    from trinity_spark.operators.build import (
-        field_stats_from_blocks,
-        term_dict_from_blocks,
-    )
     from trinity_spark.sources.store import SegmentMeta
 
     base = str(tmp_path_factory.mktemp("paymerge"))
@@ -943,10 +931,7 @@ def test_merge_preserves_payloads_in_reencoded_blocks(spark, tmp_path_factory):
         segment_id=f"seg-{0:014d}-{n_docs:014d}", generation=0,
         doc_lo=0, doc_hi=n_docs, docs_cnt=n_docs,
     )
-    store.commit_segment(
-        blocks, term_dict_from_blocks(blocks),
-        field_stats_from_blocks(blocks, docs_cnt=n_docs), meta,
-    )
+    store.commit_segment(blocks, meta)
     # a tombstone forces alpha's block through the re-encode path
     store.add_deletes(spark, [7])
     merged = merge_segments(spark, store)
@@ -997,10 +982,6 @@ def test_merge_without_deletes_gens_counts_zero_token_tombstone(
     tombstone generation.  Deleting its zero-token doc (an assigned id with
     no postings, so nothing to find by decoding) must still drop docs_cnt
     by one at merge, and N must match the oracle's."""
-    from trinity_spark.operators.build import (
-        field_stats_from_blocks,
-        term_dict_from_blocks,
-    )
     from trinity_spark.operators.fastbuild import postings_from_turns
     from trinity_spark.sources.store import SegmentMeta
 
@@ -1014,8 +995,6 @@ def test_merge_without_deletes_gens_counts_zero_token_tombstone(
     store = SegmentStore(str(tmp_path_factory.mktemp("nogens") / "idx"))
     store.commit_segment(
         blocks,
-        term_dict_from_blocks(blocks),
-        field_stats_from_blocks(blocks, docs_cnt=n),
         SegmentMeta(
             segment_id=f"seg-{0:014d}-{n:014d}", generation=0,
             doc_lo=0, doc_hi=n, docs_cnt=n,
@@ -1106,7 +1085,7 @@ def test_pinned_snapshot_view_blocks_data_writes_before_disk(
     blocks = store.read_blocks(spark, [seg.segment_id])
     with pytest.raises(RuntimeError, match="pinned"):
         # frames are never touched: the guard fires at _write_segment_data
-        pinned.commit_segment(blocks, blocks, blocks, seg)
+        pinned.commit_segment(blocks, seg)
     with pytest.raises(RuntimeError, match="pinned"):
         pinned.add_deletes(spark, [1])
     with pytest.raises(RuntimeError, match="pinned"):
@@ -1203,3 +1182,106 @@ def test_merge_unknown_segment_ids_raise(spark, tmp_path_factory):
         merge_segments(spark, store, segment_ids=[real, "seg-typo"])
     # nothing was retired by the failed call
     assert len(store.segments()) == 2
+
+
+def _recount(spark, store, segment_id):
+    """Field statistics recounted from a segment's decoded postings."""
+    from pyspark.sql import functions as F
+
+    row = (
+        decode_segments(
+            store.read_blocks(spark, [segment_id]),
+            with_positions=False,
+            codec=store.layout().codec,
+        )
+        .agg(
+            F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_term_hits"),
+            F.countDistinct("term").alias("total_terms"),
+            F.count(F.lit(1)).alias("sum_terms_docs"),
+        )
+        .first()
+    )
+    return row.asDict()
+
+
+def _job_count(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_segment_stats_are_recorded_exactly(spark, tmp_path_factory):
+    """Every commit path records the segment's field statistics in its
+    lineage (index_source.h:44-53), equal to a recount over the segment's
+    decoded postings: Σtf, distinct terms and posting rows.  A segment
+    directory holds only postings and term_dict, and stats_for on a fresh
+    view runs only the dictionary collect — N and the cache gate come off
+    the manifest.  A segment without recorded stats closes the cache gate
+    and lookups go through per-query pushdown."""
+    from pyspark.sql import functions as F
+
+    from trinity_spark.streaming.nrt import append_micro_segment, replace_documents
+
+    store = SegmentStore(str(tmp_path_factory.mktemp("segstats") / "idx"))
+    corpus = gen_transcripts(600)
+    build_index(spark, spark.createDataFrame(corpus), store, rows_per_segment=300)
+    append_micro_segment(
+        spark, store, spark.createDataFrame(gen_transcripts(100, seed=3))
+    )
+    updated = corpus.iloc[:5].copy()
+    updated["text"] = "replaced error text " + updated["text"]
+    replace_documents(spark, store, spark.createDataFrame(updated))
+
+    def check_live(want_modes):
+        metas = store.segments()
+        assert sorted(
+            "merge" if m.segment_id.startswith("merged-")
+            else "replace" if m.lineage.get("replace")
+            else m.lineage.get("mode", "build")
+            for m in metas
+        ) == want_modes
+        for meta in metas:
+            assert meta.lineage["field_stats"] == _recount(
+                spark, store, meta.segment_id
+            ), meta.segment_id
+            seg_dir = os.path.join(store.base, "segments", meta.segment_id)
+            assert sorted(os.listdir(seg_dir)) == ["postings", "term_dict"]
+        return metas
+
+    metas = check_live(["build", "build", "nrt-append", "replace"])
+    build_ids = [m.segment_id for m in metas if "mode" not in m.lineage]
+    store.add_deletes(spark, [310, 320, 330, 340])  # in the second build segment
+    merged = merge_segments(spark, store, segment_ids=build_ids)
+    # the 4 tombstones plus the 5 versions the replace masked
+    assert (merged.lineage["deletes_applied"], merged.docs_cnt) == (9, 591)
+    metas = check_live(["merge", "nrt-append", "replace"])
+    assert store.fsck(spark, deep=True)["ok"]
+
+    # N and the dictionary-cache gate come off the open-time manifest:
+    # stats_for on a fresh view runs the dictionary collect and nothing else
+    index = SegmentIndex(spark, store)
+    assert index.n_docs == sum(m.docs_cnt for m in metas)
+    stats_jobs = _job_count(spark, "stats-fresh", lambda: index.stats_for(["error"]))
+    dict_jobs = _job_count(
+        spark, "stats-dict-alone",
+        lambda: index.term_dict.groupBy("term").agg(F.sum("df")).collect(),
+    )
+    assert stats_jobs == dict_jobs
+    want = index.stats_for(["error", "zzznothing"])
+
+    # a live segment without recorded stats (written before the store
+    # recorded them) closes the gate; lookups still answer exactly
+    with store._manifest_lock():
+        m = store.read_manifest()
+        del m["segments"][0]["lineage"]["field_stats"]
+        store._write_manifest(m)
+    old = SegmentIndex(spark, store)
+    got = old.stats_for(["error", "zzznothing"])
+    assert old._df_cache is False
+    assert (got.n_docs, got.df("error"), got.df("zzznothing")) == (
+        want.n_docs, want.df("error"), 0,
+    )

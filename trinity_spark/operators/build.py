@@ -14,7 +14,8 @@ All aggregates are partial+final (map-side combine) — no driver loops.
 ``field_stats`` carries exactly the reference's per-source statistics
 (``index_source.h:44-53``): sum_term_hits, total_terms, sum_terms_docs,
 docs_cnt; BM25 sums them across segments at query time
-(``similarity.h:238-250``).
+(``similarity.h:238-250``).  A segment store records the same statistics
+per segment in its manifest (``sources/store.py``) instead of a table.
 """
 
 from __future__ import annotations
@@ -65,20 +66,11 @@ def build_term_dict(postings: DataFrame) -> DataFrame:
 
 def term_dict_from_blocks(blocks: DataFrame) -> DataFrame:
     """term_dict straight off encoded block METADATA (no decode): df = sum of
-    block doc_counts, cf = sum of block tf sums."""
+    block doc_counts, cf = sum of block tf sums.  ``SegmentStore`` is its
+    one caller: a segment commit derives its own dictionary."""
     return blocks.groupBy("term").agg(
         F.sum("doc_count").cast("long").alias("df"),
         F.sum("sum_tf").cast("long").alias("cf"),
-    )
-
-
-def field_stats_from_blocks(blocks: DataFrame, docs_cnt: int) -> DataFrame:
-    """field_stats off block metadata (index_source.h:44-53)."""
-    return blocks.agg(
-        F.coalesce(F.sum("sum_tf"), F.lit(0)).cast("long").alias("sum_term_hits"),
-        F.count_distinct("term").alias("total_terms"),
-        F.coalesce(F.sum("doc_count"), F.lit(0)).cast("long").alias("sum_terms_docs"),
-        F.lit(docs_cnt).cast("long").alias("docs_cnt"),
     )
 
 

@@ -59,8 +59,9 @@ class _SeededStatsIndex:
 def _batched_stats(indexes: list, terms: list[str]) -> list[IndexStats]:
     """All stores' (n_docs, df-per-query-term) in <= 2 driver actions total.
 
-    n_docs: physical ``SegmentIndex``es sum manifest docs_cnt (driver-side,
-    free); logical indexes contribute to one tagged field_stats union.
+    n_docs: physical ``SegmentIndex``es carry it from their open-time
+    manifest (driver-side, free); logical indexes contribute to one tagged
+    field_stats union.
     df: every index's term_dict lookup is tagged with its ordinal and
     unioned — one job, each subtree doing its own pushdown scan exactly as
     the per-store lookup would have."""
@@ -69,13 +70,8 @@ def _batched_stats(indexes: list, terms: list[str]) -> list[IndexStats]:
     df_frames: list[DataFrame] = []
     cached_dfs: dict[int, dict[str, int]] = {}
     for i, idx in enumerate(indexes):
-        if hasattr(idx, "store"):
-            # reuse SegmentIndex's cached sum (stats_for warms it): a fresh
-            # manifest read + json parse per store per query adds driver
-            # latency at NRT-sized manifests x 100-store collections
-            if not hasattr(idx, "_n_docs"):
-                idx._n_docs = sum(s.docs_cnt for s in idx.store.segments())
-            n_docs[i] = idx._n_docs
+        if isinstance(idx, SegmentIndex):
+            n_docs[i] = idx.n_docs  # read off the open-time manifest
         else:
             nd_frames.append(
                 idx.field_stats.select(

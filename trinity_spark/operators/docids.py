@@ -190,13 +190,14 @@ def _conv_bases(
     # dominated phase 0 at high core counts.  Bigger conv tables (the
     # 100 TB regime) take the distributed path unchanged.
     cap = BROADCAST_MAX_CONVS
+    # persist the agg output BEFORE the capped collect: past the cap the
+    # distributed path below re-reads it (range sampling + the shuffle),
+    # and an un-persisted frame would re-run the whole corpus aggregation
+    convs.persist(StorageLevel.MEMORY_AND_DISK)
     head = convs.limit(cap + 1).toArrow()
     if head.num_rows <= cap:
+        convs.unpersist()
         return _conv_bases_driver(df.sparkSession, df, head, writer)
-    # persist the agg output BEFORE range-partitioning: repartitionByRange
-    # must sample its input, and sampling an un-persisted frame re-runs the
-    # whole corpus aggregation — phase 0 was paying the 8M-row agg twice
-    convs.persist(StorageLevel.MEMORY_AND_DISK)
     ordered = convs.repartitionByRange(
         num_partitions, "conv_id"
     ).sortWithinPartitions("conv_id")

@@ -9,10 +9,11 @@ Pipeline (SURVEY.md §3.3 — the Spark re-expression of
                      table, index_source.h:100-114)
       -> per docid-range SEGMENT:
            fused tokenize -> postings -> delta+varbyte blocks in ONE
-           mapInArrow pass (fastbuild.blocks_from_turns, zero data shuffles);
-           term_dict + field_stats derived from block metadata
-           -> commit_segment (atomic manifest add; the only data shuffle is
-              the term-sorted block write for dictionary-seek locality)
+           mapInArrow pass (fastbuild.blocks_from_turns, zero data shuffles)
+           -> commit_segment (the store derives term_dict from block metadata
+              and records field stats in the manifest; atomic manifest add;
+              the only data shuffle is the term-sorted block write for
+              dictionary-seek locality)
 
 Resumability (north rule): each segment is an idempotent unit keyed by its
 docid range; a restarted build skips manifest-committed segments and rewrites
@@ -35,8 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import __version__
-from ..sources.store import SegmentMeta, SegmentStore
-from .build import field_stats_from_blocks, term_dict_from_blocks
+from ..sources.store import SegmentMeta, SegmentStore, _PinnedSnapshotStore
 from .docids import assign_doc_ids_counted
 from .fastbuild import blocks_from_turns
 from .segments import decode_segments
@@ -368,14 +368,12 @@ def _build_index_inner(
                 (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
             )
         # fused tokenize->postings->encode: ONE pass, zero data shuffles;
-        # dictionary + stats come off block metadata (also shuffle-light)
+        # the store derives the dictionary and stats off block metadata
         blocks = blocks_from_turns(
             seg_turns, chunk_bits=chunk_bits, codec=codec,
             conv_attach=conv_attach,
         ).persist()
         blocks.count()  # materialize the fused pass once, before any reuse
-        term_dict = term_dict_from_blocks(blocks)
-        stats = field_stats_from_blocks(blocks, docs_cnt=hi - lo)
         meta = SegmentMeta(
             segment_id=sid,
             generation=0,  # assigned at commit
@@ -394,7 +392,7 @@ def _build_index_inner(
             },
             metrics={},
         )
-        store.commit_segment(blocks, term_dict, stats, meta)
+        store.commit_segment(blocks, meta)
         blocks.unpersist()
         wall = time.monotonic() - t0
         meta.metrics.update(
@@ -415,22 +413,39 @@ class SegmentIndex:
     `term` column = the terms.idx skiplist seek) BEFORE Arrow decode, and
     stats are summed across segments exactly like ``BM25Scorer::reset``
     (similarity.h:238-250).
+
+    A view is ONE snapshot: the manifest is read once at open and every
+    read (blocks, dictionary, tombstones, N, the cache gate) is pinned to
+    it, so commits after open stay invisible until ``refresh()``.
+    ``store`` stays the live store the view was opened on.
     """
 
     def __init__(self, spark: SparkSession, store: SegmentStore):
         self.spark = spark
         self.store = store
+        m = store.read_manifest()
+        snap = _PinnedSnapshotStore(store.base, m)
         # one wire layout per store; layout() raises on an unknown codec or
         # a segment whose lineage disagrees, so a corrupt store fails at
         # open instead of decoding garbage or dropping postings.  The chunk
         # width feeds the pruning cost gate's driver-side chunk counts.
-        self.codec, self.chunk_bits = store.layout()
-        self.blocks = store.read_blocks(spark)
-        self.term_dict = store.read_term_dict(spark)
-        self.field_stats = store.read_field_stats(spark)
-        self.deleted = store.read_deletes(spark)
+        self.codec, self.chunk_bits = snap.layout()
+        self.blocks = snap.read_blocks(spark)
+        self.term_dict = snap.read_term_dict(spark)
+        self.deleted = snap.read_deletes(spark)
         # full logical view (lazy; only touched if a caller scans everything)
         self.postings = decode_segments(self.blocks, codec=self.codec)
+        # N and the dictionary size come off the manifest — no Spark job.
+        # A segment without recorded field stats (written before the store
+        # recorded them) closes the cache gate: pushdown lookups per query.
+        segs = m["segments"]
+        self.n_docs = sum(s["docs_cnt"] for s in segs)
+        self._total_terms = (
+            sum(s["lineage"]["field_stats"]["total_terms"] for s in segs)
+            if all("field_stats" in s["lineage"] for s in segs)
+            else None
+        )
+        self._df_cache = None
 
     def postings_for(
         self, terms: list[str], with_positions: bool = True
@@ -456,33 +471,25 @@ class SegmentIndex:
     TERM_DICT_CACHE_MAX = 2_000_000
 
     def refresh(self) -> "SegmentIndex":
-        """Re-read the manifest after new commits (NRT appends, merges,
-        replaces) — a SegmentIndex snapshot is otherwise frozen at open time
-        (stale df/N caches would skew idf after appends).  Returns self."""
+        """Re-open on the store's current manifest (NRT appends, merges,
+        replaces) — the view is otherwise frozen at open time.  Returns
+        self."""
         self.__init__(self.spark, self.store)
-        for attr in ("_n_docs", "_df_cache"):
-            if hasattr(self, attr):
-                delattr(self, attr)
         return self
 
     def stats_for(self, terms: list[str]):
         from ..plans.planner import IndexStats
 
-        if not hasattr(self, "_n_docs"):
-            # manifest already carries docs_cnt — no Spark job needed
-            self._n_docs = sum(s.docs_cnt for s in self.store.segments())
-        n_docs = self._n_docs
-        cache = getattr(self, "_df_cache", None)
-        if cache is None:
-            total_terms = self.field_stats.agg(F.sum("total_terms")).collect()[0][0] or 0
-            if total_terms <= self.TERM_DICT_CACHE_MAX:
+        if self._df_cache is None:
+            total = self._total_terms
+            if total is not None and total <= self.TERM_DICT_CACHE_MAX:
                 rows = self.term_dict.groupBy("term").agg(F.sum("df").alias("df")).collect()
-                cache = {r["term"]: int(r["df"]) for r in rows}
+                self._df_cache = {r["term"]: int(r["df"]) for r in rows}
             else:
-                cache = False  # too big: per-query pushdown lookups
-            self._df_cache = cache
-        if cache:
-            return IndexStats(int(n_docs), {t: cache.get(t, 0) for t in terms})
+                self._df_cache = False  # too big: per-query pushdown lookups
+        if self._df_cache:
+            cache = self._df_cache
+            return IndexStats(self.n_docs, {t: cache.get(t, 0) for t in terms})
         rows = (
             self.term_dict.where(F.col("term").isin(terms))
             .groupBy("term")
@@ -491,4 +498,4 @@ class SegmentIndex:
             if terms
             else []
         )
-        return IndexStats(int(n_docs), {r["term"]: int(r["df"]) for r in rows})
+        return IndexStats(self.n_docs, {r["term"]: int(r["df"]) for r in rows})

@@ -82,7 +82,6 @@ from pyspark.sql import functions as F
 
 from .. import __version__
 from ..sources.store import SegmentMeta, SegmentStore
-from .build import field_stats_from_blocks, term_dict_from_blocks
 from .segments import BLOCK_SIZE, decode_segments, encode_postings
 
 
@@ -324,10 +323,6 @@ def merge_segments(
         )
         .persist()
     )
-    # dictionary + stats off block METADATA — reused blocks are never decoded
-    term_dict = term_dict_from_blocks(new_blocks)
-    stats = field_stats_from_blocks(new_blocks, docs_cnt=docs_cnt)
-
     # name suffix = next_generation at merge-PLAN time (manifest0, no extra
     # read) — a uniqueness scope, not the committed generation: concurrent
     # commits may bump the counter before commit_merge assigns the real one
@@ -367,8 +362,6 @@ def merge_segments(
     # segments stay in force.
     store.commit_merge(
         new_blocks.drop("_reused"),
-        term_dict,
-        stats,
         meta,
         retire_ids=ids,
         retire_delete_gens=(

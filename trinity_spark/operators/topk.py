@@ -298,7 +298,6 @@ class _PrunedView:
         self._inner = inner
         self.blocks = blocks
         self.term_dict = inner.term_dict
-        self.field_stats = inner.field_stats
         self.deleted = inner.deleted
         self.postings = inner.postings
         self.chunk_bits = inner.chunk_bits

@@ -1,8 +1,9 @@
 """Segment store: generational segments + atomic manifest + deletes.
 
 Reference analog — Trinity's on-disk index model:
-- a *segment* is a directory of postings + term dictionary + field stats,
-  named by generation (``/root/reference/indexer.cpp:241-300``);
+- a *segment* is a directory of postings + term dictionary, named by
+  generation (``indexer.cpp:241-300``), with per-source
+  field statistics kept beside it (``index_source.h:44-53``);
 - an *index sources collection* is the ordered-by-generation set of segments,
   where newer sources' masked-document sets veto older docs
   (``index_source.h:191-238``);
@@ -19,15 +20,17 @@ snapshot):
       segments/<segment_id>/
         postings/   (block rows, written sorted by term -> parquet min/max
                      column stats give term-seek, the terms.idx analog)
-        term_dict/
-        field_stats/
+        term_dict/  (term, df, cf; derived here from the block metadata)
       deletes/<gen>.parquet         # masked doc_ids (docidupdates.cpp analog)
 
 The manifest records, per segment: generation, doc range, row counts, build
 METRICS (wall seconds, turns/sec) and LINEAGE (input fingerprint, docid
-range, builder version) — the north rule's per-partition checkpoint +
-lineage requirement.  ``build_index`` resumes by skipping segment ids already
-committed in the manifest.
+range, engine version, wire layout, written block count and the field
+statistics ``{sum_term_hits, total_terms, sum_terms_docs}``) — the north
+rule's per-partition checkpoint + lineage requirement.  The store owns what
+a segment records: commits take only blocks and meta, and the dictionary
+and statistics come off the commit's own writes.  ``build_index`` resumes by
+skipping segment ids already committed in the manifest.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ from typing import Any, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.build import term_dict_from_blocks
 from ..operators.segments import (
     CHUNK_BITS,
     CODECS,
@@ -68,20 +72,15 @@ POSTINGS_TARGET_FILE_BYTES = int(
 )
 # Driver-side size estimate (no extra Spark job at commit time): measured
 # ~54 B/doc on the bench transcript corpus at 1M turns; only the ORDER of
-# magnitude matters (file-count decisions), so a corpus-specific override
-# is an env knob, not a measurement job.
-POSTINGS_EST_BYTES_PER_DOC = float(
-    os.environ.get("TRINITY_POSTINGS_BYTES_PER_DOC", "64")
-)
+# magnitude matters (file-count decisions).
+POSTINGS_EST_BYTES_PER_DOC = 64.0
 # Parquet row-group size for postings files.  Row groups are BOTH the term-
 # pruning granularity (min/max stats on the sorted term column) AND the
 # scan-parallelism unit (a row group is read by exactly one task), so with
 # few large files the default 128 MB row group would serialize multi-term
 # decodes into 1-2 tasks.  ~8 MiB keeps the old 32-file layout's skip
 # granularity and parallel decode units inside the new large files.
-POSTINGS_ROWGROUP_BYTES = int(
-    os.environ.get("TRINITY_POSTINGS_ROWGROUP_BYTES", str(8 << 20))
-)
+POSTINGS_ROWGROUP_BYTES = 8 << 20
 
 
 class Layout(NamedTuple):
@@ -538,13 +537,12 @@ class SegmentStore:
         return self.read_docid_map(spark).count()
 
     def _write_segment_data(
-        self,
-        blocks: DataFrame,
-        term_dict: DataFrame,
-        field_stats: DataFrame,
-        segment_id: str,
-        docs_hint: int,
-    ) -> int:
+        self, blocks: DataFrame, segment_id: str, docs_hint: int
+    ) -> dict[str, Any]:
+        """Write a segment's postings and term dictionary; returns what the
+        segment records in lineage: the written block count and the field
+        statistics (``index_source.h:44-53``), both observed on the two
+        writes themselves — no extra job."""
         # sorted by term: parquet row-group min/max on `term` = dictionary seek.
         # Partition count is derived from estimated postings BYTES (see
         # POSTINGS_TARGET_FILE_BYTES), capped at core count: tiny segments
@@ -561,7 +559,8 @@ class SegmentStore:
         est = docs_hint * POSTINGS_EST_BYTES_PER_DOC
         n_parts = min(max(math.ceil(est / POSTINGS_TARGET_FILE_BYTES), 1), par)
 
-        obs = Observation()
+        blocks_obs = Observation()
+        terms_obs = Observation()
 
         # HASH-partition by term (each term still lands in exactly one file,
         # term-sorted within it, so parquet row-group min/max pruning is
@@ -575,7 +574,12 @@ class SegmentStore:
             blocks.repartition(n_parts, "term").sortWithinPartitions(
                 "term", "block_id"
             ).observe(
-                obs, F.count(F.lit(1)).alias("n")
+                blocks_obs,
+                F.count(F.lit(1)).alias("n_blocks"),
+                F.coalesce(F.sum("sum_tf"), F.lit(0))
+                .cast("long").alias("sum_term_hits"),
+                F.coalesce(F.sum("doc_count"), F.lit(0))
+                .cast("long").alias("sum_terms_docs"),
             ).write.mode("overwrite").option(
                 "parquet.block.size", str(POSTINGS_ROWGROUP_BYTES)
             ).parquet(
@@ -585,46 +589,45 @@ class SegmentStore:
         def _write_dict() -> None:
             # KB-scale table: one file, not one per shuffle partition (a
             # 32-file dictionary made the first stats_for collect pay 32
-            # footer reads)
-            term_dict.coalesce(1).write.mode("overwrite").parquet(
+            # footer reads); one row per distinct term
+            term_dict_from_blocks(blocks).coalesce(1).observe(
+                terms_obs, F.count(F.lit(1)).alias("total_terms")
+            ).write.mode("overwrite").parquet(
                 self.segment_dir(segment_id, "term_dict")
             )
 
-        def _write_stats() -> None:
-            field_stats.coalesce(1).write.mode("overwrite").parquet(
-                self.segment_dir(segment_id, "field_stats")
-            )
-
-        # the three outputs derive from the SAME persisted blocks frame and
-        # are mutually independent: submit them as concurrent driver
-        # actions so the commit wall is the postings write, not the sum of
-        # three job latencies (the dict/stats frames are tiny)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [pool.submit(f) for f in (_write_postings, _write_dict, _write_stats)]
+        # both outputs derive from the SAME blocks frame and are mutually
+        # independent: submit them as concurrent driver actions so the
+        # commit wall is the postings write, not the sum of two job
+        # latencies (the dictionary is tiny)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(f) for f in (_write_postings, _write_dict)]
             for f in futs:
                 f.result()
-        # exact written-block count for lineage: lets fsck detect LOST
-        # postings files (physical < lineage) as an ERROR, which the doc
-        # count cannot (zero-token docs legitimately depress it).  Counted
-        # by an Observation ON the write job itself (rows that flowed into
-        # the files) — the old footer re-read was one extra Spark job per
-        # segment commit, pure fixed cost at the 1000-segment design point.
-        return int(obs.get["n"])
+        # the exact written-block count lets fsck detect LOST postings files
+        # (physical < lineage) as an ERROR, which the doc count cannot
+        # (zero-token docs legitimately depress it).  Every value is counted
+        # by an Observation ON a write job (rows that flowed into the
+        # files) — a footer re-read or a stats table would be one extra
+        # Spark job or file per segment, pure fixed cost at the
+        # 1000-segment design point.
+        got = blocks_obs.get
+        return {
+            "n_blocks": int(got["n_blocks"]),
+            "field_stats": {
+                "sum_term_hits": int(got["sum_term_hits"]),
+                "total_terms": int(terms_obs.get["total_terms"]),
+                "sum_terms_docs": int(got["sum_terms_docs"]),
+            },
+        }
 
-    def commit_segment(
-        self,
-        blocks: DataFrame,
-        term_dict: DataFrame,
-        field_stats: DataFrame,
-        meta: SegmentMeta,
-    ) -> None:
+    def commit_segment(self, blocks: DataFrame, meta: SegmentMeta) -> None:
         """Write segment data, then atomically add it to the manifest.
         Data writes are idempotent (overwrite) so a crashed attempt is
         invisible until the manifest names the segment — Trinity's
         tmp-then-rename persist (indexer.cpp:286-300)."""
-        meta.lineage["n_blocks"] = self._write_segment_data(
-            blocks, term_dict, field_stats, meta.segment_id,
-            docs_hint=meta.docs_cnt,
+        meta.lineage.update(
+            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
         )
         with self._manifest_lock():
             m = self.read_manifest()
@@ -668,12 +671,7 @@ class SegmentStore:
             )
 
     def commit_segment_with_deletes(
-        self,
-        blocks: DataFrame,
-        term_dict: DataFrame,
-        field_stats: DataFrame,
-        meta: SegmentMeta,
-        deletes_df: DataFrame,
+        self, blocks: DataFrame, meta: SegmentMeta, deletes_df: DataFrame
     ) -> int:
         """Segment commit + tombstone set in ONE atomic manifest write — the
         document-replace primitive (reference ``indexer.h:181-206``
@@ -683,9 +681,8 @@ class SegmentStore:
         it, both are visible — no window where the new version exists without
         the old one masked (or vice versa).  Returns the tombstone generation.
         """
-        meta.lineage["n_blocks"] = self._write_segment_data(
-            blocks, term_dict, field_stats, meta.segment_id,
-            docs_hint=meta.docs_cnt,
+        meta.lineage.update(
+            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
         )
         with self._manifest_lock():
             m = self.read_manifest()
@@ -710,8 +707,6 @@ class SegmentStore:
     def commit_merge(
         self,
         blocks: DataFrame,
-        term_dict: DataFrame,
-        field_stats: DataFrame,
         meta: SegmentMeta,
         retire_ids: list[str],
         retire_delete_gens: list[int] | None = None,
@@ -724,9 +719,8 @@ class SegmentStore:
         visible — a SegmentIndex opened in that window served every merged
         doc twice — and where a concurrent add_deletes landing between the
         trim's read and write was silently dropped (lost update)."""
-        meta.lineage["n_blocks"] = self._write_segment_data(
-            blocks, term_dict, field_stats, meta.segment_id,
-            docs_hint=meta.docs_cnt,
+        meta.lineage.update(
+            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
         )
         retire = set(retire_ids)
         gens = set(retire_delete_gens or [])
@@ -840,9 +834,6 @@ class SegmentStore:
         return spark.read.schema(SEGMENT_SCHEMA).parquet(*paths)
 
     TERM_DICT_SCHEMA = "term string, df long, cf long"
-    FIELD_STATS_SCHEMA = (
-        "sum_term_hits long, total_terms long, sum_terms_docs long, docs_cnt long"
-    )
 
     def read_term_dict(self, spark: SparkSession) -> DataFrame:
         metas = self.segments()
@@ -850,14 +841,6 @@ class SegmentStore:
             return spark.createDataFrame([], self.TERM_DICT_SCHEMA)
         return spark.read.schema(self.TERM_DICT_SCHEMA).parquet(
             *[self.segment_dir(s.segment_id, "term_dict") for s in metas]
-        )
-
-    def read_field_stats(self, spark: SparkSession) -> DataFrame:
-        metas = self.segments()
-        if not metas:
-            return spark.createDataFrame([], self.FIELD_STATS_SCHEMA)
-        return spark.read.schema(self.FIELD_STATS_SCHEMA).parquet(
-            *[self.segment_dir(s.segment_id, "field_stats") for s in metas]
         )
 
     def gc(self, orphan_grace_sec: float = 0.0) -> dict[str, list[str]]:
@@ -1011,7 +994,7 @@ class SegmentStore:
     def fsck(self, spark: SparkSession | None = None, deep: bool = False) -> dict[str, Any]:
         """Store integrity check (the operational tool Trinity leaves to apps:
         its segment model makes these invariants checkable but ships no
-        checker).  Metadata pass (no Spark): every live segment's three data
+        checker).  Metadata pass (no Spark): every live segment's two data
         dirs exist and are non-empty, live doc ranges are pairwise disjoint,
         ``docs_cnt <= doc_hi - doc_lo``, generations are unique and below
         ``next_generation``, every tombstone file exists, and the store
@@ -1052,7 +1035,7 @@ class SegmentStore:
         m = self.read_manifest()
         metas = [SegmentMeta(**s) for s in m["segments"]]
         for meta in metas:
-            for part in ("postings", "term_dict", "field_stats"):
+            for part in ("postings", "term_dict"):
                 d = self.segment_dir(meta.segment_id, part)
                 if not os.path.isdir(d) or not any(
                     f.endswith(".parquet") for f in os.listdir(d)
@@ -1209,12 +1192,13 @@ class SegmentStore:
 
 class _PinnedSnapshotStore(SegmentStore):
     """Read-only ``SegmentStore`` view pinned to one retained snapshot
-    (``SegmentStore.at``).  ``read_manifest`` returns the pinned state (a
-    fresh copy each call — callers may mutate their copy), so every read
-    path (``segments`` / ``read_blocks`` / ``read_term_dict`` /
-    ``read_field_stats`` / ``read_deletes`` / ``SegmentIndex`` open) answers
-    as of that commit.  Any manifest write raises: time travel is a view,
-    not a branch — to fork history, build into a fresh store."""
+    (``SegmentStore.at``) or to the manifest a ``SegmentIndex`` read at
+    open.  ``read_manifest`` returns the pinned state (a fresh copy each
+    call — callers may mutate their copy), so every read path
+    (``segments`` / ``read_blocks`` / ``read_term_dict`` / ``read_deletes``
+    / ``layout``) answers as of that one manifest.  Any manifest write
+    raises: time travel is a view, not a branch — to fork history, build
+    into a fresh store."""
 
     def __init__(self, base: str, manifest: dict[str, Any]):
         self.base = base  # no mkdir: a pinned view never creates the store

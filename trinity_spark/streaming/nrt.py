@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import __version__
-from ..operators.build import field_stats_from_blocks, term_dict_from_blocks
 from ..operators.fastbuild import blocks_from_turns
 from ..operators.docids import assign_doc_ids_counted
 from ..sources.store import SegmentMeta, SegmentStore
@@ -128,16 +127,12 @@ def _append_assigned(
         lineage=lineage,
         metrics={},
     )
-    term_dict = term_dict_from_blocks(blocks)
-    stats = field_stats_from_blocks(blocks, docs_cnt=n)
     del_gen = None
     try:
         if deletes_df is None:
-            store.commit_segment(blocks, term_dict, stats, meta)
+            store.commit_segment(blocks, meta)
         else:
-            del_gen = store.commit_segment_with_deletes(
-                blocks, term_dict, stats, meta, deletes_df
-            )
+            del_gen = store.commit_segment_with_deletes(blocks, meta, deletes_df)
     except ValueError:
         # rejected commit (a concurrent writer committed the range first,
         # or fixed a different layout): drop this attempt's orphan data
