@@ -1220,9 +1220,8 @@ def run_embeddings_section(cpus: int) -> dict:
     1M synthetic 64-dim vectors (planted exact dup every 100th row) through
     the embedding family's SCALE kernels — Arrow matrix assignment
     (ivf_assign_arrow), per-cluster Gram-matrix semantic dedup verify
-    (uncapped exact + capped), and LSH-banded cosine pairs with the gram
-    verify — plus a small-subset per-pair SQL-fold assignment contrast so
-    the kernel-choice evidence is measured in the artifact, not asserted.
+    (uncapped exact + capped), LSH-banded cosine pairs with the gram
+    verify, and the whole SemDeDup pipeline.
     """
     import numpy as np
     import pyarrow as pa
@@ -1275,20 +1274,10 @@ def run_embeddings_section(cpus: int) -> dict:
                                "vecs_per_sec": round(n / w, 1),
                                "checksum": int(chk)}
 
-        # per-pair SQL-fold contrast on a subset (the full-n fold path is
-        # the measured non-choice: ~7x slower at 200k x 64 lists)
-        sub_n = min(n // 10, 50_000)
-        sub = vecs.where(F.col("vec_id") < sub_n)
         t0 = time.monotonic()
-        chk2 = S.ivf_assign_join(sub, cents).agg(F.sum("list_id")).collect()[0][0]
-        w = time.monotonic() - t0
-        out["assign_join_sql_subset"] = {
-            "n_vecs": sub_n, "wall_sec": round(w, 2),
-            "vecs_per_sec": round(sub_n / w, 1), "checksum": int(chk2),
-        }
-
-        t0 = time.monotonic()
-        n_pairs = S.semantic_dedup_pairs_gram(assigned, threshold=0.95).count()
+        n_pairs = S.semantic_dedup_pairs(
+            assigned, threshold=0.95, kernel="gram"
+        ).count()
         w = time.monotonic() - t0
         out["semantic_pairs_gram_exact"] = {
             "wall_sec": round(w, 2), "vecs_per_sec": round(n / w, 1),
@@ -1296,8 +1285,8 @@ def run_embeddings_section(cpus: int) -> dict:
         }
 
         t0 = time.monotonic()
-        n_pairs_c = S.semantic_dedup_pairs_gram(
-            assigned, threshold=0.95, max_cluster_size=256
+        n_pairs_c = S.semantic_dedup_pairs(
+            assigned, threshold=0.95, max_cluster_size=256, kernel="gram"
         ).count()
         w = time.monotonic() - t0
         out["semantic_pairs_gram_capped"] = {

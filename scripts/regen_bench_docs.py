@@ -484,16 +484,6 @@ def bench_md(d: dict, window: str) -> str:
                     f"{v.get('pairs', '-')} |"
                 )
         a("")
-        sj = em.get("assign_join_sql_subset")
-        if sj:
-            a(
-                f"Per-pair SQL-fold assignment contrast on a {sj['n_vecs']}-vector "
-                f"subset: {sj['wall_sec']} s = {sj['vecs_per_sec']} vecs/sec "
-                "(same checksummed assignment as the Arrow kernel at equal ids) "
-                "— the fold stays the ORACLE path, the Arrow matrix kernel the "
-                "throughput path."
-            )
-            a("")
 
     return "\n".join(lines).rstrip() + "\n"
 

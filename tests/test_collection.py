@@ -133,7 +133,7 @@ def test_batched_stats_uses_warmed_term_dict_caches(spark, tmp_path):
         assert {t: got.df(t) for t in terms} == {t: want.df(t) for t in terms}
 
 
-def test_collection_par_matches_serial(spark, tmp_path, monkeypatch):
+def test_collection_par_matches_serial(spark, tmp_path, monkeypatch, jobs_in_window):
     """exec_query_collection_par (exec_query_par, exec.h:87-177): identical
     rows and order to the serial union path over an 8-store collection, and
     exec_query_collection auto-routes to it at PAR_MIN_STORES."""
@@ -152,10 +152,13 @@ def test_collection_par_matches_serial(spark, tmp_path, monkeypatch):
         (r["source"], r["doc_id"], r["score"])
         for r in exec_query_collection(spark, stores, q, k=10).collect()
     ]
-    got = [
-        (r["source"], r["doc_id"], r["score"])
-        for r in coll.exec_query_collection_par(spark, stores, q, k=10).collect()
-    ]
+    par, grouped, started = jobs_in_window(
+        "collection-par",
+        lambda: coll.exec_query_collection_par(spark, stores, q, k=10),
+    )
+    # the per-store pool threads run under the caller's job group
+    assert started and grouped == started
+    got = [(r["source"], r["doc_id"], r["score"]) for r in par.collect()]
     assert got == want and len(got) == 10
     # the dispatcher takes the par path only when a per-store gate would
     # open (driver-side pass-1 actions are what serialize); wiring checked

@@ -467,22 +467,27 @@ def test_semantic_dedup_cluster_cap_flood(spark, caplog):
 
 
 def test_arrow_kernels_match_sql_paths(spark, vectors):
-    """The Arrow matrix kernels (one M @ C.T / einsum per batch) must agree
-    with the JVM fold paths: same assignments (incl. the tie-to-higher-list
-    rule), same LSH signatures, same verified pair sets."""
+    """The Arrow matrix kernels (one M @ C.T per batch) must agree with the
+    JVM fold paths: same assignments as the literal-expression argmax
+    (incl. the tie-to-higher-list rule) and same LSH signatures.  The
+    gram pair verify is pinned to the fold by
+    test_gram_kernel_matches_sql_pairs."""
     from pyspark.sql import functions as F
 
     df, rows = vectors
     cents = [rows[i][1] for i in (0, 3, 9, 11)]
-    a_join = {
+    a_lit = {
         r["vec_id"]: r["list_id"]
-        for r in similarity.ivf_assign_join(df, cents).collect()
+        for r in df.select(
+            "vec_id",
+            similarity._argmax_cosine(F.col("embedding"), cents).alias("list_id"),
+        ).collect()
     }
     a_arrow = {
         r["vec_id"]: r["list_id"]
         for r in similarity.ivf_assign_arrow(df, cents).collect()
     }
-    assert a_join == a_arrow
+    assert a_lit == a_arrow
 
     s_fold, planes_f = similarity.add_lsh_signatures(df, dim=8, bits=12)
     s_arrow, planes_a = similarity.add_lsh_signatures_arrow(df, dim=8, bits=12)
@@ -490,21 +495,6 @@ def test_arrow_kernels_match_sql_paths(spark, vectors):
     assert {(r["vec_id"], r["lsh_sig"]) for r in s_fold.collect()} == {
         (r["vec_id"], r["lsh_sig"]) for r in s_arrow.collect()
     }
-
-    indexed = df.withColumn("list_id", F.lit(0))
-    sqlp = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.semantic_dedup_pairs(indexed, threshold=0.9).collect()
-    }
-    arrp = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.semantic_dedup_pairs(
-            indexed, threshold=0.9, kernel="arrow"
-        ).collect()
-    }
-    assert set(sqlp) == set(arrp) and len(sqlp) > 0
-    for key, v in sqlp.items():
-        assert abs(v - arrp[key]) < 2e-6
 
 
 def test_knn_classify_matches_numpy_reference(spark, vectors):
@@ -640,7 +630,7 @@ def test_batch_matrix_rejects_ragged_and_null_rows(spark):
 
 def test_cosine_pairs_arrow_kernel_finds_planted_dup(spark, vectors):
     df, _ = vectors
-    got = similarity.cosine_pairs(df, dim=8, threshold=0.999, kernel="arrow").collect()
+    got = similarity.cosine_pairs(df, dim=8, threshold=0.999, kernel="gram").collect()
     assert {(p["id_a"], p["id_b"]) for p in got} == {(7, 200)}
 
 
@@ -739,22 +729,19 @@ def test_ivf_partitioned_prunes_and_matches(spark, vectors, tmp_path):
 
 
 def test_ivf_scalable_arrow_assignment_matches_join(spark, vectors):
-    """Training with the arrow assignment kernel must reproduce the join
-    path exactly: same per-round assignments -> same centroids -> same
-    final list ids."""
+    """The scalable trainer (Arrow assignment every round, Lloyd update in
+    Spark) must reproduce the literal-expression ivf_index exactly: same
+    per-round assignments -> same centroids -> same final list ids."""
     df, _ = vectors
-    a_j, cdf_j = similarity.ivf_index_scalable(df, n_lists=5, iters=2)
-    a_a, cdf_a = similarity.ivf_index_scalable(
-        df, n_lists=5, iters=2, assign_kernel="arrow"
-    )
-    assert {(r["vec_id"], r["list_id"]) for r in a_j.collect()} == {
-        (r["vec_id"], r["list_id"]) for r in a_a.collect()
+    a_lit, cents_lit = similarity.ivf_index(df, n_lists=5, iters=2)
+    a_s, cdf_s = similarity.ivf_index_scalable(df, n_lists=5, iters=2)
+    assert {(r["vec_id"], r["list_id"]) for r in a_lit.collect()} == {
+        (r["vec_id"], r["list_id"]) for r in a_s.collect()
     }
-    cj = {r["list_id"]: list(r["centroid"]) for r in cdf_j.collect()}
-    ca = {r["list_id"]: list(r["centroid"]) for r in cdf_a.collect()}
-    assert set(cj) == set(ca)
-    for lid in cj:
-        assert np.allclose(cj[lid], ca[lid], atol=1e-12)
+    cs = {r["list_id"]: list(r["centroid"]) for r in cdf_s.collect()}
+    assert set(cs) == set(range(len(cents_lit)))
+    for lid, c in enumerate(cents_lit):
+        assert np.allclose(c, cs[lid], rtol=0, atol=1e-12)
 
 
 def test_brute_force_topk_many_matches_per_query(spark, vectors):
@@ -1033,14 +1020,14 @@ def test_ivf_partial_probe_recall(spark):
 
 
 def test_ivf_join_assignment_matches_literal(spark):
-    """The broadcast-join list assignment (scale path for large n_lists) must
-    agree with the literal-expression argmax."""
+    """The Arrow matrix list assignment (the scale path for large n_lists)
+    must agree with the literal-expression argmax."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from trinity_spark.dataops.similarity import (
         _argmax_cosine,
-        ivf_assign_join,
+        ivf_assign_arrow,
         ivf_index,
     )
 
@@ -1058,10 +1045,10 @@ def test_ivf_join_assignment_matches_literal(spark):
             ),
         ).collect()
     }
-    joined = {
-        r["vec_id"]: r["list_id"] for r in ivf_assign_join(df, cents).collect()
+    arrow = {
+        r["vec_id"]: r["list_id"] for r in ivf_assign_arrow(df, cents).collect()
     }
-    assert joined == lit
+    assert arrow == lit
 
 
 def test_ivf_scalable_training_no_driver_means(spark):
@@ -1117,6 +1104,45 @@ def test_ivf_scalable_matches_literal_training(spark):
     la = {r["vec_id"]: r["list_id"] for r in a.collect()}
     lb = {r["vec_id"]: r["list_id"] for r in b.collect()}
     assert la == lb
+
+
+def test_ivf_and_semantic_dedup_carry_any_id_type(spark, vectors):
+    """The Arrow assignment passes the id column through under its own
+    type: string ids train and dedup end to end (a long-typed kernel schema
+    failed them mid-job with CAST_INVALID_INPUT), and int32 ids stay int
+    with the same lists as the long-id trainer."""
+    from pyspark.sql import functions as F
+
+    df, rows = vectors
+    want = {f"v{r[0]}" for r in rows}
+    sdf = df.select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"),
+        "embedding",
+    )
+    indexed, _ = similarity.ivf_index_scalable(sdf, n_lists=5, iters=2)
+    assert dict(indexed.dtypes)["vec_id"] == "string"
+    assert sorted(r["vec_id"] for r in indexed.collect()) == sorted(want)
+
+    out = similarity.semantic_dedup(
+        sdf, n_lists=4, iters=1, threshold=0.999, kernel="sql"
+    )
+    by_id = {r["vec_id"]: r for r in out.collect()}
+    assert set(by_id) == want and out.count() == len(rows)
+    # the planted dup (7, 200): the smaller STRING id "v200" is canonical
+    assert by_id["v7"]["component"] == by_id["v200"]["component"] == "v200"
+    assert by_id["v200"]["is_canonical"] and not by_id["v7"]["is_canonical"]
+    assert sum(r["is_canonical"] for r in by_id.values()) == len(rows) - 1
+    # the gram verify needs integral ids: rejected before any training job
+    with pytest.raises(ValueError, match="integral"):
+        similarity.semantic_dedup(sdf, kernel="gram")
+
+    idf = df.select(F.col("vec_id").cast("int").alias("vec_id"), "embedding")
+    i_indexed, _ = similarity.ivf_index_scalable(idf, n_lists=5, iters=2)
+    l_indexed, _ = similarity.ivf_index_scalable(df, n_lists=5, iters=2)
+    assert dict(i_indexed.dtypes)["vec_id"] == "int"
+    assert {(r["vec_id"], r["list_id"]) for r in i_indexed.collect()} == {
+        (r["vec_id"], r["list_id"]) for r in l_indexed.collect()
+    }
 
 
 def test_connected_components_and_resolve(spark):
@@ -1842,14 +1868,15 @@ def test_lsh_topk_query_dim_mismatch_raises(spark):
 
 
 def test_cosine_pairs_arrow_kernel_int_ids(spark):
-    """The arrow verify kernel declares long ids; int32 inputs must be cast
-    through, not crash with an Arrow schema mismatch."""
+    """The gram verify (and its Arrow signature pass) declares long ids;
+    int32 inputs must be cast through, not crash with an Arrow schema
+    mismatch."""
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(4)] + [
         (10, [0.0, 1.0, 0.0, 0.0])
     ]
     vecs = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     got = similarity.cosine_pairs(
-        vecs, dim=4, threshold=0.99, bits=8, band_bits=4, kernel="arrow"
+        vecs, dim=4, threshold=0.99, bits=8, band_bits=4, kernel="gram"
     ).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in got}
     assert (0, 1) in pairs and all(a < b for a, b in pairs)

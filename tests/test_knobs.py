@@ -97,3 +97,33 @@ def test_segment_stats_have_one_owner():
         params = set(inspect.signature(getattr(SegmentStore, method)).parameters)
         assert not params & {"term_dict", "field_stats", "stats"}, (method, params)
         assert {"blocks", "meta"} <= params, (method, params)
+
+
+def test_similarity_has_no_dominated_twin():
+    """Each similarity job keeps the JVM fold and at most one vectorized
+    kernel: the broadcast-join IVF assignment, the per-pair Arrow verify,
+    the separate gram entry point and the ``assign_kernel`` option are gone
+    from the engine and the bench, and the pair verifies reject any kernel
+    but ``sql`` and ``gram`` before touching their input."""
+    import pytest
+
+    from trinity_spark.dataops import similarity
+
+    gone = (
+        "ivf_assign_join",
+        "_assign_with_cdf",
+        "_verify_pairs_arrow",
+        "semantic_dedup_pairs_gram",
+        "assign_kernel",
+    )
+    paths = sorted((ROOT / "trinity_spark").rglob("*.py")) + [ROOT / "bench.py"]
+    for path in paths:
+        text = path.read_text()
+        for name in gone:
+            assert name not in text, (path.relative_to(ROOT).as_posix(), name)
+    for call in (
+        lambda: similarity.cosine_pairs(None, dim=2, kernel="arrow"),
+        lambda: similarity.semantic_dedup_pairs(None, kernel="arrow"),
+    ):
+        with pytest.raises(ValueError, match=r"; use 'sql' or 'gram'$"):
+            call()

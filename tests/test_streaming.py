@@ -55,6 +55,18 @@ def test_batch_append(spark, seeded_store):
             assert abs(gs - ws) <= 1e-9  # stats summed across micro-segments
 
 
+def test_append_jobs_stay_in_callers_job_group(spark, seeded_store, jobs_in_window):
+    """An NRT append's commit writes run on pool threads; every job they
+    start must carry the caller's job group (phase accounting, cancel by
+    group), not only the jobs of the calling thread."""
+    store, _ = seeded_store
+    batch = spark.createDataFrame(gen_transcripts(200, seed=11))
+    _, got, started = jobs_in_window(
+        "nrt-append", lambda: append_micro_segment(spark, store, batch)
+    )
+    assert started and got == started, (sorted(got), sorted(started))
+
+
 def test_replace_documents_flow(spark, seeded_store):
     """One-call update (indexer.h:181-206): the old version is tombstoned and
     the new one indexed in ONE manifest commit; queries see only the new

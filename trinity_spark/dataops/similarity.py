@@ -15,6 +15,12 @@ Two paths, as a 100 TB pipeline needs both:
 
 - ``cosine_pairs``: embedding-cosine near-duplicate pairs over an
   LSH-bucketed self-join (the embedding analog of minhash dedup).
+
+Each job keeps the JVM fold as its oracle path and at most one vectorized
+kernel beside it: the pair verifies take ``kernel="sql"`` (the fold) or
+``kernel="gram"`` (per-bucket BLAS), and IVF list assignment has the one
+Arrow matrix kernel ``ivf_assign_arrow`` next to the literal-expression
+``ivf_index``.
 """
 
 from __future__ import annotations
@@ -43,6 +49,14 @@ def _require_integral_id(df: DataFrame, id_col: str, ctx: str) -> None:
             f"numpy kernels (got {dt!r}); map string ids to int64 first "
             "(e.g. xxhash64) or use kernel='sql'"
         )
+
+
+def _check_pair_kernel(kernel: str) -> None:
+    """The pair verifies take the JVM fold ("sql", the oracle contract) or
+    the per-bucket Gram matrix ("gram", the throughput path) — checked
+    before any input frame is touched."""
+    if kernel not in ("sql", "gram"):
+        raise ValueError(f"unknown kernel {kernel!r}; use 'sql' or 'gram'")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -195,11 +209,12 @@ def ivf_index(
 
     Scale notes: centroids live in the plan as literals and the Lloyd update
     collects n_lists x dim mean cells per round — the right call up to a few
-    hundred lists.  Past that use ``ivf_index_scalable`` (broadcast-join
-    assignment + in-Spark update, no driver materialization); at 10^9+
-    vectors the list assignment is computed once and the table is written
-    partitioned/clustered BY list_id so a query's probes touch only its
-    lists' files — the IVF promise in storage-pruning form."""
+    hundred lists, and the oracle-checked reference the scale path is tested
+    against.  Past that use ``ivf_index_scalable`` (Arrow matrix assignment
+    + in-Spark update); at 10^9+ vectors the list assignment is computed
+    once and the table is written partitioned/clustered BY list_id so a
+    query's probes touch only its lists' files — the IVF promise in
+    storage-pruning form."""
     v = vectors.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col))
     init = (
         v.withColumn("_h", F.md5(F.col(id_col).cast("string")))
@@ -229,93 +244,40 @@ def ivf_index(
     return v.withColumn("list_id", _argmax_cosine(F.col(vec_col), cents)), cents
 
 
-def _assign_with_cdf(
-    v: DataFrame, cdf: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Broadcast-join argmax-cosine list assignment against a (list_id,
-    centroid) DataFrame; ties break to the higher list id, matching
-    ``_argmax_cosine``'s array_max struct ordering."""
-    scored = v.crossJoin(F.broadcast(cdf)).withColumn(
-        "cos_sim", cosine(F.col(vec_col), F.col("centroid"))
-    )
-    best = scored.groupBy(id_col).agg(
-        F.expr("max_by(list_id, struct(cos_sim, list_id))").alias("list_id")
-    )
-    return v.join(best, id_col)
-
-
-def ivf_assign_join(
-    vectors: DataFrame,
-    cents: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Scale-path list assignment: broadcast the centroids as a DataFrame and
-    pick each vector's argmax-cosine list with ``max_by`` — for n_lists in
-    the thousands, where the literal-expression argmax of ``_argmax_cosine``
-    would blow up the plan.  Cost: |vectors| x n_lists comparison rows, all
-    map-side (broadcast join, no shuffle of the vectors)."""
-    spark = vectors.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    )
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    return _assign_with_cdf(v, cdf, id_col, vec_col)
-
-
 def ivf_index_scalable(
     vectors: DataFrame,
     n_lists: int = 256,
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_kernel: str = "join",
 ) -> tuple[DataFrame, DataFrame]:
     """IVF k-means with the Lloyd UPDATE step kept in Spark — the large-
     n_lists·dim path (``ivf_index`` collects n_lists x dim mean rows to the
     driver per round, which becomes a driver bottleneck past ~10^6 cells).
 
     Centroids live as a (list_id, centroid array<double>) DataFrame for the
-    whole training loop: assignment is the ``ivf_assign_join`` broadcast
-    argmax, the update re-assembles per-list mean vectors with
-    posexplode -> avg -> collect_list(struct(pos, m)) sorted by pos — no
-    driver materialization at any round.  Each round's centroid table is
-    eagerly localCheckpoint'ed (n_lists rows, distributed) to cut lineage.
-    Empty lists keep their previous centroid.
+    whole training loop; the update re-assembles per-list mean vectors with
+    posexplode -> avg -> collect_list(struct(pos, m)) sorted by pos, and
+    each round's centroid table is eagerly localCheckpoint'ed (n_lists
+    rows, distributed) to cut lineage.  Empty lists keep their previous
+    centroid.  Assignment collects the round's centroid table (n_lists x
+    dim doubles — 32 MB even at 4096 x 1024, the same table a broadcast
+    would ship through the driver) and runs the ``ivf_assign_arrow`` matrix
+    kernel; the id column passes through with its own type.
 
     Returns (vectors + list_id, centroids DataFrame).  Query-time probe
     selection still needs the centroids once driver-side —
     ``cdf.collect()`` — which is O(n_lists * dim) independent of data size.
-
-    ``assign_kernel``: "join" keeps assignment fully driver-free (the
-    broadcast max_by fold join — bit-matched by the equivalence tests) but
-    pays |vectors| x n_lists join rows each evaluating a JVM cosine fold
-    (measured 422 vecs/s at 256 lists x 64 dims); "arrow" collects the
-    centroid table once per round (n_lists x dim doubles — 32 MB even at
-    4096 x 1024, far below the per-cell update materialization the join
-    path exists to avoid) and assigns via the matrix kernel
-    (``ivf_assign_arrow``, measured 219k vecs/s) — the throughput profile
-    for training at 10^6+ vectors.
     """
-    if assign_kernel not in ("join", "arrow"):
-        raise ValueError(
-            f"unknown assign_kernel {assign_kernel!r}; use 'join' or 'arrow'"
-        )
-
-    def _assign(v_, cdf_):
-        if assign_kernel == "arrow":
-            rows = cdf_.orderBy("list_id").collect()
-            cents = [list(r["centroid"]) for r in rows]
-            return ivf_assign_arrow(v_, cents, id_col, vec_col)
-        return _assign_with_cdf(v_, cdf_, id_col, vec_col)
+    from pyspark.sql import Window
 
     v = vectors.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
-    from pyspark.sql import Window
+
+    def _assign(cdf_: DataFrame) -> DataFrame:
+        cents = [list(r["centroid"]) for r in cdf_.orderBy("list_id").collect()]
+        return ivf_assign_arrow(v, cents, id_col, vec_col)
 
     w = Window.orderBy("_h", id_col)  # n_lists rows: 1-partition window is fine
     cdf = (
@@ -329,7 +291,7 @@ def ivf_index_scalable(
         .localCheckpoint(eager=True)
     )
     for _ in range(iters):
-        assigned = _assign(v, cdf)
+        assigned = _assign(cdf)
         means = (
             assigned.select("list_id", F.posexplode(vec_col).alias("pos", "x"))
             .groupBy("list_id", "pos")
@@ -350,7 +312,7 @@ def ivf_index_scalable(
             )
             .localCheckpoint(eager=True)
         )
-    return _assign(v, cdf), cdf
+    return _assign(cdf), cdf
 
 
 def _probe_order(query: list[float], cents: list[list[float]]) -> list[int]:
@@ -444,17 +406,20 @@ def cosine_pairs(
     text-side LSH does — oversized buckets are salt-split into bounded
     sub-buckets re-linked by a chain of representatives, every emitted
     pair still exact-cosine verified, skip logged (see
-    ``dedup._capped_bucket_pairs``).  None = exact (no cap)."""
-    if kernel not in ("sql", "arrow", "gram"):
-        raise ValueError(f"unknown kernel {kernel!r}; use 'sql', 'arrow' or 'gram'")
+    ``dedup._capped_bucket_pairs``).  None = exact (no cap).
+
+    ``kernel``: "sql" (JVM fold per candidate pair, any id type) or "gram"
+    (per-bucket BLAS Gram matrix, integral ids; see
+    ``semantic_dedup_pairs``)."""
+    _check_pair_kernel(kernel)
     if kernel == "sql":
         sigged, _ = add_lsh_signatures(vectors, dim, bits, seed, vec_col)
     else:
-        # the kernels chosen for throughput get the matrix signature twin
+        # the kernel chosen for throughput gets the matrix signature twin
         # too (measured ~20x; same md5 planes, interchangeable except
         # measure-zero sign boundaries) — the per-bit fold would dominate
-        # the very job the gram/arrow verify was selected to accelerate
-        _require_integral_id(vectors, id_col, f"cosine_pairs(kernel={kernel!r})")
+        # the very job the gram verify was selected to accelerate
+        _require_integral_id(vectors, id_col, "cosine_pairs(kernel='gram')")
         sigged, _ = add_lsh_signatures_arrow(
             vectors, dim, bits, seed, vec_col, id_col=id_col
         )
@@ -511,8 +476,6 @@ def cosine_pairs(
         pairs = bucket_all_pairs(
             banded, ["band", "key"], id_col, sig_col=vec_col, sig_as=("va", "vb")
         ).distinct()
-    if kernel == "arrow":
-        return _verify_pairs_arrow(pairs, threshold)
     cos = F.round(
         cosine(F.col("va").cast("array<double>"), F.col("vb").cast("array<double>")), 6
     )
@@ -546,7 +509,7 @@ def semantic_dedup_pairs(
     cell.
 
     ``indexed`` is the output of ``ivf_index`` / ``ivf_index_scalable`` /
-    ``ivf_assign_join`` (id, embedding, list_id) — the SAME centroids and
+    ``ivf_assign_arrow`` (id, embedding, list_id) — the SAME centroids and
     assignment serve ANN probing and dedup, so a pipeline pays for k-means
     once.  ``max_cluster_size`` bounds a degenerate cluster (an
     identical-embedding flood assigns to one centroid) exactly like the
@@ -557,23 +520,37 @@ def semantic_dedup_pairs(
 
     Returns (id_a, id_b, cosine) with id_a < id_b, cosine rounded to 6.
 
-    ``kernel``: "sql" (JVM fold — bit-reproducible vs engine-independent
-    SQL oracles), "arrow" (per-pair numpy — rarely right, see
-    ``semantic_dedup_pairs_gram``), or "gram" (per-cluster BLAS Gram
-    matrix — the measured scale path; vectors shuffle once per cluster
-    membership instead of once per candidate pair).
+    ``kernel``:
+
+    - "sql": the JVM fold per candidate pair — bit-reproducible against
+      engine-independent SQL oracles, any id type.
+    - "gram": per-cluster BLAS Gram matrices (``_gram_bucket_pairs``),
+      integral ids.  The pair-row fold shuffles a copy of both vectors per
+      candidate pair: measured at 200k x 64-dim vectors / 64 lists on
+      local[16], cap 256 — 80 s SQL-fold verify against 7.3 s gram, and
+      UNCAPPED gram runs the FULL exact within-cluster verify in 6.5 s
+      (finding all 1968 planted pairs where the cap's salt-split recalls
+      only the within-sub-bucket 137) — so with this kernel the cap is
+      needed only to bound DEGENERATE clusters' output size, not for
+      compute.  The cap's salt-split is by xxhash64(id), so it SEPARATES
+      even exactly-identical vectors into different sub-buckets with
+      probability (n_sub-1)/n_sub (measured at 1M vectors / cap 256: 633
+      of 9936 planted pairs survive) — when a corpus may contain
+      identical-embedding floods, collapse them FIRST with
+      ``exact_embedding_groups``, then run the capped pass over
+      representatives.  Cosines are numpy-accumulated (pairwise/SIMD
+      order) and rounded to 6 — equal to the fold up to last-bit summation
+      order.
     """
-    if kernel not in ("sql", "arrow", "gram"):
-        raise ValueError(f"unknown kernel {kernel!r}; use 'sql', 'arrow' or 'gram'")
+    _check_pair_kernel(kernel)
     if kernel == "gram":
-        return semantic_dedup_pairs_gram(
-            indexed,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            list_col=list_col,
-            max_cluster_size=max_cluster_size,
+        _require_integral_id(indexed, id_col, "semantic_dedup_pairs(kernel='gram')")
+        src = indexed.select(
+            F.col(id_col).cast("long").alias("_vid"),
+            F.col(vec_col).cast("array<double>").alias("_vec"),
+            F.col(list_col).alias("_list"),
         )
+        return _gram_bucket_pairs(src, ["_list"], threshold, max_cluster_size)
     src = indexed.select(F.col(id_col), F.col(vec_col), F.col(list_col))
     if max_cluster_size is not None:
         from .dedup import _capped_bucket_pairs
@@ -592,8 +569,6 @@ def semantic_dedup_pairs(
         pairs = bucket_all_pairs(
             src, [list_col], id_col, sig_col=vec_col, sig_as=("va", "vb")
         )
-    if kernel == "arrow":
-        return _verify_pairs_arrow(pairs, threshold)
     cos = F.round(
         cosine(F.col("va").cast("array<double>"), F.col("vb").cast("array<double>")), 6
     )
@@ -611,10 +586,9 @@ def semantic_dedup(
     vec_col: str = "embedding",
     max_cluster_size: int | None = None,
     kernel: str = "gram",
-    assign_kernel: str = "arrow",
 ) -> DataFrame:
     """End-to-end SemDeDup: train deterministic k-means in Spark
-    (``ivf_index_scalable`` — no driver materialization), generate
+    (``ivf_index_scalable`` — Lloyd update in Spark), generate
     within-cluster pairs at ``threshold``, and resolve duplicate clusters
     to a canonical representative (smallest id, via the shared min-label
     connected-components pass).  Returns every input id with
@@ -622,13 +596,11 @@ def semantic_dedup(
     semantically deduplicated corpus."""
     from .dedup import resolve_duplicates
 
+    _check_pair_kernel(kernel)
+    if kernel == "gram":  # fail before training, not after it
+        _require_integral_id(vectors, id_col, "semantic_dedup(kernel='gram')")
     indexed, _cents = ivf_index_scalable(
-        vectors,
-        n_lists=n_lists,
-        iters=iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        assign_kernel=assign_kernel,
+        vectors, n_lists=n_lists, iters=iters, id_col=id_col, vec_col=vec_col
     )
     # three consumers (pairs job, resolve_duplicates, the final join) would
     # each replay the full-corpus assignment scan — cut the lineage once
@@ -657,7 +629,7 @@ def semantic_dedup(
 # evaluate one multiply-add per expression-tree step — measured on local[16]
 # at 200k x 64-dim vectors: 22.7 s to assign against 64 centroids, ~80 s to
 # verify capped within-cluster pairs.  The kernels below do the same math as
-# ONE numpy matrix multiply per Arrow batch (M @ C.T / row-wise einsum),
+# ONE numpy matrix multiply per Arrow batch or bucket (M @ C.T / Xn @ Xn.T),
 # which is the design the north star sanctions ("vectorized Arrow UDFs,
 # never per-row Python").  Summation order differs from the sequential fold
 # (numpy uses pairwise/SIMD accumulation), so results can differ in the last
@@ -697,10 +669,11 @@ def ivf_assign_arrow(
 ) -> DataFrame:
     """Arrow-kernel argmax-cosine list assignment: one ``M @ C.T`` per batch
     against the broadcast centroid matrix, ties to the HIGHER list id
-    (``_argmax_cosine``'s struct order).  Same semantics as
-    ``ivf_assign_join``; use this one when throughput matters — it avoids
-    the |vectors| x n_lists join-row blowup entirely (measured ~20x on
-    200k x 64 lists)."""
+    (``_argmax_cosine``'s struct order, which the tests check it against).
+    The one list-assignment kernel: ``ivf_index_scalable`` assigns through
+    it every round.  Like ``add_lsh_signatures_arrow`` it is id-column
+    agnostic: the id passes through the kernel under its own type (string,
+    int, long alike), declared from the input schema."""
     import numpy as np
     import pyarrow as pa
 
@@ -722,51 +695,12 @@ def ivf_assign_arrow(
             )
 
     v = vectors.select(
-        # cast like the join twin resolves implicitly: the kernel passes the
-        # id column through under a declared long schema, so an int32/string
-        # id would raise an Arrow schema mismatch only on THIS path
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
-    return v.mapInArrow(kern, f"{id_col} long, {vec_col} array<double>, list_id int")
-
-
-def _verify_pairs_arrow(pairs: DataFrame, threshold: float) -> DataFrame:
-    """(id_a, id_b, va, vb) -> (id_a, id_b, cosine >= threshold): row-wise
-    einsum per Arrow batch, filter inside the kernel so rejected candidates
-    never cross back over Arrow."""
-    import numpy as np
-    import pyarrow as pa
-
-    def kern(batches):
-        for b in batches:
-            A = _batch_matrix(b, "va")
-            if A is None:
-                continue
-            B = _batch_matrix(b, "vb")
-            dots = np.einsum("ij,ij->i", A, B)
-            na = np.sqrt(np.einsum("ij,ij->i", A, A))
-            nb = np.sqrt(np.einsum("ij,ij->i", B, B))
-            cos = np.round(dots / np.maximum(na * nb, 1e-300), 6)
-            keep = cos >= threshold
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("id_a").filter(pa.array(keep)),
-                    b.column("id_b").filter(pa.array(keep)),
-                    pa.array(cos[keep], type=pa.float64()),
-                ],
-                ["id_a", "id_b", "cosine"],
-            )
-
-    cast = pairs.select(
-        # the kernel passes ids through under a declared long schema: an
-        # int32/decimal id would raise an Arrow schema mismatch mid-job
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("va").cast("array<double>").alias("va"),
-        F.col("vb").cast("array<double>").alias("vb"),
+    id_type = v.schema[id_col].dataType.simpleString()
+    return v.mapInArrow(
+        kern, f"{id_col} {id_type}, {vec_col} array<double>, list_id int"
     )
-    return cast.mapInArrow(kern, "id_a long, id_b long, cosine double")
 
 
 def add_lsh_signatures_arrow(
@@ -947,44 +881,6 @@ def _gram_bucket_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.max("cosine").alias("cosine"))
     )
-
-
-def semantic_dedup_pairs_gram(
-    indexed: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    list_col: str = "list_id",
-    max_cluster_size: int | None = None,
-) -> DataFrame:
-    """Cluster-scoped pairs via per-cluster GRAM MATRICES — the measured
-    scale path for the verify step (see ``_gram_bucket_pairs``).
-
-    The pair-row designs (``semantic_dedup_pairs`` sql/arrow kernels)
-    shuffle a copy of both vectors per candidate pair: measured at
-    200k x 64-dim vectors / 64 lists on local[16], cap 256 — 80 s SQL-fold
-    verify, 217 s per-pair Arrow verify, 7.3 s gram; UNCAPPED gram runs the
-    FULL exact within-cluster verify in 6.5 s (and found all 1968 planted
-    pairs where the cap's salt-split recalls only the within-sub-bucket
-    137) — so with this kernel the cap is needed only to bound DEGENERATE
-    clusters' output size, not for compute.  The cap's salt-split is by
-    xxhash64(id), so it SEPARATES even exactly-identical vectors into
-    different sub-buckets with probability (n_sub-1)/n_sub (measured at 1M
-    vectors / cap 256: 633 of 9936 planted pairs survive) — when a corpus
-    may contain identical-embedding floods, collapse them FIRST with an
-    exact group-by on the vector (one shuffle, the embedding analog of
-    exact text dedup), then run the capped pass over representatives.
-
-    Cosines are numpy-accumulated (pairwise/SIMD order) and rounded to 6 —
-    equal to the fold paths up to last-bit summation order.
-    """
-    _require_integral_id(indexed, id_col, "semantic_dedup_pairs_gram")
-    src = indexed.select(
-        F.col(id_col).cast("long").alias("_vid"),
-        F.col(vec_col).cast("array<double>").alias("_vec"),
-        F.col(list_col).alias("_list"),
-    )
-    return _gram_bucket_pairs(src, ["_list"], threshold, max_cluster_size)
 
 
 def exact_embedding_groups(
@@ -1263,8 +1159,7 @@ def knn_classify_ivf(
     # one pass of the scalable trainer over the seeds; centroids are the
     # only driver-side materialization (n_lists x dim, data-size free)
     indexed, cdf = ivf_index_scalable(
-        lab, n_lists=n_lists, iters=1,
-        id_col="_nid", vec_col="_nvec", assign_kernel="arrow",
+        lab, n_lists=n_lists, iters=1, id_col="_nid", vec_col="_nvec"
     )
     # the trainer projects to (id, vec, list_id); rejoin the labels
     indexed = indexed.join(lab.select("_nid", "_lab"), "_nid")

@@ -168,6 +168,8 @@ def exec_query_collection_par(
     stores."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     if not stores:
         raise ValueError("empty collection")
     node = parse_query(query) if isinstance(query, str) else query
@@ -192,8 +194,15 @@ def exec_query_collection_par(
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
+    # one wrap per store: each copies the caller's local properties (job
+    # group included) into its own Properties, so run_one's pool tag
+    # cannot leak between concurrently running stores
     with ThreadPoolExecutor(max_workers=max_threads) as ex:
-        per_store = list(ex.map(run_one, range(len(indexes))))
+        futs = [
+            ex.submit(inheritable_thread_target(spark)(run_one), i)
+            for i in range(len(indexes))
+        ]
+        per_store = [f.result() for f in futs]
     rows = [r for part in per_store for r in part]
     rows.sort(key=lambda t: (-t[2], t[0], t[1]))
     return spark.createDataFrame(

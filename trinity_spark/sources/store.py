@@ -551,11 +551,13 @@ class SegmentStore:
         # writer per core.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
         from pyspark.sql import Observation
 
         import math
 
-        par = max(blocks.sparkSession.sparkContext.defaultParallelism, 2)
+        spark = blocks.sparkSession
+        par = max(spark.sparkContext.defaultParallelism, 2)
         est = docs_hint * POSTINGS_EST_BYTES_PER_DOC
         n_parts = min(max(math.ceil(est / POSTINGS_TARGET_FILE_BYTES), 1), par)
 
@@ -599,9 +601,14 @@ class SegmentStore:
         # both outputs derive from the SAME blocks frame and are mutually
         # independent: submit them as concurrent driver actions so the
         # commit wall is the postings write, not the sum of two job
-        # latencies (the dictionary is tiny)
+        # latencies (the dictionary is tiny).  Each target carries the
+        # caller's local properties (job group, scheduler pool): pinned
+        # pool threads would otherwise run the writes outside them
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(f) for f in (_write_postings, _write_dict)]
+            futs = [
+                pool.submit(inheritable_thread_target(spark)(f))
+                for f in (_write_postings, _write_dict)
+            ]
             for f in futs:
                 f.result()
         # the exact written-block count lets fsck detect LOST postings files
