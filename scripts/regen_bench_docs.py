@@ -526,7 +526,7 @@ def baseline_section(
     build_line = "- Build: not measured in this window.\n"
     if b:
         build_line = f"""- Build throughput with lineage: per-segment metrics in every manifest
-  (`turns`, `wall_sec`, `turns_per_sec`), {b['turns_per_sec'] / 1000:.1f}k turns/s at local[{b['cpus']}] on {b['turns'] // 1_000_000}M
+  (`docs`, `wall_sec`, `docs_per_sec`), {b['turns_per_sec'] / 1000:.1f}k turns/s at local[{b['cpus']}] on {b['turns'] // 1_000_000}M
   turns this window (window-dependent across sessions; virtual docid_map —
   no corpus copy; every commit also retains a time-travel snapshot).
 """

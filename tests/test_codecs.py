@@ -161,6 +161,8 @@ def test_mixed_codec_store_reads_and_merge_reencodes(spark, tmp_path):
             ),
         )
     blocks.unpersist()
+    # the rejected attempt's data is discarded with it
+    assert not os.path.exists(os.path.join(store.base, "segments", "seg-pfor-b"))
     after = store.read_manifest()
     assert after["segments"] == before["segments"]
     assert after["next_generation"] == before["next_generation"]

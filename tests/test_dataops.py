@@ -580,8 +580,9 @@ def test_ann_recall_full_probe_is_one_partial_below(spark, vectors):
 
 
 def test_knn_classify_int32_ids_and_wide_labels(spark):
-    """Non-long id columns are cast (not crashed on by the Arrow schema),
-    and 64-bit label values survive without int32 truncation."""
+    """Non-long id columns pass through under their own type (not crashed
+    on by the Arrow schema), and 64-bit label values survive without int32
+    truncation."""
     big = 3_000_000_000  # > 2^31
     labeled = [(0, big, [1.0, 0.0]), (1, 7, [-1.0, 0.0])]
     unl = spark.createDataFrame(
@@ -1143,6 +1144,61 @@ def test_ivf_and_semantic_dedup_carry_any_id_type(spark, vectors):
     assert {(r["vec_id"], r["list_id"]) for r in i_indexed.collect()} == {
         (r["vec_id"], r["list_id"]) for r in l_indexed.collect()
     }
+
+
+def _string_id_vectors(spark):
+    """Three string-id vectors: a and b near each other, c orthogonal."""
+    return spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("c", [0.0, 1.0])],
+        "vec_id string, embedding array<double>",
+    )
+
+
+def test_brute_force_topk_many_carries_string_ids(spark):
+    """The batched top-k passes string ids through its kernel (a long cast
+    failed them mid-job with CAST_INVALID_INPUT) and returns the per-query
+    ``brute_force_topk`` rows."""
+    vecs = _string_id_vectors(spark)
+    out = similarity.brute_force_topk_many(vecs, [("q", [1.0, 0.0])], k=2)
+    assert dict(out.dtypes)["vec_id"] == "string"
+    want = similarity.brute_force_topk(vecs, [1.0, 0.0], k=2).collect()
+    assert [(r["vec_id"], r["score"]) for r in out.collect()] == [
+        (r["vec_id"], r["score"]) for r in want
+    ]
+    assert [r["vec_id"] for r in want] == ["a", "b"]
+
+
+def test_knn_classify_carries_string_ids(spark):
+    """The closure kNN passes string ids through under their own type."""
+    labeled = [("x", 1, [1.0, 0.0]), ("y", 2, [0.0, 1.0])]
+    out = similarity.knn_classify(_string_id_vectors(spark), labeled, k=1)
+    assert dict(out.dtypes)["vec_id"] == "string"
+    got = {r["vec_id"]: (r["pred_label"], r["votes"]) for r in out.collect()}
+    assert got == {"a": (1, 1), "b": (1, 1), "c": (2, 1)}
+
+
+def test_knn_classify_ivf_carries_string_ids(spark):
+    """The IVF-probed kNN carries string ids on both sides; a full probe
+    answers like the closure kernel, and the dispatcher's closure route
+    takes the same string seed ids."""
+    labeled = [("x", 1, [1.0, 0.0]), ("y", 2, [0.0, 1.0]), ("z", 2, [0.1, 1.0])]
+    lab_df = spark.createDataFrame(
+        labeled, "vec_id string, label long, embedding array<double>"
+    )
+    unl = _string_id_vectors(spark)
+    want = {
+        r["vec_id"]: (r["pred_label"], r["votes"])
+        for r in similarity.knn_classify(unl, labeled, k=2).collect()
+    }
+    out = similarity.knn_classify_ivf(unl, lab_df, k=2, n_lists=2, n_probe=2)
+    assert dict(out.dtypes)["vec_id"] == "string"
+    assert {
+        r["vec_id"]: (r["pred_label"], r["votes"]) for r in out.collect()
+    } == want
+    auto = similarity.knn_classify_auto(unl, lab_df, k=2)
+    assert {
+        r["vec_id"]: (r["pred_label"], r["votes"]) for r in auto.collect()
+    } == want
 
 
 def test_connected_components_and_resolve(spark):

@@ -93,10 +93,46 @@ def test_segment_stats_have_one_owner():
         if rel != store:
             assert not TERM_DICT_CALL.search(text), rel
     assert TERM_DICT_CALL.search((ROOT / store).read_text())
-    for method in ("commit_segment", "commit_segment_with_deletes", "commit_merge"):
-        params = set(inspect.signature(getattr(SegmentStore, method)).parameters)
-        assert not params & {"term_dict", "field_stats", "stats"}, (method, params)
-        assert {"blocks", "meta"} <= params, (method, params)
+    params = set(inspect.signature(SegmentStore.commit_segment).parameters)
+    assert not params & {"term_dict", "field_stats", "stats"}, params
+    assert {"blocks", "meta"} <= params, params
+
+
+# a CALL of the manifest writer (its ``def`` is not one)
+MANIFEST_WRITE_CALL = re.compile(r"(?<!def )\b_write_manifest\(")
+
+
+def test_segment_commit_has_one_owner():
+    """One segment commit, one manifest write: build, NRT append/replace
+    and merge all commit through ``SegmentStore.commit_segment``, whose
+    single manifest write carries the segment, its tombstones or retired
+    inputs, and its metrics.  The per-mode commits, the metrics patch and
+    the uncalled retire/lookup helpers are gone, and only
+    ``sources/store.py`` writes the manifest."""
+    from trinity_spark.sources.store import SegmentStore
+
+    gone = (
+        "commit_segment_with_deletes",
+        "commit_merge",
+        "update_segment_metrics",
+        "retire_segments",
+        "has_segment",
+        "discard_uncommitted",  # now the store's private _discard_uncommitted
+    )
+    pattern = re.compile(r"\b(?:" + "|".join(gone) + r")\b")
+    store = "trinity_spark/sources/store.py"
+    for path in sorted((ROOT / "trinity_spark").rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        text = path.read_text()
+        assert not pattern.search(text), (rel, pattern.search(text))
+        if rel != store:
+            assert not MANIFEST_WRITE_CALL.search(text), rel
+    assert MANIFEST_WRITE_CALL.search((ROOT / store).read_text())
+    assert [n for n in dir(SegmentStore) if n.startswith("commit")] == [
+        "commit_segment"
+    ]
+    for name in gone:
+        assert not hasattr(SegmentStore, name), name
 
 
 def test_similarity_has_no_dominated_twin():

@@ -179,7 +179,8 @@ def test_build_creates_segments_with_metrics(built):
     m = store.read_manifest()
     assert len(m["segments"]) == 3
     for s in m["segments"]:
-        assert s["metrics"]["turns_per_sec"] > 0
+        assert s["metrics"]["docs_per_sec"] > 0
+        assert s["metrics"]["docs"] == s["docs_cnt"]
         assert s["lineage"]["input"] == "fixture-800"
         assert s["lineage"]["doc_range"] == [s["doc_lo"], s["doc_hi"]]
     gens = [s["generation"] for s in m["segments"]]
@@ -604,6 +605,25 @@ def test_snapshot_retention_caps_history(spark, tmp_path_factory):
     store.add_deletes(spark, [99])
     assert len(store.list_snapshots()) == n + 1
 
+    # every NRT append is ONE commit: under a cap of n, the last n appends
+    # stay reachable through store.at, each with its segment and metrics
+    from trinity_spark.streaming.nrt import append_micro_segment
+
+    nrt = SegmentStore(str(tmp_path_factory.mktemp("retain_nrt")))
+    nrt.set_snapshot_retention(2)
+    appended = []
+    for seed in range(3):
+        meta = append_micro_segment(
+            spark, nrt, spark.createDataFrame(gen_transcripts(40, seed=seed)),
+            input_desc=f"retain-{seed}",
+        )
+        appended.append((nrt.read_manifest()["snapshot_id"], meta.segment_id))
+    for snap_id, seg_id in appended[-2:]:
+        segs = {s["segment_id"]: s for s in nrt.at(snap_id).read_manifest()["segments"]}
+        assert segs[seg_id]["metrics"]["wall_sec"] > 0
+    with pytest.raises(ValueError, match="no snapshot"):
+        nrt.at(appended[0][0])
+
 
 def test_compact_gc_honors_snapshot_retention(spark, tmp_path_factory):
     """compact(gc=True) must not destroy a user-configured retention
@@ -1000,6 +1020,12 @@ def test_merge_without_deletes_gens_counts_zero_token_tombstone(
             doc_lo=0, doc_hi=n, docs_cnt=n,
         ),
     )
+    # the store stamps an empty list at commit; a segment written before
+    # the key existed has none
+    with store._manifest_lock():
+        m = store.read_manifest()
+        assert m["segments"][0]["lineage"].pop("deletes_gens") == []
+        store._write_manifest(m)
     assert "deletes_gens" not in store.segments()[0].lineage
     store.add_deletes(spark, [zero])
 
@@ -1153,8 +1179,15 @@ def test_merge_commit_is_one_atomic_manifest_write(spark, tmp_path_factory):
     opened in that window served every merged doc twice."""
     store, corpus = _fresh_index(spark, tmp_path_factory, "atomic_merge")
     store.add_deletes(spark, [3])
+    pre = store.read_manifest()["snapshot_id"]
     meta = merge_segments(spark, store)
     merged_id = meta.segment_id
+    # exactly one write, and that snapshot already carries the metrics
+    assert store.read_manifest()["snapshot_id"] == pre + 1
+    (seg,) = store.at(pre + 1).read_manifest()["segments"]
+    assert seg["segment_id"] == merged_id
+    assert seg["metrics"]["wall_sec"] > 0
+    assert seg["metrics"]["blocks_reused"] == meta.metrics["blocks_reused"] > 0
     # walk the retained history: the first snapshot naming the merged
     # segment must already have the inputs retired and the gen gone
     first = None
@@ -1170,6 +1203,85 @@ def test_merge_commit_is_one_atomic_manifest_write(spark, tmp_path_factory):
     assert first["deletes"] == []
     # docs_cnt exact and the tombstone applied once
     assert meta.docs_cnt == len(corpus) - 1
+
+
+@pytest.mark.parametrize("kind", ["build", "append", "replace"])
+def test_every_commit_is_one_snapshot_with_metrics(spark, tmp_path_factory, kind):
+    """Every commit is ONE manifest write (merges: the test above): a build
+    of S segments writes S+1 snapshots (the docid-map record, then one per
+    segment), an NRT append and a replace one each.  Every retained
+    snapshot that names a segment carries its metrics — a second metrics
+    write used to leave an in-between snapshot with empty metrics, so a
+    retention window of n kept only n/2 commits."""
+    from trinity_spark.streaming.nrt import append_micro_segment, replace_documents
+
+    store = SegmentStore(str(tmp_path_factory.mktemp(f"one_write_{kind}")))
+    corpus = gen_transcripts(600)
+    metas = build_index(
+        spark, spark.createDataFrame(corpus), store, rows_per_segment=300
+    )
+    pre = store.read_manifest()["snapshot_id"]
+    if kind == "build":
+        assert pre == len(metas) + 1 == 3
+        new, pre = metas[-1], pre - 1
+    elif kind == "append":
+        new = append_micro_segment(
+            spark, store, spark.createDataFrame(gen_transcripts(100, seed=3))
+        )
+    else:
+        updated = corpus.iloc[:5].copy()
+        updated["text"] = "replaced error text " + updated["text"]
+        new = replace_documents(spark, store, spark.createDataFrame(updated))
+    assert store.read_manifest()["snapshot_id"] == pre + 1
+    snap = store.at(pre + 1).read_manifest()
+    seg = next(s for s in snap["segments"] if s["segment_id"] == new.segment_id)
+    assert seg["metrics"] == new.metrics
+    assert seg["metrics"]["docs"] == new.docs_cnt
+    assert seg["metrics"]["wall_sec"] > 0
+    assert seg["lineage"]["deletes_gens"] == []
+    if kind == "replace":
+        # the tombstones ride the same write, one generation newer
+        gen = seg["metrics"]["tombstone_gen"]
+        assert gen == seg["generation"] + 1
+        assert [d["gen"] for d in snap["deletes"]] == [gen]
+    for info in store.list_snapshots():
+        for s in store.at(info["snapshot_id"]).read_manifest()["segments"]:
+            assert s["metrics"]["wall_sec"] > 0, (info, s["segment_id"])
+
+
+def test_failed_commit_releases_persisted_blocks(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A build, a merge and an NRT append each persist the blocks they
+    commit; a commit that raises must not leave that frame cached in the
+    session."""
+    from trinity_spark.streaming.nrt import append_micro_segment
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    store, _ = _fresh_index(
+        spark, tmp_path_factory, "leak", n_turns=400, rows_per_segment=200
+    )
+
+    def failing_commit(self, blocks, meta, **kw):
+        raise RuntimeError("commit failed")
+
+    monkeypatch.setattr(SegmentStore, "commit_segment", failing_commit)
+    calls = {
+        "build": lambda: build_index(
+            spark, spark.createDataFrame(gen_transcripts(300)),
+            SegmentStore(str(tmp_path_factory.mktemp("leak_build"))),
+            rows_per_segment=300,
+        ),
+        "merge": lambda: merge_segments(spark, store),
+        "append": lambda: append_micro_segment(
+            spark, store, spark.createDataFrame(gen_transcripts(50, seed=9))
+        ),
+    }
+    for name, call in calls.items():
+        before = cache.numCachedEntries()
+        with pytest.raises(RuntimeError, match="commit failed"):
+            call()
+        assert cache.numCachedEntries() <= before, name
 
 
 def test_merge_unknown_segment_ids_raise(spark, tmp_path_factory):

@@ -57,7 +57,7 @@ def test_spark_submit_py_files_build(spark, tmp_path):
     line = next(x for x in p.stdout.splitlines() if x.startswith("SUBMIT_BUILD "))
     out = json.loads(line[len("SUBMIT_BUILD "):])
     assert len(out["segments"]) == 2
-    assert all(s["metrics"]["turns_per_sec"] > 0 for s in out["segments"])
+    assert all(s["metrics"]["docs_per_sec"] > 0 for s in out["segments"])
 
     # the index the submitted job built is queryable and rank-identical
     oracle = OracleIndex.build(docs_in_stable_order(corpus))

@@ -955,7 +955,8 @@ def brute_force_topk_many(
             M = _batch_matrix(b, vec_col)
             if M is None:
                 continue
-            ids = b.column(id_col).to_numpy()
+            id_arr = b.column(id_col)
+            ids = id_arr.to_numpy(zero_copy_only=False)
             Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
             raw = Mn @ Qn.T
             # HALF_UP (away from zero), matching Spark's F.round in
@@ -967,23 +968,22 @@ def brute_force_topk_many(
             for j in range(len(qids)):
                 top = np.lexsort((ids, -cos[:, j]))[:k]
                 out_q.extend([j] * len(top))
-                out_i.append(ids[top])
+                out_i.append(top)
                 out_s.append(cos[top, j])
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.asarray(out_q, dtype=np.int32), type=pa.int32()),
-                    pa.array(np.concatenate(out_i), type=pa.int64()),
+                    id_arr.take(pa.array(np.concatenate(out_i))),
                     pa.array(np.concatenate(out_s), type=pa.float64()),
                 ],
                 ["_qidx", id_col, "score"],
             )
 
     v = vectors.select(
-        # long cast up front: the kernel emits int64 ids under a long schema
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
-    cand = v.mapInArrow(kern, f"_qidx int, {id_col} long, score double")
+    id_type = v.schema[id_col].dataType.simpleString()
+    cand = v.mapInArrow(kern, f"_qidx int, {id_col} {id_type}, score double")
     from pyspark.sql import Window
 
     qid_map = F.array(*[F.lit(q) for q in qids])
@@ -1061,8 +1061,10 @@ def knn_classify(
     round to 6 places; neighbor selection ties break by ascending
     neighbor id; the vote ties break by ascending label.
 
-    Returns (``id_col`` long, ``pred_label`` long, ``votes`` int) —
-    ``votes`` = the winning label's count among the k neighbors.
+    Returns (``id_col``, ``pred_label`` long, ``votes`` int) —
+    ``votes`` = the winning label's count among the k neighbors.  Ids of
+    either side may be any orderable type; the unlabeled id passes through
+    the kernel under its own type.
     """
     import numpy as np
     import pyarrow as pa
@@ -1102,10 +1104,10 @@ def knn_classify(
             )
 
     v = unlabeled.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
-    return v.mapInArrow(kern, f"{id_col} long, pred_label long, votes int")
+    id_type = v.schema[id_col].dataType.simpleString()
+    return v.mapInArrow(kern, f"{id_col} {id_type}, pred_label long, votes int")
 
 
 # The knn_classify closure-kernel ceiling: |labeled| x dim float64 cells
@@ -1138,8 +1140,8 @@ def knn_classify_ivf(
     equivalence tests rely on it; partial probes are approximate exactly
     like ``ivf_topk`` vs ``brute_force_topk``.
 
-    Returns (``id_col`` long, pred_label long, votes int), ONE row per
-    input vector.  Under a partial probe, a vector whose probed lists hold
+    Returns (``id_col``, pred_label long, votes int), ONE row per input
+    vector; both id columns pass through under their own types.  Under a partial probe, a vector whose probed lists hold
     no labeled rows keeps its row with pred_label/votes NULL (never a
     silently missing row); full probes always label every row."""
     import numpy as np
@@ -1150,7 +1152,7 @@ def knn_classify_ivf(
     if k < 1:
         raise ValueError("k must be >= 1")
     lab = labeled.select(
-        F.col(id_col).cast("long").alias("_nid"),
+        F.col(id_col).alias("_nid"),
         F.col(label_col).cast("long").alias("_lab"),
         F.col(vec_col).cast("array<double>").alias("_nvec"),
     )
@@ -1181,25 +1183,23 @@ def knn_classify_ivf(
             Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
             cos = Mn @ Cn.T
             order = np.argsort(-cos, axis=1, kind="stable")[:, :npr]
-            n = len(M)
-            ids = b.column(id_col).to_numpy(zero_copy_only=False)
-            vecs = b.column(vec_col)
-            rep = np.repeat(np.arange(n), npr)
+            rep = pa.array(np.repeat(np.arange(len(M)), npr), type=pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids[rep], type=pa.int64()),
-                    vecs.take(pa.array(rep, type=pa.int32())),
+                    b.column(id_col).take(rep),
+                    b.column(vec_col).take(rep),
                     pa.array(order.ravel(), type=pa.int32()),
                 ],
                 [id_col, vec_col, "list_id"],
             )
 
     u = unlabeled.select(
-        F.col(id_col).cast("long").alias(id_col),
-        F.col(vec_col).cast("array<double>").alias(vec_col),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
+    id_type = u.schema[id_col].dataType.simpleString()
+    nid_type = lab.schema["_nid"].dataType.simpleString()
     probes = u.mapInArrow(
-        probes_kern, f"{id_col} long, {vec_col} array<double>, list_id int"
+        probes_kern, f"{id_col} {id_type}, {vec_col} array<double>, list_id int"
     )
 
     cand = probes.join(indexed.select("_nid", "_lab", "_nvec", "list_id"), "list_id")
@@ -1234,7 +1234,7 @@ def knn_classify_ivf(
             )
 
     scored = cand.select(id_col, "_nid", "_lab", vec_col, "_nvec").mapInArrow(
-        cos_kern, f"{id_col} long, _nid long, _lab long, _cos double"
+        cos_kern, f"{id_col} {id_type}, _nid {nid_type}, _lab long, _cos double"
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("_cos"), F.asc("_nid"))
     topk = scored.withColumn("_rn", F.row_number().over(w)).where(
@@ -1289,7 +1289,7 @@ def knn_classify_auto(
         dim = len(row["_v"]) if row["_v"] is not None else 0
     if n * max(dim, 1) <= KNN_CLOSURE_MAX_CELLS:
         trip = [
-            (int(r[id_col]), int(r[label_col]), list(r[vec_col]))
+            (r[id_col], int(r[label_col]), list(r[vec_col]))
             for r in labeled.select(id_col, label_col, vec_col).collect()
         ]
         return knn_classify(unlabeled, trip, k, id_col, vec_col)

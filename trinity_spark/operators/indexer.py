@@ -11,13 +11,14 @@ Pipeline (SURVEY.md §3.3 — the Spark re-expression of
            fused tokenize -> postings -> delta+varbyte blocks in ONE
            mapInArrow pass (fastbuild.blocks_from_turns, zero data shuffles)
            -> commit_segment (the store derives term_dict from block metadata
-              and records field stats in the manifest; atomic manifest add;
+              and records field stats and metrics in ONE atomic manifest
+              write;
               the only data shuffle is the term-sorted block write for
               dictionary-seek locality)
 
 Resumability (north rule): each segment is an idempotent unit keyed by its
 docid range; a restarted build skips manifest-committed segments and rewrites
-any half-written one.  Per-segment METRICS (turns, wall seconds, turns/sec)
+any half-written one.  Per-segment METRICS (docs, wall seconds, docs/sec)
 and LINEAGE (input descriptor, docid range, engine version) land in the
 manifest — the reference's per-commit phase timings (indexer.cpp:303-309)
 made machine-readable.
@@ -35,7 +36,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import __version__
 from ..sources.store import SegmentMeta, SegmentStore, _PinnedSnapshotStore
 from .docids import assign_doc_ids_counted
 from .fastbuild import blocks_from_turns
@@ -304,7 +304,7 @@ def _build_index_inner(
     # duplicate documents.  A PARTIAL overlap is unresolvable (building would
     # duplicate the overlapped docs; skipping would drop the rest) -> raise.
     # ONE manifest read for the whole resume scan: per-iteration
-    # has_segment()/segments() calls re-parse the full JSON manifest, which
+    # segments() calls re-parse the full JSON manifest, which
     # is O(segments^2) driver overhead at the ~1000-resume-unit design point
     pre_committed = {m.segment_id: m for m in store.segments()}
     committed_ranges = sorted(
@@ -373,7 +373,6 @@ def _build_index_inner(
             seg_turns, chunk_bits=chunk_bits, codec=codec,
             conv_attach=conv_attach,
         ).persist()
-        blocks.count()  # materialize the fused pass once, before any reuse
         meta = SegmentMeta(
             segment_id=sid,
             generation=0,  # assigned at commit
@@ -385,22 +384,13 @@ def _build_index_inner(
                 "doc_range": [lo, hi],
                 "chunk_bits": chunk_bits,
                 "codec": codec,
-                # no tombstone generation applied yet (merge's gen-aware
-                # docs_cnt accounting reads this; absent means the same)
-                "deletes_gens": [],
-                "engine_version": __version__,
             },
-            metrics={},
         )
-        store.commit_segment(blocks, meta)
-        blocks.unpersist()
-        wall = time.monotonic() - t0
-        meta.metrics.update(
-            {"turns": hi - lo, "wall_sec": round(wall, 3),
-             "turns_per_sec": round((hi - lo) / wall, 1)}
-        )
-        # re-commit metrics into the manifest entry (metadata-only update)
-        store.update_segment_metrics(sid, meta.metrics)
+        try:
+            blocks.count()  # materialize the fused pass once, before any reuse
+            store.commit_segment(blocks, meta, started=t0)
+        finally:
+            blocks.unpersist()
         built.append(meta)
     return built
 

@@ -80,7 +80,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import __version__
 from ..sources.store import SegmentMeta, SegmentStore
 from .segments import BLOCK_SIZE, decode_segments, encode_postings
 
@@ -325,8 +324,8 @@ def merge_segments(
     )
     # name suffix = next_generation at merge-PLAN time (manifest0, no extra
     # read) — a uniqueness scope, not the committed generation: concurrent
-    # commits may bump the counter before commit_merge assigns the real one
-    # (meta.generation, set inside the atomic commit, is authoritative)
+    # commits may bump the counter before commit_segment assigns the real
+    # one (meta.generation, set inside the atomic commit, is authoritative)
     gen = manifest0["next_generation"]
     meta = SegmentMeta(
         segment_id=f"merged-{lo:014d}-{hi:014d}-g{gen:06d}",
@@ -350,48 +349,40 @@ def merge_segments(
             ),
             "chunk_bits": cb,
             "codec": codec,
-            "engine_version": __version__,
         },
-        metrics={},
     )
-    # ONE atomic manifest write: merged segment in, inputs out, fully-applied
-    # tombstone gens retired — no window serving merged docs twice, no lost
-    # concurrent delete (see SegmentStore.commit_merge).  Gens retire only if
-    # this merge covered every segment that existed at read time — deletes
-    # added concurrently (later gens) and deletes still masking unmerged
-    # segments stay in force.
-    store.commit_merge(
-        new_blocks.drop("_reused"),
-        meta,
-        retire_ids=ids,
-        retire_delete_gens=(
-            read_gens if (apply_deletes and full_merge and read_gens) else None
-        ),
-    )
-    # byte-reuse economics for metrics: ONE group-count over the cached
-    # output (materialized by the commit write above) — no pipeline replay
-    counts = {
-        r["_reused"]: r["cnt"]
-        for r in new_blocks.groupBy("_reused")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    n_reused = int(counts.get(True, 0))
-    n_total = int(sum(counts.values()))
-    new_blocks.unpersist()
-    wall = time.monotonic() - t0
-    meta.metrics.update(
-        {
-            "wall_sec": round(wall, 3),
-            "docs": docs_cnt,
-            "docs_per_sec": round(docs_cnt / wall, 1) if wall else None,
-            # the merge.cpp:166-180 fast-path economics: blocks moved
-            # byte-identical vs decoded+re-encoded
-            "blocks_reused": n_reused,
-            "blocks_reencoded": n_total - n_reused,
+    try:
+        # byte-reuse economics: ONE group-count over the persisted output,
+        # which also fills the cache both commit writes then read — no
+        # pipeline replay
+        counts = {
+            r["_reused"]: r["cnt"]
+            for r in new_blocks.groupBy("_reused")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
         }
-    )
-    store.update_segment_metrics(meta.segment_id, meta.metrics)
+        n_reused = int(counts.get(True, 0))
+        # the merge.cpp:166-180 fast-path economics: blocks moved
+        # byte-identical vs decoded+re-encoded
+        meta.metrics.update(
+            blocks_reused=n_reused,
+            blocks_reencoded=int(sum(counts.values())) - n_reused,
+        )
+        # ONE atomic manifest write: merged segment in, inputs out,
+        # fully-applied tombstone gens retired — no window serving merged
+        # docs twice, no lost concurrent delete.  Gens retire only if this
+        # merge covered every segment that existed at read time — deletes
+        # added concurrently (later gens) and deletes still masking
+        # unmerged segments stay in force.
+        store.commit_segment(
+            new_blocks.drop("_reused"),
+            meta,
+            started=t0,
+            retire_ids=ids,
+            retire_delete_gens=read_gens if full_merge else (),
+        )
+    finally:
+        new_blocks.unpersist()
     return meta
 
 

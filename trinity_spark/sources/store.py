@@ -12,7 +12,7 @@ Reference analog — Trinity's on-disk index model:
 Our layout (plain parquet + a JSON manifest; the design is Iceberg-shaped —
 manifest == snapshot metadata — because no Iceberg runtime jar ships in this
 sandbox; on a cluster each ``commit_segment`` becomes one Iceberg append
-snapshot):
+snapshot — it is one manifest write here too):
 
     <base>/
       manifest.json                 # atomic: tmp + os.replace
@@ -23,13 +23,14 @@ snapshot):
         term_dict/  (term, df, cf; derived here from the block metadata)
       deletes/<gen>.parquet         # masked doc_ids (docidupdates.cpp analog)
 
-The manifest records, per segment: generation, doc range, row counts, build
-METRICS (wall seconds, turns/sec) and LINEAGE (input fingerprint, docid
+The manifest records, per segment: generation, doc range, row counts,
+METRICS (docs, wall seconds, docs/sec) and LINEAGE (input fingerprint, docid
 range, engine version, wire layout, written block count and the field
 statistics ``{sum_term_hits, total_terms, sum_terms_docs}``) — the north
 rule's per-partition checkpoint + lineage requirement.  The store owns what
-a segment records: commits take only blocks and meta, and the dictionary
-and statistics come off the commit's own writes.  ``build_index`` resumes by
+a segment records: ``commit_segment`` takes only blocks and meta, the
+dictionary and statistics come off the commit's own writes, and the one
+manifest write carries the metrics.  ``build_index`` resumes by
 skipping segment ids already committed in the manifest.
 """
 
@@ -40,11 +41,12 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any, NamedTuple
+from typing import Any, Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import __version__
 from ..operators.build import term_dict_from_blocks
 from ..operators.segments import (
     CHUNK_BITS,
@@ -216,11 +218,14 @@ class SegmentStore:
 
     def set_snapshot_retention(self, keep_last: int | None) -> None:
         """Cap retained history at ``keep_last`` snapshots, auto-trimmed on
-        every commit (None = retain all, the default).  A streaming ingest
-        commits once per micro-batch — without a cap, a long-running NRT
-        stream accretes one snapshot file per epoch forever.  Time travel
-        stays available within the window; ``gc`` reclaims data the trimmed
-        snapshots pinned."""
+        every commit (None = retain all, the default).  Every commit —
+        a build segment, an NRT append or replace, a merge, a delete — is
+        one manifest write and so one snapshot, so the window holds the
+        last ``keep_last`` commits.  A streaming ingest commits once per
+        micro-batch — without a cap, a long-running NRT stream accretes one
+        snapshot file per epoch forever.  Time travel stays available
+        within the window; ``gc`` reclaims data the trimmed snapshots
+        pinned."""
         if keep_last is not None and keep_last < 1:
             raise ValueError(f"keep_last must be >= 1 or None, got {keep_last}")
         with self._manifest_lock():
@@ -339,7 +344,7 @@ class SegmentStore:
         return want
 
     def _stamp_layout(self, m: dict[str, Any], meta: SegmentMeta) -> None:
-        """Called under the manifest lock by every commit path.  The first
+        """Called under the manifest lock by ``commit_segment``.  The first
         commit fixes the store layout from ``meta``'s lineage (defaults
         where absent); every commit stamps the layout into ``meta``'s
         lineage and rejects a meta that names a different one, so the
@@ -355,9 +360,6 @@ class SegmentStore:
             )
         lin.update(lay._asdict())
         m.update(lay._asdict())
-
-    def has_segment(self, segment_id: str) -> bool:
-        return any(s["segment_id"] == segment_id for s in self.read_manifest()["segments"])
 
     # --- paths ---
 
@@ -628,24 +630,87 @@ class SegmentStore:
             },
         }
 
-    def commit_segment(self, blocks: DataFrame, meta: SegmentMeta) -> None:
-        """Write segment data, then atomically add it to the manifest.
-        Data writes are idempotent (overwrite) so a crashed attempt is
-        invisible until the manifest names the segment — Trinity's
-        tmp-then-rename persist (indexer.cpp:286-300)."""
+    def commit_segment(
+        self,
+        blocks: DataFrame,
+        meta: SegmentMeta,
+        *,
+        started: float | None = None,
+        deletes: DataFrame | None = None,
+        retire_ids: Iterable[str] = (),
+        retire_delete_gens: Iterable[int] = (),
+    ) -> None:
+        """The one segment commit: write the segment data, then name it in
+        ONE atomic manifest write — Trinity's tmp-then-rename persist
+        (indexer.cpp:286-300).  Data writes are idempotent (overwrite), so a
+        crashed attempt stays invisible until the manifest names it.
+
+        The same write carries the rest of the edit:
+
+        - ``deletes``: a tombstone set at the generation right after the
+          segment's, so it vetoes the older versions the segment replaces
+          (the document-replace primitive, indexer.h:181-206 and
+          index_source.h:191-238) — no snapshot shows the new version with
+          the old one unmasked, or the reverse;
+        - ``retire_ids`` / ``retire_delete_gens``: a merge's inputs and its
+          fully-applied tombstone generations leave as the merged segment
+          arrives (the merge.cpp:418-447 retention verdict) — no snapshot
+          serves merged docs twice, and a concurrent ``add_deletes`` cannot
+          be lost between a read and a second write;
+        - ``meta.lineage`` gains the written block count, the field
+          statistics, the wire layout and the engine version
+          (``deletes_gens`` defaults to none applied); ``meta.metrics``
+          gains ``docs``, ``wall_sec`` from ``started`` (a
+          ``time.monotonic()`` reading, default this call's start) to the
+          manifest write, ``docs_per_sec``, and ``tombstone_gen`` with
+          ``deletes``.  Metrics the caller set (a merge's block-reuse
+          counts) are kept.
+
+        A commit the store rejects — a stale NRT doc-id allocation or a
+        conflicting wire layout — raises ``ValueError`` with the manifest
+        untouched and removes the attempt's data: until the next ``gc()``
+        its docid-map slice would serve duplicate translations for a range
+        another writer committed, and a later ``replace_documents`` could
+        tombstone the winner's document through the loser's stale rows."""
+        started = time.monotonic() if started is None else started
         meta.lineage.update(
             self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
         )
+        meta.lineage.setdefault("deletes_gens", [])
+        meta.lineage["engine_version"] = __version__
+        retire = {meta.segment_id, *retire_ids}
+        gens = set(retire_delete_gens)
         with self._manifest_lock():
             m = self.read_manifest()
-            self._check_nrt_allocation(m, meta)
-            self._stamp_layout(m, meta)
-            m["segments"] = [
-                s for s in m["segments"] if s["segment_id"] != meta.segment_id
-            ]
+            try:
+                self._check_nrt_allocation(m, meta)
+                self._stamp_layout(m, meta)
+            except ValueError:
+                if all(s["segment_id"] != meta.segment_id for s in m["segments"]):
+                    self._discard_uncommitted(meta.segment_id)
+                raise
             meta.generation = m["next_generation"]
             m["next_generation"] += 1
+            m["segments"] = [
+                s for s in m["segments"] if s["segment_id"] not in retire
+            ]
             m["segments"].append(meta.__dict__)
+            m["deletes"] = [d for d in m["deletes"] if d["gen"] not in gens]
+            if deletes is not None:
+                del_gen = m["next_generation"]  # newer than the segment: vetoes
+                m["next_generation"] += 1
+                path = os.path.join(self.base, "deletes", f"{del_gen}.parquet")
+                deletes.select(F.col("doc_id").cast("long")).withColumn(
+                    "gen", F.lit(del_gen)
+                ).write.mode("overwrite").parquet(path)
+                m["deletes"].append({"gen": del_gen, "path": path})
+                meta.metrics["tombstone_gen"] = del_gen
+            wall = time.monotonic() - started
+            meta.metrics.update(
+                docs=meta.docs_cnt,
+                wall_sec=round(wall, 3),
+                docs_per_sec=round(meta.docs_cnt / wall, 1) if wall else None,
+            )
             self._write_manifest(m)
 
     def _check_nrt_allocation(self, m: dict[str, Any], meta: SegmentMeta) -> None:
@@ -653,8 +718,8 @@ class SegmentStore:
         reads the high-water mark without a lock, so a concurrent writer may
         have committed the same range first.  The writers' data paths are
         already disjoint (marker-suffixed segment ids, streaming/nrt.py), so
-        the loser raises here with nothing clobbered — its orphaned data
-        files are gc-able and the batch can re-run against a fresh range.
+        the loser raises here with nothing clobbered — ``commit_segment``
+        removes its data and the batch can re-run against a fresh range.
         Scoped to nrt-append metas: a MERGE legitimately commits a segment
         overlapping its (about-to-retire) inputs.  A millisecond window
         remains between this read and the manifest rename (last-wins) —
@@ -673,132 +738,20 @@ class SegmentStore:
                 f"doc-id range [{meta.doc_lo}, {meta.doc_hi}) of "
                 f"{meta.segment_id!r} overlaps committed segment(s) {clash}: "
                 "a concurrent writer advanced the high-water mark after this "
-                "batch's allocation; its data files are orphaned (gc-able) — "
-                "re-run the batch to allocate a fresh range"
+                "batch's allocation; its data files are discarded — re-run "
+                "the batch to allocate a fresh range"
             )
 
-    def commit_segment_with_deletes(
-        self, blocks: DataFrame, meta: SegmentMeta, deletes_df: DataFrame
-    ) -> int:
-        """Segment commit + tombstone set in ONE atomic manifest write — the
-        document-replace primitive (reference ``indexer.h:181-206``
-        insert/update/erase; the new source's masked set vetoes the OLDER
-        versions, ``index_source.h:191-238``).  A crash before the manifest
-        write leaves both the new segment and the tombstones invisible; after
-        it, both are visible — no window where the new version exists without
-        the old one masked (or vice versa).  Returns the tombstone generation.
-        """
-        meta.lineage.update(
-            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
-        )
-        with self._manifest_lock():
-            m = self.read_manifest()
-            self._check_nrt_allocation(m, meta)
-            self._stamp_layout(m, meta)
-            seg_gen = m["next_generation"]
-            del_gen = seg_gen + 1  # tombstones are NEWER: they veto
-            path = os.path.join(self.base, "deletes", f"{del_gen}.parquet")
-            deletes_df.select(F.col("doc_id").cast("long")).withColumn(
-                "gen", F.lit(del_gen)
-            ).write.mode("overwrite").parquet(path)
-            m["segments"] = [
-                s for s in m["segments"] if s["segment_id"] != meta.segment_id
-            ]
-            meta.generation = seg_gen
-            m["next_generation"] = del_gen + 1
-            m["segments"].append(meta.__dict__)
-            m["deletes"].append({"gen": del_gen, "path": path})
-            self._write_manifest(m)
-        return del_gen
-
-    def commit_merge(
-        self,
-        blocks: DataFrame,
-        meta: SegmentMeta,
-        retire_ids: list[str],
-        retire_delete_gens: list[int] | None = None,
-    ) -> None:
-        """Merge commit: add the merged segment, retire its inputs, and
-        retire fully-applied tombstone generations in ONE atomic manifest
-        write (merge.cpp:418-447 retention verdict).  The previous
-        three-write sequence (commit_segment, retire_segments, tombstone
-        trim) had windows where BOTH the inputs and the merged output were
-        visible — a SegmentIndex opened in that window served every merged
-        doc twice — and where a concurrent add_deletes landing between the
-        trim's read and write was silently dropped (lost update)."""
-        meta.lineage.update(
-            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
-        )
-        retire = set(retire_ids)
-        gens = set(retire_delete_gens or [])
-        with self._manifest_lock():
-            m = self.read_manifest()
-            self._stamp_layout(m, meta)
-            meta.generation = m["next_generation"]
-            m["next_generation"] += 1
-            m["segments"] = [
-                s
-                for s in m["segments"]
-                if s["segment_id"] not in retire
-                and s["segment_id"] != meta.segment_id
-            ]
-            m["segments"].append(meta.__dict__)
-            if gens:
-                m["deletes"] = [
-                    d for d in m["deletes"] if d["gen"] not in gens
-                ]
-            self._write_manifest(m)
-
-    def update_segment_metrics(
-        self, segment_id: str, metrics: dict[str, Any]
-    ) -> None:
-        """Patch one committed segment's ``metrics`` in the manifest — the
-        post-commit lineage update (wall_sec includes the commit write
-        itself, so it can only be recorded after).  Metadata-only; shares the
-        atomic snapshot-per-write path, so with a retention policy set the
-        extra snapshot is trimmed on the spot."""
-        with self._manifest_lock():
-            m = self.read_manifest()
-            for s in m["segments"]:
-                if s["segment_id"] == segment_id:
-                    s["metrics"] = dict(metrics)
-                    break
-            else:
-                raise ValueError(f"no committed segment {segment_id!r}")
-            self._write_manifest(m)
-
-    def discard_uncommitted(self, segment_id: str) -> None:
-        """Remove a segment attempt's data that was REJECTED before its
-        manifest commit (the nrt allocation check): until the next ``gc()``
-        the orphaned docid-map slice would serve duplicate doc-id
-        translations for a range another writer committed — a later
-        ``replace_documents`` old-version lookup could then tombstone the
-        WINNER's document through the loser's stale rows.  Refuses if the
-        current manifest names the segment."""
+    def _discard_uncommitted(self, segment_id: str) -> None:
+        """Remove a rejected commit attempt's segment dirs and docid-map
+        slice (the caller checked that no manifest entry names them)."""
         import shutil
 
-        if any(
-            s["segment_id"] == segment_id
-            for s in self.read_manifest()["segments"]
-        ):
-            raise ValueError(
-                f"segment {segment_id!r} is committed; use retire_segments + gc"
-            )
         for p in (
             os.path.join(self.base, "segments", segment_id),
             os.path.join(self.docid_map_dir(), "nrt", segment_id),
         ):
             shutil.rmtree(p, ignore_errors=True)
-
-    def retire_segments(self, segment_ids: list[str]) -> None:
-        """Drop merged-away segments from the manifest (the merge retention
-        verdict, merge.cpp:418-447). Data dirs are left for GC."""
-        with self._manifest_lock():
-            m = self.read_manifest()
-            m["segments"] = [
-                s for s in m["segments"] if s["segment_id"] not in segment_ids
-            ]
-            self._write_manifest(m)
 
     def add_deletes(self, spark: SparkSession, doc_ids: list[int] | DataFrame) -> int:
         """Mask documents (docidupdates.cpp analog): a new tombstone file +
@@ -1239,9 +1192,9 @@ class _PinnedSnapshotStore(SegmentStore):
             "SegmentStore"
         )
 
-    # Data writers must raise BEFORE touching disk: commit_segment and
-    # friends write segment/docid-map/tombstone files into the LIVE store's
-    # directories first and only then hit _write_manifest's raise — by which
+    # Data writers must raise BEFORE touching disk: commit_segment and the
+    # docid-map writers put segment/docid-map/tombstone files into the LIVE
+    # store's directories first and only then hit _write_manifest's raise — by which
     # point committed data the live manifest references has been overwritten.
     # Fail at the entry point instead.
     def _raise_pinned(self, op: str):

@@ -27,7 +27,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import __version__
 from ..operators.fastbuild import blocks_from_turns
 from ..operators.docids import assign_doc_ids_counted
 from ..sources.store import SegmentMeta, SegmentStore
@@ -113,9 +112,7 @@ def _append_assigned(
         seg_turns, chunk_bits=chunk_bits, codec=codec
     ).persist()
     lineage = {"input": input_desc, "doc_range": [base, base + n],
-               "chunk_bits": chunk_bits, "codec": codec,
-               "deletes_gens": [],
-               "engine_version": __version__, "mode": "nrt-append"}
+               "chunk_bits": chunk_bits, "codec": codec, "mode": "nrt-append"}
     if deletes_df is not None:
         lineage["replace"] = True
     meta = SegmentMeta(
@@ -125,30 +122,13 @@ def _append_assigned(
         doc_hi=base + n,
         docs_cnt=n,
         lineage=lineage,
-        metrics={},
     )
-    del_gen = None
     try:
-        if deletes_df is None:
-            store.commit_segment(blocks, meta)
-        else:
-            del_gen = store.commit_segment_with_deletes(blocks, meta, deletes_df)
-    except ValueError:
-        # rejected commit (a concurrent writer committed the range first,
-        # or fixed a different layout): drop this attempt's orphan data
-        # now, or its docid-map slice serves duplicate translations until
-        # the next gc()
+        # a rejected commit (a concurrent writer committed the range first)
+        # raises with this attempt's data already discarded by the store
+        store.commit_segment(blocks, meta, started=t0, deletes=deletes_df)
+    finally:
         blocks.unpersist()
-        store.discard_uncommitted(segment_id)
-        raise
-    blocks.unpersist()
-    wall = time.monotonic() - t0
-    meta.metrics.update(
-        {"turns": n, "wall_sec": round(wall, 3), "turns_per_sec": round(n / wall, 1)}
-    )
-    if del_gen is not None:
-        meta.metrics["tombstone_gen"] = del_gen
-    store.update_segment_metrics(meta.segment_id, meta.metrics)
     return meta
 
 
