@@ -1201,6 +1201,26 @@ def test_knn_classify_ivf_carries_string_ids(spark):
     } == want
 
 
+def test_knn_string_labels_rejected_at_plan_time(spark):
+    """Labels vote as int64: "spam"/"ham" labels fail before any job with
+    a ValueError naming the label and its type (the IVF route failed them
+    mid-job with CAST_INVALID_INPUT)."""
+    labeled = [(0, "spam", [1.0, 0.0]), (1, "ham", [0.0, 1.0])]
+    lab_df = spark.createDataFrame(
+        labeled, "vec_id long, label string, embedding array<double>"
+    )
+    unl = spark.createDataFrame(
+        [(5, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="seed label 'spam'.*got str"):
+        similarity.knn_classify(unl, labeled, k=1)
+    for fn in (similarity.knn_classify_ivf, similarity.knn_classify_auto):
+        with pytest.raises(
+            ValueError, match=f"{fn.__name__}: label column 'label'.*'string'"
+        ):
+            fn(unl, lab_df, k=1)
+
+
 def test_connected_components_and_resolve(spark):
     """Cluster resolution over near-dup pairs: min-id components, canonical
     selection, singletons keep themselves; a 6-link chain converges."""

@@ -1326,6 +1326,39 @@ def _job_count(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_nrt_append_job_count(spark, tmp_path_factory):
+    """A 500-turn NRT append runs 6 Spark jobs, counted through a job
+    group: it writes a key-only slice, encodes from the batch in hand and
+    runs under the build's write-scoped confs (AQE and whole-stage codegen
+    off; under AQE the same append ran 13).  The scope restores the
+    session's confs when the last open scope exits, also when scopes
+    overlap out of order (two writer threads)."""
+    from trinity_spark.operators.indexer import write_conf_scope
+    from trinity_spark.streaming.nrt import append_micro_segment
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    store = SegmentStore(str(tmp_path_factory.mktemp("appendjobs") / "idx"))
+    build_index(
+        spark, spark.createDataFrame(gen_transcripts(2000)), store,
+        docid_map_mode="virtual",
+    )
+    batch = spark.createDataFrame(gen_transcripts(500, seed=10))
+    jobs = _job_count(
+        spark, "nrt-append-500",
+        lambda: append_micro_segment(spark, store, batch, "batch-500"),
+    )
+    assert jobs == 6
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    a, b = write_conf_scope(spark), write_conf_scope(spark)
+    a.__enter__()
+    b.__enter__()
+    a.__exit__(None, None, None)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"  # b open
+    b.__exit__(None, None, None)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
 def test_segment_stats_are_recorded_exactly(spark, tmp_path_factory):
     """Every commit path records the segment's field statistics in its
     lineage (index_source.h:44-53), equal to a recount over the segment's

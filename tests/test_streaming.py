@@ -67,6 +67,94 @@ def test_append_jobs_stay_in_callers_job_group(spark, seeded_store, jobs_in_wind
     assert started and got == started, (sorted(got), sorted(started))
 
 
+@pytest.mark.parametrize("mode", ["materialized", "virtual"])
+def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
+    """An NRT slice holds only (conv_id, turn_idx, doc_id); the index keeps
+    ids, the caller keeps the text.  The key-only footers must not drive
+    the batch map's schema: read_docid_map keeps the batch rows' text with
+    one row per doc id, a resumed materialized build re-encodes a lost
+    segment from that read rank-identically, and replace_documents finds
+    and masks old versions in the batch map and in the slices."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from trinity_spark.fixtures import docs_in_stable_order
+    from trinity_spark.streaming.nrt import replace_documents
+
+    corpus0 = gen_transcripts(N0)
+    corpus1 = gen_transcripts(N1, seed=99)
+    corpus1["conv_id"] = "nrt-" + corpus1["conv_id"]  # keys disjoint from corpus0
+    src = str(tmp_path / "input")
+    spark.createDataFrame(corpus0).write.parquet(src)
+    store = SegmentStore(str(tmp_path / "idx"))
+    build_index(
+        spark, spark.read.parquet(src), store, rows_per_segment=N0 // 2,
+        input_desc=src, docid_map_mode=mode,
+    )
+    append_micro_segment(spark, store, spark.createDataFrame(corpus1))
+
+    nrt_root = os.path.join(store.docid_map_dir(), "nrt")
+    footers = [
+        pq.read_schema(os.path.join(r, f)).names
+        for r, _, fs in os.walk(nrt_root)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert footers and all(
+        names == ["conv_id", "turn_idx", "doc_id"] for names in footers
+    )
+
+    oracle = _oracle_for(corpus0, corpus1)
+    if mode == "materialized":
+        dm = store.read_docid_map(spark)
+        assert dm.count() == dm.select("doc_id").distinct().count() == N0 + N1
+        texts = {
+            r["doc_id"]: r["text"]
+            for r in dm.where(F.col("doc_id") < N0).select("doc_id", "text").collect()
+        }
+        assert texts == dict(docs_in_stable_order(corpus0))
+        # a crash lost the second build segment's commit: the resumed build
+        # re-encodes it from the docid map, text included
+        lost = f"seg-{N0 // 2:014d}-{N0:014d}"
+        with store._manifest_lock():
+            m = store.read_manifest()
+            m["segments"] = [s for s in m["segments"] if s["segment_id"] != lost]
+            store._write_manifest(m)
+        rebuilt = build_index(
+            spark, spark.read.parquet(src), store, input_desc=src,
+            docid_map_mode=mode,
+        )
+        assert [s.segment_id for s in rebuilt][-1] == lost
+        assert store.fsck(spark, deep=True)["ok"]
+        planner = QueryPlanner(SegmentIndex(spark, store))
+        for q in ["error", "error AND timeout", "retry OR backoff"]:
+            node = parse_query(q)
+            want = oracle.topk(node, k=10)
+            got = [
+                (r["doc_id"], r["score"])
+                for r in planner.plan(node, k=10).collect()
+            ]
+            assert [d for d, _ in got] == [d for d, _ in want], q
+            for (_, gs), (_, ws) in zip(got, want):
+                assert abs(gs - ws) <= 1e-9, q
+
+    # one key whose live version sits in the batch map, one in a slice
+    s0 = corpus0.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    s1 = corpus1.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    upd = pd.concat([s0.iloc[[3]], s1.iloc[[5]]]).reset_index(drop=True)
+    upd["text"] = ["qqkeyslicemarker one", "qqkeyslicemarker two"]
+    meta = replace_documents(spark, store, spark.createDataFrame(upd))
+    assert sorted(r["doc_id"] for r in store.read_deletes(spark).collect()) == [
+        3, N0 + 5,
+    ]
+    planner = QueryPlanner(SegmentIndex(spark, store))
+    assert sorted(
+        r["doc_id"] for r in planner.plan("qqkeyslicemarker", k=5).collect()
+    ) == [meta.doc_lo, meta.doc_lo + 1]
+    assert store.fsck(spark, deep=True)["ok"]
+
+
 def test_replace_documents_flow(spark, seeded_store):
     """One-call update (indexer.h:181-206): the old version is tombstoned and
     the new one indexed in ONE manifest commit; queries see only the new

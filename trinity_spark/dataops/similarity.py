@@ -28,6 +28,7 @@ from __future__ import annotations
 import hashlib
 import logging
 import math
+import numbers
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,6 +49,17 @@ def _require_integral_id(df: DataFrame, id_col: str, ctx: str) -> None:
             f"{ctx}: id column {id_col!r} must be an integral type for the "
             f"numpy kernels (got {dt!r}); map string ids to int64 first "
             "(e.g. xxhash64) or use kernel='sql'"
+        )
+
+
+def _require_integral_labels(df: DataFrame, label_col: str, ctx: str) -> None:
+    """Every kNN route votes over int64 labels: a string label column
+    would fail mid-job on the long cast — reject it at plan time."""
+    dt = dict(df.dtypes).get(label_col)
+    if dt not in _INTEGRAL:
+        raise ValueError(
+            f"{ctx}: label column {label_col!r} must be an integral type "
+            f"(got {dt!r}); map labels to int64 first"
         )
 
 
@@ -1064,7 +1076,8 @@ def knn_classify(
     Returns (``id_col``, ``pred_label`` long, ``votes`` int) —
     ``votes`` = the winning label's count among the k neighbors.  Ids of
     either side may be any orderable type; the unlabeled id passes through
-    the kernel under its own type.
+    the kernel under its own type.  Labels must be integral in every kNN
+    route: a non-integral label raises ``ValueError`` before any job runs.
     """
     import numpy as np
     import pyarrow as pa
@@ -1073,6 +1086,13 @@ def knn_classify(
         raise ValueError("k must be >= 1")
     if not labeled:
         raise ValueError("labeled seed set must be non-empty")
+    for t in labeled:
+        if not isinstance(t[1], numbers.Integral):
+            raise ValueError(
+                f"knn_classify: seed label {t[1]!r} (second tuple field) "
+                f"must be an integral type (got {type(t[1]).__name__}); "
+                "map labels to int64 first"
+            )
     trip = sorted(labeled)  # neighbor-id ascending: stable argsort = id tie-break
     C = np.asarray([t[2] for t in trip], dtype=np.float64)
     labs = np.asarray([t[1] for t in trip], dtype=np.int64)
@@ -1151,6 +1171,7 @@ def knn_classify_ivf(
 
     if k < 1:
         raise ValueError("k must be >= 1")
+    _require_integral_labels(labeled, label_col, "knn_classify_ivf")
     lab = labeled.select(
         F.col(id_col).alias("_nid"),
         F.col(label_col).cast("long").alias("_lab"),
@@ -1277,6 +1298,7 @@ def knn_classify_auto(
     collect()ed (small by definition of the ceiling).  Both routes emit one
     row per input vector (the IVF route with NULL pred_label for vectors a
     partial probe left without labeled candidates)."""
+    _require_integral_labels(labeled, label_col, "knn_classify_auto")
     # n and dim in ONE action (labeled can be an expensive lineage — a
     # filtered/scored upstream frame — that a count + a first would run
     # twice before classification even starts)

@@ -30,7 +30,9 @@ turns you'd use ~10^9-row segments (=> ~1000 independent resume units); the
 
 from __future__ import annotations
 
+import contextlib
 import math
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,14 +51,63 @@ from .segments import decode_segments
 # already doc-contiguous per partition, so the shuffle is pure cost.
 _LAYOUT_MIN_DOCS = 1 << 20
 
-# Build-scoped runtime confs, saved and restored by build_index (see the
-# comments there for each value)
-_BUILD_CONF_KEYS = (
+# Write-scoped runtime confs, saved and restored by write_conf_scope (see
+# its docstring for each value)
+_WRITE_CONF_KEYS = (
     "spark.sql.files.maxPartitionBytes",
     "spark.sql.codegen.wholeStage",
     "spark.sql.adaptive.enabled",
 )
+_write_scope_lock = threading.Lock()
+_write_scopes: dict[int, list] = {}  # id(session) -> [depth, saved confs]
 _BUILD_SPLIT_BYTES = str(4 << 20)
+
+
+@contextlib.contextmanager
+def write_conf_scope(spark: SparkSession):
+    """Run the enclosed block under the write paths' Spark confs:
+    ``build_index``, ``append_micro_segment`` and ``replace_documents``.
+
+    - whole-stage codegen OFF: a write's CPU is all Python-side
+      (mapInArrow); Janino compilation of its handful of scan/agg stages
+      is ~2-3 s of pure serial driver time per fresh JVM, which dominates
+      the short 4N-core leg of the build-scaling pair.
+    - AQE OFF: a write has no corpus-wide shuffle for AQE's skew/coalesce
+      rules to help.  A virtual build attaches doc ids worker-side, so its
+      only shuffles are the conv-table range partition (phase 0, past the
+      driver-side cap) and the commit's term-hash write; an NRT batch is
+      small.  AQE's per-stage re-optimization only adds serial latency,
+      and it runs every cached relation as a job of its own (measured: an
+      NRT append ran 13 jobs under AQE, 6 without).  (A materialized
+      build past the cap still hash-joins the corpus in assign_doc_ids,
+      with AQE off.)
+
+    ``spark.sql.files.maxPartitionBytes`` is saved too: the build sets its
+    fine encode splits inside the scope.  The confs are SESSION-wide, so
+    queries that other threads run on the session meanwhile see them as
+    well.  Scopes nest and overlap across threads: the first to enter
+    saves the confs and the last to leave restores them."""
+    key = id(spark)
+    with _write_scope_lock:
+        entry = _write_scopes.get(key)
+        if entry is None:
+            saved = {k: spark.conf.get(k, None) for k in _WRITE_CONF_KEYS}
+            entry = _write_scopes[key] = [0, saved]
+            spark.conf.set("spark.sql.codegen.wholeStage", "false")
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        entry[0] += 1
+    try:
+        yield
+    finally:
+        with _write_scope_lock:
+            entry[0] -= 1
+            if entry[0] == 0:
+                del _write_scopes[key]
+                for k, v in entry[1].items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
 
 
 def build_index(
@@ -104,39 +155,18 @@ def build_index(
     # paper (8x fewer worker round-trips) but ran the 1-core leg 2x SLOWER —
     # per-task encode buffers grow to ~7M postings and this VM charges a
     # first-touch page-fault premium on large fresh allocations that dwarfs
-    # the per-task overhead saved.  Scoped here (runtime conf, restored in
-    # the finally below) because the same setting shreds QUERY scans into
+    # the per-task overhead saved.  Scoped here (runtime conf, restored by
+    # write_conf_scope) because the same setting shreds QUERY scans into
     # hundreds of tiny tasks of pure scheduling overhead.
     # the fine split is applied INSIDE _build_index_inner just before the
     # segment loop: phase 0 (conv aggregation / docid map) is scan+agg
     # bound and runs ~15% faster on default-size splits — only the fused
     # encode pass wants the 4 MiB granularity
-    # Build-scoped JVM overhead trims (restored in the finally):
-    # - whole-stage codegen OFF: the build's CPU is all Python-side
-    #   (mapInArrow); Janino compilation of its handful of scan/agg stages
-    #   is ~2-3 s of pure serial driver time per fresh JVM, which dominates
-    #   the short 4N-core leg of the scaling pair.
-    # - AQE OFF: a virtual build attaches doc ids worker-side at every conv
-    #   count, so its only shuffles are the conv-table range partition
-    #   (phase 0, past the driver-side cap) and the commit's term-hash
-    #   write — no corpus-wide docid shuffle exists for AQE's skew/coalesce
-    #   rules to help, and its per-stage driver re-optimization only adds
-    #   serial latency.  (A materialized build past the cap still
-    #   hash-joins the corpus in assign_doc_ids, with AQE off.)
-    saved = {k: spark.conf.get(k, None) for k in _BUILD_CONF_KEYS}
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with write_conf_scope(spark):
         return _build_index_inner(
             spark, turns, store, rows_per_segment, input_desc, chunk_bits,
             docid_map_mode, codec,
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _build_index_inner(
@@ -327,7 +357,7 @@ def _build_index_inner(
 
     built: list[SegmentMeta] = []
     # fine scan splits for the CPU-bound fused encode pass only (see the
-    # build_index comment; restored by build_index's finally)
+    # build_index comment; restored by write_conf_scope)
     spark.conf.set("spark.sql.files.maxPartitionBytes", _BUILD_SPLIT_BYTES)
     for lo in range(0, n_docs, rows_per_segment):
         hi = min(lo + rows_per_segment, n_docs)

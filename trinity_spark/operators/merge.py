@@ -11,9 +11,7 @@ bytes untouched when nothing in it changed (``merge.cpp:166-180``,
 Spark-first: the k-way merge-sort IS a union + re-group — decode the selected
 segments' blocks, anti-join the tombstones, re-encode, commit one new
 segment, retire the inputs.  Because our doc_id spaces are already global
-(docid_map assigns once), no remap join is needed for plain merges; the remap
-path (Trinity's isrc->global translation, index_source.h:100-114) is exposed
-separately as ``remap_doc_ids`` for compaction-style renumbering.
+(docid_map assigns once), no remap join is needed.
 
 Byte-reuse fast path, finer-grained than the reference's: Trinity can only
 raw-copy a term when it lives in ONE source segment (the byte streams must
@@ -385,13 +383,3 @@ def merge_segments(
         new_blocks.unpersist()
     return meta
 
-
-def remap_doc_ids(postings: DataFrame, docid_map: DataFrame) -> DataFrame:
-    """Compaction-style renumbering: join postings to a (doc_id -> new_doc_id)
-    map — the translate_docid analog for rebuilding a dense space after many
-    deletes.  Broadcast when the map is small; shuffle-join otherwise."""
-    return (
-        postings.join(docid_map.select("doc_id", "new_doc_id"), "doc_id", "inner")
-        .drop("doc_id")
-        .withColumnRenamed("new_doc_id", "doc_id")
-    )

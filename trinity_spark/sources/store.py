@@ -16,7 +16,11 @@ snapshot — it is one manifest write here too):
 
     <base>/
       manifest.json                 # atomic: tmp + os.replace
-      docid_map/                    # doc_id <-> (conv_id, turn_idx) + text cols
+      docid_map/                    # batch map: doc_id <-> (conv_id, turn_idx)
+                                    #   + the turn cols (materialized builds)
+        nrt/<segment_id>/           # NRT slices: keys only (conv_id,
+                                    #   turn_idx, doc_id) — no text
+      conv_bases/                   # virtual builds: conv_id -> base
       segments/<segment_id>/
         postings/   (block rows, written sorted by term -> parquet min/max
                      column stats give term-seek, the terms.idx analog)
@@ -58,6 +62,8 @@ from ..operators.segments import (
 )
 
 MANIFEST = "manifest.json"
+# what an NRT docid-map slice holds
+_SLICE_COLS = ("conv_id", "turn_idx", "doc_id")
 
 # Postings output files are sized by DATA VOLUME, not core count.  The old
 # one-file-per-core write produced 32 x ~1.7 MB files at the 1M-turn bench
@@ -488,10 +494,12 @@ class SegmentStore:
     def read_docid_map(self, spark: SparkSession, turns: DataFrame | None = None) -> DataFrame:
         """The doc_id <-> turn translation table.
 
-        Materialized mode: read the parquet map (plus any NRT slices).
-        Virtual mode: recompute from conv_bases over ``turns`` (the original
-        input frame); when ``turns`` is None the recorded input path is read
-        back — the input is immutable by contract (its descriptor is lineage)."""
+        Materialized mode: read the parquet batch map, plus the NRT slices'
+        keys.  Virtual mode: recompute from conv_bases over ``turns`` (the
+        original input frame), plus the NRT slices' keys; when ``turns`` is
+        None the recorded input path is read back — the input is immutable
+        by contract (its descriptor is lineage).  NRT rows carry the key
+        columns only; any other column is NULL on them."""
         if self.docid_map_mode() == "virtual":
             if turns is None:
                 src = self.read_manifest()["docid_map"]["input"]
@@ -502,32 +510,48 @@ class SegmentStore:
                     )
                 turns = spark.read.parquet(src)
             out = self.attach_doc_ids(turns)
-            # NRT appends still land as materialized slices — union them in
-            if os.path.exists(self.docid_map_dir()):
-                out = out.unionByName(
-                    spark.read.option("recursiveFileLookup", "true").parquet(
-                        self.docid_map_dir()
-                    ),
-                    allowMissingColumns=True,
-                )
+        else:
+            # the batch map's files sit directly in docid_map/; read them
+            # apart from the slices, whose key-only footers must not drive
+            # the batch map's schema inference
+            d = self.docid_map_dir()
+            files = sorted(
+                os.path.join(d, f)
+                for f in (os.listdir(d) if os.path.isdir(d) else ())
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            )
+            out = spark.read.parquet(*files) if files else None
+        slices = self._read_nrt_slices(spark)
+        if out is None:
+            if slices is None:
+                # nothing written yet: the read raises the usual error
+                return spark.read.parquet(self.docid_map_dir())
+            return slices
+        if slices is None:
             return out
-        # materialized: flat batch map files + nrt/<segment_id>/ slices
-        return spark.read.option("recursiveFileLookup", "true").parquet(
-            self.docid_map_dir()
+        return out.unionByName(slices, allowMissingColumns=True)
+
+    def _read_nrt_slices(self, spark: SparkSession) -> DataFrame | None:
+        """Every NRT slice's keys, or None when there are none."""
+        nrt_root = os.path.join(self.docid_map_dir(), "nrt")
+        if not (os.path.isdir(nrt_root) and os.listdir(nrt_root)):
+            return None
+        return (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(nrt_root)
+            .select(*_SLICE_COLS)
         )
 
     def write_docid_map_slice(self, turns_with_ids: DataFrame, segment_id: str) -> None:
-        """NRT micro-batch slice of the docid_map, at a DETERMINISTIC
-        per-segment path with overwrite semantics: a crashed batch replayed
-        by the stream checkpoint rewrites the same files instead of appending
+        """NRT micro-batch slice of the docid_map: the keys ``(conv_id,
+        turn_idx, doc_id)`` of the batch, whatever else the frame carries —
+        the index holds ids, the application owns the text
+        (``indexer.h:181-206``).  It lands at a DETERMINISTIC per-segment
+        path with overwrite semantics: a crashed batch replayed by the
+        stream checkpoint rewrites the same files instead of appending
         duplicate doc_id rows (exactly-once for the map, not just the
         segment)."""
-        turns_with_ids.write.mode("overwrite").parquet(
-            os.path.join(self.docid_map_dir(), "nrt", segment_id)
-        )
-
-    def read_docid_map_slice(self, spark: SparkSession, segment_id: str) -> DataFrame:
-        return spark.read.parquet(
+        turns_with_ids.select(*_SLICE_COLS).write.mode("overwrite").parquet(
             os.path.join(self.docid_map_dir(), "nrt", segment_id)
         )
 

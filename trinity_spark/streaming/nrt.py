@@ -17,6 +17,13 @@ frozen (conv_id, turn_idx) stable order applies, ACROSS batches arrival
 semantics.  Query-time stats sum across micro-segments automatically
 (similarity.h:238-250 path), and ``operators.merge.merge_segments`` is the
 compaction story once micro-segments pile up.
+
+An append writes keys, not text: the batch's docid-map slice holds only
+``(conv_id, turn_idx, doc_id)`` — the index keeps postings and masked doc
+ids, the application owns document content (``indexer.h:181-206``) — and
+the blocks are encoded straight from the persisted batch.  Appends and
+replaces run under the build's write-scoped Spark confs
+(``indexer.write_conf_scope``).
 """
 
 from __future__ import annotations
@@ -27,8 +34,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.fastbuild import blocks_from_turns
 from ..operators.docids import assign_doc_ids_counted
+from ..operators.fastbuild import blocks_from_turns
+from ..operators.indexer import write_conf_scope
 from ..sources.store import SegmentMeta, SegmentStore
 
 
@@ -68,25 +76,27 @@ def append_micro_segment(
 ) -> SegmentMeta | None:
     """Index one batch of new turns as a new segment; returns its meta.
     The segment is written in the store's wire layout (codec and chunk
-    width fixed by its first commit), so merges keep byte reuse."""
-    # persist the micro-batch: the id assignment scans it twice (conv-bases
-    # aggregation + bases join), and the count comes free from the former —
-    # the previous separate turns.count() was a third full pass per epoch
-    turns = turns.persist()
-    try:
-        with_ids, n = assign_doc_ids_counted(turns)
-        if n == 0:
-            return None
-        base = next_doc_id(store)
-        t0 = time.monotonic()
-        with_ids = with_ids.withColumn(
-            "doc_id", (F.col("doc_id") + F.lit(base)).cast("long")
-        )
-        return _append_assigned(
-            spark, store, with_ids, n, base, t0, input_desc,
-        )
-    finally:
-        turns.unpersist()
+    width fixed by its first commit), so merges keep byte reuse.  Runs
+    under ``write_conf_scope`` (session-wide confs)."""
+    with write_conf_scope(spark):
+        # persist the micro-batch: the id assignment aggregates it, and the
+        # slice write and the encode pass each join the bases back onto it;
+        # the count comes free from the aggregation
+        turns = turns.persist()
+        try:
+            with_ids, n = assign_doc_ids_counted(turns)
+            if n == 0:
+                return None
+            base = next_doc_id(store)
+            t0 = time.monotonic()
+            with_ids = with_ids.withColumn(
+                "doc_id", (F.col("doc_id") + F.lit(base)).cast("long")
+            )
+            return _append_assigned(
+                spark, store, with_ids, n, base, t0, input_desc,
+            )
+        finally:
+            turns.unpersist()
 
 
 def _append_assigned(
@@ -103,13 +113,15 @@ def _append_assigned(
     in the tombstone set riding the commit)."""
     segment_id = nrt_segment_id(base, n, input_desc)
     # deterministic per-segment slice + overwrite => a replayed batch (crash
-    # between this write and commit_segment) rewrites the SAME files; the old
-    # append mode would re-append the doc range and double every tf
+    # between this write and commit_segment) rewrites the SAME files, so the
+    # map keeps one row per doc id
     store.write_docid_map_slice(with_ids, segment_id)
-    seg_turns = store.read_docid_map_slice(spark, segment_id)
     codec, chunk_bits = store.layout()  # appends inherit the store's layout
+    # encode from the batch in hand: the slice holds keys only, and ids are
+    # a pure function of the batch's (conv_id, turn_idx) order, so this pass
+    # attaches the same ids the slice recorded
     blocks = blocks_from_turns(
-        seg_turns, chunk_bits=chunk_bits, codec=codec
+        with_ids, chunk_bits=chunk_bits, codec=codec
     ).persist()
     lineage = {"input": input_desc, "doc_range": [base, base + n],
                "chunk_bits": chunk_bits, "codec": codec, "mode": "nrt-append"}
@@ -150,51 +162,58 @@ def replace_documents(
     broadcast semi-join of the (small) update batch against ONE scan of the
     docid map; the new versions land as a normal NRT micro-segment.
     """
-    turns = turns.persist()
-    try:
-        # id assignment + count in one pass (the separate turns.count() was
-        # a redundant full scan per update batch — append_micro_segment's
-        # own fix, now shared)
-        with_ids, n = assign_doc_ids_counted(turns)
-        if n == 0:
-            return None
-        base = next_doc_id(store)
-        # every live doc_id for the updated keys (earlier replaced versions
-        # are already masked; re-masking them is harmless).  doc_id < base
-        # is LOAD-BEARING: the docid-map read lists nrt/ slices recursively,
-        # so a replay after a crash between the slice write and the commit
-        # would otherwise see the crashed attempt's own [base, base+n) ids
-        # for the SAME keys and tombstone the replacement documents it is
-        # about to commit — only ids below the committed high-water mark can
-        # be live old versions.  (Also hardens against the map scan listing
-        # files lazily, after this call writes the new slice.)
-        dm = store.read_docid_map(spark).select("conv_id", "turn_idx", "doc_id")
-        old = (
-            dm.join(
-                F.broadcast(turns.select("conv_id", "turn_idx").distinct()),
-                ["conv_id", "turn_idx"],
-                "left_semi",
+    with write_conf_scope(spark):
+        turns = turns.persist()
+        try:
+            # id assignment + count in one pass (the separate turns.count()
+            # was a redundant full scan per update batch —
+            # append_micro_segment's own fix, now shared)
+            with_ids, n = assign_doc_ids_counted(turns)
+            if n == 0:
+                return None
+            base = next_doc_id(store)
+            # every live doc_id for the updated keys (earlier replaced
+            # versions are already masked; re-masking them is harmless).
+            # doc_id < base is LOAD-BEARING: the docid-map read lists the
+            # nrt/ slices recursively, so a replay after a crash between the
+            # slice write and the commit would otherwise see the crashed
+            # attempt's own [base, base+n) ids for the SAME keys and
+            # tombstone the replacement documents it is about to commit —
+            # only ids below the committed high-water mark can be live old
+            # versions.  (Also hardens against the map scan listing files
+            # lazily, after this call writes the new slice.)
+            dm = store.read_docid_map(spark).select(
+                "conv_id", "turn_idx", "doc_id"
             )
-            .where(F.col("doc_id") < F.lit(base))
-            .select("doc_id")
-            # MATERIALIZE before the slice write below: the lazy scan lists
-            # the map's current parquet files, and on a crash replay the
-            # slice overwrite replaces the crashed attempt's files the scan
-            # captured — evaluating `old` at commit time would then read
-            # deleted paths.  The set is batch-sized (tombstones are
-            # RAM-resident by design), so the eager checkpoint is cheap.
-            .localCheckpoint(eager=True)
-        )
-        t0 = time.monotonic()
-        with_ids = with_ids.withColumn(
-            "doc_id", (F.col("doc_id") + F.lit(base)).cast("long")
-        )
-        return _append_assigned(
-            spark, store, with_ids, n, base, t0, input_desc,
-            deletes_df=old,
-        )
-    finally:
-        turns.unpersist()
+            old = (
+                dm.join(
+                    F.broadcast(
+                        turns.select("conv_id", "turn_idx").distinct()
+                    ),
+                    ["conv_id", "turn_idx"],
+                    "left_semi",
+                )
+                .where(F.col("doc_id") < F.lit(base))
+                .select("doc_id")
+                # MATERIALIZE before the slice write below: the lazy scan
+                # lists the map's current parquet files, and on a crash
+                # replay the slice overwrite replaces the crashed attempt's
+                # files the scan captured — evaluating `old` at commit time
+                # would then read deleted paths.  The set is batch-sized
+                # (tombstones are RAM-resident by design), so the eager
+                # checkpoint is cheap.
+                .localCheckpoint(eager=True)
+            )
+            t0 = time.monotonic()
+            with_ids = with_ids.withColumn(
+                "doc_id", (F.col("doc_id") + F.lit(base)).cast("long")
+            )
+            return _append_assigned(
+                spark, store, with_ids, n, base, t0, input_desc,
+                deletes_df=old,
+            )
+        finally:
+            turns.unpersist()
 
 
 def start_indexing_stream(

@@ -127,11 +127,6 @@ def positionless_col(term_col: Column) -> Column:
     return term_col.contains(POSITIONLESS_MARKER)
 
 
-def positionless_mask(terms: "pd.Series") -> "pd.Series":
-    """pandas-side twin of ``is_positionless`` (fused Arrow build path)."""
-    return terms.str.contains(POSITIONLESS_MARKER, regex=False)
-
-
 def tokenize_terms_py(text: str | None) -> list[tuple[str, int]]:
     """(term, position) pairs with the reference limits applied.
 
