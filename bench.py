@@ -148,10 +148,6 @@ def run_build(
         input_desc=corpus,
         chunk_bits=chunk_bits if chunk_bits is not None else CHUNK_BITS,
         codec=codec,
-        # virtual docid_map: the translation table is the tiny conv-base
-        # parquet + an arithmetic rule — the build never writes a second
-        # copy of the corpus (at 100 TB the materialized map doubles storage)
-        docid_map_mode="virtual",
     )
     wall = time.monotonic() - t0
     return {
@@ -245,7 +241,7 @@ def run_merge_bench(cpus: int, n_turns: int) -> dict:
     build_index(
         spark, spark.read.parquet(corpus), store,
         rows_per_segment=max(n_turns // 4, 1 << 14),
-        input_desc=corpus, docid_map_mode="virtual",
+        input_desc=corpus,
     )
     n_in = len(store.segments())
     t0 = time.monotonic()

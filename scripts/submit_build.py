@@ -8,7 +8,7 @@ submit command line, exactly as on a cluster); the library rides in via
 
     spark-submit --master local[8] --py-files trinity_spark.zip \
         scripts/submit_build.py --input /data/transcripts \
-        --index-dir /data/index --docid-map-mode virtual
+        --index-dir /data/index
 """
 
 from __future__ import annotations
@@ -22,8 +22,6 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="transcripts parquet path")
     ap.add_argument("--index-dir", required=True)
     ap.add_argument("--rows-per-segment", type=int, default=None)
-    ap.add_argument("--docid-map-mode", default="materialized",
-                    choices=["materialized", "virtual"])
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -44,7 +42,6 @@ def main() -> None:
         SegmentStore(args.index_dir),
         rows_per_segment=args.rows_per_segment,
         input_desc=args.input,
-        docid_map_mode=args.docid_map_mode,
     )
     print(
         "SUBMIT_BUILD "

@@ -134,34 +134,43 @@ def test_long_conv_duplicate_with_gap_routes_to_fallback(spark, monkeypatch):
 
 
 def test_worker_attach_matches_broadcast_join(spark, tmp_path):
-    """Virtual builds attach doc ids worker-side at every conv count: with
+    """Dense builds attach doc ids worker-side at every conv count: with
     the driver-side cap forced to 0 (distributed conv bases, each of the 3
     segments loading only its conv_id slice) the blocks and query rows must
-    be identical to the <=cap build, and both builds' decoded postings must
-    match the materialized-map reference."""
+    be identical to the <=cap build.  The same turns with non-dense
+    turn_idx (``turn_idx*3+7``: same order, same ids) build through the
+    batch map, and every build's decoded postings match postings computed
+    straight from the broadcast-join assignment."""
     import shutil
 
     from pyspark.sql import functions as F
     from trinity_spark.fixtures import gen_transcripts
+    from trinity_spark.operators.fastbuild import postings_from_turns
     from trinity_spark.operators.indexer import SegmentIndex, build_index
     from trinity_spark.plans.planner import QueryPlanner
     from trinity_spark.sources.store import SegmentStore
 
     df = spark.createDataFrame(gen_transcripts(12_000))
+    sparse = df.withColumn("turn_idx", F.col("turn_idx") * 3 + 7)
+    postings_hash = F.expr("bit_xor(xxhash64(term, doc_id, tf, positions))")
+    ref_postings = (
+        postings_from_turns(D.assign_doc_ids(df)).select(postings_hash)
+        .collect()[0][0]
+    )
     saved = D.BROADCAST_MAX_CONVS
     outs = {}
     try:
-        for label, mode, thresh in [
-            ("cap", "virtual", 8_000_000),
-            ("sliced", "virtual", 0),
-            ("materialized", "materialized", 8_000_000),
+        for label, corpus, mode, thresh in [
+            ("cap", df, "virtual", 8_000_000),
+            ("sliced", df, "virtual", 0),
+            ("batch", sparse, "batch", 8_000_000),
         ]:
             D.BROADCAST_MAX_CONVS = thresh
             base = str(tmp_path / f"attach_{label}")
             shutil.rmtree(base, ignore_errors=True)
             st = SegmentStore(base)
-            build_index(spark, df, st, rows_per_segment=5_000,
-                        input_desc="eq", docid_map_mode=mode)
+            build_index(spark, corpus, st, rows_per_segment=5_000,
+                        input_desc="eq")
             assert st.docid_map_mode() == mode
             idx = SegmentIndex(spark, st)
             p = QueryPlanner(idx)
@@ -173,17 +182,16 @@ def test_worker_attach_matches_broadcast_join(spark, tmp_path):
                 "bit_xor(xxhash64(term, chunk, block_id, min_doc_id, "
                 "max_doc_id, doc_deltas, tf_bytes, pos_bytes))"
             )).collect()[0][0]
-            postings = idx.postings.select(
-                F.expr("bit_xor(xxhash64(term, doc_id, tf, positions))")
-            ).collect()[0][0]
+            postings = idx.postings.select(postings_hash).collect()[0][0]
             outs[label] = (rows, blocks, postings, len(st.segments()))
     finally:
         D.BROADCAST_MAX_CONVS = saved
     assert outs["cap"][3] == 3
     assert outs["sliced"] == outs["cap"]
-    ref_rows, _, ref_postings, ref_segs = outs["materialized"]
+    assert outs["cap"][2] == ref_postings
+    batch_rows, _, batch_postings, batch_segs = outs["batch"]
     assert (outs["cap"][0], outs["cap"][2], outs["cap"][3]) == (
-        ref_rows, ref_postings, ref_segs
+        batch_rows, batch_postings, batch_segs
     )
 
 

@@ -163,3 +163,41 @@ def test_similarity_has_no_dominated_twin():
     ):
         with pytest.raises(ValueError, match=r"; use 'sql' or 'gram'$"):
             call()
+
+
+def test_docid_map_has_one_reader():
+    """One doc-id map contract: ``read_docid_map(spark)`` builds the keys
+    from the conv bases or the batch map plus the NRT slices and never
+    reads the input back — no ``attach_doc_ids``, no read of the
+    manifest's recorded ``docid_map["input"]``, no ``turns`` parameter —
+    and ``build_index`` accepts only ``docid_map_mode="virtual"``,
+    refusing any other value before a Spark job runs."""
+    import inspect
+
+    import pytest
+
+    from trinity_spark.operators.indexer import build_index
+    from trinity_spark.sources.store import SegmentStore
+
+    input_read = re.compile(r"""docid_map["']\]\s*(?:\[|\.get\()\s*["']input["']""")
+    for path in sorted((ROOT / "trinity_spark").rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        text = path.read_text()
+        assert "attach_doc_ids" not in text, rel
+        assert not input_read.search(text), rel
+    assert input_read.search('self.read_manifest()["docid_map"]["input"]')
+    assert list(inspect.signature(SegmentStore.read_docid_map).parameters) == [
+        "self", "spark",
+    ]
+
+    class NoSpark:
+        def __getattr__(self, name):
+            raise AssertionError(f"build touched spark.{name}")
+
+    class NoStore:
+        def __getattr__(self, name):
+            raise AssertionError(f"build touched store.{name}")
+
+    with pytest.raises(ValueError, match="docid_map_mode"):
+        build_index(NoSpark(), NoSpark(), NoStore(), docid_map_mode="materialized")
+

@@ -276,7 +276,15 @@ def test_merge_byte_reuse_fast_path(spark, tmp_path_factory):
     """Full blocks with no tombstone in range must move through a merge
     byte-identical (the merge.cpp:166-180 raw-copy analog, finer-grained:
     per block, not per single-source term)."""
-    store, corpus = _fresh_index(spark, tmp_path_factory, "reuse")
+    store = SegmentStore(str(tmp_path_factory.mktemp("reuse")))
+    corpus = gen_transcripts(800)
+    # one input partition: dense input is encoded straight from the input's
+    # partitions, so frequent terms fill 128-doc blocks only when each
+    # segment's docs share one partition
+    build_index(
+        spark, spark.createDataFrame(corpus).coalesce(1), store,
+        rows_per_segment=400, input_desc="reuse",
+    )
     before = {
         (r["term"], r["chunk"], r["min_doc_id"]): (
             bytes(r["doc_deltas"]), bytes(r["tf_bytes"]), bytes(r["pos_bytes"]),
@@ -687,9 +695,10 @@ def test_payloads_in_hits_surface(spark, tmp_path_factory):
 
 
 def test_virtual_docid_map_build(spark, tmp_path_factory):
-    """docid_map_mode='virtual': no corpus copy on disk — only the conv base
-    table + the arithmetic rule; same segments, same ranks, resumable, and
-    the virtual map reproduces the materialized one exactly."""
+    """Dense input builds the virtual docid map: no corpus copy on disk —
+    only the conv base table + the arithmetic rule; same segments, same
+    ranks, resumable, and the map serves every (conv_id, turn_idx) key at
+    its stable-order doc id."""
     base = tmp_path_factory.mktemp("virt")
     corpus = gen_transcripts(800)
     src = str(base / "input")
@@ -698,7 +707,6 @@ def test_virtual_docid_map_build(spark, tmp_path_factory):
     store = SegmentStore(str(base / "idx"))
     metas = build_index(
         spark, turns, store, rows_per_segment=300, input_desc=src,
-        docid_map_mode="virtual",
     )
     assert len(metas) == 3
     assert store.docid_map_mode() == "virtual"
@@ -714,19 +722,54 @@ def test_virtual_docid_map_build(spark, tmp_path_factory):
         for (_, gs), (_, ws) in zip(got, want):
             assert abs(gs - ws) <= 1e-9
 
-    # the virtual map self-loads from the recorded input path and carries the
-    # north-rule per-turn text equality
+    # the map comes off the conv bases alone: every key at its stable-order
+    # doc id (per-turn text equality is pinned by test_docids and by rank
+    # identity with the oracle above)
     dm = store.read_docid_map(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
     assert list(dm["doc_id"]) == list(range(800))
-    for doc_id, text in docs_in_stable_order(corpus):
-        assert dm["text"][doc_id] == text
+    want = corpus.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    assert list(zip(dm["conv_id"], dm["turn_idx"])) == list(
+        zip(want["conv_id"], want["turn_idx"])
+    )
 
     # resume: a second build sees every segment committed and adds nothing
     again = build_index(
         spark, turns, store, rows_per_segment=300, input_desc=src,
-        docid_map_mode="virtual",
     )
     assert [m.segment_id for m in again] == [m.segment_id for m in metas]
+
+
+def test_docid_map_follows_the_input(spark, tmp_path_factory, jobs_in_window):
+    """Default arguments, 3,000 turns, one segment: dense input writes the
+    conv bases and no batch-map files in 4 Spark jobs (a build that copied
+    the corpus ran 7); non-dense input (``turn_idx*3+7``) writes the batch
+    map on ONE corpus aggregation in 7 jobs.  A second run adds nothing."""
+    from pyspark.sql import functions as F
+
+    base = tmp_path_factory.mktemp("mapchoice")
+    dense = spark.createDataFrame(gen_transcripts(3000))
+    sparse = dense.withColumn("turn_idx", F.col("turn_idx") * 3 + 7)
+    for label, turns, mode, want_jobs in [
+        ("dense", dense, "virtual", 4), ("sparse", sparse, "batch", 7),
+    ]:
+        store = SegmentStore(str(base / label))
+        metas, got, started = jobs_in_window(
+            f"map-{label}", lambda: build_index(spark, turns, store)
+        )
+        assert got == started and len(started) == want_jobs, (label, started)
+        assert store.docid_map_mode() == mode
+        map_files = [
+            f for f in (
+                os.listdir(store.docid_map_dir())
+                if os.path.isdir(store.docid_map_dir()) else ()
+            ) if f.endswith(".parquet")
+        ]
+        assert bool(map_files) == (mode == "batch"), label
+        assert os.path.isdir(store.conv_bases_dir()) == (mode == "virtual")
+        assert [m.segment_id for m in build_index(spark, turns, store)] == [
+            m.segment_id for m in metas
+        ]
+        assert len(store.segments()) == len(metas) == 1
 
 
 def test_with_hits_from_segments(spark, tmp_path_factory):
@@ -750,7 +793,7 @@ def test_with_hits_from_segments(spark, tmp_path_factory):
 
 def test_nrt_append_onto_virtual_store(spark, tmp_path_factory):
     """NRT micro-segments compose with a virtual-docid_map batch store: the
-    combined map = virtual batch part + materialized NRT slices."""
+    combined map = the conv bases' keys + the NRT slices' keys."""
     from trinity_spark.streaming.nrt import append_micro_segment
 
     base = tmp_path_factory.mktemp("virt-nrt")
@@ -760,7 +803,7 @@ def test_nrt_append_onto_virtual_store(spark, tmp_path_factory):
     store = SegmentStore(str(base / "idx"))
     build_index(
         spark, spark.read.parquet(src), store, rows_per_segment=600,
-        input_desc=src, docid_map_mode="virtual",
+        input_desc=src,
     )
     extra = gen_transcripts(200, seed=99)
     meta = append_micro_segment(spark, store, spark.createDataFrame(extra))
@@ -1339,10 +1382,7 @@ def test_nrt_append_job_count(spark, tmp_path_factory):
     keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
     before = {k: spark.conf.get(k, None) for k in keys}
     store = SegmentStore(str(tmp_path_factory.mktemp("appendjobs") / "idx"))
-    build_index(
-        spark, spark.createDataFrame(gen_transcripts(2000)), store,
-        docid_map_mode="virtual",
-    )
+    build_index(spark, spark.createDataFrame(gen_transcripts(2000)), store)
     batch = spark.createDataFrame(gen_transcripts(500, seed=10))
     jobs = _job_count(
         spark, "nrt-append-500",

@@ -67,14 +67,14 @@ def test_append_jobs_stay_in_callers_job_group(spark, seeded_store, jobs_in_wind
     assert started and got == started, (sorted(got), sorted(started))
 
 
-@pytest.mark.parametrize("mode", ["materialized", "virtual"])
+@pytest.mark.parametrize("mode", ["batch", "virtual"])
 def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
     """An NRT slice holds only (conv_id, turn_idx, doc_id); the index keeps
-    ids, the caller keeps the text.  The key-only footers must not drive
-    the batch map's schema: read_docid_map keeps the batch rows' text with
-    one row per doc id, a resumed materialized build re-encodes a lost
-    segment from that read rank-identically, and replace_documents finds
-    and masks old versions in the batch map and in the slices."""
+    ids, the caller keeps the text.  Over a batch map (non-dense input) or
+    conv bases (dense input), read_docid_map serves exactly those keys with
+    one row per doc id, a resumed batch-map build re-encodes a lost segment
+    from the batch map rank-identically, and replace_documents finds and
+    masks old versions in the batch part and in the slices."""
     import pandas as pd
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -83,6 +83,8 @@ def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
     from trinity_spark.streaming.nrt import replace_documents
 
     corpus0 = gen_transcripts(N0)
+    if mode == "batch":
+        corpus0["turn_idx"] = corpus0["turn_idx"] * 3 + 7  # same order, gappy
     corpus1 = gen_transcripts(N1, seed=99)
     corpus1["conv_id"] = "nrt-" + corpus1["conv_id"]  # keys disjoint from corpus0
     src = str(tmp_path / "input")
@@ -90,8 +92,9 @@ def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
     store = SegmentStore(str(tmp_path / "idx"))
     build_index(
         spark, spark.read.parquet(src), store, rows_per_segment=N0 // 2,
-        input_desc=src, docid_map_mode=mode,
+        input_desc=src,
     )
+    assert store.docid_map_mode() == mode
     append_micro_segment(spark, store, spark.createDataFrame(corpus1))
 
     nrt_root = os.path.join(store.docid_map_dir(), "nrt")
@@ -105,17 +108,20 @@ def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
         names == ["conv_id", "turn_idx", "doc_id"] for names in footers
     )
 
+    dm = store.read_docid_map(spark)
+    assert dm.columns == ["conv_id", "turn_idx", "doc_id"]
+    assert dm.count() == dm.select("doc_id").distinct().count() == N0 + N1
+    s0 = corpus0.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    keys = {
+        r["doc_id"]: (r["conv_id"], r["turn_idx"])
+        for r in dm.where(F.col("doc_id") < N0).collect()
+    }
+    assert keys == dict(enumerate(zip(s0["conv_id"], s0["turn_idx"])))
+
     oracle = _oracle_for(corpus0, corpus1)
-    if mode == "materialized":
-        dm = store.read_docid_map(spark)
-        assert dm.count() == dm.select("doc_id").distinct().count() == N0 + N1
-        texts = {
-            r["doc_id"]: r["text"]
-            for r in dm.where(F.col("doc_id") < N0).select("doc_id", "text").collect()
-        }
-        assert texts == dict(docs_in_stable_order(corpus0))
+    if mode == "batch":
         # a crash lost the second build segment's commit: the resumed build
-        # re-encodes it from the docid map, text included
+        # re-encodes it from the batch map, text included
         lost = f"seg-{N0 // 2:014d}-{N0:014d}"
         with store._manifest_lock():
             m = store.read_manifest()
@@ -123,7 +129,6 @@ def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
             store._write_manifest(m)
         rebuilt = build_index(
             spark, spark.read.parquet(src), store, input_desc=src,
-            docid_map_mode=mode,
         )
         assert [s.segment_id for s in rebuilt][-1] == lost
         assert store.fsck(spark, deep=True)["ok"]
@@ -139,8 +144,7 @@ def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
             for (_, gs), (_, ws) in zip(got, want):
                 assert abs(gs - ws) <= 1e-9, q
 
-    # one key whose live version sits in the batch map, one in a slice
-    s0 = corpus0.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    # one key whose live version sits in the batch part, one in a slice
     s1 = corpus1.sort_values(["conv_id", "turn_idx"], kind="mergesort")
     upd = pd.concat([s0.iloc[[3]], s1.iloc[[5]]]).reset_index(drop=True)
     upd["text"] = ["qqkeyslicemarker one", "qqkeyslicemarker two"]
@@ -152,6 +156,114 @@ def test_key_only_slices_keep_the_docid_map_whole(spark, tmp_path, mode):
     assert sorted(
         r["doc_id"] for r in planner.plan("qqkeyslicemarker", k=5).collect()
     ) == [meta.doc_lo, meta.doc_lo + 1]
+    assert store.fsck(spark, deep=True)["ok"]
+    # rank identity after the build, the append and the replace
+    docs = docs_in_stable_order(corpus0)
+    docs += [(d + N0, t) for d, t in docs_in_stable_order(corpus1)]
+    docs += [(d + meta.doc_lo, t) for d, t in docs_in_stable_order(upd)]
+    oracle = OracleIndex.build(docs, deleted={3, N0 + 5})
+    for q in ["error", "qqkeyslicemarker OR timeout", "retry OR backoff"]:
+        node = parse_query(q)
+        want = oracle.topk(node, k=10)
+        got = [
+            (r["doc_id"], r["score"]) for r in planner.plan(node, k=10).collect()
+        ]
+        assert [d for d, _ in got] == [d for d, _ in want], q
+        for (_, gs), (_, ws) in zip(got, want):
+            assert abs(gs - ws) <= 1e-9, q
+
+
+@pytest.mark.parametrize("dense", [True, False])
+def test_build_over_nrt_slices_refuses_before_writing(spark, tmp_path, dense):
+    """NRT appends into an empty store already hold doc ids from 0; a build
+    into it would number its corpus from 0 again, so every id would map to
+    two keys (and the batch map's overwrite would eat the slices).  Phase 0
+    refuses for either map before anything is written: the manifest is
+    unchanged, no conv_bases/ exists and the slices survive."""
+    store = SegmentStore(str(tmp_path / "idx"))
+    append_micro_segment(
+        spark, store, spark.createDataFrame(gen_transcripts(N1, seed=5))
+    )
+    before = store.read_manifest()
+    nrt_root = os.path.join(store.docid_map_dir(), "nrt")
+    slices = sorted(os.listdir(nrt_root))
+    corpus = gen_transcripts(N1)
+    if not dense:
+        corpus["turn_idx"] = corpus["turn_idx"] * 3 + 7
+    with pytest.raises(RuntimeError, match="NRT micro-segment slices"):
+        build_index(spark, spark.createDataFrame(corpus), store)
+    assert store.read_manifest() == before
+    assert not os.path.exists(store.conv_bases_dir())
+    assert sorted(os.listdir(nrt_root)) == slices
+    dm = store.read_docid_map(spark)
+    assert dm.count() == dm.select("doc_id").distinct().count() == N1
+
+
+def test_build_resumes_on_the_recorded_docid_map(spark, tmp_path):
+    """A store whose manifest records a docid map resumes on that map, NRT
+    slices notwithstanding: a batch map of DENSE input (the layout a build
+    wrote before the input picked the map) stays the store's map, no conv
+    bases are written, and a lost segment is re-encoded from it
+    rank-identically."""
+    from trinity_spark.operators.docids import assign_doc_ids
+
+    corpus0 = gen_transcripts(N0)
+    corpus1 = gen_transcripts(N1, seed=99)
+    df = spark.createDataFrame(corpus0)
+    store = SegmentStore(str(tmp_path / "idx"))
+    store.write_docid_map(assign_doc_ids(df), n_docs=N0, layout=False)
+    build_index(spark, df, store, rows_per_segment=N0 // 2)
+    append_micro_segment(spark, store, spark.createDataFrame(corpus1))
+    lost = f"seg-{N0 // 2:014d}-{N0:014d}"
+    with store._manifest_lock():
+        m = store.read_manifest()
+        m["segments"] = [s for s in m["segments"] if s["segment_id"] != lost]
+        store._write_manifest(m)
+    rebuilt = build_index(spark, df, store)
+    assert [s.segment_id for s in rebuilt][-1] == lost
+    assert store.docid_map_mode() == "batch"
+    assert not os.path.exists(store.conv_bases_dir())
+    assert store.fsck(spark, deep=True)["ok"]
+    oracle = _oracle_for(corpus0, corpus1)
+    planner = QueryPlanner(SegmentIndex(spark, store))
+    for q in ["error", "error AND timeout", "retry OR backoff"]:
+        node = parse_query(q)
+        want = oracle.topk(node, k=10)
+        got = [(r["doc_id"], r["score"]) for r in planner.plan(node, k=10).collect()]
+        assert [d for d, _ in got] == [d for d, _ in want], q
+
+
+def test_replace_documents_without_the_input(spark, tmp_path):
+    """replace_documents needs nothing but the store: dense input built
+    from a parquet path with default arguments keeps no copy of the text
+    under docid_map/, and after the input path is deleted a replace still
+    finds and masks the old version."""
+    import shutil
+
+    from trinity_spark.fixtures import docs_in_stable_order
+    from trinity_spark.streaming.nrt import replace_documents
+
+    corpus0 = gen_transcripts(N0)
+    src = str(tmp_path / "input")
+    spark.createDataFrame(corpus0).write.parquet(src)
+    store = SegmentStore(str(tmp_path / "idx"))
+    build_index(spark, spark.read.parquet(src), store, input_desc=src)
+    assert not os.path.exists(store.docid_map_dir())
+    shutil.rmtree(src)
+
+    s0 = corpus0.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    upd = s0.iloc[[7]].reset_index(drop=True)
+    upd["text"] = ["qqnoinputmarker"]
+    meta = replace_documents(spark, store, spark.createDataFrame(upd))
+    assert [r["doc_id"] for r in store.read_deletes(spark).collect()] == [7]
+    docs = docs_in_stable_order(corpus0) + [(meta.doc_lo, "qqnoinputmarker")]
+    oracle = OracleIndex.build(docs, deleted={7})
+    planner = QueryPlanner(SegmentIndex(spark, store))
+    for q in ["qqnoinputmarker", "error", "error AND timeout"]:
+        node = parse_query(q)
+        want = oracle.topk(node, k=10)
+        got = [(r["doc_id"], r["score"]) for r in planner.plan(node, k=10).collect()]
+        assert [d for d, _ in got] == [d for d, _ in want], q
     assert store.fsck(spark, deep=True)["ok"]
 
 
@@ -667,9 +779,11 @@ def test_replace_documents_replayed_after_crash_keeps_new_docs(
     doc_id < the committed high-water mark)."""
     import pandas as pd
 
+    from trinity_spark.fixtures import docs_in_stable_order
     from trinity_spark.operators.docids import assign_doc_ids
     from pyspark.sql import functions as F
     from trinity_spark.streaming.nrt import next_doc_id, replace_documents
+    from trinity_spark.tokenizer import tokenize_py
 
     store, corpus0 = seeded_store
     s = corpus0.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(
@@ -701,11 +815,16 @@ def test_replace_documents_replayed_after_crash_keeps_new_docs(
     assert [r["doc_id"] for r in planner.plan("qqreplaymarker", k=5).collect()] == [
         base
     ]
-    # and exactly one old version was masked
-    assert 3 not in [
-        r["doc_id"]
-        for r in planner.plan(parse_query("<error>"), k=N0 + 5).collect()
-    ] or True  # old doc content varies; the hard check is the marker above
+    # the old version is masked: a term of doc 3's original text no longer
+    # matches it, while the unmasked docs holding the term still match
+    docs0 = docs_in_stable_order(corpus0)
+    others = {
+        t: {d for d, text in docs0 if d != 3 and t in tokenize_py(text)}
+        for t in tokenize_py(docs0[3][1])
+    }
+    term = next(t for t in sorted(others) if others[t])
+    hits = {r["doc_id"] for r in planner.plan(term, k=N0 + 5).collect()}
+    assert 3 not in hits and others[term] <= hits
     deletes = store.read_deletes(spark)
     assert deletes is not None
     masked = [r["doc_id"] for r in deletes.collect()]

@@ -49,7 +49,7 @@ def test_spark_submit_py_files_build(spark, tmp_path):
             "--py-files", zip_path,
             os.path.join(REPO, "scripts", "submit_build.py"),
             "--input", src, "--index-dir", index_dir,
-            "--rows-per-segment", "800", "--docid-map-mode", "virtual",
+            "--rows-per-segment", "800",
         ],
         capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
     )
@@ -102,7 +102,7 @@ def test_spark_submit_maintenance_cli(spark, tmp_path, capsys):
         common + [
             os.path.join(REPO, "scripts", "submit_build.py"),
             "--input", src, "--index-dir", index_dir,
-            "--rows-per-segment", "500", "--docid-map-mode", "virtual",
+            "--rows-per-segment", "500",
         ],
         capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
     )

@@ -23,15 +23,17 @@ Conversation-decomposed assignment instead (doc_id = conv_base + rank-in-conv):
    collected per-partition counts inside the enumerate task and fails loudly
    on mismatch, so a lost-block recompute with different sampling can never
    silently skip/duplicate ids;
-3. ``assign_doc_ids`` joins conv bases back onto the corpus on conv_id
-   (broadcast when the conv table is small, shuffle-join otherwise) and
-   computes ``doc_id = base + turn_idx`` when turn_idx is dense 0..n-1 per
-   conv (validated exactly, from the same aggregation — zero extra cost),
-   else ``base + row_number() over (partitionBy conv_id orderBy turn_idx) -
-   1``.  That join feeds the MATERIALIZED docid map (non-dense input, or a
-   store that must be self-contained).  A dense VIRTUAL build never joins:
-   its fused encode pass attaches ``base + turn_idx`` worker-side from the
-   persisted bases, one segment's conv slice per worker, at any conv count.
+3. the input picks the map.  DENSE turn_idx (0..n-1 per conv, validated
+   exactly from the same aggregation — zero extra cost) needs nothing but
+   the bases: ``doc_id = base + turn_idx``, so a build persists the conv
+   table alone, attaches ids worker-side in its fused encode pass (one
+   segment's conv slice per worker, at any conv count) and never joins.
+   NON-DENSE input takes ``attach_bases``: the bases join back onto the
+   corpus on conv_id (broadcast when the conv table is small, shuffle-join
+   otherwise) and ``doc_id = base + row_number() over (partitionBy conv_id
+   orderBy turn_idx) - 1``.  Only a frozen copy gives duplicate (conv_id,
+   turn_idx) keys stable ids, so that join feeds the build's BATCH map.
+   NRT batches (``assign_doc_ids``) join in either case.
 
 Total corpus passes: ONE scan + (broadcast case) zero shuffles — versus the
 old sample-scan + full shuffle-sort + persist.  n_docs falls out of the conv
@@ -52,8 +54,8 @@ from pyspark.sql import functions as F
 ORDER_COLS = ("conv_id", "turn_idx")
 
 # conv tables up to this many rows are enumerated driver-side (_conv_bases)
-# and ride a broadcast join in assign_doc_ids / SegmentStore.attach_doc_ids;
-# bigger ones take the distributed enumerate and a conv_id shuffle join.
+# and ride a broadcast join in attach_bases; bigger ones take the
+# distributed enumerate and a conv_id shuffle join.
 # Sized by memory, not superstition: a bases row is ~40 bytes (conv_id
 # string + two longs), so 8M convs is a ~320 MB broadcast hash relation —
 # comfortable under an 8g+ driver/executor and far below Spark's 8 GB
@@ -142,9 +144,8 @@ def _conv_bases_driver(
             "base": pa.array(base, type=pa.int64()),
         }
     )
-    if writer is not None:
-        if dense:
-            writer(bases, n_docs, n_convs)
+    if writer is not None and dense:
+        writer(bases, n_docs, n_convs)
         return None, n_docs, n_convs, dense
     return spark.createDataFrame(bases.to_pandas()), n_docs, n_convs, dense
 
@@ -155,14 +156,14 @@ def _conv_bases(
     """Per-conversation (base, n_turns) with base = #turns in all earlier
     conv_ids.  Returns (bases_df, n_docs, n_convs, turn_idx_is_dense).
 
-    ``writer(bases_df, n_docs, n_convs)``: when given AND the corpus is
-    dense, the (lazy) bases frame is handed to the writer for its ONE
-    materialization (e.g. the store's conv_bases parquet write) instead of
-    being localCheckpoint'ed — one pass over the conv table instead of
-    two, and the returned bases_df is None (the writer's sink owns the
-    data).  When the corpus is NOT dense the writer is never called (the
-    caller falls back to the materialized map) and no bases pass runs at
-    all."""
+    ``writer(bases, n_docs, n_convs)``: when given AND the corpus is
+    dense, the bases (a pyarrow Table driver-side, else the lazy
+    enumerate frame) go to the writer for their ONE materialization (the
+    store's conv_bases write) instead of being localCheckpoint'ed — one
+    pass over the conv table instead of two — and the returned bases_df is
+    None (the writer's sink owns the data).  A NON-dense corpus never
+    reaches the writer: its bases frame comes back for ``attach_bases``,
+    so the caller needs no second corpus aggregation."""
     convs = df.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.min("turn_idx").alias("min_idx"),
@@ -279,14 +280,13 @@ def _conv_bases(
                 f"expected {expect.get(pid, 0)}"
             )
 
-    if writer is not None:
+    if writer is not None and dense:
         try:
-            if dense:
-                writer(
-                    ordered.mapInArrow(enumerate_convs, _BASES_SCHEMA),
-                    n_docs,
-                    n_convs,
-                )
+            writer(
+                ordered.mapInArrow(enumerate_convs, _BASES_SCHEMA),
+                n_docs,
+                n_convs,
+            )
         finally:
             ordered.unpersist()
         return None, n_docs, n_convs, dense
@@ -303,15 +303,11 @@ def _conv_bases(
     return bases, n_docs, n_convs, dense
 
 
-def assign_doc_ids_counted(
-    df: DataFrame, num_partitions: int | None = None
-) -> tuple[DataFrame, int]:
-    """``assign_doc_ids`` + total row count (known driver-side for free from
-    the conv aggregation — no separate count job)."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 4)
-    bases, n_docs, n_convs, dense = _conv_bases(df, num_partitions)
+def attach_bases(
+    df: DataFrame, bases: DataFrame, n_convs: int, dense: bool
+) -> DataFrame:
+    """``df`` + ``doc_id`` from its ``_conv_bases`` result: join the bases
+    back on conv_id and number each conv's turns from its base."""
     bases = bases.select("conv_id", "base")
     if n_convs <= BROADCAST_MAX_CONVS:
         bases = F.broadcast(bases)
@@ -321,10 +317,20 @@ def assign_doc_ids_counted(
     else:
         w = Window.partitionBy("conv_id").orderBy("turn_idx")
         doc_id = F.col("base") + F.row_number().over(w).cast("long") - F.lit(1).cast("long")
-    out = joined.select(
+    return joined.select(
         *[F.col(c) for c in df.columns], doc_id.cast("long").alias("doc_id")
     )
-    return out, n_docs
+
+
+def assign_doc_ids_counted(
+    df: DataFrame, num_partitions: int | None = None
+) -> tuple[DataFrame, int]:
+    """``assign_doc_ids`` + total row count (known driver-side for free from
+    the conv aggregation — no separate count job)."""
+    if num_partitions is None:
+        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 4)
+    bases, n_docs, n_convs, dense = _conv_bases(df, num_partitions)
+    return attach_bases(df, bases, n_convs, dense), n_docs
 
 
 def assign_doc_ids(df: DataFrame, num_partitions: int | None = None) -> DataFrame:

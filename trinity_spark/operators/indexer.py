@@ -4,9 +4,10 @@ Pipeline (SURVEY.md §3.3 — the Spark re-expression of
 ``SegmentIndexSession::commit``, ``/root/reference/indexer.cpp:311-564``):
 
     transcripts
-      -> assign_doc_ids (dense, stable (conv_id, turn_idx) order)
       -> docid_map  (phase 0, written once — the two-ID-space translation
-                     table, index_source.h:100-114)
+                     table, index_source.h:100-114; dense, stable
+                     (conv_id, turn_idx) order: the conv bases for dense
+                     input, the batch map otherwise)
       -> per docid-range SEGMENT:
            fused tokenize -> postings -> delta+varbyte blocks in ONE
            mapInArrow pass (fastbuild.blocks_from_turns, zero data shuffles)
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.store import SegmentMeta, SegmentStore, _PinnedSnapshotStore
-from .docids import assign_doc_ids_counted
+from .docids import _conv_bases, attach_bases
 from .fastbuild import blocks_from_turns
 from .segments import decode_segments
 
@@ -78,9 +79,9 @@ def write_conf_scope(spark: SparkSession):
       driver-side cap) and the commit's term-hash write; an NRT batch is
       small.  AQE's per-stage re-optimization only adds serial latency,
       and it runs every cached relation as a job of its own (measured: an
-      NRT append ran 13 jobs under AQE, 6 without).  (A materialized
-      build past the cap still hash-joins the corpus in assign_doc_ids,
-      with AQE off.)
+      NRT append ran 13 jobs under AQE, 6 without).  (A non-dense build
+      past the cap still hash-joins the corpus in attach_bases, with AQE
+      off.)
 
     ``spark.sql.files.maxPartitionBytes`` is saved too: the build sets its
     fine encode splits inside the scope.  The confs are SESSION-wide, so
@@ -117,7 +118,7 @@ def build_index(
     rows_per_segment: int | None = None,
     input_desc: str = "unknown",
     chunk_bits: int | None = None,
-    docid_map_mode: str = "materialized",
+    docid_map_mode: str = "virtual",
     codec: str | None = None,
 ) -> list[SegmentMeta]:
     """Build (or resume) the full index; returns committed segment metas.
@@ -130,22 +131,32 @@ def build_index(
     store's values (the defaults for a fresh store); an explicit value that
     conflicts with the store raises before phase 0 reads any input.
 
-    ``docid_map_mode``:
-    - ``"materialized"`` (default): phase 0 writes the full (turns + doc_id)
-      parquet map — a second copy of the corpus, laid out by doc range when
-      multiple segments will slice it.
-    - ``"virtual"``: phase 0 persists only the per-conversation base table
-      (conv_id, n_turns, base) and the manifest rule ``doc_id = base +
-      turn_idx`` — no corpus copy at all (at 100 TB the materialized map
-      doubles storage).  Segments read the ORIGINAL input and the fused
-      encode pass attaches ``doc_id = base + turn_idx`` worker-side at any
-      conv count: each Python worker loads only its segment's conv_id slice
-      of the bases, and the same conv_id range predicate pushes down to the
-      input's parquet/Iceberg scan (conv ranges per segment come from one
-      pass over the small conv table).  No join, no corpus shuffle.
-      Requires dense 0-based per-conv turn_idx (validated; falls back to
-      materialized otherwise).
+    The input picks the docid map; phase 0 writes it once:
+    - DENSE 0-based per-conv turn_idx (validated exactly by phase 0's conv
+      aggregation): only the per-conversation base table (conv_id,
+      n_turns, base) and the manifest rule ``doc_id = base + turn_idx`` —
+      no corpus copy at all (at 100 TB a copy would double storage).
+      Segments read the ORIGINAL input and the fused encode pass attaches
+      ``doc_id = base + turn_idx`` worker-side at any conv count: each
+      Python worker loads only its segment's conv_id slice of the bases,
+      and the same conv_id range predicate pushes down to the input's
+      parquet/Iceberg scan (conv ranges per segment come from one pass
+      over the small conv table).  No join, no corpus shuffle.
+    - Otherwise the BATCH map: the turns + doc_id written once, laid out by
+      doc range, and segments encode from it.  Only a frozen copy gives
+      duplicate (conv_id, turn_idx) keys stable ids.
+    A store whose manifest already records a docid map resumes on that map
+    and never writes a second one; phase 0 refuses to write a map over
+    committed NRT slices (``SegmentStore.refuse_map_over_nrt_slices``).
+    ``docid_map_mode`` accepts only ``"virtual"``, its default; any other
+    value raises before any Spark job.
     """
+    if docid_map_mode != "virtual":
+        raise ValueError(
+            f"docid_map_mode={docid_map_mode!r}: the input picks the docid "
+            "map (conv bases for dense turn_idx, the batch map otherwise); "
+            "the only accepted value is 'virtual'"
+        )
     codec, chunk_bits = store.resolve_layout(codec, chunk_bits)
     # Build-scoped fine scan splits: the fused tokenize/encode pass is
     # CPU-bound, so 4 MiB splits keep the last wave short at every core
@@ -165,7 +176,7 @@ def build_index(
     with write_conf_scope(spark):
         return _build_index_inner(
             spark, turns, store, rows_per_segment, input_desc, chunk_bits,
-            docid_map_mode, codec,
+            codec,
         )
 
 
@@ -176,11 +187,8 @@ def _build_index_inner(
     rows_per_segment: int | None,
     input_desc: str,
     chunk_bits: int,
-    docid_map_mode: str,
     codec: str,
 ) -> list[SegmentMeta]:
-    import os
-
     explicit_rps = rows_per_segment is not None
 
     def _rps(n_docs: int) -> int:
@@ -252,31 +260,47 @@ def _build_index_inner(
 
     # phase 0: docid assignment (skipped on resume); n_docs falls out of the
     # conv aggregation driver-side, so no separate count job runs
-    seg_conv_bounds: dict[int, tuple[str, str]] = {}
-    if docid_map_mode == "virtual":
-        from .docids import _conv_bases
-
-        if store.docid_map_mode() != "virtual":
-            num_partitions = max(spark.sparkContext.defaultParallelism, 4)
-            # the store's parquet write IS the bases frame's one
-            # materialization (writer mode): one pass over the conv table
-            # instead of localCheckpoint + write
-            _, n_docs, n_convs, dense = _conv_bases(
-                turns,
-                num_partitions,
-                writer=lambda b, nd, nc: store.write_conv_bases(
-                    b, nd, nc, input_desc
-                ),
+    if "docid_map" not in store.read_manifest():
+        store.refuse_map_over_nrt_slices()  # before the corpus aggregation
+        num_partitions = max(spark.sparkContext.defaultParallelism, 4)
+        # dense input: the store's parquet write IS the bases' one
+        # materialization (writer mode).  Non-dense input gets the bases
+        # back and joins them: one corpus aggregation either way
+        bases, n_docs, n_convs, dense = _conv_bases(
+            turns,
+            num_partitions,
+            writer=lambda b, nd, nc: store.write_conv_bases(
+                b, nd, nc, input_desc
+            ),
+        )
+        if not dense:
+            rows_per_segment = _rps(n_docs)
+            # Doc-range layout pays twice: (1) >1 segment re-reads range
+            # slices of the map, and (2) — the one that matters even for a
+            # single segment — BLOCK GEOMETRY.  Past BROADCAST_MAX_CONVS the
+            # doc-id assignment join is a conv_id HASH shuffle, so without
+            # the range layout each encoder partition holds docs sampled
+            # from the WHOLE corpus: blocks come out thousands of docs wide
+            # with huge deltas (measured at 10M turns: avg block width 6.4k
+            # docs for a stopword, 26k for mid-df terms, duplicate partial
+            # blocks per (term, chunk)), which kills every skip structure
+            # (chunk/span restriction, block-max bounds are all vacuous)
+            # and bloats the varbyte wire.  The reference's postings are
+            # doc-ordered by construction (indexer.cpp:395-420 posting
+            # sort); the range shuffle is our equivalent invariant, so it
+            # is NOT optional at scale.
+            store.write_docid_map(
+                attach_bases(turns, bases, n_convs, dense),
+                n_docs=n_docs,
+                layout=n_docs > min(rows_per_segment, _LAYOUT_MIN_DOCS),
             )
-            if not dense:
-                # the arithmetic rule needs dense turn_idx; fall back
-                return build_index(
-                    spark, turns, store, rows_per_segment, input_desc,
-                    chunk_bits, docid_map_mode="materialized", codec=codec,
-                )
-        n_docs = store.docid_map_count(spark)
-        rows_per_segment = _rps(n_docs)
-        docmap = None  # the fused pass attaches doc ids itself
+    n_docs = store.docid_map_count(spark)
+    rows_per_segment = _rps(n_docs)
+    seg_conv_bounds: dict[int, tuple[str, str]] = {}
+    docmap = None  # conv bases: the fused pass attaches doc ids itself
+    if store.docid_map_mode() != "virtual":
+        docmap = store.read_batch_map(spark)
+    elif rows_per_segment < n_docs:
         # per-segment conv_id ranges (one job over the small conv table):
         # segment s covers convs whose [base, base+n) intersects its range.
         # A SINGLE-segment build needs neither the job nor the predicate —
@@ -285,48 +309,21 @@ def _build_index_inner(
         # capped measured build-scaling efficiency at the one-segment
         # scaling unit); its workers load the whole bases table.
         r = rows_per_segment
-        if r < n_docs:
-            spans = store.read_conv_bases(spark).select(
-                "conv_id",
-                F.explode(
-                    F.sequence(
-                        (F.col("base") / r).cast("long"),
-                        ((F.col("base") + F.col("n_turns") - 1) / r).cast("long"),
-                    )
-                ).alias("seg"),
-            )
-            for row in (
-                spans.groupBy("seg")
-                .agg(F.min("conv_id").alias("lo"), F.max("conv_id").alias("hi"))
-                .collect()
-            ):
-                seg_conv_bounds[int(row["seg"])] = (row["lo"], row["hi"])
-    elif not os.path.exists(os.path.join(store.docid_map_dir(), "_SUCCESS")):
-        with_ids, n_docs = assign_doc_ids_counted(turns)
-        rows_per_segment = _rps(n_docs)
-        # Doc-range layout pays twice: (1) >1 segment re-reads range slices
-        # of the map, and (2) — the one that matters even for a single
-        # segment — BLOCK GEOMETRY.  Past BROADCAST_MAX_CONVS the doc-id
-        # assignment join is a conv_id HASH shuffle, so without the range
-        # layout each encoder partition holds docs sampled from the WHOLE
-        # corpus: blocks come out thousands of docs wide with huge deltas
-        # (measured at 10M turns: avg block width 6.4k docs for a stopword,
-        # 26k for mid-df terms, duplicate partial blocks per (term, chunk)),
-        # which kills every skip structure (chunk/span restriction,
-        # block-max bounds are all vacuous) and bloats the varbyte wire.
-        # The reference's postings are doc-ordered by construction
-        # (indexer.cpp:395-420 posting sort); the range shuffle is our
-        # equivalent invariant, so it is NOT optional at scale.
-        store.write_docid_map(
-            with_ids,
-            n_docs=n_docs,
-            layout=n_docs > min(rows_per_segment, _LAYOUT_MIN_DOCS),
+        spans = store.read_conv_bases(spark).select(
+            "conv_id",
+            F.explode(
+                F.sequence(
+                    (F.col("base") / r).cast("long"),
+                    ((F.col("base") + F.col("n_turns") - 1) / r).cast("long"),
+                )
+            ).alias("seg"),
         )
-        docmap = store.read_docid_map(spark)
-    else:
-        n_docs = store.docid_map_count(spark)
-        docmap = store.read_docid_map(spark)
-    rows_per_segment = _rps(n_docs)
+        for row in (
+            spans.groupBy("seg")
+            .agg(F.min("conv_id").alias("lo"), F.max("conv_id").alias("hi"))
+            .collect()
+        ):
+            seg_conv_bounds[int(row["seg"])] = (row["lo"], row["hi"])
 
     # Coverage-based resume skip (not just exact segment-id match): after a
     # merge the range lives in a merged-* segment, and nrt appends may tile a

@@ -16,11 +16,14 @@ snapshot — it is one manifest write here too):
 
     <base>/
       manifest.json                 # atomic: tmp + os.replace
-      docid_map/                    # batch map: doc_id <-> (conv_id, turn_idx)
-                                    #   + the turn cols (materialized builds)
+      conv_bases/                   # dense-input builds: conv_id ->
+                                    #   (n_turns, base); doc_id = base +
+                                    #   turn_idx, no corpus copy
+      docid_map/                    # batch map (non-dense-input builds):
+                                    #   the turns + doc_id, laid out by doc
+                                    #   range — the build's frozen copy
         nrt/<segment_id>/           # NRT slices: keys only (conv_id,
                                     #   turn_idx, doc_id) — no text
-      conv_bases/                   # virtual builds: conv_id -> base
       segments/<segment_id>/
         postings/   (block rows, written sorted by term -> parquet min/max
                      column stats give term-seek, the terms.idx analog)
@@ -392,19 +395,7 @@ class SegmentStore:
         files/row-groups via parquet min/max stats instead of scanning the
         whole corpus.  Single-segment builds pass ``layout=False`` — the one
         segment reads everything anyway, so the range shuffle is pure cost."""
-        nrt_dir = os.path.join(self.docid_map_dir(), "nrt")
-        if os.path.isdir(nrt_dir) and os.listdir(nrt_dir):
-            # mode('overwrite') below replaces the docid_map ROOT — it would
-            # silently destroy the committed NRT micro-segments' doc_id
-            # translations under nrt/.  A batch (re)build over a store with
-            # NRT appends would fail its overlap guard anyway, but only
-            # AFTER this write had already eaten the slices — fail first.
-            raise RuntimeError(
-                "docid_map holds NRT micro-segment slices; rewriting the "
-                "batch map would destroy their doc_id translations — merge "
-                "the NRT segments first (operators.merge) or build into a "
-                "fresh store"
-            )
+        self.refuse_map_over_nrt_slices()
         df = turns_with_ids
         if n_docs and layout:
             import math
@@ -422,6 +413,22 @@ class SegmentStore:
                 m["docid_map"] = {"n_docs": int(n_docs)}
                 self._write_manifest(m)
 
+    def refuse_map_over_nrt_slices(self) -> None:
+        """A batch map or conv bases written over committed NRT slices
+        breaks the doc-id space: the batch map's overwrite of the
+        docid_map ROOT would destroy the slices' translations, and either
+        map would number the batch from 0 again, over ids the slices
+        already hold.  Build phase 0 and ``write_docid_map`` call this
+        before they write anything."""
+        nrt_dir = os.path.join(self.docid_map_dir(), "nrt")
+        if os.path.isdir(nrt_dir) and os.listdir(nrt_dir):
+            raise RuntimeError(
+                "docid_map holds NRT micro-segment slices; a build's docid "
+                "map would collide with their doc_id translations — merge "
+                "the NRT segments first (operators.merge) or build into a "
+                "fresh store"
+            )
+
     def write_conv_bases(
         self,
         bases: DataFrame,
@@ -429,12 +436,12 @@ class SegmentStore:
         n_convs: int,
         input_desc: str,
     ) -> None:
-        """VIRTUAL docid_map: persist only the per-conversation base table
-        (conv_id, n_turns, base) — ~10-100x smaller than the corpus — plus
-        the derivation rule ``doc_id = base + turn_idx`` recorded in the
-        manifest.  At 100 TB the materialized map would DOUBLE the corpus on
-        disk; the conv table is the minimal deterministic checkpoint that
-        reproduces the exact same assignment from the (immutable) input.
+        """The docid_map of DENSE input: persist only the per-conversation
+        base table (conv_id, n_turns, base) — ~10-100x smaller than the
+        corpus — plus the derivation rule ``doc_id = base + turn_idx``
+        recorded in the manifest.  The conv table alone gives every key:
+        ``(conv_id, t)`` for ``0 <= t < n_turns`` maps to ``base + t``, so
+        no copy of the corpus is written and none is ever read back.
 
         ``bases`` is either a DataFrame (distributed enumerate) or a
         pyarrow Table (the driver-side enumerate of broadcast-feasible conv
@@ -468,68 +475,48 @@ class SegmentStore:
         return spark.read.parquet(self.conv_bases_dir())
 
     def docid_map_mode(self) -> str:
-        return self.read_manifest().get("docid_map", {}).get("mode", "materialized")
+        """``"virtual"`` (conv bases) or ``"batch"`` (the batch map, and
+        stores with no batch part yet)."""
+        return self.read_manifest().get("docid_map", {}).get("mode", "batch")
 
-    def attach_doc_ids(self, turns: DataFrame) -> DataFrame:
-        """Virtual-map resolution for readers of the translation table
-        (``read_docid_map``, e.g. NRT ``replace_documents``): join the input
-        to the persisted conv bases and compute doc_id arithmetically.  The
-        result is identical to the materialized map, rebuilt
-        deterministically from the frozen bases.  Builds never call this —
-        their fused encode pass attaches doc ids worker-side."""
-        spark = turns.sparkSession
-        m = self.read_manifest()["docid_map"]
-        bases = self.read_conv_bases(spark).select("conv_id", "base")
-        # broadcast up to the cap under which phase 0 enumerates the conv
-        # table driver-side (a table that fits the driver fits a broadcast);
-        # past it a plain shuffle join — row order does not matter here
-        from ..operators.docids import BROADCAST_MAX_CONVS
+    def read_batch_map(self, spark: SparkSession) -> DataFrame | None:
+        """The batch map's rows (the turns + doc_id), or None when the store
+        has none.  Its files sit directly in docid_map/ and are read apart
+        from the slices, whose key-only footers must not drive its schema."""
+        d = self.docid_map_dir()
+        files = sorted(
+            os.path.join(d, f)
+            for f in (os.listdir(d) if os.path.isdir(d) else ())
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+        return spark.read.parquet(*files) if files else None
 
-        if m.get("n_convs", 0) <= BROADCAST_MAX_CONVS:
-            bases = F.broadcast(bases)
-        joined = turns.join(bases, "conv_id")
-        doc_id = (F.col("base") + F.col("turn_idx").cast("long")).alias("doc_id")
-        return joined.select(*[F.col(c) for c in turns.columns], doc_id)
-
-    def read_docid_map(self, spark: SparkSession, turns: DataFrame | None = None) -> DataFrame:
-        """The doc_id <-> turn translation table.
-
-        Materialized mode: read the parquet batch map, plus the NRT slices'
-        keys.  Virtual mode: recompute from conv_bases over ``turns`` (the
-        original input frame), plus the NRT slices' keys; when ``turns`` is
-        None the recorded input path is read back — the input is immutable
-        by contract (its descriptor is lineage).  NRT rows carry the key
-        columns only; any other column is NULL on them."""
+    def read_docid_map(self, spark: SparkSession) -> DataFrame:
+        """The doc_id <-> key translation table: exactly ``(conv_id,
+        turn_idx, doc_id)``, one row per assigned doc id.  The batch part
+        comes from the conv bases (each conv's ``n_turns`` keys from
+        ``base``) or from the batch map's keys; the NRT slices add theirs.
+        The index holds ids, the application owns the text
+        (``indexer.h:181-206``): the input is never read back."""
         if self.docid_map_mode() == "virtual":
-            if turns is None:
-                src = self.read_manifest()["docid_map"]["input"]
-                if not os.path.exists(src):
-                    raise ValueError(
-                        "virtual docid_map: pass `turns` (recorded input "
-                        f"descriptor {src!r} is not a readable path)"
-                    )
-                turns = spark.read.parquet(src)
-            out = self.attach_doc_ids(turns)
-        else:
-            # the batch map's files sit directly in docid_map/; read them
-            # apart from the slices, whose key-only footers must not drive
-            # the batch map's schema inference
-            d = self.docid_map_dir()
-            files = sorted(
-                os.path.join(d, f)
-                for f in (os.listdir(d) if os.path.isdir(d) else ())
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            bases = self.read_conv_bases(spark)
+            t = F.explode(F.sequence(F.lit(0).cast("long"), F.col("n_turns") - 1))
+            batch = bases.select("conv_id", t.alias("t"), "base").select(
+                "conv_id",
+                F.col("t").alias("turn_idx"),
+                (F.col("base") + F.col("t")).alias("doc_id"),
             )
-            out = spark.read.parquet(*files) if files else None
+        else:
+            batch = self.read_batch_map(spark)
+            if batch is not None:
+                batch = batch.select(*_SLICE_COLS)
         slices = self._read_nrt_slices(spark)
-        if out is None:
+        if batch is None:
             if slices is None:
                 # nothing written yet: the read raises the usual error
                 return spark.read.parquet(self.docid_map_dir())
             return slices
-        if slices is None:
-            return out
-        return out.unionByName(slices, allowMissingColumns=True)
+        return batch if slices is None else batch.unionByName(slices)
 
     def _read_nrt_slices(self, spark: SparkSession) -> DataFrame | None:
         """Every NRT slice's keys, or None when there are none."""

@@ -182,11 +182,8 @@ def replace_documents(
             # only ids below the committed high-water mark can be live old
             # versions.  (Also hardens against the map scan listing files
             # lazily, after this call writes the new slice.)
-            dm = store.read_docid_map(spark).select(
-                "conv_id", "turn_idx", "doc_id"
-            )
             old = (
-                dm.join(
+                store.read_docid_map(spark).join(
                     F.broadcast(
                         turns.select("conv_id", "turn_idx").distinct()
                     ),
