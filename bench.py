@@ -498,34 +498,38 @@ def main() -> None:
     merge_bench = {}
     if os.environ.get("TRINITY_BENCH_MERGE", "1") != "0":
         merge_bench = run_merge_bench(cpus, n_turns)
-    # varbyte-vs-PFOR wire A/B on the SAME corpus: quantifies the default-
-    # codec choice (varbyte: 1-byte transcript deltas + parquet ZSTD) with
-    # build wall, warm query walls, and postings bytes on disk
+    # wire codec A/B on the SAME corpus: the headline build is the default
+    # native codec; the block codecs (varbyte, Trinity's google codec, and
+    # pfor) are rebuilt beside it, with build wall, warm query walls, and
+    # bytes on disk.  Block parts are written with Spark's default snappy;
+    # native parts with zstd / parquet v2 (segments.NATIVE_WRITE_OPTIONS).
     codec_cmp: dict = {
         "enabled": False,
-        "how": "TRINITY_BENCH_CODEC=1 builds the same corpus with the PFOR "
-        "wire and reruns the query set (~2 min extra)",
+        "how": "TRINITY_BENCH_CODEC=1 builds the same corpus with the varbyte "
+        "and PFOR wires and reruns the query set (~4 min extra)",
     }
     if os.environ.get("TRINITY_BENCH_CODEC", "0") == "1":
-        pfor_idx = os.path.join(BENCH_ROOT, f"index_c{cpus}_{n_turns}_pfor")
-        b_pfor = sub_build(cpus, tag="_pfor", codec="pfor")
-        qp, qp_warm, _ = run_queries(cpus, pfor_idx)
+        main_idx = os.path.join(BENCH_ROOT, f"index_c{cpus}_{n_turns}")
         codec_cmp = {
             "enabled": True,
             "corpus_turns": n_turns,
-            "varbyte": {
+            "native": {
                 "build_wall_sec": build_main["wall_sec"],
                 "queries_warm": qwarm,
-                "postings_bytes": _postings_bytes(
-                    os.path.join(BENCH_ROOT, f"index_c{cpus}_{n_turns}")
-                ),
-            },
-            "pfor": {
-                "build_wall_sec": b_pfor["wall_sec"],
-                "queries_warm": qp_warm,
-                "postings_bytes": _postings_bytes(pfor_idx),
+                "postings_bytes": _postings_bytes(main_idx),
+                "meta_bytes": _postings_bytes(main_idx, ("block_meta", "term_dict")),
             },
         }
+        for wire in ("varbyte", "pfor"):
+            idx = os.path.join(BENCH_ROOT, f"index_c{cpus}_{n_turns}_{wire}")
+            b = sub_build(cpus, tag=f"_{wire}", codec=wire)
+            _, warm, _ = run_queries(cpus, idx)
+            codec_cmp[wire] = {
+                "build_wall_sec": b["wall_sec"],
+                "queries_warm": warm,
+                "postings_bytes": _postings_bytes(idx),
+                "meta_bytes": _postings_bytes(idx, ("block_meta", "term_dict")),
+            }
         _save_cached_section("bench_codec_ab.json", codec_cmp)
     else:
         cached = _load_cached_section("bench_codec_ab.json")
@@ -670,13 +674,13 @@ def _save_cached_section(name: str, obj: dict) -> None:
         json.dump(obj, f, indent=1, sort_keys=True)
 
 
-def _postings_bytes(index_dir: str) -> int:
-    """Total on-disk bytes of all segments' postings parquet files."""
+def _postings_bytes(index_dir: str, parts: tuple[str, ...] = ("postings",)) -> int:
+    """Total on-disk bytes of all segments' ``parts`` parquet files."""
     total = 0
     seg_root = os.path.join(index_dir, "segments")
     if os.path.isdir(seg_root):
         for root, _, files in os.walk(seg_root):
-            if os.path.basename(root) == "postings":
+            if os.path.basename(root) in parts:
                 total += sum(
                     os.path.getsize(os.path.join(root, f))
                     for f in files

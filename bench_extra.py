@@ -84,8 +84,10 @@ def run_minhash_ab(cpus: int) -> dict:
 
 
 def run_decode_floor(cpus: int) -> dict:
-    """Per-task Python-boundary cost of the decode MapInArrow on the bench
-    index (guide 1.4: noop sink so the sink never distorts the timing)."""
+    """Per-task cost of reading one term's postings on the bench index: the
+    decode MapInArrow's Python boundary under a block codec, the bare
+    Parquet scan under native (guide 1.4: noop sink so the sink never
+    distorts the timing)."""
     from pyspark.sql import functions as F
 
     from trinity_spark.operators.indexer import SegmentIndex
@@ -103,12 +105,12 @@ def run_decode_floor(cpus: int) -> dict:
     out: dict = {"index": idx}
     for label, term in [("empty_term", "zzznothing"), ("mid_term", "error"),
                         ("stopword", "the")]:
-        src = index.blocks.where(F.col("term") == term)
-        noop(decode_segments(src, with_positions=False))  # warm
+        src = index.stored.where(F.col("term") == term)
+        noop(decode_segments(src, with_positions=False, codec=index.codec))  # warm
         walls = []
         for _ in range(5):
             t0 = time.monotonic()
-            noop(decode_segments(src, with_positions=False))
+            noop(decode_segments(src, with_positions=False, codec=index.codec))
             walls.append(round(time.monotonic() - t0, 3))
         out[label] = {"walls": walls, "median": statistics.median(walls)}
     return out

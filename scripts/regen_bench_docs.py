@@ -298,25 +298,31 @@ def bench_md(d: dict, window: str) -> str:
             a("")
 
     ab = d.get("codec_ab")
-    _error_note(a, "Wire codec A/B (varbyte vs PFOR)", ab)
+    title = "Wire codec A/B (native vs varbyte vs PFOR)"
+    _error_note(a, title, ab)
     if not (ab and ab.get("enabled")):
         ab = None
     ab = _healthy(ab, "varbyte", "pfor")
     if ab:
-        a("## Wire codec A/B (varbyte vs PFOR)")
+        a(f"## {title}")
         a("")
         _cached_note(a, ab)
-        a("Same corpus, same queries, the two selectable wires (`build_index(codec=...)`):")
+        a("Same corpus, same queries, the selectable wires (`build_index(codec=...)`):")
         a("")
-        a("| wire | build wall_sec | warm query p50 sec | postings on disk |")
-        a("|---|---|---|---|")
-        for wire in ("varbyte", "pfor"):
-            c = ab[wire]
+        a("| wire | build wall_sec | warm query p50 sec | postings on disk | block_meta / term_dict |")
+        a("|---|---|---|---|---|")
+        for wire in ("native", "varbyte", "pfor"):
+            c = ab.get(wire)
+            if c is None:
+                a(f"| {wire} | not measured in this window | | | |")
+                continue
             p50 = round(statistics.median(c["queries_warm"].values()), 3)
             mb = c["postings_bytes"] / 1e6
-            a(f"| {wire} | {c['build_wall_sec']} | {p50} | {mb:.1f} MB |")
+            meta = c.get("meta_bytes")
+            meta = f"{meta / 1e6:.2f} MB" if meta is not None else "n/a"
+            a(f"| {wire} | {c['build_wall_sec']} | {p50} | {mb:.1f} MB | {meta} |")
         a("")
-        a("varbyte stays the default: transcript-shaped deltas are mostly 1-byte so FOR bit-packing cannot beat it, and parquet ZSTD absorbs the residual redundancy either way (functions/pfor.py module doc).")
+        a("native is the default: Spark scans and filters its rows in the JVM, so a query runs no Python decode. varbyte stays as Trinity's google codec; block parts are written with Spark's default snappy, native parts with zstd / parquet v2 (functions/pfor.py module doc).")
         a("")
 
     xl = d.get("xl")

@@ -145,8 +145,9 @@ def test_mixed_codec_store_reads_and_merge_reencodes(spark, tmp_path):
     corpus_b = gen_transcripts(300, seed=5)
     store = SegmentStore(str(tmp_path / "idx"))
     build_index(
-        spark, spark.createDataFrame(corpus_a), store, rows_per_segment=400
-    )  # varbyte (default)
+        spark, spark.createDataFrame(corpus_a), store, rows_per_segment=400,
+        codec="varbyte",
+    )
     before = store.read_manifest()
     turns_b = assign_doc_ids(spark.createDataFrame(corpus_b)).withColumn(
         "doc_id", (F.col("doc_id") + F.lit(400)).cast("long")
@@ -216,7 +217,7 @@ def test_build_with_conflicting_layout_raises_before_any_job(spark, tmp_path):
         spark, spark.createDataFrame(gen_transcripts(200)), store,
         rows_per_segment=200, chunk_bits=8,
     )
-    assert store.layout() == ("varbyte", 8)
+    assert store.layout() == ("native", 8)  # the default codec
     before = store.read_manifest()
     turns = spark.createDataFrame(gen_transcripts(300))
     sc = spark.sparkContext
@@ -246,9 +247,11 @@ def test_payloads_without_positions_honored(spark, tmp_path):
         spark, spark.createDataFrame(gen_transcripts(100)), store,
         rows_per_segment=100,
     )
+    codec = store.layout().codec
     out = decode_segments(
-        store.read_blocks(spark), with_payloads=True, with_positions=False
+        store.read_postings(spark), with_payloads=True, with_positions=False,
+        codec=codec,
     )
     assert "positions" not in out.columns and "payloads" in out.columns
-    ref = decode_segments(store.read_blocks(spark), with_payloads=True)
+    ref = decode_segments(store.read_postings(spark), with_payloads=True, codec=codec)
     assert out.count() == ref.count()

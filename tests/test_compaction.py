@@ -103,9 +103,11 @@ def test_fsck_detects_corruption(spark, tiered_store):
     store, _, _ = tiered_store
     assert store.fsck()["ok"]
     victim = store.segments()[0].segment_id
-    shutil.rmtree(store.segment_dir(victim, "term_dict"))
+    # a segment's second part: block_meta (native), term_dict (block codecs)
+    part = "block_meta" if store.layout().codec == "native" else "term_dict"
+    shutil.rmtree(store.segment_dir(victim, part))
     rep = store.fsck()
-    assert not rep["ok"] and any("term_dict" in e for e in rep["errors"])
+    assert not rep["ok"] and any(part in e for e in rep["errors"])
 
 
 def test_fsck_deep_detects_docs_cnt_drift(spark, tiered_store):
@@ -162,8 +164,11 @@ def test_merge_defragments_and_reuses_lone_partials(spark, tmp_path):
     from trinity_spark.operators.docids import assign_doc_ids
 
     with_ids = assign_doc_ids(turns).repartition(8)
-    blocks = blocks_from_turns(with_ids).persist()
-    meta = SegmentMeta("seg-frag", 0, 0, 2000, 2000, {"chunk_bits": 16}, {})
+    # the varbyte wire's byte-reuse rule
+    blocks = blocks_from_turns(with_ids, codec="varbyte").persist()
+    meta = SegmentMeta(
+        "seg-frag", 0, 0, 2000, 2000, {"chunk_bits": 16, "codec": "varbyte"}, {}
+    )
     store.commit_segment(blocks, meta)
     blocks.unpersist()
 

@@ -169,8 +169,9 @@ def test_worker_attach_matches_broadcast_join(spark, tmp_path):
             base = str(tmp_path / f"attach_{label}")
             shutil.rmtree(base, ignore_errors=True)
             st = SegmentStore(base)
+            # varbyte: the block bytes below are part of the identity
             build_index(spark, corpus, st, rows_per_segment=5_000,
-                        input_desc="eq")
+                        input_desc="eq", codec="varbyte")
             assert st.docid_map_mode() == mode
             idx = SegmentIndex(spark, st)
             p = QueryPlanner(idx)

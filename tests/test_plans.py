@@ -11,10 +11,12 @@ from trinity_spark.sources.store import SegmentStore
 
 @pytest.fixture(scope="module")
 def index(spark, tmp_path_factory):
+    # these plans pin the varbyte block decode's shape (its MapInArrow
+    # scans, the pos_bytes stream); tests/test_native.py covers the default
     base = str(tmp_path_factory.mktemp("plans"))
     store = SegmentStore(base)
     build_index(spark, spark.createDataFrame(gen_transcripts(600)), store,
-                rows_per_segment=600)
+                rows_per_segment=600, codec="varbyte")
     return SegmentIndex(spark, store)
 
 

@@ -283,7 +283,7 @@ def test_merge_byte_reuse_fast_path(spark, tmp_path_factory):
     # segment's docs share one partition
     build_index(
         spark, spark.createDataFrame(corpus).coalesce(1), store,
-        rows_per_segment=400, input_desc="reuse",
+        rows_per_segment=400, input_desc="reuse", codec="varbyte",
     )
     before = {
         (r["term"], r["chunk"], r["min_doc_id"]): (
@@ -337,6 +337,7 @@ def test_merge_reuse_survives_near_miss_tombstones(spark, tmp_path_factory):
         ).coalesce(1),
         store,
         rows_per_segment=3,
+        codec="varbyte",
     )
     alpha_before = {
         (bytes(r["doc_deltas"]), r["min_doc_id"], r["max_doc_id"])
@@ -400,6 +401,7 @@ def test_merge_refine_true_hits_still_reencode(spark, tmp_path_factory):
         ).coalesce(1),
         store,
         rows_per_segment=3,
+        codec="varbyte",
     )
     store.add_deletes(spark, [0])  # in BOTH alpha's and beta's blocks
     meta = merge_segments(spark, store)
@@ -669,14 +671,13 @@ def test_payloads_in_hits_surface(spark, tmp_path_factory):
         rows,
         "term string, doc_id long, tf int, positions array<int>, payloads array<long>",
     )
-    blocks = encode_postings(df)
     from trinity_spark.sources.store import SegmentMeta
 
     meta = SegmentMeta(
         segment_id=f"seg-{0:014d}-{n_docs:014d}", generation=0,
         doc_lo=0, doc_hi=n_docs, docs_cnt=n_docs,
     )
-    store.commit_segment(blocks, meta)
+    store.commit_segment(df, meta)  # native rows, the default codec
     planner = QueryPlanner(SegmentIndex(spark, store))
     out = planner.plan("alpha AND beta", k=5, with_hits=True, with_payloads=True)
     got = out.collect()
@@ -741,16 +742,17 @@ def test_virtual_docid_map_build(spark, tmp_path_factory):
 
 def test_docid_map_follows_the_input(spark, tmp_path_factory, jobs_in_window):
     """Default arguments, 3,000 turns, one segment: dense input writes the
-    conv bases and no batch-map files in 4 Spark jobs (a build that copied
-    the corpus ran 7); non-dense input (``turn_idx*3+7``) writes the batch
-    map on ONE corpus aggregation in 7 jobs.  A second run adds nothing."""
+    conv bases and no batch-map files in 3 Spark jobs (a build that copied
+    the corpus ran 7; a block-codec build runs 4, with its count of the
+    fused pass); non-dense input (``turn_idx*3+7``) writes the batch map on
+    ONE corpus aggregation in 6 jobs.  A second run adds nothing."""
     from pyspark.sql import functions as F
 
     base = tmp_path_factory.mktemp("mapchoice")
     dense = spark.createDataFrame(gen_transcripts(3000))
     sparse = dense.withColumn("turn_idx", F.col("turn_idx") * 3 + 7)
     for label, turns, mode, want_jobs in [
-        ("dense", dense, "virtual", 4), ("sparse", sparse, "batch", 7),
+        ("dense", dense, "virtual", 3), ("sparse", sparse, "batch", 6),
     ]:
         store = SegmentStore(str(base / label))
         metas, got, started = jobs_in_window(
@@ -948,7 +950,7 @@ def test_nrt_append_inherits_store_chunk_bits(spark, tmp_path_factory):
     store = SegmentStore(base)
     build_index(
         spark, spark.createDataFrame(corpus), store, rows_per_segment=600,
-        input_desc="nrtwidth", chunk_bits=8,
+        input_desc="nrtwidth", chunk_bits=8, codec="varbyte",
     )
     extra = gen_transcripts(200, seed=77)
     appended = append_micro_segment(spark, store, spark.createDataFrame(extra))
@@ -993,6 +995,7 @@ def test_merge_preserves_payloads_in_reencoded_blocks(spark, tmp_path_factory):
     meta = SegmentMeta(
         segment_id=f"seg-{0:014d}-{n_docs:014d}", generation=0,
         doc_lo=0, doc_hi=n_docs, docs_cnt=n_docs,
+        lineage={"codec": "varbyte"},  # the block re-encode path
     )
     store.commit_segment(blocks, meta)
     # a tombstone forces alpha's block through the re-encode path
@@ -1054,10 +1057,9 @@ def test_merge_without_deletes_gens_counts_zero_token_tombstone(
     n = len(docs)
     zero = next(d for d, t in docs if not t.strip())
     turns = spark.createDataFrame(docs, "doc_id long, text string")
-    blocks = encode_postings(postings_from_turns(turns))
     store = SegmentStore(str(tmp_path_factory.mktemp("nogens") / "idx"))
     store.commit_segment(
-        blocks,
+        postings_from_turns(turns),  # native rows, the default codec
         SegmentMeta(
             segment_id=f"seg-{0:014d}-{n:014d}", generation=0,
             doc_lo=0, doc_hi=n, docs_cnt=n,
@@ -1230,7 +1232,9 @@ def test_merge_commit_is_one_atomic_manifest_write(spark, tmp_path_factory):
     (seg,) = store.at(pre + 1).read_manifest()["segments"]
     assert seg["segment_id"] == merged_id
     assert seg["metrics"]["wall_sec"] > 0
-    assert seg["metrics"]["blocks_reused"] == meta.metrics["blocks_reused"] > 0
+    reuse = ("blocks_reused", "blocks_reencoded")
+    assert [seg["metrics"][k] for k in reuse] == [meta.metrics[k] for k in reuse]
+    assert sum(meta.metrics[k] for k in reuse) > 0
     # walk the retained history: the first snapshot naming the merged
     # segment must already have the inputs retired and the gen gone
     first = None
@@ -1345,7 +1349,7 @@ def _recount(spark, store, segment_id):
 
     row = (
         decode_segments(
-            store.read_blocks(spark, [segment_id]),
+            store.read_postings(spark, [segment_id]),
             with_positions=False,
             codec=store.layout().codec,
         )
@@ -1402,8 +1406,8 @@ def test_nrt_append_job_count(spark, tmp_path_factory):
 def test_segment_stats_are_recorded_exactly(spark, tmp_path_factory):
     """Every commit path records the segment's field statistics in its
     lineage (index_source.h:44-53), equal to a recount over the segment's
-    decoded postings: Σtf, distinct terms and posting rows.  A segment
-    directory holds only postings and term_dict, and stats_for on a fresh
+    decoded postings: Σtf, distinct terms and posting rows.  A (native)
+    segment directory holds only postings and block_meta, and stats_for on a fresh
     view runs only the dictionary collect — N and the cache gate come off
     the manifest.  A segment without recorded stats closes the cache gate
     and lookups go through per-query pushdown."""
@@ -1434,7 +1438,7 @@ def test_segment_stats_are_recorded_exactly(spark, tmp_path_factory):
                 spark, store, meta.segment_id
             ), meta.segment_id
             seg_dir = os.path.join(store.base, "segments", meta.segment_id)
-            assert sorted(os.listdir(seg_dir)) == ["postings", "term_dict"]
+            assert sorted(os.listdir(seg_dir)) == ["block_meta", "postings"]
         return metas
 
     metas = check_live(["build", "build", "nrt-append", "replace"])

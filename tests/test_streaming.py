@@ -837,7 +837,11 @@ def test_gc_reclaims_orphan_docid_map_slice(spark, tmp_path_factory):
     segment_id — otherwise read_docid_map serves duplicate doc_ids from both
     slices forever.  Slices of LIVE segments and of segments retired by a
     MERGE (whose translations still live only in the original slices) must
-    survive."""
+    survive.  A slice name's doc range is its 2nd and 3rd dash fields: an
+    orphan named like an NRT attempt (hex marker suffix) is reclaimed too,
+    and a retired NRT segment whose marker suffix is all digits keeps its
+    slice."""
+    import hashlib
     import os
 
     from trinity_spark.fixtures import gen_transcripts
@@ -859,21 +863,33 @@ def test_gc_reclaims_orphan_docid_map_slice(spark, tmp_path_factory):
         "doc_id", (F.col("doc_id") + F.lit(60)).cast("long")
     )
     store.write_docid_map_slice(with_ids, orphan_id)
-    # retry commits FEWER rows (first 40 turns) under a different id
-    append_micro_segment(spark, store, spark.createDataFrame(b.iloc[:40]), "batch-b")
+    suffixed_id = orphan_id + "-deadbeef"  # an NRT attempt's name
+    store.write_docid_map_slice(with_ids, suffixed_id)
+    # retry commits FEWER rows (first 40 turns) under a different id, whose
+    # marker suffix is all digits
+    digits_desc = next(
+        d for d in (f"batch-b{i}" for i in range(10_000))
+        if hashlib.md5(d.encode()).hexdigest()[:8].isdigit()
+    )
+    retry = append_micro_segment(
+        spark, store, spark.createDataFrame(b.iloc[:40]), digits_desc
+    )
+    assert retry.segment_id.rsplit("-", 1)[1].isdigit()
 
     nrt_root = os.path.join(store.docid_map_dir(), "nrt")
-    assert orphan_id in set(os.listdir(nrt_root))
+    assert {orphan_id, suffixed_id} <= set(os.listdir(nrt_root))
     removed = store.gc()
-    assert removed["docid_map_slices"] == [orphan_id]
+    assert removed["docid_map_slices"] == [orphan_id, suffixed_id]
     live = set(os.listdir(nrt_root))
     assert orphan_id not in live and len(live) == 2  # both committed slices
     # duplicate translations are gone
     m = store.read_docid_map(spark)
     assert m.groupBy("doc_id").count().where("count > 1").count() == 0
 
-    # merge retires the NRT segment ids; their slices must SURVIVE gc
+    # merge retires the NRT segment ids; their slices must SURVIVE gc,
+    # also once no retained snapshot names the retired segments
     merge_segments(spark, store)
+    store.expire_snapshots(keep_last=1)
     removed2 = store.gc()
     assert removed2["docid_map_slices"] == []
     assert set(os.listdir(nrt_root)) == live

@@ -114,8 +114,8 @@ def test_gate_opens_when_df_profile_pays(spark, built, monkeypatch):
 def test_rare_and_span_restriction_exact(spark, built, monkeypatch):
     """AND-with-rare-term (meta_span tier): restricting the scan to blocks
     intersecting the rare term's covered spans is exact (every match
-    contains the rare term) and visible in the plan as the block-key
-    semi-join."""
+    contains the rare term) and visible in the plan as a semi-join: on
+    block keys for a block codec, on each native row's span."""
     from trinity_spark.operators import topk as topk_mod
     from trinity_spark.plans.ast import And
     from trinity_spark.plans.planner import QueryPlanner
@@ -126,7 +126,8 @@ def test_rare_and_span_restriction_exact(spark, built, monkeypatch):
     df = planner.plan("the AND qqfluxcapacitor", k=5)
     assert planner.last_route["gate"]["tier"] == "meta_span"
     plan = _plan_str(df)
-    assert "block_id" in plan and "LeftSemi" in plan
+    key = "span" if index.codec == "native" else "block_id"
+    assert key in plan and "LeftSemi" in plan
     oracle = OracleIndex.build(docs_in_stable_order(corpus))
     want = oracle.topk(And((Token("the"), Token("qqfluxcapacitor"))), k=5)
     rows = [(r["doc_id"], r["score"]) for r in df.collect()]

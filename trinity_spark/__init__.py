@@ -15,7 +15,8 @@ Layout
 - ``functions.varbyte``  numpy-vectorized delta+varbyte codec (google_codec.cpp:127-168)
 - ``operators.docids``   dense deterministic doc_id assignment (scalable two-pass)
 - ``operators.build``    tokenize -> explode -> postings / term_dict / field_stats
-- ``operators.segments`` physical block-encoded segments (encode/decode)
+- ``operators.segments`` physical segment wire codecs: native Parquet rows
+                         (default), varbyte / pfor blocks (encode/decode)
 - ``operators.merge``    segment merge + deletes (merge.cpp semantics)
 - ``plans.ast``          query AST (queries.h:10-97)
 - ``plans.parser``       query-string parser (queries.cpp:1830-1871 surface)

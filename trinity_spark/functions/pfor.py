@@ -21,9 +21,11 @@ This codec is wired in as a SELECTABLE wire format
 commit, and the segment encoder ``segments._encode_partition`` calls
 ``pfor_encode_rows`` for build and merge alike; the segment lineage records
 which codec wrote it — the codecs.h:93-95 segment codec-identity analog).  On transcript-shaped postings the varbyte stream is
-smaller (tf/position deltas are mostly 1-byte) and parquet's ZSTD absorbs
-the rest, so varbyte stays the DEFAULT — the choice is documented in
-SURVEY §2.1 and COVERAGE.md; rank parity is score-level and unaffected.
+smaller (tf/position deltas are mostly 1-byte); both block wires are
+written with Spark's default snappy (no compression option is set on block
+writes).  Neither is the default: the ``native`` codec's flat Parquet rows
+are (``operators/segments.py``); rank parity is score-level and
+unaffected.
 
 Two API layers:
 - ``pfor_encode`` / ``pfor_decode``: one value array <-> one byte buffer.

@@ -35,9 +35,11 @@ from ..tokenizer import (
     tokenize_arrow,
 )
 
-# segments.py owns the block wire format: its schemas and its one encoder
+# segments.py owns the wire formats: their schemas and the one encoder
 from .segments import (
     CHUNK_BITS,
+    CODEC_NATIVE,
+    CODEC_VARBYTE,
     POSTINGS_SCHEMA,
     SEGMENT_SCHEMA,
     _check_codec,
@@ -202,13 +204,17 @@ def blocks_from_turns(
     turns: DataFrame,
     text_col: str = "text",
     chunk_bits: int | None = None,
-    codec: str = "varbyte",
+    codec: str = CODEC_VARBYTE,
     conv_attach: tuple[str, int, int, tuple[str, str] | None] | None = None,
 ) -> DataFrame:
-    """turns(doc_id, text) -> encoded posting blocks in ONE mapInArrow pass —
+    """turns(doc_id, text) -> a segment's postings in ONE mapInArrow pass —
     zero shuffles end to end (tokenize -> postings -> delta+varbyte blocks).
+    Under ``codec="native"`` the pass stops at the postings rows
+    (``POSTINGS_SCHEMA``, emitted per Arrow batch): the commit sorts and
+    writes them and derives their block metadata in the JVM.
 
-    Each input partition becomes an independently-encoded mini-segment slice:
+    Under a block codec each input partition becomes an independently-encoded
+    mini-segment slice:
     a (term, chunk) group that straddles a partition boundary yields two
     independent block sets (blocks decode standalone; trinity's per-segment
     term postings are split the same way).  ``operators.merge`` re-encodes
@@ -268,12 +274,9 @@ def blocks_from_turns(
         turn = batch.column("turn_idx").to_numpy(zero_copy_only=False)
         return base_by_code[codes] + turn.astype(np.int64)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        docs: list[np.ndarray] = []
-        tfs: list[np.ndarray] = []
-        codes: list[np.ndarray] = []
-        pos: list[np.ndarray] = []
-        uniq: dict[str, int] = {}
+    def doc_batches(batches: Iterator[pa.RecordBatch]):
+        """(doc ids, tokens) per input batch, sliced to [lo, hi) under
+        conv_attach."""
         for batch in batches:
             batch_doc_ids = _batch_doc_ids(batch)
             if conv_attach is not None:
@@ -285,10 +288,26 @@ def blocks_from_turns(
                     batch_doc_ids = batch_doc_ids[mask]
                 if len(batch_doc_ids) == 0:
                     continue
-            out = _postings_arrays(
-                batch_doc_ids,
-                tokenize_arrow(batch.column(text_col)),
-            )
+            yield batch_doc_ids, tokenize_arrow(batch.column(text_col))
+
+    def rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # each batch leaves sorted by (term, doc_id): the commit's sort then
+        # merges a few presorted runs instead of ordering rows from scratch
+        for batch_doc_ids, tokens in doc_batches(batches):
+            out = _batch_postings(batch_doc_ids, tokens)
+            if out is not None:
+                yield out.take(pc.sort_indices(
+                    out, sort_keys=[("term", "ascending"), ("doc_id", "ascending")]
+                ))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        docs: list[np.ndarray] = []
+        tfs: list[np.ndarray] = []
+        codes: list[np.ndarray] = []
+        pos: list[np.ndarray] = []
+        uniq: dict[str, int] = {}
+        for batch_doc_ids, tokens in doc_batches(batches):
+            out = _postings_arrays(batch_doc_ids, tokens)
             if out is None:
                 continue
             d, tf, c, u, p = out
@@ -315,25 +334,15 @@ def blocks_from_turns(
         if conv_attach is not None
         else ["doc_id", text_col]
     )
+    if codec == CODEC_NATIVE:
+        return turns.select(*in_cols).mapInArrow(rows, POSTINGS_SCHEMA)
     return turns.select(*in_cols).mapInArrow(run, SEGMENT_SCHEMA)
 
 
 def postings_from_turns(turns: DataFrame, text_col: str = "text") -> DataFrame:
-    """turns(doc_id, text, ...) -> postings, zero shuffles.
+    """turns(doc_id, text, ...) -> postings, zero shuffles: the fused pass
+    stopped at the rows (the native codec's input).
 
     Tokenization uses the Arrow twin of the frozen tokenize_udf pipeline
     (tokenizer.tokenize_arrow — equivalence-tested against the pandas UDF)."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            out = _batch_postings(
-                np.ascontiguousarray(
-                    batch.column("doc_id").to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                ),
-                tokenize_arrow(batch.column(text_col)),
-            )
-            if out is not None:
-                yield out
-
-    return turns.select("doc_id", text_col).mapInArrow(run, POSTINGS_SCHEMA)
+    return blocks_from_turns(turns, text_col, codec=CODEC_NATIVE)

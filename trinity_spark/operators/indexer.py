@@ -9,12 +9,13 @@ Pipeline (SURVEY.md §3.3 — the Spark re-expression of
                      (conv_id, turn_idx) order: the conv bases for dense
                      input, the batch map otherwise)
       -> per docid-range SEGMENT:
-           fused tokenize -> postings -> delta+varbyte blocks in ONE
-           mapInArrow pass (fastbuild.blocks_from_turns, zero data shuffles)
-           -> commit_segment (the store derives term_dict from block metadata
-              and records field stats and metrics in ONE atomic manifest
-              write;
-              the only data shuffle is the term-sorted block write for
+           fused tokenize -> postings (-> blocks, under a block codec) in
+           ONE mapInArrow pass (fastbuild.blocks_from_turns, zero data
+           shuffles)
+           -> commit_segment (the store writes the term-sorted postings and
+              their block metadata or dictionary, and records field stats
+              and metrics in ONE atomic manifest write; the only data
+              shuffle is the term-sorted postings write for
               dictionary-seek locality)
 
 Resumability (north rule): each segment is an idempotent unit keyed by its
@@ -42,7 +43,7 @@ from pyspark.sql import functions as F
 from ..sources.store import SegmentMeta, SegmentStore, _PinnedSnapshotStore
 from .docids import _conv_bases, attach_bases
 from .fastbuild import blocks_from_turns
-from .segments import decode_segments
+from .segments import BLOCK_CODECS, CODEC_NATIVE, decode_segments
 
 # Above this corpus size the docid map always gets the doc-range layout
 # shuffle, segment count notwithstanding: the assignment join may have hash-
@@ -123,8 +124,10 @@ def build_index(
 ) -> list[SegmentMeta]:
     """Build (or resume) the full index; returns committed segment metas.
 
-    ``codec`` selects the posting-stream wire format ("varbyte" default,
-    "pfor" for the Lucene-style 128-block FOR packing) and ``chunk_bits``
+    ``codec`` selects the postings wire format ("native" default: flat
+    Parquet rows the query scans in the JVM; "varbyte", Trinity's google
+    codec blocks; "pfor", the Lucene-style 128-block FOR packing) and
+    ``chunk_bits``
     the encode-group width (``chunk = doc_id >> chunk_bits``, default 16).
     Both belong to the store: its first commit fixes them in the manifest,
     and NRT appends and merges inherit them.  ``None`` resolves to the
@@ -395,11 +398,11 @@ def _build_index_inner(
                 (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
             )
         # fused tokenize->postings->encode: ONE pass, zero data shuffles;
-        # the store derives the dictionary and stats off block metadata
+        # the store derives block metadata, dictionary and stats itself
         blocks = blocks_from_turns(
             seg_turns, chunk_bits=chunk_bits, codec=codec,
             conv_attach=conv_attach,
-        ).persist()
+        )
         meta = SegmentMeta(
             segment_id=sid,
             generation=0,  # assigned at commit
@@ -413,11 +416,16 @@ def _build_index_inner(
                 "codec": codec,
             },
         )
-        try:
-            blocks.count()  # materialize the fused pass once, before any reuse
+        if codec == CODEC_NATIVE:
+            # the commit stages native rows itself: one sort, cached once
             store.commit_segment(blocks, meta, started=t0)
-        finally:
-            blocks.unpersist()
+        else:
+            blocks = blocks.persist()
+            try:
+                blocks.count()  # materialize the fused pass once, before any reuse
+                store.commit_segment(blocks, meta, started=t0)
+            finally:
+                blocks.unpersist()
         built.append(meta)
     return built
 
@@ -426,15 +434,16 @@ class SegmentIndex:
     """Planner-compatible index view over a SegmentStore collection.
 
     Same duck-type as plans.planner.LogicalIndex; postings_for pushes the
-    term filter down to the block parquet scan (min/max stats on the sorted
-    `term` column = the terms.idx skiplist seek) BEFORE Arrow decode, and
-    stats are summed across segments exactly like ``BM25Scorer::reset``
-    (similarity.h:238-250).
+    term filter down to the postings parquet scan (min/max stats on the
+    sorted `term` column = the terms.idx skiplist seek).  Under the native
+    codec that scan IS the postings (no Python at all); under a block codec
+    the Arrow decode runs after the pruned scan.  Stats are summed across
+    segments exactly like ``BM25Scorer::reset`` (similarity.h:238-250).
 
     A view is ONE snapshot: the manifest is read once at open and every
-    read (blocks, dictionary, tombstones, N, the cache gate) is pinned to
-    it, so commits after open stay invisible until ``refresh()``.
-    ``store`` stays the live store the view was opened on.
+    read (postings, block metadata, dictionary, tombstones, N, the cache
+    gate) is pinned to it, so commits after open stay invisible until
+    ``refresh()``.  ``store`` stays the live store the view was opened on.
     """
 
     def __init__(self, spark: SparkSession, store: SegmentStore):
@@ -447,11 +456,16 @@ class SegmentIndex:
         # open instead of decoding garbage or dropping postings.  The chunk
         # width feeds the pruning cost gate's driver-side chunk counts.
         self.codec, self.chunk_bits = snap.layout()
+        # block metadata for the pruned routes (the block rows themselves
+        # under a block codec), and the stored postings part they restrict
         self.blocks = snap.read_blocks(spark)
-        self.term_dict = snap.read_term_dict(spark)
+        self.stored = (
+            self.blocks if self.codec in BLOCK_CODECS else snap.read_postings(spark)
+        )
+        self.term_dict = snap.read_term_dict(spark, self.blocks)
         self.deleted = snap.read_deletes(spark)
         # full logical view (lazy; only touched if a caller scans everything)
-        self.postings = decode_segments(self.blocks, codec=self.codec)
+        self.postings = decode_segments(self.stored, codec=self.codec)
         # N and the dictionary size come off the manifest — no Spark job.
         # A segment without recorded field stats (written before the store
         # recorded them) closes the cache gate: pushdown lookups per query.
@@ -467,20 +481,22 @@ class SegmentIndex:
     def postings_for(
         self, terms: list[str], with_positions: bool = True
     ) -> DataFrame:
-        """``with_positions=False`` = the docs/freqs-only decode: pos_bytes
-        (the largest stream) is pruned from the parquet scan — token-only
-        BM25 queries never touch it."""
-        pruned = self.blocks.where(F.col("term").isin(terms))
+        """``with_positions=False`` = the docs/freqs-only read: the position
+        column or stream (the largest) is pruned from the parquet scan —
+        token-only BM25 queries never touch it."""
         return decode_segments(
-            pruned, with_positions=with_positions, codec=self.codec
+            self.stored.where(F.col("term").isin(terms)),
+            with_positions=with_positions, codec=self.codec,
         )
 
     def postings_with_payloads_for(self, terms: list[str]) -> DataFrame:
-        """Like postings_for but with the per-hit payload stream decoded
+        """Like postings_for but with the per-hit payloads
         (runtime.h:8-20 term_hit.payload) — used by the winners-only hits
         surface, never by the scoring scan."""
-        pruned = self.blocks.where(F.col("term").isin(terms))
-        return decode_segments(pruned, with_payloads=True, codec=self.codec)
+        return decode_segments(
+            self.stored.where(F.col("term").isin(terms)),
+            with_payloads=True, codec=self.codec,
+        )
 
     # dictionaries up to this size are cached driver-side after first use —
     # one collect replaces a per-query Spark job (terms.idx-in-memory analog);

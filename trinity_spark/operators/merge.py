@@ -8,10 +8,25 @@ out (``merge.cpp:288-394``); old sources get a retention verdict
 bytes untouched when nothing in it changed (``merge.cpp:166-180``,
 ``google_codec.cpp:178-184``).
 
-Spark-first: the k-way merge-sort IS a union + re-group — decode the selected
-segments' blocks, anti-join the tombstones, re-encode, commit one new
-segment, retire the inputs.  Because our doc_id spaces are already global
-(docid_map assigns once), no remap join is needed.
+Spark-first: the k-way merge-sort IS a union + re-group.  Because our
+doc_id spaces are already global (docid_map assigns once), no remap join
+is needed.
+
+Native stores (the default codec) merge without any decode or encode:
+union the inputs' postings rows, anti-join the tombstones, and commit —
+the commit sorts and writes the rows and derives their block metadata in
+the JVM.  No Python runs, and no job runs before the commit's two writes.
+Every input row is rewritten by Parquet or dropped with its tombstoned
+doc, so no byte range moves untouched: ``blocks_reused`` is 0 and
+``blocks_reencoded`` counts the inputs' postings rows (their lineage
+``n_blocks``, native's unit), so the merge byte-reuse ratio reads 0 for
+native merges.
+
+Block-codec stores (varbyte, pfor) decode the selected segments' blocks,
+anti-join the tombstones, re-encode, commit one new segment and retire the
+inputs, with the byte-reuse fast path below.  ``blocks_reused`` /
+``blocks_reencoded`` count blocks moved byte-identical vs decoded and
+re-encoded.
 
 Byte-reuse fast path, finer-grained than the reference's: Trinity can only
 raw-copy a term when it lives in ONE source segment (the byte streams must
@@ -79,7 +94,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.store import SegmentMeta, SegmentStore
-from .segments import BLOCK_SIZE, decode_segments, encode_postings
+from .segments import BLOCK_SIZE, CODEC_NATIVE, decode_segments, encode_postings
 
 
 # Tombstone-set ceiling for the membership refine: the sorted id array rides
@@ -157,91 +172,12 @@ def _membership_refine(
     )
 
 
-def merge_segments(
-    spark: SparkSession,
-    store: SegmentStore,
-    segment_ids: list[str] | None = None,
-    apply_deletes: bool = True,
-) -> SegmentMeta:
-    """Merge segments (default: all) into one; returns the new meta."""
-    # ONE manifest snapshot feeds segment metas, the gen list, AND the
-    # deletes frame: with separate reads, a delete committed in between
-    # would be physically applied and counted but omitted from the output
-    # segment's deletes_gens lineage (and kept by the retirement filter),
-    # so the next merge would subtract the same docs again
-    manifest0 = store.read_manifest()
-    all_metas = [SegmentMeta(**s) for s in manifest0["segments"]]
-    metas = all_metas
-    if segment_ids is not None:
-        known = {m.segment_id for m in all_metas}
-        unknown = [sid for sid in segment_ids if sid not in known]
-        if unknown:
-            # a silent subset merge would retire only the matched inputs
-            # while the caller believes the whole list was compacted
-            raise ValueError(
-                f"segment_ids not in the manifest: {unknown}"
-            )
-        metas = [m for m in metas if m.segment_id in segment_ids]
-    if not metas:
-        raise ValueError("nothing to merge")
-    ids = [m.segment_id for m in metas]
-    full_merge = {m.segment_id for m in all_metas} <= set(ids)
-    lo = min(m.doc_lo for m in metas)
-    hi = max(m.doc_hi for m in metas)
-
-    t0 = time.monotonic()
-    # one wire layout per store (raises on an unknown codec or a segment
-    # whose lineage disagrees): every input shares the output's codec and
-    # chunk width, so the raw-copy fast path always applies — the
-    # merge.cpp:256-287 same-codec precondition holds by construction
-    codec, cb = store.layout(manifest0)
-    blocks = store.read_blocks(spark, ids)
-    read_gens: list[int] = []
-    in_range = None
-    n_deleted = 0
-    if apply_deletes:
-        read_gens = [d["gen"] for d in manifest0["deletes"]]
-        deletes = store.read_deletes_with_gen(spark, manifest=manifest0)
-        if deletes is not None:
-            # only tombstones inside a merged segment's ACTUAL range matter —
-            # per-meta ranges, not [min_lo, max_hi): merge sets can be
-            # non-contiguous and ids in the gaps belong to other segments
-            from functools import reduce
-
-            def _rng(m):
-                return (F.col("doc_id") >= m.doc_lo) & (
-                    F.col("doc_id") < m.doc_hi
-                )
-
-            cond = reduce(lambda a, b: a | b, [_rng(m) for m in metas])
-            in_range = deletes.where(cond).select("doc_id").distinct()
-            # docs_cnt accounting is GEN-AWARE: a tombstone counts against a
-            # covering segment only if that segment has not already applied
-            # its generation (lineage ``deletes_gens``, written below) — a
-            # partial merge followed by a full merge re-reads the same
-            # unretired tombstone and must not subtract the doc twice.
-            # Counting by tombstone id (not decoded-posting presence) is
-            # what keeps zero-token docs (assigned ids with no postings)
-            # correctly subtracted.  Ranges are disjoint, so each id has
-            # exactly one covering segment.
-            def _applied(m):
-                gens = m.lineage.get("deletes_gens", [])
-                return F.col("gen").isin([int(g) for g in gens]) if gens else F.lit(False)
-
-            countable = deletes.where(
-                reduce(
-                    lambda a, b: a | b,
-                    [_rng(m) & ~_applied(m) for m in metas],
-                )
-            ).select("doc_id").distinct()
-            already = deletes.where(
-                reduce(
-                    lambda a, b: a | b,
-                    [_rng(m) & _applied(m) for m in metas],
-                )
-            ).select("doc_id").distinct()
-            n_deleted = countable.join(already, "doc_id", "left_anti").count()
-
+def _block_merge(
+    blocks: DataFrame, in_range: DataFrame | None, cb: int, codec: str
+) -> DataFrame:
+    """A block-codec merge's output blocks, tagged ``_reused`` (moved
+    byte-identical) or not (decoded, tombstones removed, re-encoded), and
+    persisted: the byte-reuse fast path of the module docstring."""
     # (term, chunk) groups with 2+ partial blocks need repacking; all other
     # blocks (fulls + lone partials) are already optimally packed.
     # Metadata-only aggregation — byte columns pruned from this job.
@@ -301,17 +237,16 @@ def merge_segments(
     if in_range is not None:
         # physical removal anti-joins ALL in-range tombstone ids (removing
         # already-absent ids is a no-op); the docs_cnt arithmetic used the
-        # gen-aware count computed above
+        # gen-aware count merge_segments computed
         rest_postings = rest_postings.join(
             F.broadcast(in_range), "doc_id", "left_anti"
         )
 
-    docs_cnt = sum(m.docs_cnt for m in metas) - n_deleted
     # tag reused rows BEFORE the union so the metrics pass is one cheap
     # group-count over the persisted output instead of re-executing the whole
     # reuse pipeline (ADVICE r3: reused.count() replayed the metadata scan +
     # probe joins as a full extra job on every merge)
-    new_blocks = (
+    return (
         reused.withColumn("_reused", F.lit(True))
         .unionByName(
             encode_postings(
@@ -320,6 +255,108 @@ def merge_segments(
         )
         .persist()
     )
+
+
+def merge_segments(
+    spark: SparkSession,
+    store: SegmentStore,
+    segment_ids: list[str] | None = None,
+    apply_deletes: bool = True,
+) -> SegmentMeta:
+    """Merge segments (default: all) into one; returns the new meta."""
+    # ONE manifest snapshot feeds segment metas, the gen list, AND the
+    # deletes frame: with separate reads, a delete committed in between
+    # would be physically applied and counted but omitted from the output
+    # segment's deletes_gens lineage (and kept by the retirement filter),
+    # so the next merge would subtract the same docs again
+    manifest0 = store.read_manifest()
+    all_metas = [SegmentMeta(**s) for s in manifest0["segments"]]
+    metas = all_metas
+    if segment_ids is not None:
+        known = {m.segment_id for m in all_metas}
+        unknown = [sid for sid in segment_ids if sid not in known]
+        if unknown:
+            # a silent subset merge would retire only the matched inputs
+            # while the caller believes the whole list was compacted
+            raise ValueError(
+                f"segment_ids not in the manifest: {unknown}"
+            )
+        metas = [m for m in metas if m.segment_id in segment_ids]
+    if not metas:
+        raise ValueError("nothing to merge")
+    ids = [m.segment_id for m in metas]
+    full_merge = {m.segment_id for m in all_metas} <= set(ids)
+    lo = min(m.doc_lo for m in metas)
+    hi = max(m.doc_hi for m in metas)
+
+    t0 = time.monotonic()
+    # one wire layout per store (raises on an unknown codec or a segment
+    # whose lineage disagrees): every input shares the output's codec and
+    # chunk width, so the raw-copy fast path always applies — the
+    # merge.cpp:256-287 same-codec precondition holds by construction
+    codec, cb = store.layout(manifest0)
+    read_gens: list[int] = []
+    in_range = None
+    n_deleted = 0
+    if apply_deletes:
+        read_gens = [d["gen"] for d in manifest0["deletes"]]
+        deletes = store.read_deletes_with_gen(spark, manifest=manifest0)
+        if deletes is not None:
+            # only tombstones inside a merged segment's ACTUAL range matter —
+            # per-meta ranges, not [min_lo, max_hi): merge sets can be
+            # non-contiguous and ids in the gaps belong to other segments
+            from functools import reduce
+
+            def _rng(m):
+                return (F.col("doc_id") >= m.doc_lo) & (
+                    F.col("doc_id") < m.doc_hi
+                )
+
+            cond = reduce(lambda a, b: a | b, [_rng(m) for m in metas])
+            in_range = deletes.where(cond).select("doc_id").distinct()
+            # docs_cnt accounting is GEN-AWARE: a tombstone counts against a
+            # covering segment only if that segment has not already applied
+            # its generation (lineage ``deletes_gens``, written below) — a
+            # partial merge followed by a full merge re-reads the same
+            # unretired tombstone and must not subtract the doc twice.
+            # Counting by tombstone id (not decoded-posting presence) is
+            # what keeps zero-token docs (assigned ids with no postings)
+            # correctly subtracted.  Ranges are disjoint, so each id has
+            # exactly one covering segment.
+            def _applied(m):
+                gens = m.lineage.get("deletes_gens", [])
+                return F.col("gen").isin([int(g) for g in gens]) if gens else F.lit(False)
+
+            countable = deletes.where(
+                reduce(
+                    lambda a, b: a | b,
+                    [_rng(m) & ~_applied(m) for m in metas],
+                )
+            ).select("doc_id").distinct()
+            already = deletes.where(
+                reduce(
+                    lambda a, b: a | b,
+                    [_rng(m) & _applied(m) for m in metas],
+                )
+            ).select("doc_id").distinct()
+            n_deleted = countable.join(already, "doc_id", "left_anti").count()
+
+    docs_cnt = sum(m.docs_cnt for m in metas) - n_deleted
+    cached = None  # the block merge's persisted, reuse-tagged output
+    if codec == CODEC_NATIVE:
+        # no decode, no encode: the inputs' rows minus the tombstoned docs,
+        # staged and written by the commit.  Every input row is rewritten
+        # or dropped, none moves as untouched bytes
+        out = store.read_postings(spark, ids)
+        if in_range is not None:
+            out = out.join(F.broadcast(in_range), "doc_id", "left_anti")
+        reuse = {
+            "blocks_reused": 0,
+            "blocks_reencoded": sum(int(m.lineage.get("n_blocks", 0)) for m in metas),
+        }
+    else:
+        cached = _block_merge(store.read_blocks(spark, ids), in_range, cb, codec)
+        out = cached.drop("_reused")
     # name suffix = next_generation at merge-PLAN time (manifest0, no extra
     # read) — a uniqueness scope, not the committed generation: concurrent
     # commits may bump the counter before commit_segment assigns the real
@@ -350,22 +387,24 @@ def merge_segments(
         },
     )
     try:
-        # byte-reuse economics: ONE group-count over the persisted output,
-        # which also fills the cache both commit writes then read — no
-        # pipeline replay
-        counts = {
-            r["_reused"]: r["cnt"]
-            for r in new_blocks.groupBy("_reused")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        n_reused = int(counts.get(True, 0))
-        # the merge.cpp:166-180 fast-path economics: blocks moved
-        # byte-identical vs decoded+re-encoded
-        meta.metrics.update(
-            blocks_reused=n_reused,
-            blocks_reencoded=int(sum(counts.values())) - n_reused,
-        )
+        if cached is not None:
+            # byte-reuse economics: ONE group-count over the persisted
+            # output, which also fills the cache both commit writes then
+            # read — no pipeline replay
+            counts = {
+                r["_reused"]: r["cnt"]
+                for r in cached.groupBy("_reused")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .collect()
+            }
+            n_reused = int(counts.get(True, 0))
+            # the merge.cpp:166-180 fast-path economics: blocks moved
+            # byte-identical vs decoded+re-encoded
+            reuse = {
+                "blocks_reused": n_reused,
+                "blocks_reencoded": int(sum(counts.values())) - n_reused,
+            }
+        meta.metrics.update(reuse)
         # ONE atomic manifest write: merged segment in, inputs out,
         # fully-applied tombstone gens retired — no window serving merged
         # docs twice, no lost concurrent delete.  Gens retire only if this
@@ -373,13 +412,14 @@ def merge_segments(
         # added concurrently (later gens) and deletes still masking
         # unmerged segments stay in force.
         store.commit_segment(
-            new_blocks.drop("_reused"),
+            out,
             meta,
             started=t0,
             retire_ids=ids,
             retire_delete_gens=read_gens if full_merge else (),
         )
     finally:
-        new_blocks.unpersist()
+        if cached is not None:
+            cached.unpersist()
     return meta
 

@@ -1,20 +1,41 @@
-"""Physical posting segments: sorted, delta+varbyte block encoding.
+"""Physical posting segments: the wire codecs and their one reader.
 
-Reference format target (semantics, not bytes): the Google codec's
-block-columnar postings — docID-deltas and freqs varbyte-encoded in fixed-size
-blocks with a skiplist entry carrying the block's max docID
-(``/root/reference/google_codec.cpp:118-176``, skiplist emit ``:146-159``),
-positions in a parallel stream (``lucene_codec.cpp:240-304`` analog).  Our
-blocks carry ``max_doc_id`` (the skiplist key — parquet min/max page stats
-give seek-by-docid) and ``max_tf`` (block-max metadata for WAND-style
-pruning, SURVEY.md §4.3).
+A store holds ONE codec (``SegmentStore.layout``).  Three are known:
+
+- ``native`` (the default): a segment's ``postings`` part is flat Parquet
+  rows ``(term string, doc_id long, tf int, positions array<int>,
+  payloads array<long>)``, one per (term, doc), sorted by (term, doc_id)
+  and written zstd / ``parquet.writer.version=v2`` (DELTA_BINARY_PACKED
+  ints) in 1 MiB row groups (``NATIVE_WRITE_OPTIONS``).  Spark scans and
+  filters the rows in the JVM: a query's postings are a pushed-down
+  Parquet scan with no Python decode (the columnar inverted-index layout
+  of ICDE 2025 "Columnar Formatted Inverted Index for Highly-Paralleled,
+  Vectorized Query Processing"; Trinity's codecs are pluggable,
+  ``codecs.h``).  Beside it sits a small ``block_meta`` part
+  (``BLOCK_META_SCHEMA``, built by ``native_block_meta`` from the rows the
+  commit writes): each (term, chunk) group's docs in doc order, cut into
+  ``BLOCK_SIZE`` runs — the block geometry the block codecs encode, as
+  metadata only, for the pruned routes and the term dictionary.
+- ``varbyte``: delta+varbyte posting blocks — the Google codec's
+  block-columnar postings, kept as a contract because it reproduces
+  Trinity's default codec (``google_codec.cpp:118-176``,
+  skiplist emit ``:146-159``; positions in a parallel stream,
+  ``lucene_codec.cpp:240-304`` analog).
+- ``pfor``: the same blocks with 128-value FOR bit-packing + vInt tail
+  (the lucene codec).
+
+Block rows (``SEGMENT_SCHEMA``, varbyte and pfor) carry ``max_doc_id``
+(the skiplist key — parquet min/max page stats give seek-by-docid) and
+``max_tf`` (block-max metadata for WAND-style pruning, SURVEY.md §4.3);
+native ``block_meta`` rows carry the same metadata columns, so the pruned
+routes read either unchanged.
 
 Scale design: a block group is ``(term, chunk)`` where ``chunk = doc_id >>
 CHUNK_BITS`` — a stopword's 10^11-row posting list lands in ~10^6 independent
 chunk groups instead of one executor-crushing (term) group.  This IS the
 explicit skew salting the north rule demands, with a deterministic salt that
-doubles as the docid-range seek key.  Encoding is ONE vectorized kernel,
-``_encode_partition``: a whole partition of postings is sorted into
+doubles as the docid-range seek key.  Block encoding is ONE vectorized
+kernel, ``_encode_partition``: a whole partition of postings is sorted into
 (chunk, term, doc) groups and every stream is encoded in one numpy pass
 (loops run over byte positions or bit widths, never rows or blocks).
 
@@ -28,9 +49,17 @@ dictionary metadata.  ``pay_bytes`` is the OPTIONAL per-hit payload stream
 position stream, empty when the app supplied none (transcripts supply none —
 the column exists so the physical format never needs a migration).
 
-This module owns the block wire format: its schemas, its one encoder and
-its decoder.  The build calls ``_encode_partition`` from the fused
-zero-shuffle pass in ``fastbuild``; merge/compaction call
+Payloads are per doc: a doc has its list, or it reads back as empty.  The
+native rows keep exactly that.  The block wire adds one more rule — a block
+carries payloads only when every doc in it has a list of ``tf`` values, so
+a block mixing docs with and without payloads reads back empty for all of
+them — and that all-or-nothing rule is an artifact of the varbyte/pfor
+wire (one self-delimiting payload stream per block), not of the model.
+
+This module owns the wire formats: their schemas, the one block encoder,
+the native block metadata and the one reader (``decode_segments``, a
+projection under native).  The build calls ``_encode_partition`` from the
+fused zero-shuffle pass in ``fastbuild``; block-codec merges call
 ``encode_postings``, which shuffles logical postings on (term, chunk) first
 so every group packs whole.
 """
@@ -42,7 +71,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.varbyte import decode_varbyte, encode_varbyte_offsets
@@ -51,21 +80,33 @@ CHUNK_BITS = 16  # 65536-doc docid ranges per encode group
 BLOCK_SIZE = 128  # docs per block (lucene_codec.h:49 BLOCK_SIZE=128)
 BLOCKS_PER_CHUNK = (1 << CHUNK_BITS) // BLOCK_SIZE
 
-# Selectable wire codecs for the three posting streams (doc deltas / tfs /
-# position deltas).  A store holds ONE codec and one chunk width: its first
-# commit fixes both in the manifest and every later commit (build, NRT
+# Selectable wire codecs.  A store holds ONE codec and one chunk width: its
+# first commit fixes both in the manifest and every later commit (build, NRT
 # append, merge) must match — ``SegmentStore.layout`` is the single owner
 # of that decision.  Each segment's lineage still records the codec that
 # wrote it — the reference's segment `id` codec marker (codecs.h:93-95,
-# indexer.cpp:268-270) — so every merge is a same-codec merge and keeps
-# the raw-copy fast path (merge.cpp:256-287).
-# pay_bytes (optional per-hit payloads) stays varbyte under BOTH codecs: the
-# stream is empty on transcript corpora and varbyte's self-delimiting
-# property is what lets all-or-nothing payload blocks coexist.
-CODEC_VARBYTE = "varbyte"  # delta+varbyte — the default wire (google codec)
+# indexer.cpp:268-270) — so every merge is a same-codec merge.
+# Under the block codecs pay_bytes (optional per-hit payloads) stays
+# varbyte: the stream is empty on transcript corpora and varbyte's
+# self-delimiting property is what lets all-or-nothing payload blocks
+# coexist.
+CODEC_NATIVE = "native"  # flat Parquet postings rows — the default
+CODEC_VARBYTE = "varbyte"  # delta+varbyte blocks (google codec)
 CODEC_PFOR = "pfor"  # 128-value FOR bit-packing + vInt tail (lucene codec)
-CODECS = (CODEC_VARBYTE, CODEC_PFOR)
-DEFAULT_CODEC = CODEC_VARBYTE
+BLOCK_CODECS = (CODEC_VARBYTE, CODEC_PFOR)
+CODECS = (CODEC_NATIVE,) + BLOCK_CODECS
+DEFAULT_CODEC = CODEC_NATIVE
+
+# Parquet settings of the native writes (postings rows and block_meta),
+# passed as write options so no other write of the session changes:
+# zstd, v2 pages (DELTA_BINARY_PACKED ints: sorted doc_ids and small tfs
+# pack to a few bits) and 1 MiB row groups, the unit both of term pruning
+# (min/max stats on the sorted term column) and of scan parallelism.
+NATIVE_WRITE_OPTIONS = {
+    "compression": "zstd",
+    "parquet.writer.version": "v2",
+    "parquet.block.size": str(1 << 20),
+}
 
 SEGMENT_SCHEMA = (
     "term string, chunk long, block_id long, doc_count int, min_doc_id long, "
@@ -76,11 +117,98 @@ POSTINGS_SCHEMA = "term string, doc_id long, tf int, positions array<int>"
 POSTINGS_PAYLOAD_SCHEMA = POSTINGS_SCHEMA + ", payloads array<long>"
 POSTINGS_NOPOS_SCHEMA = "term string, doc_id long, tf int"
 POSTINGS_PAYLOAD_NOPOS_SCHEMA = POSTINGS_NOPOS_SCHEMA + ", payloads array<long>"
+# a native segment's postings part, and its block metadata part
+NATIVE_SCHEMA = POSTINGS_PAYLOAD_SCHEMA
+BLOCK_META_SCHEMA = (
+    "term string, chunk long, block_id long, doc_count int, min_doc_id long, "
+    "max_doc_id long, max_tf int, sum_tf long"
+)
 
 
-def _check_codec(codec: str) -> None:
-    if codec not in CODECS:
-        raise ValueError(f"unknown codec {codec!r}; known: {CODECS}")
+def _check_codec(codec: str, known: tuple[str, ...] = CODECS) -> None:
+    if codec not in known:
+        raise ValueError(f"unknown codec {codec!r}; known: {known}")
+
+
+def native_stage(postings: DataFrame, chunk_bits: int, n_parts: int) -> DataFrame:
+    """A native commit's rows (``NATIVE_SCHEMA``; a frame without
+    ``payloads`` gets a NULL list per row, which reads back as an empty
+    one), staged once for both of its writes: hash-partitioned on term into
+    ``n_parts`` partitions, sorted by (term, chunk, doc_id) — the same
+    order as (term, doc_id), since the chunk is ``doc_id >> chunk_bits`` —
+    and locally checkpointed, lazily: the first write materializes it, the
+    concurrent second one reads the same blocks (``release_stage`` frees
+    them).  A checkpoint keeps rows as they are; a DataFrame cache would
+    first convert them to columnar batches."""
+    payloads = (
+        F.col("payloads")
+        if "payloads" in postings.columns
+        else F.lit(None).cast("array<long>")
+    )
+    return (
+        postings.select(
+            "term", "doc_id", "tf", "positions", payloads.alias("payloads")
+        )
+        .repartition(n_parts, "term")
+        .sortWithinPartitions(
+            "term", F.shiftright("doc_id", chunk_bits), "doc_id"
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def release_stage(staged: DataFrame) -> None:
+    """Free a ``native_stage`` checkpoint's blocks now rather than at the
+    JVM's next garbage collection (the context cleaner's trigger)."""
+    staged._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def native_block_meta(staged: DataFrame, chunk_bits: int, n_parts: int) -> DataFrame:
+    """``native_stage`` rows -> ``BLOCK_META_SCHEMA`` rows, in the JVM.
+
+    Each (term, chunk) group's docs, in doc order, are cut into runs of
+    ``BLOCK_SIZE``; a run's row carries the metadata a block codec's block
+    would (``block_id`` numbered as ``_encode_partition`` numbers them), so
+    every bound the pruned routes read is the exact per-block value and
+    ``doc_count`` / ``sum_tf`` sum to the term's df / cf.
+
+    The staged partitioning (term) and order (term, chunk, doc_id) are
+    exactly what the rank window needs, and the aggregation clusters on a
+    superset of term, so nothing here shuffles or sorts the rows; only the
+    block rows are sorted.  They come out in ``n_parts`` partitions, with an
+    extra boolean column ``_first`` marking each term's first block, so a
+    write can count distinct terms (an Observation cannot aggregate
+    DISTINCT)."""
+    blocks_per_chunk = max((1 << chunk_bits) // BLOCK_SIZE, 1)
+    rank = F.row_number().over(
+        Window.partitionBy("term", "chunk").orderBy("doc_id")
+    )
+    meta = (
+        staged.select(
+            "term", "doc_id", "tf",
+            F.shiftright("doc_id", chunk_bits).alias("chunk"),
+        )
+        .withColumn("_blk", F.floor((rank - 1) / BLOCK_SIZE).cast("long"))
+        .groupBy("term", "chunk", "_blk")
+        .agg(
+            F.count(F.lit(1)).cast("int").alias("doc_count"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
+            F.max("tf").cast("int").alias("max_tf"),
+            F.sum("tf").cast("long").alias("sum_tf"),
+        )
+        .select(
+            "term", "chunk",
+            (F.col("chunk") * blocks_per_chunk + F.col("_blk")).alias("block_id"),
+            "doc_count", "min_doc_id", "max_doc_id", "max_tf", "sum_tf",
+        )
+    )
+    first = F.row_number().over(Window.partitionBy("term").orderBy("block_id")) == 1
+    return (
+        meta.withColumn("_first", first)
+        .coalesce(n_parts)
+        .sortWithinPartitions("term", "block_id")
+    )
 
 
 def _gather_rows(
@@ -102,7 +230,7 @@ def _encode_partition(
     uniques,
     pos_flat: np.ndarray,
     chunk_bits: int,
-    codec: str = DEFAULT_CODEC,
+    codec: str = CODEC_VARBYTE,
     pay_len: np.ndarray | None = None,
     pay_flat: np.ndarray | None = None,
 ) -> pa.RecordBatch:
@@ -299,14 +427,15 @@ def _encode_table(
 def encode_postings(
     postings: DataFrame,
     chunk_bits: int = CHUNK_BITS,
-    codec: str = DEFAULT_CODEC,
+    codec: str = CODEC_VARBYTE,
 ) -> DataFrame:
     """Logical postings -> block rows. One shuffle on (term, chunk), then
     one ``_encode_partition`` pass per partition (``_encode_table``).
     An optional ``payloads array<long>`` input column (per-hit, parallel to
     positions) is encoded into the ``pay_bytes`` stream.  ``codec`` selects
-    the wire format of the three posting streams (see module constants)."""
-    _check_codec(codec)
+    the wire format of the three posting streams, one of ``BLOCK_CODECS``
+    (native postings are rows: a native commit takes them as they are)."""
+    _check_codec(codec, BLOCK_CODECS)
     cols = ["term", "doc_id", "tf", "positions"]
     if "payloads" in postings.columns:
         cols.append("payloads")
@@ -371,7 +500,7 @@ def _decode_batches(
     batches: Iterator[pa.RecordBatch],
     with_payloads: bool = False,
     with_positions: bool = True,
-    codec: str = DEFAULT_CODEC,
+    codec: str = CODEC_VARBYTE,
 ) -> Iterator[pa.RecordBatch]:
     """Block rows -> posting rows, one vectorized pass per Arrow batch.
 
@@ -455,23 +584,34 @@ def decode_segments(
     blocks: DataFrame,
     with_payloads: bool = False,
     with_positions: bool = True,
-    codec: str = DEFAULT_CODEC,
+    codec: str = CODEC_VARBYTE,
 ) -> DataFrame:
-    """Block rows -> logical postings (term, doc_id, tf[, positions][, payloads]).
+    """A segment's stored postings part -> logical postings (term, doc_id,
+    tf[, positions][, payloads]).  ``codec`` names the store's wire
+    (``SegmentStore.layout``): under ``native`` the part already holds the
+    rows and this is a column projection — Spark's own Parquet scan, no
+    Python; under a block codec it is the ``_decode_batches`` mapInArrow.
 
     ``with_payloads=True`` adds the per-hit payload column (empty list for
     hits indexed without payloads) — kept OFF the query hot path: BM25 never
-    reads it, so the default scan doesn't even project pay_bytes.
+    reads it, so the default scan doesn't even project payloads.
 
     ``with_positions=False`` drops the position column AND its physical
-    pos_bytes stream from the scan projection entirely (parquet column
-    pruning) — the docs/freqs-only decode a token-only BM25 query needs;
-    pos_bytes is the largest stream, so this roughly halves the bytes a
-    positional-free query touches.
-
-    ``codec`` names the wire format the blocks were written with — one
-    per store (``SegmentStore.layout``)."""
+    stream (positions / pos_bytes) from the scan projection entirely
+    (parquet column pruning) — the docs/freqs-only read a token-only BM25
+    query needs; positions are the largest stream."""
     _check_codec(codec)
+    if codec == CODEC_NATIVE:
+        cols = ["term", "doc_id", "tf"]
+        if with_positions:
+            cols.append("positions")
+        if with_payloads:
+            cols.append(
+                F.coalesce(
+                    F.col("payloads"), F.array().cast("array<long>")
+                ).alias("payloads")
+            )
+        return blocks.select(*cols)
     if with_payloads:
         cols = ["term", "doc_count", "doc_deltas", "tf_bytes"]
         if with_positions:

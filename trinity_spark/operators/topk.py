@@ -288,15 +288,15 @@ class PruningReport:
 
 
 class _PrunedView:
-    """SegmentIndex facade with the block scan restricted to an
-    already-filtered block DataFrame (``blocks``: the kept spans' blocks, on
-    both the OR block-max and the AND span paths).  Stats (df, N)
-    intentionally come from the FULL index — scores must not change under
-    pruning."""
+    """SegmentIndex facade whose postings scan is restricted to ``stored``,
+    the kept spans' part of the index's stored postings (``_restricted``).
+    Stats (df, N) intentionally come from the FULL index — scores must not
+    change under pruning.  The view carries no block metadata, so a plan
+    over it never routes again."""
 
-    def __init__(self, inner, blocks: DataFrame):
+    def __init__(self, inner, stored: DataFrame):
         self._inner = inner
-        self.blocks = blocks
+        self.stored = stored
         self.term_dict = inner.term_dict
         self.deleted = inner.deleted
         self.postings = inner.postings
@@ -306,9 +306,9 @@ class _PrunedView:
     def postings_for(self, terms, with_positions: bool = True):
         from .segments import decode_segments
 
-        pruned = self.blocks.where(F.col("term").isin(terms))
         return decode_segments(
-            pruned, with_positions=with_positions, codec=self.codec
+            self.stored.where(F.col("term").isin(terms)),
+            with_positions=with_positions, codec=self.codec,
         )
 
     def postings_with_payloads_for(self, terms):
@@ -318,6 +318,40 @@ class _PrunedView:
 
     def stats_for(self, terms):
         return self._inner.stats_for(terms)
+
+
+def _restricted(
+    index, terms: list[str], spans: DataFrame, span_bits: int,
+    hint_broadcast: bool = True,
+) -> _PrunedView:
+    """The index with its postings scan restricted to the kept ``spans``.
+    Native rows are restricted per doc: a row survives when its doc's span
+    is kept — a broadcast semi-join on ``doc_id >> span_bits``, all in the
+    JVM, and exact (every posting of a doc in a kept span survives, no
+    other does).  Block codecs restrict whole blocks
+    (``_blocks_restricted_to_spans``) before the decode.
+
+    ``hint_broadcast`` forces the span-set broadcast; pass False when the
+    span set has no driver-side size bound (the pruned-OR kept set — a
+    mispredicted threshold at 10^12-doc geometry could keep billions of
+    spans) and let AQE pick broadcast only when it measures small."""
+    from .segments import CODEC_NATIVE
+
+    if index.codec != CODEC_NATIVE:
+        return _PrunedView(
+            index,
+            _blocks_restricted_to_spans(
+                index, terms, spans, span_bits, hint_broadcast
+            ),
+        )
+    sp = F.broadcast(spans) if hint_broadcast else spans
+    rows = (
+        index.stored.where(F.col("term").isin(terms))
+        .withColumn("span", F.shiftright("doc_id", span_bits))
+        .join(sp, "span", "left_semi")
+        .drop("span")
+    )
+    return _PrunedView(index, rows)
 
 
 def _blocks_restricted_to_spans(
@@ -332,12 +366,7 @@ def _blocks_restricted_to_spans(
     final semi-join moves only (term, block_id) keys; the byte streams ride
     the probe side untouched.  Over-keeping is always correct — a kept block
     whose docs all miss the rare side just decodes to rows the AND logic
-    drops.
-
-    ``hint_broadcast`` forces the span-set broadcast; pass False when the
-    span set has no driver-side size bound (the pruned-OR kept set — a
-    mispredicted threshold at 10^12-doc geometry could keep billions of
-    spans) and let AQE pick broadcast only when it measures small."""
+    drops."""
     b = index.blocks.where(F.col("term").isin(terms))
     sp = F.broadcast(spans) if hint_broadcast else spans
     keys = (
@@ -458,15 +487,9 @@ def rare_and_topk(
                 node, k, doc_filter=doc_filter, block_pruning=False
             )
         rep["bailed"] = False
-        view = _PrunedView(
-            index,
-            blocks=_blocks_restricted_to_spans(
-                index,
-                terms,
-                spans,
-                span_bits,
-                hint_broadcast=n_spans <= SPAN_CAND_MAX,
-            ),
+        view = _restricted(
+            index, terms, spans, span_bits,
+            hint_broadcast=n_spans <= SPAN_CAND_MAX,
         )
         return QueryPlanner(view, similarity=similarity).plan(
             node, k, doc_filter=doc_filter, block_pruning=False
@@ -522,11 +545,8 @@ def rare_and_topk(
             )
         rep["bailed"] = False
         hint_broadcast = n_spans <= SPAN_CAND_MAX
-    view = _PrunedView(
-        index,
-        blocks=_blocks_restricted_to_spans(
-            index, terms, spans, span_bits, hint_broadcast=hint_broadcast
-        ),
+    view = _restricted(
+        index, terms, spans, span_bits, hint_broadcast=hint_broadcast
     )
     return QueryPlanner(view, similarity=similarity).plan(
         node, k, doc_filter=doc_filter, block_pruning=False
@@ -635,12 +655,7 @@ def pruned_or_topk(
     bounds = per_term.groupBy("span").agg(F.sum("ub").alias("bound"))
     kept = bounds.where(F.col("bound") >= F.lit(threshold)).select("span")
 
-    view = _PrunedView(
-        index,
-        blocks=_blocks_restricted_to_spans(
-            index, live, kept, span_bits, hint_broadcast=False
-        ),
-    )
+    view = _restricted(index, live, kept, span_bits, hint_broadcast=False)
     res = QueryPlanner(view).plan(node, k, block_pruning=False)
     if return_report:
         # one action for both counts — bounds embeds the metadata explode +

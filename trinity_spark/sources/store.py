@@ -25,15 +25,24 @@ snapshot — it is one manifest write here too):
         nrt/<segment_id>/           # NRT slices: keys only (conv_id,
                                     #   turn_idx, doc_id) — no text
       segments/<segment_id>/
-        postings/   (block rows, written sorted by term -> parquet min/max
-                     column stats give term-seek, the terms.idx analog)
-        term_dict/  (term, df, cf; derived here from the block metadata)
+        postings/   native (the default codec): one row per (term, doc) —
+                      (term, doc_id, tf, positions, payloads), sorted by
+                      (term, doc_id), zstd / parquet v2 / 1 MiB row groups;
+                    varbyte, pfor: the encoded block rows.
+                    Written sorted by term -> parquet min/max column stats
+                    give term-seek, the terms.idx analog
+        block_meta/ native only: per-block metadata (term, chunk, block_id,
+                    doc_count, min/max_doc_id, max_tf, sum_tf) derived here
+                    from the rows; the dictionary is read off it
+        term_dict/  varbyte, pfor only: (term, df, cf), derived here from
+                    the block metadata
       deletes/<gen>.parquet         # masked doc_ids (docidupdates.cpp analog)
 
 The manifest records, per segment: generation, doc range, row counts,
 METRICS (docs, wall seconds, docs/sec) and LINEAGE (input fingerprint, docid
-range, engine version, wire layout, written block count and the field
-statistics ``{sum_term_hits, total_terms, sum_terms_docs}``) — the north
+range, engine version, wire layout, written block count — postings rows
+under native — and the field statistics ``{sum_term_hits, total_terms,
+sum_terms_docs}``) — the north
 rule's per-partition checkpoint + lineage requirement.  The store owns what
 a segment records: ``commit_segment`` takes only blocks and meta, the
 dictionary and statistics come off the commit's own writes, and the one
@@ -56,12 +65,19 @@ from pyspark.sql import functions as F
 from .. import __version__
 from ..operators.build import term_dict_from_blocks
 from ..operators.segments import (
+    BLOCK_META_SCHEMA,
     CHUNK_BITS,
+    CODEC_NATIVE,
     CODECS,
     DEFAULT_CODEC,
+    NATIVE_SCHEMA,
+    NATIVE_WRITE_OPTIONS,
     SEGMENT_SCHEMA,
     _check_codec,
     decode_segments,
+    native_block_meta,
+    native_stage,
+    release_stage,
 )
 
 MANIFEST = "manifest.json"
@@ -85,13 +101,17 @@ POSTINGS_TARGET_FILE_BYTES = int(
 # ~54 B/doc on the bench transcript corpus at 1M turns; only the ORDER of
 # magnitude matters (file-count decisions).
 POSTINGS_EST_BYTES_PER_DOC = 64.0
-# Parquet row-group size for postings files.  Row groups are BOTH the term-
+# Parquet row-group size for block-codec postings files (native rows carry
+# their own, ``NATIVE_WRITE_OPTIONS``).  Row groups are BOTH the term-
 # pruning granularity (min/max stats on the sorted term column) AND the
 # scan-parallelism unit (a row group is read by exactly one task), so with
 # few large files the default 128 MB row group would serialize multi-term
 # decodes into 1-2 tasks.  ~8 MiB keeps the old 32-file layout's skip
 # granularity and parallel decode units inside the new large files.
 POSTINGS_ROWGROUP_BYTES = 8 << 20
+# A segment's per-term tables (term_dict, native block_meta) take one file
+# per this many postings files' worth of estimated data.
+DICT_FILE_RATIO = 32
 
 
 class Layout(NamedTuple):
@@ -550,18 +570,31 @@ class SegmentStore:
         return self.read_docid_map(spark).count()
 
     def _write_segment_data(
-        self, blocks: DataFrame, segment_id: str, docs_hint: int
+        self, blocks: DataFrame, segment_id: str, docs_hint: int, layout: Layout
     ) -> dict[str, Any]:
-        """Write a segment's postings and term dictionary; returns what the
-        segment records in lineage: the written block count and the field
-        statistics (``index_source.h:44-53``), both observed on the two
-        writes themselves — no extra job."""
+        """Write a segment's two parts; returns what the segment records in
+        lineage: the written block count and the field statistics
+        (``index_source.h:44-53``), all observed on the two writes
+        themselves — no extra job.
+
+        Block codecs: ``postings`` (the block rows) and ``term_dict`` (off
+        the block metadata).  ``native``: ``postings`` (the rows, sorted by
+        (term, doc_id), written with ``NATIVE_WRITE_OPTIONS``) and
+        ``block_meta`` (``native_block_meta`` of the same rows), whose rows
+        also serve as the dictionary (``read_term_dict``).  Under
+        native, ``n_blocks`` counts postings ROWS — one per (term, doc) —
+        and fsck recounts the same (``block_meta`` must sum its doc_count
+        to it)."""
         # sorted by term: parquet row-group min/max on `term` = dictionary seek.
         # Partition count is derived from estimated postings BYTES (see
         # POSTINGS_TARGET_FILE_BYTES), capped at core count: tiny segments
         # (including 0-doc ones, e.g. a merge of fully tombstoned inputs)
         # write 1 file instead of one-per-core, big segments keep up to one
-        # writer per core.
+        # writer per core.  The small per-term tables (term_dict or
+        # block_meta) take one file per DICT_FILE_RATIO postings files' worth
+        # of data: one file at the bench point (the first stats_for collect
+        # reads one footer), more as the segment grows, so the dictionary
+        # aggregation is not one task at the 10^10-doc design point.
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
@@ -569,10 +602,21 @@ class SegmentStore:
 
         import math
 
+        native = layout.codec == CODEC_NATIVE
+        if native == ("doc_deltas" in blocks.columns):
+            raise ValueError(
+                f"a {layout.codec!r} segment commits "
+                + ("postings rows" if native else "encoded block rows")
+                + f"; got columns {blocks.columns}"
+            )
         spark = blocks.sparkSession
         par = max(spark.sparkContext.defaultParallelism, 2)
         est = docs_hint * POSTINGS_EST_BYTES_PER_DOC
         n_parts = min(max(math.ceil(est / POSTINGS_TARGET_FILE_BYTES), 1), par)
+        n_small = min(
+            max(math.ceil(est / (POSTINGS_TARGET_FILE_BYTES * DICT_FILE_RATIO)), 1),
+            par,
+        )
 
         blocks_obs = Observation()
         terms_obs = Observation()
@@ -602,28 +646,60 @@ class SegmentStore:
             )
 
         def _write_dict() -> None:
-            # KB-scale table: one file, not one per shuffle partition (a
-            # 32-file dictionary made the first stats_for collect pay 32
-            # footer reads); one row per distinct term
-            term_dict_from_blocks(blocks).coalesce(1).observe(
+            # one row per distinct term, in n_small files
+            term_dict_from_blocks(
+                blocks.select("term", "doc_count", "sum_tf")
+                .repartition(n_small, "term")
+            ).observe(
                 terms_obs, F.count(F.lit(1)).alias("total_terms")
             ).write.mode("overwrite").parquet(
                 self.segment_dir(segment_id, "term_dict")
             )
 
-        # both outputs derive from the SAME blocks frame and are mutually
+        # native: ONE shuffle and sort of the rows, checkpointed, feeds both
+        # writes — the rows stream out of it as they are, and the block
+        # metadata is derived in its order without sorting them again
+        staged = (
+            native_stage(blocks, layout.chunk_bits, n_parts) if native else None
+        )
+
+        def _write_rows() -> None:
+            staged.observe(
+                blocks_obs,
+                F.count(F.lit(1)).alias("n_blocks"),
+                F.coalesce(F.sum("tf"), F.lit(0))
+                .cast("long").alias("sum_term_hits"),
+            ).write.mode("overwrite").options(**NATIVE_WRITE_OPTIONS).parquet(
+                self.segment_dir(segment_id, "postings")
+            )
+
+        def _write_meta() -> None:
+            native_block_meta(staged, layout.chunk_bits, n_small).observe(
+                terms_obs,
+                F.coalesce(F.sum(F.col("_first").cast("long")), F.lit(0))
+                .alias("total_terms"),
+            ).drop("_first").write.mode("overwrite").options(
+                **NATIVE_WRITE_OPTIONS
+            ).parquet(self.segment_dir(segment_id, "block_meta"))
+
+        # both outputs derive from the SAME frame and are mutually
         # independent: submit them as concurrent driver actions so the
-        # commit wall is the postings write, not the sum of two job
-        # latencies (the dictionary is tiny).  Each target carries the
-        # caller's local properties (job group, scheduler pool): pinned
-        # pool threads would otherwise run the writes outside them
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(inheritable_thread_target(spark)(f))
-                for f in (_write_postings, _write_dict)
-            ]
-            for f in futs:
-                f.result()
+        # commit wall is the larger write, not the sum of two job
+        # latencies.  Each target carries the caller's local properties
+        # (job group, scheduler pool): pinned pool threads would otherwise
+        # run the writes outside them
+        writes = (_write_rows, _write_meta) if native else (_write_postings, _write_dict)
+        try:
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futs = [
+                    pool.submit(inheritable_thread_target(spark)(f))
+                    for f in writes
+                ]
+                for f in futs:
+                    f.result()
+        finally:
+            if staged is not None:
+                release_stage(staged)
         # the exact written-block count lets fsck detect LOST postings files
         # (physical < lineage) as an ERROR, which the doc count cannot
         # (zero-token docs legitimately depress it).  Every value is counted
@@ -637,7 +713,10 @@ class SegmentStore:
             "field_stats": {
                 "sum_term_hits": int(got["sum_term_hits"]),
                 "total_terms": int(terms_obs.get["total_terms"]),
-                "sum_terms_docs": int(got["sum_terms_docs"]),
+                # a native row is one (term, doc) pair
+                "sum_terms_docs": int(
+                    got["n_blocks"] if native else got["sum_terms_docs"]
+                ),
             },
         }
 
@@ -684,8 +763,14 @@ class SegmentStore:
         another writer committed, and a later ``replace_documents`` could
         tombstone the winner's document through the loser's stale rows."""
         started = time.monotonic() if started is None else started
+        # the layout this segment is written in: the store's once fixed,
+        # else the meta's (the stamp below re-checks under the lock)
+        m = self.read_manifest()
+        lay = _layout(
+            meta.lineage, default=_layout(m) if _layout_fixed(m) else DEFAULT_LAYOUT
+        )
         meta.lineage.update(
-            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt)
+            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt, lay)
         )
         meta.lineage.setdefault("deletes_gens", [])
         meta.lineage["engine_version"] = __version__
@@ -784,35 +869,71 @@ class SegmentStore:
 
     # --- reads ---
 
-    def read_blocks(
-        self,
-        spark: SparkSession,
-        segment_ids: list[str] | None = None,
+    def _segment_paths(self, segment_ids: list[str] | None, part: str) -> list[str]:
+        metas = self.segments()
+        if segment_ids is not None:
+            metas = [s for s in metas if s.segment_id in segment_ids]
+        return [self.segment_dir(s.segment_id, part) for s in metas]
+
+    def _read_part(
+        self, spark: SparkSession, segment_ids: list[str] | None, part: str,
+        schema: str,
     ) -> DataFrame:
-        """Union of the selected segments' block rows.
+        """Union of the selected segments' ``part`` files.
 
         All store reads pin the KNOWN write-time schema instead of letting
         Spark infer it — schema inference runs a footer-reading job per
         ``read.parquet`` call, which made every SegmentIndex open cost ~3
         driver jobs; a 100-store collection open was ~300 tiny serial jobs
         before the first real query job.  Pinned, opens are job-free."""
-        metas = self.segments()
-        if segment_ids is not None:
-            metas = [s for s in metas if s.segment_id in segment_ids]
-        if not metas:
-            return spark.createDataFrame([], SEGMENT_SCHEMA)
-        paths = [self.segment_dir(s.segment_id, "postings") for s in metas]
-        return spark.read.schema(SEGMENT_SCHEMA).parquet(*paths)
+        paths = self._segment_paths(segment_ids, part)
+        if not paths:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
+
+    def read_blocks(
+        self,
+        spark: SparkSession,
+        segment_ids: list[str] | None = None,
+    ) -> DataFrame:
+        """The selected segments' block metadata rows: the block rows
+        themselves under a block codec, the ``block_meta`` part under
+        native.  Either carries (term, chunk, block_id, doc_count,
+        min_doc_id, max_doc_id, max_tf, sum_tf) for the pruned routes."""
+        if self.layout().codec == CODEC_NATIVE:
+            return self._read_part(spark, segment_ids, "block_meta", BLOCK_META_SCHEMA)
+        return self._read_part(spark, segment_ids, "postings", SEGMENT_SCHEMA)
+
+    def read_postings(
+        self,
+        spark: SparkSession,
+        segment_ids: list[str] | None = None,
+    ) -> DataFrame:
+        """The selected segments' stored postings part, the frame
+        ``decode_segments`` reads: native rows, or the encoded block rows
+        (the same frame as ``read_blocks``) under a block codec."""
+        if self.layout().codec == CODEC_NATIVE:
+            return self._read_part(spark, segment_ids, "postings", NATIVE_SCHEMA)
+        return self.read_blocks(spark, segment_ids)
 
     TERM_DICT_SCHEMA = "term string, df long, cf long"
 
-    def read_term_dict(self, spark: SparkSession) -> DataFrame:
-        metas = self.segments()
-        if not metas:
-            return spark.createDataFrame([], self.TERM_DICT_SCHEMA)
-        return spark.read.schema(self.TERM_DICT_SCHEMA).parquet(
-            *[self.segment_dir(s.segment_id, "term_dict") for s in metas]
-        )
+    def read_term_dict(
+        self, spark: SparkSession, blocks: DataFrame | None = None
+    ) -> DataFrame:
+        """Every live segment's (term, df, cf) rows; readers sum them per
+        term.  Native segments keep no dictionary part: their block_meta
+        rows serve, one per block (df = doc_count, cf = sum_tf), so the
+        dictionary stays a plain scan, as a block-codec store's is
+        (``blocks``: an already-opened ``read_blocks`` frame)."""
+        if self.layout().codec == CODEC_NATIVE:
+            blocks = self.read_blocks(spark) if blocks is None else blocks
+            return blocks.select(
+                "term",
+                F.col("doc_count").cast("long").alias("df"),
+                F.col("sum_tf").alias("cf"),
+            )
+        return self._read_part(spark, None, "term_dict", self.TERM_DICT_SCHEMA)
 
     def gc(self, orphan_grace_sec: float = 0.0) -> dict[str, list[str]]:
         """Physically remove data no snapshot references: segment directories
@@ -903,11 +1024,16 @@ class SegmentStore:
             live_ids = {sid for sid, _, _ in live_ranges}
 
             def _slice_range(name: str) -> tuple[int, int] | None:
-                parts = name.rsplit("-", 2)
-                try:
-                    return int(parts[-2]), int(parts[-1])
-                except (ValueError, IndexError):
+                # seg-<lo>-<hi>[-<suffix>]: NRT ids end in a marker suffix
+                # (streaming/nrt.py nrt_segment_id) that is not part of the
+                # range, even when it is all digits
+                parts = name.split("-")
+                if parts[0] != "seg" or len(parts) not in (3, 4):
                     return None  # unparseable: never touch
+                try:
+                    return int(parts[1]), int(parts[2])
+                except ValueError:
+                    return None
 
             for name in sorted(slice_names):
                 p = os.path.join(nrt_root, name)
@@ -987,7 +1113,10 @@ class SegmentStore:
         lineage at write time — an exact two-sided invariant (blocks exist
         independent of token content), so lost/truncated postings
         part-files error even when the doc-count heuristic would have
-        shrugged; segments written before n_blocks lineage skip it.
+        shrugged; segments written before n_blocks lineage skip it.  Under
+        the native codec ``n_blocks`` counts postings rows, so the deep pass
+        recounts rows, and the ``block_meta`` part must sum its
+        ``doc_count`` to the same figure (a lost metadata file errors too).
 
         Range disjointness is only asserted between NON-merged segments: a
         merge of a non-contiguous candidate set (legal — see merge.py's
@@ -1005,8 +1134,10 @@ class SegmentStore:
         warnings: list[str] = []
         m = self.read_manifest()
         metas = [SegmentMeta(**s) for s in m["segments"]]
+        native = _layout(m).codec == CODEC_NATIVE
+        parts = ("postings", "block_meta") if native else ("postings", "term_dict")
         for meta in metas:
-            for part in ("postings", "term_dict"):
+            for part in parts:
                 d = self.segment_dir(meta.segment_id, part)
                 if not os.path.isdir(d) or not any(
                     f.endswith(".parquet") for f in os.listdir(d)
@@ -1055,7 +1186,7 @@ class SegmentStore:
                 # distinct docs across the whole store vs Σ docs_cnt
                 total = (
                     decode_segments(
-                        self.read_blocks(spark),
+                        self.read_postings(spark),
                         with_positions=False,
                         codec=codec,
                     )
@@ -1074,22 +1205,26 @@ class SegmentStore:
                         f"{expect}: {expect - total} docs have zero postings "
                         "(expected for empty/whitespace turns)"
                     )
-            for meta in metas:
-                from pyspark.errors import AnalysisException
+            from pyspark.errors import AnalysisException
 
+            def _read(meta: SegmentMeta, part: str) -> DataFrame | None:
                 try:
-                    blocks = spark.read.parquet(
-                        self.segment_dir(meta.segment_id, "postings")
-                    )
-                    blocks.schema  # force schema inference (lazy otherwise)
+                    df = spark.read.parquet(self.segment_dir(meta.segment_id, part))
+                    df.schema  # force schema inference (lazy otherwise)
+                    return df
                 except AnalysisException:
+                    return None
+
+            for meta in metas:
+                expect_blocks = meta.lineage.get("n_blocks")
+                blocks = _read(meta, "postings")
+                if blocks is None:
                     # no readable parquet file at all — every part-file of
                     # this segment is lost.  With data-volume-sized output
                     # files a small segment is ONE file, so total loss is a
                     # plausible single-file accident; report it through the
                     # same exact block-count invariant instead of crashing
                     # the checker on schema inference.
-                    expect_blocks = meta.lineage.get("n_blocks")
                     errors.append(
                         f"{meta.segment_id}: physical block count 0 != "
                         f"lineage n_blocks {expect_blocks} "
@@ -1105,7 +1240,6 @@ class SegmentStore:
                 # docs legitimately depress the doc count but never the
                 # block count.  Footer-metadata job, no decode.  Segments
                 # written before n_blocks lineage existed skip the check.
-                expect_blocks = meta.lineage.get("n_blocks")
                 if expect_blocks is not None:
                     n_blocks = blocks.count()
                     if n_blocks != expect_blocks:
@@ -1114,6 +1248,18 @@ class SegmentStore:
                             f"{n_blocks} != lineage n_blocks {expect_blocks} "
                             "(lost or duplicated postings files)"
                         )
+                    if native:
+                        bm = _read(meta, "block_meta")
+                        covered = (
+                            0 if bm is None
+                            else bm.select(F.sum("doc_count")).first()[0] or 0
+                        )
+                        if covered != expect_blocks:
+                            errors.append(
+                                f"{meta.segment_id}: block_meta doc_count sum "
+                                f"{covered} != lineage n_blocks {expect_blocks} "
+                                "(lost or duplicated block_meta files)"
+                            )
                 else:
                     # pre-upgrade segment: without the write-time block
                     # count, lost postings files are INDISTINGUISHABLE from
@@ -1142,8 +1288,12 @@ class SegmentStore:
                             f"manifest docs_cnt {meta.docs_cnt} "
                             f"({meta.docs_cnt - docs} zero-posting docs)"
                         )
+                lo_col, hi_col = (
+                    ("doc_id", "doc_id") if "doc_id" in blocks.columns
+                    else ("min_doc_id", "max_doc_id")
+                )
                 rng = blocks.select(
-                    F.min("min_doc_id").alias("lo"), F.max("max_doc_id").alias("hi")
+                    F.min(lo_col).alias("lo"), F.max(hi_col).alias("hi")
                 ).first()
                 if rng["lo"] is not None and not (
                     meta.doc_lo <= rng["lo"] and rng["hi"] < meta.doc_hi

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..operators.docids import assign_doc_ids_counted
 from ..operators.fastbuild import blocks_from_turns
 from ..operators.indexer import write_conf_scope
+from ..operators.segments import CODEC_NATIVE
 from ..sources.store import SegmentMeta, SegmentStore
 
 
@@ -120,9 +121,11 @@ def _append_assigned(
     # encode from the batch in hand: the slice holds keys only, and ids are
     # a pure function of the batch's (conv_id, turn_idx) order, so this pass
     # attaches the same ids the slice recorded
-    blocks = blocks_from_turns(
-        with_ids, chunk_bits=chunk_bits, codec=codec
-    ).persist()
+    blocks = blocks_from_turns(with_ids, chunk_bits=chunk_bits, codec=codec)
+    if codec != CODEC_NATIVE:
+        # both commit writes read the blocks; native rows are staged (sorted
+        # and checkpointed once) by the commit itself
+        blocks = blocks.persist()
     lineage = {"input": input_desc, "doc_range": [base, base + n],
                "chunk_bits": chunk_bits, "codec": codec, "mode": "nrt-append"}
     if deletes_df is not None:
