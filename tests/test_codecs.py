@@ -236,22 +236,67 @@ def test_build_with_conflicting_layout_raises_before_any_job(spark, tmp_path):
 
 def test_payloads_without_positions_honored(spark, tmp_path):
     """with_payloads=True + with_positions=False must skip the position
-    stream AND omit the positions column (the flag was silently ignored)."""
+    stream AND omit the positions column, under every codec (the block
+    decode silently ignored the flag)."""
     from trinity_spark.fixtures import gen_transcripts
     from trinity_spark.operators.indexer import build_index
-    from trinity_spark.operators.segments import decode_segments
+    from trinity_spark.operators.segments import CODECS, decode_segments
     from trinity_spark.sources.store import SegmentStore
 
-    store = SegmentStore(str(tmp_path / "idx2"))
+    corpus = spark.createDataFrame(gen_transcripts(100))
+    for codec in CODECS:
+        store = SegmentStore(str(tmp_path / codec))
+        build_index(spark, corpus, store, rows_per_segment=100, codec=codec)
+        stored = store.read_postings(spark)
+        out = decode_segments(
+            stored, with_payloads=True, with_positions=False, codec=codec
+        )
+        assert "positions" not in out.columns and "payloads" in out.columns, codec
+        ref = decode_segments(stored, with_payloads=True, codec=codec)
+        assert out.count() == ref.count() > 0, codec
+
+
+def test_keyless_manifest_reads_as_varbyte(spark, tmp_path):
+    """A store recorded before the layout keys existed (no ``codec`` or
+    ``chunk_bits`` in its manifest or lineages) was written as varbyte, the
+    only codec then: it keeps opening, answering and passing fsck as
+    varbyte, and an NRT append writes and stamps varbyte, whatever the
+    default codec for new stores."""
+    from trinity_spark.fixtures import gen_transcripts
+    from trinity_spark.operators.indexer import SegmentIndex, build_index
+    from trinity_spark.operators.segments import DEFAULT_CODEC
+    from trinity_spark.plans.planner import QueryPlanner
+    from trinity_spark.sources.store import SegmentStore
+    from trinity_spark.streaming.nrt import append_micro_segment
+
+    assert DEFAULT_CODEC != "varbyte"
+    store = SegmentStore(str(tmp_path / "old"))
     build_index(
-        spark, spark.createDataFrame(gen_transcripts(100)), store,
-        rows_per_segment=100,
+        spark, spark.createDataFrame(gen_transcripts(400)), store,
+        rows_per_segment=200, codec="varbyte",
     )
-    codec = store.layout().codec
-    out = decode_segments(
-        store.read_postings(spark), with_payloads=True, with_positions=False,
-        codec=codec,
-    )
-    assert "positions" not in out.columns and "payloads" in out.columns
-    ref = decode_segments(store.read_postings(spark), with_payloads=True, codec=codec)
-    assert out.count() == ref.count()
+
+    def top(q):
+        out = QueryPlanner(SegmentIndex(spark, store)).plan(q, k=10).collect()
+        return [(r["doc_id"], round(r["score"], 9)) for r in out]
+
+    want = top("error AND timeout")
+    with store._manifest_lock():
+        m = store.read_manifest()
+        for d in [m] + [s["lineage"] for s in m["segments"]]:
+            d.pop("codec", None)
+            d.pop("chunk_bits", None)
+        store._write_manifest(m)
+    assert store.layout() == ("varbyte", 16)
+    assert SegmentIndex(spark, store).codec == "varbyte"
+    assert top("error AND timeout") == want
+    assert store.fsck(spark, deep=True)["ok"]
+
+    extra = gen_transcripts(100, seed=9)
+    extra["conv_id"] = "nrt-" + extra["conv_id"]
+    meta = append_micro_segment(spark, store, spark.createDataFrame(extra))
+    m = store.read_manifest()
+    assert (m["codec"], meta.lineage["codec"]) == ("varbyte", "varbyte")
+    assert os.path.isdir(store.segment_dir(meta.segment_id, "term_dict"))
+    assert store.fsck(spark, deep=True)["ok"]
+    assert top("error AND timeout")

@@ -252,3 +252,79 @@ def test_dictionary_files_follow_the_size_estimate(spark, tmp_path, monkeypatch,
         SegmentIndex(spark, large).stats_for(["error", "the"]).df("error")
         == index.stats_for(["error", "the"]).df("error")
     )
+
+
+def test_native_dictionary_is_one_row_per_term(spark, native):
+    """The native dictionary reads each term's first block_meta row: one
+    row per term per segment (as many as the lineage's distinct terms),
+    whose df / cf equal the term's summed block doc_count / sum_tf."""
+    index, _ = native
+    metas = index.store.segments()
+    got = {
+        r["term"]: (r["df"], r["cf"])
+        for r in index.term_dict.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .collect()
+    }
+    assert index.term_dict.count() == sum(
+        m.lineage["field_stats"]["total_terms"] for m in metas
+    )
+    want = {
+        r["term"]: (r["df"], r["cf"])
+        for r in index.blocks.groupBy("term")
+        .agg(F.sum("doc_count").alias("df"), F.sum("sum_tf").alias("cf"))
+        .collect()
+    }
+    assert got == want
+
+
+def test_native_dictionary_lookup_skips_a_stopwords_blocks(spark, tmp_path):
+    """A dictionary lookup's ``df IS NOT NULL`` filter reaches the Parquet
+    scan, so a stopword whose block_meta rows span many row groups is read
+    from about one of them, not from all its df / 128 block rows.  The
+    segment's block_meta is swapped for a synthetic one of 200k block rows,
+    written as the commit writes it."""
+    import pyarrow.parquet as pq
+
+    from trinity_spark.operators.segments import NATIVE_WRITE_OPTIONS
+
+    store = SegmentStore(str(tmp_path / "idx"))
+    build_index(spark, spark.createDataFrame(gen_transcripts(50)), store)
+    d = store.segment_dir(store.segments()[0].segment_id, "block_meta")
+    n = 200_000
+    i = F.col("id")
+    first = (i == 0) | (i == n - 1)
+    spark.range(n).select(
+        F.when(i < n - 1, F.lit("the")).otherwise(F.lit("zz")).alias("term"),
+        F.shiftright(i, 9).alias("chunk"),
+        i.alias("block_id"),
+        F.lit(128).alias("doc_count"),
+        (i * 1000 + F.hash(i) % 100).alias("min_doc_id"),
+        (i * 1000 + 900 + F.hash(i) % 50).alias("max_doc_id"),
+        (F.abs(F.hash(i)) % 30).alias("max_tf"),
+        (F.abs(F.hash(i, F.lit(1))) % 3000).cast("long").alias("sum_tf"),
+        F.when(first, F.lit(n * 128)).cast("long").alias("df"),
+        F.when(first, F.lit(n * 300)).cast("long").alias("cf"),
+    ).coalesce(1).sortWithinPartitions("term", "block_id").write.mode(
+        "overwrite"
+    ).options(**NATIVE_WRITE_OPTIONS).parquet(d)
+    (f,) = [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+    groups = pq.ParquetFile(f).metadata.num_row_groups
+    assert groups >= 5
+
+    lookup = SegmentIndex(spark, store).term_dict.where(F.col("term") == "the")
+    assert [tuple(r) for r in lookup.collect()] == [("the", n * 128, n * 300)]
+    plan = lookup._jdf.queryExecution().executedPlan()
+    assert "IsNotNull(df)" in plan.toString()
+
+    def nodes(p):
+        yield p
+        kids = p.children().iterator()
+        while kids.hasNext():
+            yield from nodes(kids.next())
+
+    (scanned,) = [
+        p.metrics().apply("numOutputRows").value()
+        for p in nodes(plan) if p.nodeName().startswith("Scan")
+    ]
+    assert scanned <= 2 * n // groups

@@ -1404,20 +1404,40 @@ def test_nrt_append_job_count(spark, tmp_path_factory):
 
 
 def test_segment_stats_are_recorded_exactly(spark, tmp_path_factory):
+    """Under the default codec (native), every commit path records the
+    segment's field statistics exactly: ``_check_segment_stats``."""
+    _check_segment_stats(spark, tmp_path_factory, "native")
+
+
+@pytest.mark.parametrize("codec", ["varbyte", "pfor"])
+def test_segment_stats_are_recorded_exactly_block_codecs(
+    spark, tmp_path_factory, codec
+):
+    """The same checks under each block codec: its term_dict write and the
+    block rows the commit counts."""
+    _check_segment_stats(spark, tmp_path_factory, codec)
+
+
+def _check_segment_stats(spark, tmp_path_factory, codec):
     """Every commit path records the segment's field statistics in its
     lineage (index_source.h:44-53), equal to a recount over the segment's
-    decoded postings: Σtf, distinct terms and posting rows.  A (native)
-    segment directory holds only postings and block_meta, and stats_for on a fresh
-    view runs only the dictionary collect — N and the cache gate come off
-    the manifest.  A segment without recorded stats closes the cache gate
-    and lookups go through per-query pushdown."""
+    decoded postings: Σtf, distinct terms and posting rows.  A segment
+    directory holds only postings and its per-term part (block_meta under
+    native, term_dict under a block codec), and stats_for on a fresh view
+    runs only the dictionary collect — N and the cache gate come off the
+    manifest.  A segment without recorded stats closes the cache gate and
+    lookups go through per-query pushdown."""
     from pyspark.sql import functions as F
 
     from trinity_spark.streaming.nrt import append_micro_segment, replace_documents
 
     store = SegmentStore(str(tmp_path_factory.mktemp("segstats") / "idx"))
     corpus = gen_transcripts(600)
-    build_index(spark, spark.createDataFrame(corpus), store, rows_per_segment=300)
+    build_index(
+        spark, spark.createDataFrame(corpus), store, rows_per_segment=300,
+        codec=codec,
+    )
+    parts = sorted(["block_meta" if codec == "native" else "term_dict", "postings"])
     append_micro_segment(
         spark, store, spark.createDataFrame(gen_transcripts(100, seed=3))
     )
@@ -1438,7 +1458,7 @@ def test_segment_stats_are_recorded_exactly(spark, tmp_path_factory):
                 spark, store, meta.segment_id
             ), meta.segment_id
             seg_dir = os.path.join(store.base, "segments", meta.segment_id)
-            assert sorted(os.listdir(seg_dir)) == ["block_meta", "postings"]
+            assert sorted(os.listdir(seg_dir)) == parts
         return metas
 
     metas = check_live(["build", "build", "nrt-append", "replace"])

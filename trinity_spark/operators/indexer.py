@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from ..sources.store import SegmentMeta, SegmentStore, _PinnedSnapshotStore
 from .docids import _conv_bases, attach_bases
 from .fastbuild import blocks_from_turns
-from .segments import BLOCK_CODECS, CODEC_NATIVE, decode_segments
+from .segments import BLOCK_CODECS, decode_segments
 
 # Above this corpus size the docid map always gets the doc-range layout
 # shuffle, segment count notwithstanding: the assignment join may have hash-
@@ -416,16 +416,8 @@ def _build_index_inner(
                 "codec": codec,
             },
         )
-        if codec == CODEC_NATIVE:
-            # the commit stages native rows itself: one sort, cached once
-            store.commit_segment(blocks, meta, started=t0)
-        else:
-            blocks = blocks.persist()
-            try:
-                blocks.count()  # materialize the fused pass once, before any reuse
-                store.commit_segment(blocks, meta, started=t0)
-            finally:
-                blocks.unpersist()
+        # the commit materializes the fused pass once for its two writes
+        store.commit_segment(blocks, meta, started=t0)
         built.append(meta)
     return built
 

@@ -176,8 +176,9 @@ def _block_merge(
     blocks: DataFrame, in_range: DataFrame | None, cb: int, codec: str
 ) -> DataFrame:
     """A block-codec merge's output blocks, tagged ``_reused`` (moved
-    byte-identical) or not (decoded, tombstones removed, re-encoded), and
-    persisted: the byte-reuse fast path of the module docstring."""
+    byte-identical) or not (decoded, tombstones removed, re-encoded) — the
+    byte-reuse fast path of the module docstring.  The commit counts the
+    tags and writes the blocks without them."""
     # (term, chunk) groups with 2+ partial blocks need repacking; all other
     # blocks (fulls + lone partials) are already optimally packed.
     # Metadata-only aggregation — byte columns pruned from this job.
@@ -242,18 +243,14 @@ def _block_merge(
             F.broadcast(in_range), "doc_id", "left_anti"
         )
 
-    # tag reused rows BEFORE the union so the metrics pass is one cheap
-    # group-count over the persisted output instead of re-executing the whole
+    # tag reused rows BEFORE the union: the commit counts the tags on the
+    # job that materializes its input, instead of re-executing the whole
     # reuse pipeline (ADVICE r3: reused.count() replayed the metadata scan +
     # probe joins as a full extra job on every merge)
-    return (
-        reused.withColumn("_reused", F.lit(True))
-        .unionByName(
-            encode_postings(
-                rest_postings, chunk_bits=cb, codec=codec
-            ).withColumn("_reused", F.lit(False))
-        )
-        .persist()
+    return reused.withColumn("_reused", F.lit(True)).unionByName(
+        encode_postings(
+            rest_postings, chunk_bits=cb, codec=codec
+        ).withColumn("_reused", F.lit(False))
     )
 
 
@@ -342,7 +339,6 @@ def merge_segments(
             n_deleted = countable.join(already, "doc_id", "left_anti").count()
 
     docs_cnt = sum(m.docs_cnt for m in metas) - n_deleted
-    cached = None  # the block merge's persisted, reuse-tagged output
     if codec == CODEC_NATIVE:
         # no decode, no encode: the inputs' rows minus the tombstoned docs,
         # staged and written by the commit.  Every input row is rewritten
@@ -355,8 +351,11 @@ def merge_segments(
             "blocks_reencoded": sum(int(m.lineage.get("n_blocks", 0)) for m in metas),
         }
     else:
-        cached = _block_merge(store.read_blocks(spark, ids), in_range, cb, codec)
-        out = cached.drop("_reused")
+        # reuse-tagged blocks: the commit records the merge.cpp:166-180
+        # fast-path economics (blocks moved byte-identical vs decoded and
+        # re-encoded) off the job that materializes them
+        out = _block_merge(store.read_blocks(spark, ids), in_range, cb, codec)
+        reuse = {}
     # name suffix = next_generation at merge-PLAN time (manifest0, no extra
     # read) — a uniqueness scope, not the committed generation: concurrent
     # commits may bump the counter before commit_segment assigns the real
@@ -386,40 +385,19 @@ def merge_segments(
             "codec": codec,
         },
     )
-    try:
-        if cached is not None:
-            # byte-reuse economics: ONE group-count over the persisted
-            # output, which also fills the cache both commit writes then
-            # read — no pipeline replay
-            counts = {
-                r["_reused"]: r["cnt"]
-                for r in cached.groupBy("_reused")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-            n_reused = int(counts.get(True, 0))
-            # the merge.cpp:166-180 fast-path economics: blocks moved
-            # byte-identical vs decoded+re-encoded
-            reuse = {
-                "blocks_reused": n_reused,
-                "blocks_reencoded": int(sum(counts.values())) - n_reused,
-            }
-        meta.metrics.update(reuse)
-        # ONE atomic manifest write: merged segment in, inputs out,
-        # fully-applied tombstone gens retired — no window serving merged
-        # docs twice, no lost concurrent delete.  Gens retire only if this
-        # merge covered every segment that existed at read time — deletes
-        # added concurrently (later gens) and deletes still masking
-        # unmerged segments stay in force.
-        store.commit_segment(
-            out,
-            meta,
-            started=t0,
-            retire_ids=ids,
-            retire_delete_gens=read_gens if full_merge else (),
-        )
-    finally:
-        if cached is not None:
-            cached.unpersist()
+    meta.metrics.update(reuse)
+    # ONE atomic manifest write: merged segment in, inputs out,
+    # fully-applied tombstone gens retired — no window serving merged
+    # docs twice, no lost concurrent delete.  Gens retire only if this
+    # merge covered every segment that existed at read time — deletes
+    # added concurrently (later gens) and deletes still masking
+    # unmerged segments stay in force.
+    store.commit_segment(
+        out,
+        meta,
+        started=t0,
+        retire_ids=ids,
+        retire_delete_gens=read_gens if full_merge else (),
+    )
     return meta
 

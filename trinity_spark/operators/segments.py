@@ -15,7 +15,11 @@ A store holds ONE codec (``SegmentStore.layout``).  Three are known:
   (``BLOCK_META_SCHEMA``, built by ``native_block_meta`` from the rows the
   commit writes): each (term, chunk) group's docs in doc order, cut into
   ``BLOCK_SIZE`` runs — the block geometry the block codecs encode, as
-  metadata only, for the pruned routes and the term dictionary.
+  metadata only, for the pruned routes.  It is the term dictionary too:
+  each term's first block row carries the term's ``df`` / ``cf``, the rest
+  carry NULL, so a lookup's ``df IS NOT NULL`` filter lets Parquet skip
+  every row group holding only a stopword's later blocks (a lookup reads
+  about one row group per term, not df / 128 rows).
 - ``varbyte``: delta+varbyte posting blocks — the Google codec's
   block-columnar postings, kept as a contract because it reproduces
   Trinity's default codec (``google_codec.cpp:118-176``,
@@ -121,7 +125,7 @@ POSTINGS_PAYLOAD_NOPOS_SCHEMA = POSTINGS_NOPOS_SCHEMA + ", payloads array<long>"
 NATIVE_SCHEMA = POSTINGS_PAYLOAD_SCHEMA
 BLOCK_META_SCHEMA = (
     "term string, chunk long, block_id long, doc_count int, min_doc_id long, "
-    "max_doc_id long, max_tf int, sum_tf long"
+    "max_doc_id long, max_tf int, sum_tf long, df long, cf long"
 )
 
 
@@ -170,15 +174,15 @@ def native_block_meta(staged: DataFrame, chunk_bits: int, n_parts: int) -> DataF
     ``BLOCK_SIZE``; a run's row carries the metadata a block codec's block
     would (``block_id`` numbered as ``_encode_partition`` numbers them), so
     every bound the pruned routes read is the exact per-block value and
-    ``doc_count`` / ``sum_tf`` sum to the term's df / cf.
+    ``doc_count`` / ``sum_tf`` sum to the term's df / cf.  Those sums sit
+    in ``df`` / ``cf`` on the term's first block row (NULL on the others):
+    the per-term dictionary, and a write counts distinct terms as the
+    non-NULL ``df`` values (an Observation cannot aggregate DISTINCT).
 
     The staged partitioning (term) and order (term, chunk, doc_id) are
     exactly what the rank window needs, and the aggregation clusters on a
     superset of term, so nothing here shuffles or sorts the rows; only the
-    block rows are sorted.  They come out in ``n_parts`` partitions, with an
-    extra boolean column ``_first`` marking each term's first block, so a
-    write can count distinct terms (an Observation cannot aggregate
-    DISTINCT)."""
+    block rows are sorted.  They come out in ``n_parts`` partitions."""
     blocks_per_chunk = max((1 << chunk_bits) // BLOCK_SIZE, 1)
     rank = F.row_number().over(
         Window.partitionBy("term", "chunk").orderBy("doc_id")
@@ -203,9 +207,15 @@ def native_block_meta(staged: DataFrame, chunk_bits: int, n_parts: int) -> DataF
             "doc_count", "min_doc_id", "max_doc_id", "max_tf", "sum_tf",
         )
     )
-    first = F.row_number().over(Window.partitionBy("term").orderBy("block_id")) == 1
+    in_term = Window.partitionBy("term").orderBy("block_id")
+    whole = in_term.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    first = F.row_number().over(in_term) == 1
     return (
-        meta.withColumn("_first", first)
+        meta.select(
+            "*",
+            F.when(first, F.sum("doc_count").over(whole)).cast("long").alias("df"),
+            F.when(first, F.sum("sum_tf").over(whole)).cast("long").alias("cf"),
+        )
         .coalesce(n_parts)
         .sortWithinPartitions("term", "block_id")
     )

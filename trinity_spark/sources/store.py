@@ -33,7 +33,8 @@ snapshot — it is one manifest write here too):
                     give term-seek, the terms.idx analog
         block_meta/ native only: per-block metadata (term, chunk, block_id,
                     doc_count, min/max_doc_id, max_tf, sum_tf) derived here
-                    from the rows; the dictionary is read off it
+                    from the rows, plus the term's (df, cf) on its first
+                    block row (NULL elsewhere): the dictionary
         term_dict/  varbyte, pfor only: (term, df, cf), derived here from
                     the block metadata
       deletes/<gen>.parquet         # masked doc_ids (docidupdates.cpp analog)
@@ -68,6 +69,7 @@ from ..operators.segments import (
     BLOCK_META_SCHEMA,
     CHUNK_BITS,
     CODEC_NATIVE,
+    CODEC_VARBYTE,
     CODECS,
     DEFAULT_CODEC,
     NATIVE_SCHEMA,
@@ -120,16 +122,21 @@ class Layout(NamedTuple):
     codec that wrote each segment (codecs.h:93-95) and raw-copies bytes
     only between same-codec inputs (merge.cpp:256-287); fixing the layout
     at the first commit makes every merge a same-layout merge.  A manifest
-    or lineage without the keys means the defaults."""
+    or lineage without the keys predates them: ``LEGACY_LAYOUT``."""
 
     codec: str
     chunk_bits: int
 
 
+# what a brand-new store writes
 DEFAULT_LAYOUT = Layout(DEFAULT_CODEC, CHUNK_BITS)
+# what stores and segments recorded without the layout keys were written
+# in: the keys arrived while varbyte was the only codec, and the default
+# codec changing must not re-read them as anything else
+LEGACY_LAYOUT = Layout(CODEC_VARBYTE, CHUNK_BITS)
 
 
-def _layout(d: dict[str, Any], default: Layout = DEFAULT_LAYOUT) -> Layout:
+def _layout(d: dict[str, Any], default: Layout = LEGACY_LAYOUT) -> Layout:
     """The layout a manifest or a segment lineage names (same keys)."""
     return Layout(
         d.get("codec", default.codec),
@@ -139,15 +146,21 @@ def _layout(d: dict[str, Any], default: Layout = DEFAULT_LAYOUT) -> Layout:
 
 def _layout_fixed(m: dict[str, Any]) -> bool:
     """Whether a first commit has fixed the manifest's layout.  A manifest
-    with segments but no layout keys predates them: the defaults."""
+    with segments but no layout keys predates them: ``LEGACY_LAYOUT``."""
     return "codec" in m or "chunk_bits" in m or bool(m["segments"])
+
+
+def _store_layout(m: dict[str, Any]) -> Layout:
+    """The layout a manifest fixes, or the default for a store whose first
+    commit has not happened yet."""
+    return _layout(m) if _layout_fixed(m) else DEFAULT_LAYOUT
 
 
 def _layout_errors(m: dict[str, Any]) -> list[str]:
     """Layout findings: an unknown store codec, and every live segment
     whose lineage layout differs from the store's (fsck reports these;
     ``SegmentStore.layout`` raises on them)."""
-    lay = _layout(m)
+    lay = _store_layout(m)
     errors = []
     if lay.codec not in CODECS:
         errors.append(
@@ -349,7 +362,7 @@ class SegmentStore:
         errors = _layout_errors(m)
         if errors:
             raise ValueError("store wire layout: " + "; ".join(errors))
-        return _layout(m)
+        return _store_layout(m)
 
     def resolve_layout(
         self, codec: str | None = None, chunk_bits: int | None = None
@@ -379,7 +392,7 @@ class SegmentStore:
         lineage and rejects a meta that names a different one, so the
         manifest is left untouched."""
         lin = meta.lineage
-        lay = _layout(m) if _layout_fixed(m) else _layout(lin)
+        lay = _layout(m) if _layout_fixed(m) else _layout(lin, DEFAULT_LAYOUT)
         _check_codec(lay.codec)
         got = _layout(lin, default=lay)
         if got != lay:
@@ -571,20 +584,28 @@ class SegmentStore:
 
     def _write_segment_data(
         self, blocks: DataFrame, segment_id: str, docs_hint: int, layout: Layout
-    ) -> dict[str, Any]:
+    ) -> tuple[dict[str, Any], dict[str, Any]]:
         """Write a segment's two parts; returns what the segment records in
-        lineage: the written block count and the field statistics
+        lineage — the written block count and the field statistics
         (``index_source.h:44-53``), all observed on the two writes
-        themselves — no extra job.
+        themselves — and in metrics (a merge's block-reuse counts).
 
         Block codecs: ``postings`` (the block rows) and ``term_dict`` (off
         the block metadata).  ``native``: ``postings`` (the rows, sorted by
         (term, doc_id), written with ``NATIVE_WRITE_OPTIONS``) and
-        ``block_meta`` (``native_block_meta`` of the same rows), whose rows
-        also serve as the dictionary (``read_term_dict``).  Under
+        ``block_meta`` (``native_block_meta`` of the same rows), whose
+        first-block rows are the dictionary (``read_term_dict``).  Under
         native, ``n_blocks`` counts postings ROWS — one per (term, doc) —
         and fsck recounts the same (``block_meta`` must sum its doc_count
-        to it)."""
+        to it).
+
+        Both writes read ``blocks``, so this commit materializes it once,
+        whoever the caller is: native rows are staged (``native_stage``:
+        one shuffle and sort, checkpointed); block rows are persisted and
+        counted in one job before the writes.  A block frame may carry a
+        boolean ``_reused`` tag (a merge's byte-identical blocks): that
+        count job also counts the tags, returned as ``blocks_reused`` /
+        ``blocks_reencoded``, and the rows are written without it."""
         # sorted by term: parquet row-group min/max on `term` = dictionary seek.
         # Partition count is derived from estimated postings BYTES (see
         # POSTINGS_TARGET_FILE_BYTES), capped at core count: tiny segments
@@ -620,6 +641,15 @@ class SegmentStore:
 
         blocks_obs = Observation()
         terms_obs = Observation()
+        metrics: dict[str, Any] = {}
+        # native: ONE shuffle and sort of the rows, checkpointed, feeds both
+        # writes — the rows stream out of it as they are, and the block
+        # metadata is derived in its order without sorting them again.
+        # Block rows: cached (filled by the count job below)
+        staged = (
+            native_stage(blocks, layout.chunk_bits, n_parts)
+            if native else blocks.persist()
+        )
 
         # HASH-partition by term (each term still lands in exactly one file,
         # term-sorted within it, so parquet row-group min/max pruning is
@@ -656,13 +686,6 @@ class SegmentStore:
                 self.segment_dir(segment_id, "term_dict")
             )
 
-        # native: ONE shuffle and sort of the rows, checkpointed, feeds both
-        # writes — the rows stream out of it as they are, and the block
-        # metadata is derived in its order without sorting them again
-        staged = (
-            native_stage(blocks, layout.chunk_bits, n_parts) if native else None
-        )
-
         def _write_rows() -> None:
             staged.observe(
                 blocks_obs,
@@ -675,10 +698,8 @@ class SegmentStore:
 
         def _write_meta() -> None:
             native_block_meta(staged, layout.chunk_bits, n_small).observe(
-                terms_obs,
-                F.coalesce(F.sum(F.col("_first").cast("long")), F.lit(0))
-                .alias("total_terms"),
-            ).drop("_first").write.mode("overwrite").options(
+                terms_obs, F.count("df").alias("total_terms")
+            ).write.mode("overwrite").options(
                 **NATIVE_WRITE_OPTIONS
             ).parquet(self.segment_dir(segment_id, "block_meta"))
 
@@ -690,6 +711,21 @@ class SegmentStore:
         # run the writes outside them
         writes = (_write_rows, _write_meta) if native else (_write_postings, _write_dict)
         try:
+            if not native:
+                tagged = "_reused" in blocks.columns
+                row = staged.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    *([F.sum(F.col("_reused").cast("long")).alias("reused")]
+                      if tagged else []),
+                ).first()
+                blocks = staged
+                if tagged:
+                    reused = int(row["reused"] or 0)
+                    metrics = {
+                        "blocks_reused": reused,
+                        "blocks_reencoded": int(row["n"]) - reused,
+                    }
+                    blocks = staged.drop("_reused")
             with ThreadPoolExecutor(max_workers=2) as pool:
                 futs = [
                     pool.submit(inheritable_thread_target(spark)(f))
@@ -698,8 +734,7 @@ class SegmentStore:
                 for f in futs:
                     f.result()
         finally:
-            if staged is not None:
-                release_stage(staged)
+            release_stage(staged) if native else staged.unpersist()
         # the exact written-block count lets fsck detect LOST postings files
         # (physical < lineage) as an ERROR, which the doc count cannot
         # (zero-token docs legitimately depress it).  Every value is counted
@@ -718,7 +753,7 @@ class SegmentStore:
                     got["n_blocks"] if native else got["sum_terms_docs"]
                 ),
             },
-        }
+        }, metrics
 
     def commit_segment(
         self,
@@ -752,9 +787,14 @@ class SegmentStore:
           (``deletes_gens`` defaults to none applied); ``meta.metrics``
           gains ``docs``, ``wall_sec`` from ``started`` (a
           ``time.monotonic()`` reading, default this call's start) to the
-          manifest write, ``docs_per_sec``, and ``tombstone_gen`` with
-          ``deletes``.  Metrics the caller set (a merge's block-reuse
-          counts) are kept.
+          manifest write, ``docs_per_sec``, ``tombstone_gen`` with
+          ``deletes``, and the block-reuse counts of a ``_reused``-tagged
+          block frame (``_write_segment_data``).  Metrics the caller set
+          are kept.
+
+        ``blocks`` is the segment's frame as computed — native rows or
+        encoded block rows, unpersisted: the commit materializes it once
+        for its two writes.
 
         A commit the store rejects — a stale NRT doc-id allocation or a
         conflicting wire layout — raises ``ValueError`` with the manifest
@@ -766,12 +806,12 @@ class SegmentStore:
         # the layout this segment is written in: the store's once fixed,
         # else the meta's (the stamp below re-checks under the lock)
         m = self.read_manifest()
-        lay = _layout(
-            meta.lineage, default=_layout(m) if _layout_fixed(m) else DEFAULT_LAYOUT
+        lay = _layout(meta.lineage, default=_store_layout(m))
+        lineage, metrics = self._write_segment_data(
+            blocks, meta.segment_id, meta.docs_cnt, lay
         )
-        meta.lineage.update(
-            self._write_segment_data(blocks, meta.segment_id, meta.docs_cnt, lay)
-        )
+        meta.lineage.update(lineage)
+        meta.metrics.update(metrics)
         meta.lineage.setdefault("deletes_gens", [])
         meta.lineage["engine_version"] = __version__
         retire = {meta.segment_id, *retire_ids}
@@ -921,18 +961,18 @@ class SegmentStore:
     def read_term_dict(
         self, spark: SparkSession, blocks: DataFrame | None = None
     ) -> DataFrame:
-        """Every live segment's (term, df, cf) rows; readers sum them per
-        term.  Native segments keep no dictionary part: their block_meta
-        rows serve, one per block (df = doc_count, cf = sum_tf), so the
-        dictionary stays a plain scan, as a block-codec store's is
-        (``blocks``: an already-opened ``read_blocks`` frame)."""
+        """Every live segment's (term, df, cf) rows, one per term per
+        segment; readers sum them per term.  Native segments keep no
+        dictionary part: each term's first ``block_meta`` row carries its
+        df / cf and the other rows NULL, and the ``df IS NOT NULL`` filter
+        pushes down to the Parquet scan, whose row-group null counts skip
+        the groups holding only later blocks — a lookup reads about one
+        row group per term whatever its df (``blocks``: an already-opened
+        ``read_blocks`` frame).  The dictionary stays a plain scan, as a
+        block-codec store's is."""
         if self.layout().codec == CODEC_NATIVE:
             blocks = self.read_blocks(spark) if blocks is None else blocks
-            return blocks.select(
-                "term",
-                F.col("doc_count").cast("long").alias("df"),
-                F.col("sum_tf").alias("cf"),
-            )
+            return blocks.where(F.col("df").isNotNull()).select("term", "df", "cf")
         return self._read_part(spark, None, "term_dict", self.TERM_DICT_SCHEMA)
 
     def gc(self, orphan_grace_sec: float = 0.0) -> dict[str, list[str]]:
@@ -1134,7 +1174,7 @@ class SegmentStore:
         warnings: list[str] = []
         m = self.read_manifest()
         metas = [SegmentMeta(**s) for s in m["segments"]]
-        native = _layout(m).codec == CODEC_NATIVE
+        native = _store_layout(m).codec == CODEC_NATIVE
         parts = ("postings", "block_meta") if native else ("postings", "term_dict")
         for meta in metas:
             for part in parts:

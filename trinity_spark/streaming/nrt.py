@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from ..operators.docids import assign_doc_ids_counted
 from ..operators.fastbuild import blocks_from_turns
 from ..operators.indexer import write_conf_scope
-from ..operators.segments import CODEC_NATIVE
 from ..sources.store import SegmentMeta, SegmentStore
 
 
@@ -122,10 +121,6 @@ def _append_assigned(
     # a pure function of the batch's (conv_id, turn_idx) order, so this pass
     # attaches the same ids the slice recorded
     blocks = blocks_from_turns(with_ids, chunk_bits=chunk_bits, codec=codec)
-    if codec != CODEC_NATIVE:
-        # both commit writes read the blocks; native rows are staged (sorted
-        # and checkpointed once) by the commit itself
-        blocks = blocks.persist()
     lineage = {"input": input_desc, "doc_range": [base, base + n],
                "chunk_bits": chunk_bits, "codec": codec, "mode": "nrt-append"}
     if deletes_df is not None:
@@ -138,12 +133,9 @@ def _append_assigned(
         docs_cnt=n,
         lineage=lineage,
     )
-    try:
-        # a rejected commit (a concurrent writer committed the range first)
-        # raises with this attempt's data already discarded by the store
-        store.commit_segment(blocks, meta, started=t0, deletes=deletes_df)
-    finally:
-        blocks.unpersist()
+    # a rejected commit (a concurrent writer committed the range first)
+    # raises with this attempt's data already discarded by the store
+    store.commit_segment(blocks, meta, started=t0, deletes=deletes_df)
     return meta
 
 
